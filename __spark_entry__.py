@@ -30,7 +30,6 @@ from pyspark.sql import functions as F  # noqa: E402
 N_LINKS = 8
 SEEN_MOD = 5  # doc_id % 5 == 0 pages are pre-seen in frontier queries
 TOPK = 3
-HOT_N = 50
 
 
 def _docs(spark, sf_dir):
@@ -141,12 +140,12 @@ def _q_http_decode(spark, sf_dir):
 
 
 def _q_harvest_links(spark, sf_dir):
-    """Link harvest: HTML parse + absolutize + explode
+    """Link harvest: HTML parse + absolutize, one row per link
     (warclinks.py:54-66) — checked against the numeric link model."""
-    from warctools_spark.operators.frontier import harvest_links
+    from warctools_spark.operators.frontier import harvest_canonicalized
 
     pages = _pages(spark, sf_dir)
-    return harvest_links(pages).select("src_url", "link")
+    return harvest_canonicalized(pages).select("src_url", "link")
 
 
 def _candidates(spark, sf_dir):
@@ -184,18 +183,13 @@ def _q_politeness_topk(spark, sf_dir):
 
 
 def _q_politeness_topk_salted(spark, sf_dir):
-    """The same window via the two-phase hot-host salting path — must
-    return the identical schedule (skew hardening, SURVEY §4.2)."""
-    from warctools_spark.operators.frontier import (
-        detect_hot_hosts,
-        politeness_schedule,
-    )
+    """Skew hardening (SURVEY §4.2): the politeness_topk schedule over
+    the corpus's 30% hot host. The window's map-side WindowGroupLimit
+    lets at most TOPK of its rows per map task reach the shuffle."""
+    from warctools_spark.operators.frontier import politeness_schedule
 
     cand = _candidates(spark, sf_dir)
-    hot = detect_hot_hosts(cand, HOT_N)
-    return politeness_schedule(cand, TOPK, hot_hosts=hot, salt=8).select(
-        "host", "canon_url"
-    )
+    return politeness_schedule(cand, TOPK).select("host", "canon_url")
 
 
 def _q_host_agg(spark, sf_dir):
@@ -863,9 +857,7 @@ def _q_politeness_budgeted(spark, sf_dir):
     host allows min(k, epoch_ms/crawl_delay) fetches per epoch. The
     delay is derived deterministically from the host's md5 so the
     oracle can replay the budget arithmetic."""
-    from warctools_spark.operators.frontier import (
-        politeness_schedule_budgeted,
-    )
+    from warctools_spark.operators.frontier import politeness_schedule
 
     cand = _candidates(spark, sf_dir)
     delay = 100 * (
@@ -876,7 +868,7 @@ def _q_politeness_budgeted(spark, sf_dir):
         )
     )
     queued = cand.withColumn("crawl_delay_ms", delay)
-    return politeness_schedule_budgeted(queued, 8, epoch_ms=3000).select(
+    return politeness_schedule(queued, 8, epoch_ms=3000).select(
         "host", "canon_url"
     )
 
@@ -988,7 +980,7 @@ def _q_bloom_dedup(spark, sf_dir):
         udf_url_sha1(url_expr(F.col("id"))).alias("url_sha1")
     )
     exact = cand.join(seen_ids, "url_sha1", "left_anti")
-    two = two_tier_dedup(spark, cand, seen_ids, n_buckets=8)
+    two = two_tier_dedup(cand, seen_ids, n_buckets=8)
     return spark.createDataFrame(
         [(exact.count(), two.count())], "exact_count long, two_tier_count long"
     )
@@ -1183,7 +1175,8 @@ def _q_unpack_paths(spark, sf_dir):
 def _q_cuckoo_dedup(spark, sf_dir):
     """Cuckoo-filter two-tier dedup == exact anti-join (delete-capable
     seen-set fallback)."""
-    from warctools_spark.operators.cuckoo import two_tier_dedup_cuckoo
+    from warctools_spark.operators.cuckoo import build_cuckoo
+    from warctools_spark.operators.seen import two_tier_dedup
     from warctools_spark.functions.udfs import udf_url_sha1
     from warctools_spark.sources.pages import url_expr
 
@@ -1193,7 +1186,9 @@ def _q_cuckoo_dedup(spark, sf_dir):
         udf_url_sha1(url_expr(F.col("id"))).alias("url_sha1")
     )
     exact = cand.join(seen_ids, "url_sha1", "left_anti")
-    two = two_tier_dedup_cuckoo(spark, cand, seen_ids, n_buckets=8)
+    two = two_tier_dedup(
+        cand, seen_ids, seen_filter=build_cuckoo(seen_ids, n_buckets=8), n_buckets=8
+    )
     return spark.createDataFrame(
         [(exact.count(), two.count())], "exact_count long, cuckoo_count long"
     )

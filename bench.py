@@ -79,9 +79,9 @@ def q_frontier_epoch(spark, pages_path):
     links = harvest_canonicalized(pages).withColumn("depth", F.lit(1))
     cand = dedup_within_epoch(links)
     fresh = dedup_against_seen(cand, seen)
-    # always-salted two-phase window: one single-lineage job, exact
-    # top-k per host, robust to any skew without a histogram pass
-    sched = politeness_schedule(fresh, 100, salt_all=True, salt=32)
+    # one host window; its map-side WindowGroupLimit bounds the hot
+    # host's shuffle share without a histogram pass
+    sched = politeness_schedule(fresh, 100)
     return sched.count()
 
 
@@ -137,7 +137,7 @@ def q_bloom_bucketed(spark, pages_path):
     pages = spark.read.parquet(pages_path)
     cand = pages.select(udf_url_sha1(F.col("url")).alias("url_sha1"))
     seen = spark.read.parquet(seen_table_path())
-    return two_tier_dedup(spark, cand, seen, n_buckets=CPUS).count()
+    return two_tier_dedup(cand, seen, n_buckets=CPUS).count()
 
 
 def q_segment_dedup(spark, pages_path):

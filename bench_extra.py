@@ -48,7 +48,7 @@ def b_frontier_epoch(spark, pages_path):
     links = harvest_canonicalized(pages).withColumn("depth", F.lit(1))
     cand = dedup_within_epoch(links)
     fresh = dedup_against_seen(cand, seen)
-    return politeness_schedule(fresh, 100, salt_all=True, salt=32)
+    return politeness_schedule(fresh, 100)
 
 
 def b_harvest_only(spark, pages_path):
@@ -114,7 +114,7 @@ def b_bloom_bucketed(spark, pages_path):
     pages = spark.read.parquet(pages_path)
     cand = pages.select(udf_url_sha1(F.col("url")).alias("url_sha1"))
     seen = spark.read.parquet(B.seen_table_path())
-    return two_tier_dedup(spark, cand, seen, n_buckets=CPUS)
+    return two_tier_dedup(cand, seen, n_buckets=CPUS)
 
 
 def b_segment_dedup(spark, pages_path):

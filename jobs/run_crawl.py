@@ -34,7 +34,6 @@ def main():
              "the filter can be maintained incrementally",
     )
     ap.add_argument("--bloom-fpr", type=float, default=0.01)
-    ap.add_argument("--hot-host-threshold", type=int, default=None)
     ap.add_argument(
         "--expire-keep", type=int, default=None,
         help="after the run, keep only the newest N snapshots and "
@@ -96,7 +95,6 @@ def main():
         bloom_n_buckets=args.n_buckets,
         bloom_capacity_per_bucket=args.bloom_capacity_per_bucket,
         bloom_fpr=args.bloom_fpr,
-        hot_host_threshold=args.hot_host_threshold,
         start_epoch=start_epoch,
         initial_state=initial_state,
     )

@@ -256,11 +256,11 @@ def test_warclinks_output_parity(spark, tmp_path):
     ]
 
     from warctools_spark.operators.archive_ops import records_to_pages
-    from warctools_spark.operators.frontier import harvest_links
+    from warctools_spark.operators.frontier import harvest_canonicalized
     from warctools_spark.sources.warc import read_warc
 
     pages = records_to_pages(read_warc(spark, str(f)))
-    links = [r["link"] for r in harvest_links(pages).collect()]
+    links = [r["link"] for r in harvest_canonicalized(pages).collect()]
     assert links == expected
 
 

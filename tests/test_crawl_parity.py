@@ -28,7 +28,7 @@ def seeds(spark):
     return spark.createDataFrame([(u,) for u in urls], "url string"), urls
 
 
-def _spark_crawl(spark, pages, seed_df, use_bloom=False, hot_threshold=None):
+def _spark_crawl(spark, pages, seed_df, use_bloom=False):
     queue, seen = init_state(seed_df)
     schedules = []
     for e in range(EPOCHS):
@@ -40,7 +40,6 @@ def _spark_crawl(spark, pages, seed_df, use_bloom=False, hot_threshold=None):
             epoch=e,
             k_per_host=K,
             use_bloom=use_bloom,
-            hot_host_threshold=hot_threshold,
         )
         schedules.append(
             sorted(r["canon_url"] for r in res.schedule.select("canon_url").collect())
@@ -60,11 +59,11 @@ def test_engine_matches_simulator(spark, pages, seeds):
 
 
 def test_engine_bloom_and_salting_same_crawl(spark, pages, seeds):
-    """The scale paths (Bloom two-tier dedup, hot-host salting) must
-    not change crawl semantics."""
+    """The scale path (Bloom two-tier dedup) must not change crawl
+    semantics."""
     seed_df, _ = seeds
     plain = _spark_crawl(spark, pages, seed_df)
-    scaled = _spark_crawl(spark, pages, seed_df, use_bloom=True, hot_threshold=10)
+    scaled = _spark_crawl(spark, pages, seed_df, use_bloom=True)
     assert plain == scaled
 
 
@@ -131,7 +130,7 @@ def test_seen_delta_compaction(spark, pages, seeds, tmp_path):
 
 def test_engine_matches_simulator_with_robots(spark, pages, seeds):
     """Crawl parity incl. robots disallow rules + crawl-delay fetch
-    budgets (engine: broadcast join + budgeted salted window;
+    budgets (engine: broadcast join + budgeted host window;
     simulator: explicit dict) — schedules and seen sets must agree."""
     from warctools_spark.kernels.robots import parse_robots
     from warctools_spark.operators.robots import parse_robots_table
@@ -189,7 +188,7 @@ def test_crawl_deterministic_across_partitioning(spark, pages, seeds):
 
 
 def test_long_crawl_with_bloom_and_compaction(spark, pages, seeds, tmp_path):
-    """10 epochs end-to-end with Bloom dedup, salting and seen-delta
+    """10 epochs end-to-end with Bloom dedup and seen-delta
     compaction: the crawl reaches the full reachable set and matches
     the simulator's final seen set."""
     seed_df, urls = seeds
@@ -202,7 +201,6 @@ def test_long_crawl_with_bloom_and_compaction(spark, pages, seeds, tmp_path):
         k_per_host=K,
         catalog=cat,
         use_bloom=True,
-        hot_host_threshold=50,
         compact_every=4,
     )
     assert len(metrics) >= 3

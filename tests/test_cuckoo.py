@@ -9,9 +9,8 @@ from warctools_spark.operators.cuckoo import (
     CuckooFilter,
     build_cuckoo,
     delete_from_cuckoo,
-    probe_cuckoo,
-    two_tier_dedup_cuckoo,
 )
+from warctools_spark.operators.seen import probe_bucketed, two_tier_dedup
 
 
 def sha(s: str) -> str:
@@ -84,7 +83,9 @@ class TestSpark:
         )
         two = sorted(
             r["url_sha1"]
-            for r in two_tier_dedup_cuckoo(spark, cand, seen, n_buckets=8)
+            for r in two_tier_dedup(
+                cand, seen, n_buckets=8, seen_filter=build_cuckoo(seen, n_buckets=8)
+            )
             .select("url_sha1")
             .collect()
         )
@@ -95,7 +96,7 @@ class TestSpark:
         cuckoo = build_cuckoo(seen, n_buckets=8)
         dels = seen.limit(100)
         updated = delete_from_cuckoo(cuckoo, dels, n_buckets=8)
-        probed = probe_cuckoo(spark, cand, updated, 8)
+        probed = probe_bucketed(cand, updated, 8)
         # the deleted keys now probe negative (rare fp collisions aside)
         del_keys = {r["url_sha1"] for r in dels.collect()}
         still = (
@@ -119,21 +120,33 @@ class TestSpark:
         assert b1 == b2
 
     def test_bucketed_probe_after_delete(self, spark, frames):
-        """The co-partitioned probe agrees with the broadcast probe on
-        a post-delete filter — the delete+probe cycle works without
-        ever collecting the filter to the driver."""
-        from warctools_spark.operators.cuckoo import probe_cuckoo_bucketed
-
+        """The co-partitioned probe agrees with a driver-side probe of
+        the collected post-delete filter rows — the delete+probe cycle
+        works without ever collecting the filter to the driver."""
         cand, seen = frames
         cuckoo = build_cuckoo(seen, n_buckets=8)
-        updated = delete_from_cuckoo(cuckoo, seen.limit(100), n_buckets=8)
-        a = {
-            (r["url_sha1"], r["maybe_seen"])
-            for r in probe_cuckoo(spark, cand, updated, 8).collect()
+        updated = delete_from_cuckoo(
+            cuckoo, seen.limit(100), n_buckets=8
+        ).cache()
+        filters = {
+            r["bucket"]: (
+                CuckooFilter.from_bytes(bytes(r["bits"]), r["nb"]),
+                r["overflowed"],
+            )
+            for r in updated.collect()
         }
+        a = set()
+        for r in cand.select(
+            "url_sha1", F.pmod(F.xxhash64("url_sha1"), F.lit(8)).alias("b")
+        ).collect():
+            flt, overflowed = filters.get(r["b"], (None, 0))
+            hit = flt is not None and (
+                bool(overflowed) or flt.contains(r["url_sha1"])
+            )
+            a.add((r["url_sha1"], hit))
         b = {
             (r["url_sha1"], r["maybe_seen"])
-            for r in probe_cuckoo_bucketed(cand, updated, 8).collect()
+            for r in probe_bucketed(cand, updated, 8).collect()
         }
         assert a == b
 
@@ -147,6 +160,6 @@ class TestSpark:
         rest = seen.subtract(half)
         base = build_cuckoo(half, n_buckets=8)
         grown = insert_into_cuckoo(base, rest, n_buckets=8)
-        probed = probe_cuckoo(spark, seen, grown, 8)
+        probed = probe_bucketed(seen, grown, 8)
         # every seen key (old and newly inserted) probes positive
         assert probed.where(~F.col("maybe_seen")).count() == 0

@@ -54,9 +54,7 @@ def test_harvest_scan_reads_only_url_and_html(spark, pages_parquet):
 def test_no_rowwise_python_udfs_anywhere(spark, pages_parquet):
     pages = spark.read.parquet(pages_parquet)
     links = harvest_canonicalized(pages).withColumn("depth", F.lit(1))
-    sched = politeness_schedule(
-        dedup_within_epoch(links), 5, salt_all=True
-    )
+    sched = politeness_schedule(dedup_within_epoch(links), 5)
     plan = _plan(sched)
     assert "BatchEvalPython" not in plan  # row-at-a-time Python = forbidden
 
@@ -78,6 +76,65 @@ def test_politeness_window_uses_group_limit(spark, pages_parquet):
     # shuffle — the property that keeps hot hosts from flooding the wire
     assert "WindowGroupLimit" in plan
     assert plan.count("Partial") >= 1
+
+
+def test_budgeted_politeness_keeps_group_limit(spark, pages_parquet):
+    """With a per-host crawl_delay_ms joined in (not a constant), the
+    budget filter must not cost the map-side top-k: the literal
+    rn <= k conjunct still plans WindowGroupLimit."""
+    pages = spark.read.parquet(pages_parquet)
+    links = harvest_canonicalized(pages).withColumn("depth", F.lit(1))
+    cand = dedup_within_epoch(links)
+    md5_byte = F.conv(F.substring(F.md5("host"), 1, 2), 16, 10).cast("int")
+    delays = cand.select("host").distinct().withColumn(
+        "crawl_delay_ms", 100 * (1 + F.pmod(md5_byte, F.lit(40)))
+    )
+    plan = _plan(
+        politeness_schedule(cand.join(delays, "host"), 8, epoch_ms=3000)
+    )
+    assert "WindowGroupLimit" in plan
+
+
+def test_politeness_skewed_host_topk_below_exchange(spark):
+    """One host holding far more than k x (map tasks) candidates: the
+    schedule equals a pure-Python per-host top-k, and the partial
+    WindowGroupLimit sits below the host Exchange, so at most k rows
+    per map task of the hot host cross the shuffle."""
+    k, map_tasks = 5, 8
+    rows = [
+        (
+            "hot.example" if i % 10 else f"h{i % 37}.example",
+            i % 3,
+            f"http://u/{i:05d}",
+        )
+        for i in range(3000)
+    ]
+    assert sum(r[0] == "hot.example" for r in rows) > k * map_tasks
+    frontier = spark.createDataFrame(
+        rows, "host string, depth int, canon_url string"
+    ).repartition(map_tasks)
+    sched = politeness_schedule(frontier, k)
+
+    by_host = {}
+    for host, depth, canon in rows:
+        by_host.setdefault(host, []).append((depth, canon))
+    want = sorted(
+        (host, canon)
+        for host, items in by_host.items()
+        for _, canon in sorted(items)[:k]
+    )
+    got = sorted((r["host"], r["canon_url"]) for r in sched.collect())
+    assert got == want
+
+    lines = sched._sc._jvm.PythonSQLUtils.explainString(
+        sched._jdf.queryExecution(), "simple"
+    ).splitlines()
+    ex = next(
+        i for i, ln in enumerate(lines) if "Exchange hashpartitioning(host" in ln
+    )
+    assert any(
+        "WindowGroupLimit" in ln and "Partial" in ln for ln in lines[ex + 1:]
+    ), "\n".join(lines)
 
 
 def test_bucketed_seen_join_no_exchange(spark, tmp_path):

@@ -112,10 +112,8 @@ def test_bloom_probe_salted_splits_buckets(spark):
 
 
 def test_cuckoo_probe_salted_matches_unsalted(spark):
-    from warctools_spark.operators.cuckoo import (
-        build_cuckoo,
-        probe_cuckoo_bucketed,
-    )
+    from warctools_spark.operators.cuckoo import build_cuckoo
+    from warctools_spark.operators.seen import probe_bucketed
 
     seen = spark.range(0, 300, 3).select(
         F.md5(F.col("id").cast("string")).alias("url_sha1")
@@ -124,8 +122,8 @@ def test_cuckoo_probe_salted_matches_unsalted(spark):
         F.md5(F.col("id").cast("string")).alias("url_sha1"), "id"
     )
     ck = build_cuckoo(seen, n_buckets=2).cache()
-    plain = probe_cuckoo_bucketed(cand, ck, 2, probe_salts=1)
-    salted = probe_cuckoo_bucketed(cand, ck, 2, probe_salts=5)
+    plain = probe_bucketed(cand, ck, 2, probe_salts=1)
+    salted = probe_bucketed(cand, ck, 2, probe_salts=5)
     p = {r["url_sha1"]: r["maybe_seen"] for r in plain.collect()}
     s = {r["url_sha1"]: r["maybe_seen"] for r in salted.collect()}
     assert p == s and len(p) == 300
@@ -142,7 +140,7 @@ def test_two_tier_dedup_exact_with_default_salts(spark):
     seen = spark.range(0, 500, 2).select(
         F.md5(F.col("id").cast("string")).alias("url_sha1")
     )
-    out = two_tier_dedup(spark, cand, seen, n_buckets=4)
+    out = two_tier_dedup(cand, seen, n_buckets=4)
     exact = cand.join(seen, "url_sha1", "left_anti")
     assert sorted(r["id"] for r in out.collect()) == sorted(
         r["id"] for r in exact.collect()
@@ -159,11 +157,8 @@ def test_cuckoo_insert_into_empty_bucket(spark):
     insert whose bucket is absent must synthesize a filter row instead
     of silently dropping the keys (which would leak duplicates through
     a definitive-negative probe)."""
-    from warctools_spark.operators.cuckoo import (
-        build_cuckoo,
-        insert_into_cuckoo,
-        probe_cuckoo_bucketed,
-    )
+    from warctools_spark.operators.cuckoo import build_cuckoo, insert_into_cuckoo
+    from warctools_spark.operators.seen import probe_bucketed
 
     n_buckets = 8
     base = spark.range(1).select(
@@ -191,7 +186,7 @@ def test_cuckoo_insert_into_empty_bucket(spark):
     )
     # every inserted key must now probe maybe_seen=True (no false
     # negatives = no duplicate leaks through tier 2)
-    probed = probe_cuckoo_bucketed(adds, updated, n_buckets)
+    probed = probe_bucketed(adds, updated, n_buckets)
     assert all(r["maybe_seen"] for r in probed.collect())
 
 

@@ -1,13 +1,12 @@
 """Staged registration candidates, built and oracle-grade tested
 ahead of their queries()/oracle_sql() slots (the 50-entry
 certification window rotates ~5 new entries per round): host-graph
-PageRank, TrustRank, HITS, BM25 retrieval, vocab coverage, HLL
-overlap, WAT sidecars, sitemap parsing, URL path templates, SURT
-crawl scoping, Kneser-Ney fluency, per-URL change-rate estimation,
-and CDXJ emit + sorted-shard writing. Each SQL-expressible candidate
-is replayed in DuckDB and compared on the full value multiset;
-iterative/stateful ones (see test_unigram_lm.py, test_cdc.py,
-test_policy.py for the rest of the staged set) carry
+PageRank, TrustRank, HITS, vocab coverage, HLL overlap, WAT sidecars,
+sitemap parsing, URL path templates, SURT crawl scoping, Kneser-Ney
+fluency, per-URL change-rate estimation, and CDXJ emit + sorted-shard
+writing. Each SQL-expressible candidate is replayed in DuckDB and
+compared on the full value multiset; iterative/stateful ones (see
+test_unigram_lm.py for the rest of the staged set) carry
 independent-reference or property evidence instead."""
 
 import duckdb
@@ -16,7 +15,6 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 from warctools_spark.operators.graph import pagerank
-from warctools_spark.operators.retrieval import bm25_topk
 
 
 @pytest.fixture(scope="module")
@@ -158,88 +156,6 @@ def test_pagerank_matches_duckdb_replay(spark, docs):
         ).fetchall()
     }
     assert got == want
-
-
-# ----------------------------------------------------------------- bm25
-
-
-def test_bm25_prefers_denser_shorter_docs(spark):
-    df = spark.createDataFrame(
-        [
-            (0, "crawl the web crawl the frontier"),
-            (1, "crawl " + "filler " * 60),
-            (2, "nothing relevant here at all"),
-            (3, "crawl crawl crawl"),
-        ],
-        "doc_id long, text string",
-    )
-    rows = bm25_topk(df, ["crawl", "frontier"], k=10).collect()
-    ids = [r.doc_id for r in rows]
-    assert 2 not in ids  # no query term -> never appears
-    assert ids[0] == 0  # both terms, short doc wins
-    by_id = {r.doc_id: r for r in rows}
-    assert by_id[0].n_hits == 2 and by_id[3].n_hits == 1
-    # dense short doc beats the diluted long one on the same term
-    assert by_id[3].score > by_id[1].score
-
-
-def test_bm25_query_terms_case_and_dup_insensitive(docs):
-    a = [tuple(r) for r in bm25_topk(docs, ["the", "and"], k=5).collect()]
-    b = [tuple(r) for r in bm25_topk(docs, ["The", "AND", "the"], k=5).collect()]
-    assert a == b
-
-
-def test_bm25_rejects_empty_query(docs):
-    with pytest.raises(ValueError):
-        bm25_topk(docs, [])
-
-
-def test_bm25_matches_duckdb_replay(spark, docs):
-    query, k1, b = ["crawl", "data", "quality"], 1.2, 0.75
-    got = [tuple(r) for r in bm25_topk(docs, query, k=20).collect()]
-
-    con = duckdb.connect()
-    con.register("docs", docs.toPandas())
-    terms = ", ".join(f"'{t}'" for t in sorted(set(query)))
-    want = con.execute(
-        f"""
-        WITH toks AS (
-          SELECT doc_id,
-                 len(string_split_regex(trim(lower(text)), '\\s+')) AS dl,
-                 unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-          FROM docs
-        ), tf AS (
-          SELECT doc_id, term, CAST(COUNT(*) AS DOUBLE) AS tf, ANY_VALUE(dl) AS dl
-          FROM toks WHERE term IN ({terms}) GROUP BY doc_id, term
-        ), stats AS (
-          SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-                 AVG(len(string_split_regex(trim(lower(text)), '\\s+'))) AS avgdl
-          FROM docs
-        ), idf AS (
-          SELECT term, ln(1.0 + (s.n_docs - df + 0.5) / (df + 0.5)) AS idf, s.avgdl
-          FROM (SELECT term, CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS df
-                FROM tf GROUP BY term) d, stats s
-        )
-        SELECT doc_id,
-               ROUND(SUM(idf * tf * ({k1} + 1.0)
-                     / (tf + {k1} * (1.0 - {b} + {b} * dl / avgdl))), 4) AS score,
-               COUNT(*) AS n_hits
-        FROM tf JOIN idf USING (term)
-        GROUP BY doc_id
-        ORDER BY score DESC, doc_id ASC
-        LIMIT 20
-        """
-    ).fetchall()
-    assert got == [tuple(r) for r in want]
-
-
-def test_bm25_plan_filters_before_agg_no_python(docs):
-    df = bm25_topk(docs, ["crawl"], k=5)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "TakeOrderedAndProject" in plan  # top-k, never a global sort
 
 
 # ------------------------------------------------------- vocab coverage
@@ -409,7 +325,7 @@ def test_wat_record_roundtrips_and_matches_harvest(spark):
     import json
 
     from warctools_spark.kernels.warc_parse import parse_archive
-    from warctools_spark.operators.frontier import harvest_links
+    from warctools_spark.operators.frontier import harvest_canonicalized
     from warctools_spark.operators.wat import wat_records
     from warctools_spark.sources.pages import synthesize_pages
 
@@ -417,7 +333,7 @@ def test_wat_record_roundtrips_and_matches_harvest(spark):
     got = wat_records(pages).collect()
     assert len(got) == 12
     want_links = {}
-    for r in harvest_links(pages).collect():
+    for r in harvest_canonicalized(pages).collect():
         want_links.setdefault(r.src_url, []).append(r.link)
     for r in got:
         (rec,) = parse_archive(bytes(r.record_bytes), fmt="warc")

@@ -86,7 +86,7 @@ def test_decode_http_struct(pages):
 
 
 def test_harvest_links(pages):
-    links = FR.harvest_links(pages)
+    links = FR.harvest_canonicalized(pages)
     n = links.count()
     assert n == pages.count() * 8  # N_LINKS outlinks per page
     # links resolve to in-universe urls
@@ -95,7 +95,7 @@ def test_harvest_links(pages):
 
 
 def test_frontier_dedup_and_schedule(pages, spark):
-    links = FR.canonicalized(FR.harvest_links(pages)).withColumn("depth", F.lit(1))
+    links = FR.harvest_canonicalized(pages).withColumn("depth", F.lit(1))
     uniq = FR.dedup_within_epoch(links)
     assert uniq.count() == uniq.select("url_sha1").distinct().count()
 
@@ -106,39 +106,49 @@ def test_frontier_dedup_and_schedule(pages, spark):
     # no seen key survives
     assert fresh.join(seen, "url_sha1", "inner").count() == 0
 
-    # politeness: plain window == salted window (exactness of the
-    # two-phase skew path)
+    # politeness: the window == a pure-Python per-host top-k by
+    # (depth, canon_url) over the collected candidates (the hot host
+    # included)
     k = 5
     plain = FR.politeness_schedule(uniq, k)
-    hot = FR.detect_hot_hosts(uniq, threshold=20)
-    salted = FR.politeness_schedule(uniq, k, hot_hosts=hot, salt=4)
-    a = sorted(tuple(r) for r in plain.select("url_sha1").collect())
-    b = sorted(tuple(r) for r in salted.select("url_sha1").collect())
-    assert a == b
+    by_host = {}
+    for r in uniq.select("host", "depth", "canon_url", "url_sha1").collect():
+        by_host.setdefault(r["host"], []).append(
+            (r["depth"], r["canon_url"], r["url_sha1"])
+        )
+    want = sorted(
+        sha for items in by_host.values() for _, _, sha in sorted(items)[:k]
+    )
+    a = sorted(r["url_sha1"] for r in plain.select("url_sha1").collect())
+    assert a == want
     per_host = plain.groupBy("host").count().agg(F.max("count")).collect()[0][0]
     assert per_host <= k
 
 
 def test_bloom_two_tier_exactness(pages, spark):
-    links = FR.canonicalized(FR.harvest_links(pages)).withColumn("depth", F.lit(1))
+    links = FR.harvest_canonicalized(pages).withColumn("depth", F.lit(1))
     uniq = FR.dedup_within_epoch(links).cache()
     seen = uniq.where(F.col("url_sha1").substr(1, 1) >= "c").select("url_sha1").cache()
 
+    from warctools_spark.operators.cuckoo import build_cuckoo
+
     exact = FR.dedup_against_seen(uniq, seen)
     a = sorted(r["url_sha1"] for r in exact.select("url_sha1").collect())
-    for mode in ("bucketed", "broadcast"):
-        two_tier = SEEN.two_tier_dedup(
-            spark, uniq, seen, n_buckets=8, fpr=0.05, probe_mode=mode
-        )
+    filters = {
+        "bloom": SEEN.build_bloom(seen, n_buckets=8, fpr=0.05),
+        "cuckoo": build_cuckoo(seen, n_buckets=8),
+    }
+    for name, flt in filters.items():
+        two_tier = SEEN.two_tier_dedup(uniq, seen, n_buckets=8, seen_filter=flt)
         b = sorted(r["url_sha1"] for r in two_tier.select("url_sha1").collect())
-        assert a == b, mode  # zero false dedups, zero leaks
+        assert a == b, name  # zero false dedups, zero leaks
 
 
 def test_bucketed_probe_no_driver_broadcast(pages, spark, monkeypatch):
     """The default (bucketed) probe must never collect the filter to
     the driver nor SparkContext.broadcast bitsets — that is the whole
     point of the co-partitioned path at 10^10 keys."""
-    links = FR.canonicalized(FR.harvest_links(pages.limit(100)))
+    links = FR.harvest_canonicalized(pages.limit(100))
     uniq = FR.dedup_within_epoch(links.withColumn("depth", F.lit(1))).cache()
     seen = uniq.where(F.col("url_sha1").substr(1, 1) < "8").select("url_sha1")
 
@@ -152,7 +162,7 @@ def test_bucketed_probe_no_driver_broadcast(pages, spark, monkeypatch):
     )
     got = sorted(
         r["url_sha1"]
-        for r in SEEN.two_tier_dedup(spark, uniq, seen, n_buckets=8)
+        for r in SEEN.two_tier_dedup(uniq, seen, n_buckets=8)
         .select("url_sha1")
         .collect()
     )
@@ -162,7 +172,9 @@ def test_bucketed_probe_no_driver_broadcast(pages, spark, monkeypatch):
 
     got_ck = sorted(
         r["url_sha1"]
-        for r in CK.two_tier_dedup_cuckoo(spark, uniq, seen, n_buckets=8)
+        for r in SEEN.two_tier_dedup(
+            uniq, seen, n_buckets=8, seen_filter=CK.build_cuckoo(seen, n_buckets=8)
+        )
         .select("url_sha1")
         .collect()
     )
@@ -172,7 +184,7 @@ def test_bucketed_probe_no_driver_broadcast(pages, spark, monkeypatch):
 def test_bloom_incremental_union(pages, spark):
     """Bloom(A) | Bloom(B) must behave exactly like Bloom(A ∪ B) —
     the incremental maintenance path for an append-only seen set."""
-    links = FR.canonicalized(FR.harvest_links(pages)).select("url_sha1").distinct().cache()
+    links = FR.harvest_canonicalized(pages).select("url_sha1").distinct().cache()
     a = links.where(F.col("url_sha1").substr(1, 1) < "8")
     b = links.where(F.col("url_sha1").substr(1, 1) >= "8")
     m, k = 1 << 16, 5
@@ -186,7 +198,7 @@ def test_bloom_incremental_union(pages, spark):
 
 
 def test_bloom_determinism(pages, spark):
-    links = FR.canonicalized(FR.harvest_links(pages.limit(50)))
+    links = FR.harvest_canonicalized(pages.limit(50))
     keys = links.select("url_sha1").distinct()
     b1 = {r["bucket"]: r["bits"] for r in SEEN.build_bloom(keys, n_buckets=4, m_bits=1 << 16, k_hashes=5).collect()}
     b2 = {r["bucket"]: r["bits"] for r in SEEN.build_bloom(keys, n_buckets=4, m_bits=1 << 16, k_hashes=5).collect()}
@@ -195,9 +207,10 @@ def test_bloom_determinism(pages, spark):
 
 def test_bucketed_probe_sparse_buckets(spark):
     """Buckets with no filter row (keys clustered elsewhere) answer
-    definitively-unseen; agreement with the broadcast probe across a
-    bucket count far larger than the key count."""
-    from warctools_spark.operators import seen as SEEN
+    definitively-unseen; agreement with a driver-side probe of the
+    collected filter rows across a bucket count far larger than the
+    key count."""
+    import numpy as np
 
     keys = spark.createDataFrame(
         [(format(i, "040x"),) for i in range(5)], "url_sha1 string"
@@ -210,10 +223,17 @@ def test_bucketed_probe_sparse_buckets(spark):
         (r["url_sha1"], r["maybe_seen"])
         for r in SEEN.probe_bucketed(cand, bloom, 64).collect()
     }
-    b = {
-        (r["url_sha1"], r["maybe_seen"])
-        for r in SEEN.probe(spark, cand, bloom, 64).collect()
+    filters = {
+        r["bucket"]: (np.frombuffer(r["bits"], dtype=np.uint8), r["m"], r["k"])
+        for r in bloom.collect()
     }
+    b = set()
+    for r in cand.select(
+        "url_sha1", F.pmod(F.xxhash64("url_sha1"), F.lit(64)).alias("b")
+    ).collect():
+        entry = filters.get(r["b"])
+        hit = bool(SEEN._probe_batch(*entry, [r["url_sha1"]])[0]) if entry else False
+        b.add((r["url_sha1"], hit))
     assert a == b
     # the 5 true members must probe positive
     members = {format(i, "040x") for i in range(5)}

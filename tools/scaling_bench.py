@@ -35,8 +35,8 @@ spark = get_spark(app="scaling", master=f"local[{cpus}]", shuffle_partitions=64)
 spark.sparkContext.setLogLevel("ERROR")
 
 from warctools_spark.operators.frontier import (
-    dedup_against_seen, dedup_within_epoch, detect_hot_hosts,
-    harvest_canonicalized, politeness_schedule,
+    dedup_against_seen, dedup_within_epoch, harvest_canonicalized,
+    politeness_schedule,
 )
 
 seen_path = pages_path.replace("pages_", "seen_")
@@ -47,7 +47,7 @@ def epoch():
     links = harvest_canonicalized(pages).withColumn("depth", F.lit(1))
     cand = dedup_within_epoch(links)
     fresh = dedup_against_seen(cand, seen)
-    return politeness_schedule(fresh, 100, salt_all=True, salt=32).count()
+    return politeness_schedule(fresh, 100).count()
 
 epoch()  # warmup: JIT + python worker pool spin-up
 times = []

@@ -1,6 +1,7 @@
 """Cuckoo-filter URL-seen set — the delete-supporting fallback behind
 the same two-tier interface as the Bloom filter (north_rule: "bloom/
-cuckoo URL-seen"; SURVEY §7 phase 3).
+cuckoo URL-seen"; SURVEY §7 phase 3): pass a build_cuckoo table as
+`seen_filter` to operators.seen.two_tier_dedup / probe_bucketed.
 
 Why cuckoo: a crawl occasionally needs to *retract* seen-ness
 (recrawl-after-expiry, corrected canonicalization). Bloom cannot
@@ -21,7 +22,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SLOTS = 4
@@ -67,7 +68,7 @@ def _fp_i1_batch(sha1s: list[str], nb: int) -> tuple[np.ndarray, np.ndarray]:
 
 class CuckooFilter:
     """Single-partition filter; built per host-hash bucket inside
-    applyInPandas, probed from a broadcast."""
+    applyInPandas, probed per bucket by operators.seen.probe_bucketed."""
 
     def __init__(self, nb: int, table: np.ndarray | None = None):
         self.nb = nb
@@ -249,139 +250,6 @@ def delete_from_cuckoo(cuckoo: DataFrame, deletions: DataFrame, n_buckets: int) 
             "bucket int, nb int, version int, overflowed int, bits binary",
         )
     )
-
-
-def probe_cuckoo_bucketed(
-    candidates: DataFrame,
-    cuckoo: DataFrame,
-    n_buckets: int,
-    probe_salts: int | None = None,
-) -> DataFrame:
-    """candidates + maybe_seen with the filter staying distributed:
-    shuffle candidates by the build-time bucket key, cogroup with the
-    (bucket, bits) table, probe each bucket's table in one vectorized
-    pass. No driver collect / whole-filter broadcast — the ≥1 GB path
-    (same shape as operators.seen.probe_bucketed).
-
-    Like the Bloom probe, parallelism is decoupled from n_buckets via
-    a salted cogroup key: candidates spread over (bucket, salt), the
-    filter row is replicated per salt, so one bucket's candidates can
-    run as probe_salts tasks. Auto-sizes to defaultParallelism."""
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    from warctools_spark.operators.seen import _auto_salts
-
-    if probe_salts is None:
-        probe_salts = _auto_salts(candidates, n_buckets)
-    cand_cols = list(candidates.columns)
-    keyed = candidates.withColumn(
-        "__bucket",
-        F.pmod(F.xxhash64("url_sha1"), F.lit(n_buckets)).cast("int"),
-    ).withColumn(
-        "__salt",
-        F.pmod(F.xxhash64("url_sha1", F.lit(0x5A17)), F.lit(probe_salts)).cast(
-            "int"
-        ),
-    )
-    flt_salted = cuckoo.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(probe_salts)]))
-    )
-    out_schema = StructType(
-        list(candidates.schema.fields)
-        + [StructField("maybe_seen", BooleanType(), False)]
-    )
-
-    def probe_group(cands: pd.DataFrame, flt: pd.DataFrame) -> pd.DataFrame:
-        out = cands[cand_cols].copy()
-        if not len(cands):
-            out["maybe_seen"] = pd.Series([], dtype=bool)
-            return out
-        if not len(flt):
-            out["maybe_seen"] = False
-            return out
-        row = flt.iloc[0]
-        if int(row["overflowed"]):
-            # lossy bucket -> always verify exactly
-            out["maybe_seen"] = True
-            return out
-        f = CuckooFilter.from_bytes(bytes(row["bits"]), int(row["nb"]))
-        out["maybe_seen"] = f.contains_batch(cands["url_sha1"].tolist())
-        return out
-
-    return (
-        keyed.groupBy("__bucket", "__salt")
-        .cogroup(flt_salted.groupBy("bucket", "__salt"))
-        .applyInPandas(probe_group, out_schema)
-    )
-
-
-def probe_cuckoo(
-    spark: SparkSession, candidates: DataFrame, cuckoo: DataFrame, n_buckets: int
-) -> DataFrame:
-    """Broadcast-probe variant for SMALL filters (definitive negative).
-    Collects every bucket to the driver — use probe_cuckoo_bucketed
-    beyond ~100 MB of filter bytes; bucketed is the two_tier default."""
-    rows = cuckoo.collect()
-    filters = {
-        int(r["bucket"]): (bytes(r["bits"]), int(r["nb"]), int(r["overflowed"]))
-        for r in rows
-    }
-    bc = spark.sparkContext.broadcast(filters)
-
-    @F.pandas_udf("boolean")
-    def _maybe(bucket: pd.Series, sha1s: pd.Series) -> pd.Series:
-        cache: dict = {}
-        out = np.zeros(len(sha1s), dtype=bool)
-        flt_map = bc.value
-        for i, (b, h) in enumerate(zip(bucket, sha1s)):
-            if h is None or b is None:
-                continue
-            entry = flt_map.get(int(b))
-            if entry is None:
-                continue
-            data, nb, overflowed = entry
-            if overflowed:
-                out[i] = True  # lossy bucket -> always verify exactly
-                continue
-            flt = cache.get(int(b))
-            if flt is None:
-                flt = CuckooFilter.from_bytes(data, nb)
-                cache[int(b)] = flt
-            out[i] = flt.contains(h)
-        return pd.Series(out)
-
-    return candidates.withColumn(
-        "maybe_seen",
-        _maybe(
-            F.pmod(F.xxhash64("url_sha1"), F.lit(n_buckets)).cast("int"),
-            F.col("url_sha1"),
-        ),
-    )
-
-
-def two_tier_dedup_cuckoo(
-    spark: SparkSession,
-    candidates: DataFrame,
-    seen: DataFrame,
-    n_buckets: int = 32,
-    probe_mode: str = "bucketed",
-) -> DataFrame:
-    """Exact frontier \\ seen with the cuckoo fast path (same contract
-    as operators.seen.two_tier_dedup)."""
-    cuckoo = build_cuckoo(seen, n_buckets=n_buckets)
-    if probe_mode == "bucketed":
-        probed = probe_cuckoo_bucketed(candidates, cuckoo, n_buckets)
-    elif probe_mode == "broadcast":
-        probed = probe_cuckoo(spark, candidates, cuckoo, n_buckets)
-    else:
-        raise ValueError(f"unknown probe_mode: {probe_mode!r}")
-    definitely_new = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
-    suspects = probed.where(F.col("maybe_seen")).drop("maybe_seen")
-    # anti-join ignores right-side duplicates: no .distinct() needed
-    survivors = suspects.join(
-        seen.select("url_sha1"), on="url_sha1", how="left_anti"
-    )
-    return definitely_new.unionByName(survivors)
 
 
 def insert_into_cuckoo(

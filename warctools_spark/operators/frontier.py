@@ -7,12 +7,13 @@ link extraction. Everything frontier-ward of that (canonical seen-set,
 per-host politeness, BFS priority) is north_rule-mandated new
 capability, expressed with built-in Catalyst operators:
 
-* link harvest: pandas-UDF extraction + explode (generator -> rows)
-* dedup: left_anti join on url_sha1 (+ optional Bloom pre-filter,
-  operators/seen.py, for the 10^10-row regime)
-* politeness: ranking window partitioned by host — with explicit
-  two-phase salting for hot hosts, because a single skewed host would
-  otherwise serialize onto one task at 100 TB
+* link harvest: one mapInPandas pass (decode -> extract ->
+  canonicalize), harvest_canonicalized
+* dedup: left_anti join on url_sha1 (+ optional Bloom or cuckoo
+  pre-filter, operators/seen.py, for the 10^10-row regime)
+* politeness: one ranking window partitioned by host; its map-side
+  WindowGroupLimit caps what a hot host sends through the shuffle
+  at k rows per map task
 * ordering: depth ASC, discovery order — data-derived, never
   partition-iteration order, so results are deterministic under any
   parallelism
@@ -22,25 +23,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from warctools_spark.functions.udfs import (
-    udf_canonicalize_url,
-    udf_extract_links,
-    udf_url_host,
-    udf_url_sha1,
-)
-
-
-def harvest_links(pages: DataFrame, url_col: str = "url", html_col: str = "html") -> DataFrame:
-    """pages -> one row per (src_url, link) for 2xx text/html pages
-    (warclinks.py:54-66 gates inside the UDF)."""
-    return (
-        pages.select(
-            F.col(url_col).alias("src_url"),
-            F.explode(udf_extract_links(F.col(url_col), F.col(html_col))).alias("link"),
-        )
-    )
-
 
 _HARVEST_SCHEMA = (
     "src_url string, link string, canon_url string, url_sha1 string, "
@@ -97,23 +79,14 @@ def _harvest_flat(it):
 def harvest_canonicalized(
     pages: DataFrame, url_col: str = "url", html_col: str = "html"
 ) -> DataFrame:
-    """Fused harvest+canonicalize: one Arrow pass producing
-    (src_url, link, canon_url, url_sha1, host) — the hot-path variant
-    of harvest_links |> canonicalized (identical rows, 1 Python pass
-    instead of 4). The explicit two-column select before mapInPandas
-    is load-bearing: opaque functions defeat column pruning, so
-    without it the scan would read every page column (guide §4.1)."""
+    """Link harvest: one Arrow pass producing one row per outlink of
+    each 2xx text/html page (warclinks.py:54-66 gates), as
+    (src_url, link, canon_url, url_sha1, host) in page link order.
+    The explicit two-column select before mapInPandas is
+    load-bearing: opaque functions defeat column pruning, so without
+    it the scan would read every page column (guide §4.1)."""
     return pages.select(F.col(url_col), F.col(html_col)).mapInPandas(
         _harvest_flat, _HARVEST_SCHEMA
-    )
-
-
-def canonicalized(links: DataFrame, link_col: str = "link") -> DataFrame:
-    """Attach canonical URL, seen-key sha1 and politeness host."""
-    return (
-        links.withColumn("canon_url", udf_canonicalize_url(F.col(link_col)))
-        .withColumn("url_sha1", udf_url_sha1(F.col(link_col)))
-        .withColumn("host", udf_url_host(F.col(link_col)))
     )
 
 
@@ -152,124 +125,39 @@ def dedup_within_epoch(candidates: DataFrame) -> DataFrame:
 def politeness_schedule(
     frontier: DataFrame,
     k_per_host: int,
-    hot_hosts: DataFrame | None = None,
-    salt: int = 16,
-    order_cols: tuple = ("depth", "canon_url"),
-    salt_all: bool = False,
-) -> DataFrame:
-    """Pick at most k URLs per host, best (depth, tiebreak) first.
-
-    Plain path: one ranking window partitioned by host.
-
-    Skew paths (both exact — every true top-k row is within its salt's
-    top-k, so the phase-2 re-window over <= salt*k survivors per host
-    recovers the global top-k):
-
-    * hot_hosts: only listed hosts are salted (needs a histogram pass
-      to find them — one extra job per epoch);
-    * salt_all=True: every host is salted — no histogram job, no
-      broadcast join; phase 2 runs over at most salt*k rows per host,
-      so the extra window is negligible. This is the default scale
-      path: a single-lineage plan robust to ANY skew without driver
-      round-trips.
-    """
-    order = [F.col(c).asc() for c in order_cols]
-
-    if salt_all:
-        w1 = Window.partitionBy("host", "salt").orderBy(*order)
-        w2 = Window.partitionBy("host").orderBy(*order)
-        return (
-            frontier.withColumn(
-                "salt", F.pmod(F.xxhash64("url_sha1"), F.lit(salt))
-            )
-            .withColumn("rn", F.row_number().over(w1))
-            .where(F.col("rn") <= k_per_host)
-            .withColumn("rn2", F.row_number().over(w2))
-            .where(F.col("rn2") <= k_per_host)
-            .drop("rn", "rn2", "salt")
-        )
-
-    if hot_hosts is None:
-        w = Window.partitionBy("host").orderBy(*order)
-        return (
-            frontier.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k_per_host)
-            .drop("rn")
-        )
-
-    hot = hot_hosts.select("host").withColumn("is_hot", F.lit(True))
-    tagged = frontier.join(F.broadcast(hot), on="host", how="left").withColumn(
-        "salt",
-        F.when(
-            F.col("is_hot").isNotNull(), F.pmod(F.xxhash64("url_sha1"), F.lit(salt))
-        ).otherwise(F.lit(0)),
-    )
-    w1 = Window.partitionBy("host", "salt").orderBy(*order)
-    survivors = (
-        tagged.withColumn("rn", F.row_number().over(w1))
-        .where(F.col("rn") <= k_per_host)
-        .drop("rn")
-    )
-    w2 = Window.partitionBy("host").orderBy(*order)
-    return (
-        survivors.withColumn("rn", F.row_number().over(w2))
-        .where(F.col("rn") <= k_per_host)
-        .drop("rn", "salt", "is_hot")
-    )
-
-
-def politeness_schedule_budgeted(
-    frontier: DataFrame,
-    k_per_host: int,
     epoch_ms: int = 60_000,
-    order_cols: tuple = ("depth", "canon_url"),
-    salt: int = 16,
+    *,
+    salt_all: bool = False,  # ignored; perfbench/workloads.py still passes it
 ) -> DataFrame:
-    """Politeness with per-host crawl-delay budgets: a host allows at
-    most min(k, epoch_ms / crawl_delay_ms) fetches per epoch window
-    (robots Crawl-delay, operators/robots.py). Two-phase salted window
-    as in salt_all — the per-row budget predicate composes with
-    row_number the same way."""
-    order = [F.col(c).asc() for c in order_cols]
-    budget = F.least(
-        F.lit(k_per_host),
-        F.when(
-            F.coalesce(F.col("crawl_delay_ms"), F.lit(0)) > 0,
-            F.greatest(
-                F.lit(1),
-                (F.lit(epoch_ms) / F.col("crawl_delay_ms")).cast("int"),
-            ),
-        ).otherwise(F.lit(k_per_host)),
+    """Pick at most k URLs per host, best (depth, canon_url) first.
+
+    One ranking window partitioned by host. The literal `rn <= k`
+    conjunct is what lets Spark 4 plan a partial WindowGroupLimit
+    below the shuffle: each map task sends at most k rows per host,
+    so a hot host's reducer reads at most k x (map tasks) rows while
+    k_per_host <= spark.sql.optimizer.windowGroupLimitThreshold
+    (default 1000). No salting or host histogram is needed for skew.
+
+    If the frontier has a `crawl_delay_ms` column (robots Crawl-delay,
+    operators/robots.py), a host with a positive delay also gets at
+    most max(1, epoch_ms / crawl_delay_ms) fetches per epoch window.
+    """
+    w = Window.partitionBy("host").orderBy(
+        F.col("depth").asc(), F.col("canon_url").asc()
     )
-    w1 = Window.partitionBy("host", "salt").orderBy(*order)
-    w2 = Window.partitionBy("host").orderBy(*order)
-    return (
-        frontier.withColumn("budget", budget)
-        .withColumn("salt", F.pmod(F.xxhash64("url_sha1"), F.lit(salt)))
-        .withColumn("rn", F.row_number().over(w1))
-        .where(F.col("rn") <= F.col("budget"))
-        .withColumn("rn2", F.row_number().over(w2))
-        .where(F.col("rn2") <= F.col("budget"))
-        .drop("rn", "rn2", "salt", "budget")
+    ranked = frontier.withColumn("rn", F.row_number().over(w)).where(
+        F.col("rn") <= k_per_host
     )
-
-
-def detect_hot_hosts(frontier: DataFrame, threshold: int) -> DataFrame:
-    """Per-epoch host histogram; hosts above `threshold` candidate rows
-    get salted windows (SURVEY.md §4.2)."""
-    return (
-        frontier.groupBy("host")
-        .agg(F.count("*").alias("n"))
-        .where(F.col("n") > threshold)
-        .select("host")
-    )
-
-
-def bfs_order(frontier: DataFrame) -> DataFrame:
-    """Breadth-first global priority: depth ascending with a
-    data-derived deterministic tiebreak (SURVEY.md §2.8 — never rely on
-    partition iteration order)."""
-    return frontier.orderBy("depth", "host", "canon_url")
+    if "crawl_delay_ms" in frontier.columns:
+        delay = F.col("crawl_delay_ms")
+        # null (no positive delay) = no budget; F.when keeps the
+        # division from ever seeing a zero delay (ANSI raises on it)
+        budget = F.when(
+            delay > 0,
+            F.greatest(F.lit(1), (F.lit(epoch_ms) / delay).cast("int")),
+        )
+        ranked = ranked.where(budget.isNull() | (F.col("rn") <= budget))
+    return ranked.drop("rn")
 
 
 def link_rank(

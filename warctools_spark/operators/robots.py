@@ -169,14 +169,6 @@ def apply_robots(
     )
 
 
-def budget_per_host(epoch_ms: int, crawl_delay_ms) -> F.Column:
-    """How many fetches a host allows inside one epoch window."""
-    return F.when(
-        F.col("crawl_delay_ms") > 0,
-        F.greatest(F.lit(1), (F.lit(epoch_ms) / F.col("crawl_delay_ms")).cast("int")),
-    ).otherwise(F.lit(epoch_ms))
-
-
 def robots_refetch_due(
     fetch_log: DataFrame,
     hosts: DataFrame,

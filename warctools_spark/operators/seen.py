@@ -1,11 +1,14 @@
-"""URL-seen set at 10^10 scale: exact anti-join + Bloom pre-filter.
+"""URL-seen set at 10^10 scale: exact anti-join + Bloom (or cuckoo)
+pre-filter.
 
 Two-tier design (SURVEY.md §7 phase 3, north_rule):
 
   tier 1 (Bloom): per-bucket bitsets built distributively with
   applyInPandas (one numpy bitset per host-hash bucket, merged
-  bucket-locally — no driver-side reduce of raw keys). Probing is
-  CO-PARTITIONED by default: candidates are shuffled by the same
+  bucket-locally — no driver-side reduce of raw keys). The cuckoo
+  table of operators/cuckoo.py (delete-capable) has the same bucket
+  layout and plugs into the same probe. Probing is always
+  CO-PARTITIONED (probe_bucketed): candidates are shuffled by the same
   `pmod(xxhash64(url_sha1), n_buckets)` key used at build time and
   cogrouped with the (bucket, bits) filter table, so each task touches
   exactly one bucket's bitset and the driver never materializes the
@@ -14,7 +17,7 @@ Two-tier design (SURVEY.md §7 phase 3, north_rule):
   per-executor whole-filter copy. A negative probe is definitive
   (the URL was never seen); a positive is only probable.
 
-  tier 2 (exact): only Bloom-positive candidates reach the exact
+  tier 2 (exact): only filter-positive candidates reach the exact
   left_anti join against the seen table. Zero false dedups, and at a
   1% FPR the exact join sees ~1% of the frontier instead of 100%.
 
@@ -30,8 +33,10 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from warctools_spark.operators.cuckoo import CuckooFilter
 
 HASH_SCHEME_VERSION = 1
 
@@ -215,16 +220,23 @@ def _auto_salts(candidates: DataFrame, n_buckets: int) -> int:
 
 def probe_bucketed(
     candidates: DataFrame,
-    bloom: DataFrame,
+    seen_filter: DataFrame,
     n_buckets: int,
     probe_salts: int | None = None,
 ) -> DataFrame:
     """candidates + boolean `maybe_seen`, with the filter STAYING
     DISTRIBUTED: candidates are shuffled by the build-time bucket key
-    and cogrouped with the (bucket, bits) table, so each task reads one
-    bucket's bitset via Arrow and probes its own candidates in a single
-    vectorized pass. No driver collect, no SparkContext.broadcast of
-    bitsets — this is the ≥1 GB / 10^10-key path (SCALE.md option 2).
+    and cogrouped with the per-bucket filter table, so each task reads
+    one bucket's filter via Arrow and probes its own candidates in a
+    single vectorized pass. No driver collect, no SparkContext.broadcast
+    of filter bytes — this holds at the 10^10-key design point
+    (SCALE.md, Bloom sizing).
+
+    `seen_filter` is either a Bloom table (build_bloom: m, k columns)
+    or a cuckoo table (operators/cuckoo.build_cuckoo: nb, overflowed
+    columns); its columns pick the membership test. A cuckoo bucket
+    marked overflowed is lossy, so all its candidates answer True and
+    the exact tier verifies them.
 
     Probe parallelism is decoupled from `n_buckets` by salting the
     cogroup key: candidates spread over (bucket, salt) via an
@@ -234,6 +246,20 @@ def probe_bucketed(
     probe_salts=None auto-sizes to the session's defaultParallelism.
     """
     from pyspark.sql.types import BooleanType, StructField, StructType
+
+    if "overflowed" in seen_filter.columns:
+
+        def member(row, keys: list) -> np.ndarray:
+            if int(row["overflowed"]):
+                return np.ones(len(keys), dtype=bool)
+            flt = CuckooFilter.from_bytes(bytes(row["bits"]), int(row["nb"]))
+            return flt.contains_batch(keys)
+
+    else:
+
+        def member(row, keys: list) -> np.ndarray:
+            bits = np.frombuffer(row["bits"], dtype=np.uint8)
+            return _probe_batch(bits, int(row["m"]), int(row["k"]), keys)
 
     if probe_salts is None:
         probe_salts = _auto_salts(candidates, n_buckets)
@@ -249,7 +275,7 @@ def probe_bucketed(
             "int"
         ),
     )
-    flt_salted = bloom.withColumn(
+    flt_salted = seen_filter.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(probe_salts)]))
     )
     out_schema = StructType(
@@ -267,11 +293,7 @@ def probe_bucketed(
             # here, so every candidate is definitively unseen
             out["maybe_seen"] = False
             return out
-        row = flt.iloc[0]
-        bits = np.frombuffer(row["bits"], dtype=np.uint8)
-        out["maybe_seen"] = _probe_batch(
-            bits, int(row["m"]), int(row["k"]), cands["url_sha1"].tolist()
-        )
+        out["maybe_seen"] = member(flt.iloc[0], cands["url_sha1"].tolist())
         return out
 
     return (
@@ -281,80 +303,29 @@ def probe_bucketed(
     )
 
 
-def probe(
-    spark: SparkSession, candidates: DataFrame, bloom: DataFrame, n_buckets: int
-) -> DataFrame:
-    """Broadcast-probe variant for SMALL filters (≲100 MB total bits):
-    avoids shuffling the candidates at the cost of a driver collect and
-    a per-executor copy of every bucket. Use `probe_bucketed` beyond
-    that — it is the default in `two_tier_dedup`.
-
-    The bucket id is computed JVM-side with the same xxhash64 expression
-    used at build time, then the pandas UDF only indexes bitsets.
-    """
-    rows = bloom.collect()
-    filters = {
-        int(r["bucket"]): (np.frombuffer(r["bits"], dtype=np.uint8), r["m"], r["k"])
-        for r in rows
-    }
-    bc = spark.sparkContext.broadcast(filters)
-
-    @F.pandas_udf("boolean")
-    def _maybe(bucket: pd.Series, sha1s: pd.Series) -> pd.Series:
-        flt = bc.value
-        out = np.zeros(len(sha1s), dtype=bool)
-        for b in bucket.dropna().unique():
-            entry = flt.get(int(b))
-            if entry is None:
-                continue
-            bits, m, k = entry
-            mask = (bucket == b).to_numpy()
-            out[mask] = _probe_batch(
-                bits, m, k, sha1s[mask].tolist()
-            )
-        return pd.Series(out)
-
-    return candidates.withColumn(
-        "maybe_seen",
-        _maybe(
-            F.pmod(F.xxhash64("url_sha1"), F.lit(n_buckets)).cast("int"),
-            F.col("url_sha1"),
-        ),
-    )
-
-
 def two_tier_dedup(
-    spark: SparkSession,
     candidates: DataFrame,
     seen: DataFrame,
     n_buckets: int = 32,
     fpr: float = 0.01,
-    probe_mode: str = "bucketed",
-    bloom: DataFrame | None = None,
+    seen_filter: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact frontier \\ seen with the Bloom fast path.
+    """Exact frontier \\ seen with a filter fast path.
 
-    definitely-new (bloom negative) ∪ (bloom positive ∖ seen-exact):
-    exactness is preserved because Bloom negatives cannot be in `seen`.
+    definitely-new (filter negative) ∪ (filter positive ∖ seen-exact):
+    exactness is preserved because filter negatives cannot be in `seen`.
 
-    probe_mode "bucketed" (default) co-partitions candidates with the
-    filter table — the scale path; "broadcast" collects the filter to
-    the driver and broadcasts it — only sane for small seen sets.
-
-    Pass a prebuilt `bloom` table (e.g. incrementally maintained via
-    union_blooms across epochs) to skip the O(|seen|) rebuild. It MUST
-    cover at least the keys of `seen` — extra keys only cost false
-    positives (exactness holds: tier 2 verifies every positive), but a
-    missing key would leak a duplicate.
+    `seen_filter` is a Bloom or cuckoo table (see probe_bucketed);
+    None builds a Bloom table over `seen` at the target `fpr`. Pass a
+    prebuilt table (e.g. incrementally maintained via union_blooms or
+    cuckoo.insert_into_cuckoo across epochs) to skip the O(|seen|)
+    rebuild. It MUST cover at least the keys of `seen` — extra keys
+    only cost false positives (exactness holds: tier 2 verifies every
+    positive), but a missing key would leak a duplicate.
     """
-    if bloom is None:
-        bloom = build_bloom(seen, n_buckets=n_buckets, fpr=fpr)
-    if probe_mode == "bucketed":
-        probed = probe_bucketed(candidates, bloom, n_buckets)
-    elif probe_mode == "broadcast":
-        probed = probe(spark, candidates, bloom, n_buckets)
-    else:
-        raise ValueError(f"unknown probe_mode: {probe_mode!r}")
+    if seen_filter is None:
+        seen_filter = build_bloom(seen, n_buckets=n_buckets, fpr=fpr)
+    probed = probe_bucketed(candidates, seen_filter, n_buckets)
     definitely_new = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
     suspects = probed.where(F.col("maybe_seen")).drop("maybe_seen")
     # anti-join ignores right-side duplicates: no .distinct() needed

@@ -1305,8 +1305,8 @@ def anchor_text_profile(
     stack since does the same): aggregate what the rest of the web
     calls a URL.
 
-    Input: (link, anchor) pairs (anchor_text_pairs or harvest_links'
-    anchors). Output, one row per distinct target link:
+    Input: (link, anchor) pairs (anchor_text_pairs). Output, one row
+    per distinct target link:
 
       link, n_anchors          total anchor occurrences
       n_unique_anchors         distinct normalized anchor strings

@@ -65,7 +65,7 @@ def wat_records(
     describe — same skip-don't-crash posture as the harvest gate).
 
     Per row: decode the HTTP response (http_decode kernel), extract
-    outlinks with the same gate as `harvest_links` (2xx + html mime;
+    outlinks with the same gate as `harvest_canonicalized` (2xx + html mime;
     warclinks.py:54-66), scan the decoded body for <title>, build the
     sorted-key JSON envelope, serialize it as a WARC metadata record
     (write_sidecar_record — the same md5-of-url uuid convention as

@@ -78,39 +78,28 @@ def run_epoch(
     k_per_host: int = 10,
     robots: DataFrame | None = None,
     use_bloom: bool = False,
-    hot_host_threshold: int | None = None,
     n_buckets: int = 32,
-    materialize: bool = True,
-    full_metrics: bool = False,
     bloom: DataFrame | None = None,
     pages_keyed: DataFrame | None = None,
 ) -> EpochResult:
-    """One frontier epoch. With materialize=True (default) the output
-    state is localCheckpoint()ed: epoch N+1 starts from materialized
-    partitions instead of re-executing N chained UDF stages — bounded
-    plan depth is what keeps a 1000-epoch crawl schedulable."""
+    """One frontier epoch. The output state is localCheckpoint()ed:
+    epoch N+1 starts from materialized partitions instead of
+    re-executing N chained UDF stages — bounded plan depth is what
+    keeps a 1000-epoch crawl schedulable."""
+    from pyspark.sql import Observation
+
     t0 = time.time()
 
-    # 1. politeness schedule (optionally skew-salted; with robots the
-    # per-host fetch budget = min(k, epoch_window / crawl_delay))
+    # 1. politeness schedule; with robots the crawl_delay_ms column
+    # adds the per-host fetch budget min(k, epoch_window / crawl_delay)
+    queued = queue
     if robots is not None and "crawl_delay_ms" in robots.columns:
         queued = queue.join(
             F.broadcast(robots.select("host", "crawl_delay_ms")),
             on="host",
             how="left",
         )
-        schedule = FR.politeness_schedule_budgeted(queued, k_per_host).select(
-            *QUEUE_COLS
-        )
-    else:
-        hot = (
-            FR.detect_hot_hosts(queue, hot_host_threshold)
-            if hot_host_threshold is not None
-            else None
-        )
-        schedule = FR.politeness_schedule(queue, k_per_host, hot_hosts=hot).select(
-            *QUEUE_COLS
-        )
+    schedule = FR.politeness_schedule(queued, k_per_host).select(*QUEUE_COLS)
 
     # 2. simulated fetch: join the scheduled urls to the pages corpus.
     # pages is keyed by raw url; canonical keys make the join exact.
@@ -143,7 +132,7 @@ def run_epoch(
     cand = FR.dedup_within_epoch(links)
     if use_bloom or bloom is not None:
         fresh = SEEN.two_tier_dedup(
-            spark, cand, seen, n_buckets=n_buckets, bloom=bloom
+            cand, seen, n_buckets=n_buckets, seen_filter=bloom
         )
     else:
         fresh = FR.dedup_against_seen(cand, seen)
@@ -155,49 +144,31 @@ def run_epoch(
         fresh = apply_robots(fresh, robots).drop("crawl_delay_ms")
     fresh = fresh.select(*QUEUE_COLS)
 
-    # 6/7. next state. With materialize=True the row-count metrics ride
-    # the checkpoint jobs as observe() aggregates — one action per
-    # materialized state table per epoch, zero extra count jobs.
-    if materialize:
-        from pyspark.sql import Observation
+    # 6/7. next state. The row-count metrics ride the checkpoint jobs
+    # as observe() aggregates — one action per materialized state
+    # table per epoch, zero extra count jobs.
+    def _cp(df, obs):
+        return df.observe(
+            obs, F.count(F.lit(1)).alias("n")
+        ).localCheckpoint(eager=True)
 
-        def _cp(df, obs):
-            return df.observe(
-                obs, F.count(F.lit(1)).alias("n")
-            ).localCheckpoint(eager=True)
-
-        o_sched, o_fresh = Observation(), Observation()
-        schedule = _cp(schedule, o_sched)
-        fresh = _cp(fresh, o_fresh)
-
-    queue_next = queue.join(
-        schedule.select("url_sha1"), on="url_sha1", how="left_anti"
-    ).unionByName(fresh)
-    seen_next = seen.unionByName(fresh.select("url_sha1"))
-
-    if materialize:
-        o_queue, o_seen = Observation(), Observation()
-        queue_next = _cp(queue_next, o_queue)
-        seen_next = _cp(seen_next, o_seen)
-        n_sched = o_sched.get["n"]
-        n_fresh = o_fresh.get["n"]
-        n_queue = o_queue.get["n"]
-        n_seen = o_seen.get["n"]
-    else:
-        n_sched = schedule.count()
-        n_fresh = fresh.count()
-        n_queue = queue_next.count()
-        n_seen = seen_next.count()
+    o_sched, o_fresh, o_queue, o_seen = (Observation() for _ in range(4))
+    schedule = _cp(schedule, o_sched)
+    fresh = _cp(fresh, o_fresh)
+    queue_next = _cp(
+        queue.join(
+            schedule.select("url_sha1"), on="url_sha1", how="left_anti"
+        ).unionByName(fresh),
+        o_queue,
+    )
+    seen_next = _cp(seen.unionByName(fresh.select("url_sha1")), o_seen)
 
     metrics = {
         "epoch": epoch,
-        "scheduled": n_sched,
-        # fetched/discovered re-execute the harvest stage; opt-in only
-        "fetched": fetched.count() if full_metrics else None,
-        "discovered": links.count() if full_metrics else None,
-        "deduped_new": n_fresh,
-        "queue_size": n_queue,
-        "seen_size": n_seen,
+        "scheduled": o_sched.get["n"],
+        "deduped_new": o_fresh.get["n"],
+        "queue_size": o_queue.get["n"],
+        "seen_size": o_seen.get["n"],
         "wall_s": time.time() - t0,
     }
     return EpochResult(
@@ -286,7 +257,6 @@ def run_crawl(
     robots: DataFrame | None = None,
     catalog: Catalog | None = None,
     use_bloom: bool = False,
-    hot_host_threshold: int | None = None,
     compact_every: int = 8,
     start_epoch: int = 0,
     initial_state: tuple[DataFrame, DataFrame] | None = None,
@@ -378,7 +348,6 @@ def run_crawl(
             k_per_host=k_per_host,
             robots=robots,
             use_bloom=use_bloom,
-            hot_host_threshold=hot_host_threshold,
             n_buckets=bloom_n_buckets,
             bloom=bloom,
             pages_keyed=pages_keyed,

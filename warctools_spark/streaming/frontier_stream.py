@@ -93,15 +93,13 @@ def schedule_micro_batches(
     trigger_available_now: bool = True,
 ):
     """foreachBatch politeness scheduling: each micro-batch is one
-    scheduling round — the exact batch operator (salted, skew-proof)
-    applied to the batch's candidates. `sink(batch_df, batch_id)` is
-    invoked with the scheduled rows."""
+    scheduling round — the exact batch operator (map-side top-k,
+    skew-bounded) applied to the batch's candidates.
+    `sink(batch_df, batch_id)` is invoked with the scheduled rows."""
 
     def _process(batch_df, batch_id):
         sched = politeness_schedule(
-            batch_df.withColumn("depth", F.lit(1)),
-            k_per_host,
-            salt_all=True,
+            batch_df.withColumn("depth", F.lit(1)), k_per_host
         )
         sink(sched, batch_id)
 
@@ -292,9 +290,9 @@ def stream_frontier_durable(
             )
         )
         fresh = SEEN.two_tier_dedup(
-            spark, cand, seen, n_buckets=bloom_n_buckets, bloom=bloom
+            cand, seen, n_buckets=bloom_n_buckets, seen_filter=bloom
         ).localCheckpoint(eager=True)
-        sched = politeness_schedule(fresh, k_per_host, salt_all=True)
+        sched = politeness_schedule(fresh, k_per_host)
         delta_bloom = SEEN.build_bloom(
             fresh.select("url_sha1"),
             n_buckets=bloom_n_buckets,
