@@ -1,0 +1,158 @@
+"""The stat-checked ``zipimporter.invalidate_caches`` (warctools_spark._pyworker).
+
+PySpark's worker resets the import caches at the start of every task;
+on Python < 3.13 the stock zipimporter re-parses its whole archive on
+each reset. The replacement re-reads only archives whose stat changed.
+"""
+
+import importlib
+import os
+import sys
+import zipfile
+import zipimport
+
+import pytest
+
+from warctools_spark import _pyworker
+
+pytestmark = pytest.mark.skipif(
+    sys.version_info >= (3, 13), reason="zipimporter reset is lazy on 3.13+"
+)
+
+
+def _write_zip(path, modules):
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, value in modules.items():
+            zf.writestr(f"{name}.py", f"VALUE = {value!r}\n")
+
+
+def _count_reads(monkeypatch):
+    calls = []
+    read = zipimport._read_directory
+
+    def counting(archive):
+        calls.append(archive)
+        return read(archive)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    return calls
+
+
+@pytest.fixture
+def zip_on_path(tmp_path):
+    archive = str(tmp_path / "pw_mods.zip")
+    _write_zip(archive, {"pw_mod_a": 1})
+    sys.path.insert(0, archive)
+    _pyworker.install()
+    yield archive
+    sys.path.remove(archive)
+    sys.path_importer_cache.pop(archive, None)
+    zipimport._zip_directory_cache.pop(archive, None)
+    for name in ("pw_mod_a", "pw_mod_b"):
+        sys.modules.pop(name, None)
+
+
+def _importer(archive):
+    importlib.import_module("pw_mod_a")
+    imp = sys.path_importer_cache[archive]
+    assert isinstance(imp, zipimport.zipimporter)
+    return imp
+
+
+def test_unchanged_archive_is_not_reread(zip_on_path, monkeypatch):
+    _importer(zip_on_path)
+    importlib.invalidate_caches()  # the first reset after install may read once
+    calls = _count_reads(monkeypatch)
+    importlib.invalidate_caches()
+    importlib.invalidate_caches()
+    assert calls == []
+
+
+def test_rewritten_archive_is_reread(zip_on_path, monkeypatch):
+    _importer(zip_on_path)
+    importlib.invalidate_caches()
+    _write_zip(zip_on_path, {"pw_mod_a": 1, "pw_mod_b": 2})
+    calls = _count_reads(monkeypatch)
+    importlib.invalidate_caches()
+    assert calls.count(zip_on_path) == 1
+    assert importlib.import_module("pw_mod_b").VALUE == 2
+
+
+def test_deleted_archive_behaves_like_stock(zip_on_path):
+    imp = _importer(zip_on_path)
+    twin = zipimport.zipimporter(zip_on_path)
+    importlib.invalidate_caches()
+    os.remove(zip_on_path)
+    importlib.invalidate_caches()  # must not raise
+    zipimport.zipimporter.invalidate_caches.__wrapped__(twin)
+    assert imp._files == twin._files == {}
+    assert zip_on_path not in zipimport._zip_directory_cache
+    with pytest.raises(ModuleNotFoundError):
+        importlib.import_module("pw_mod_b")
+
+
+def test_install_is_idempotent():
+    _pyworker.install()
+    patched = zipimport.zipimporter.invalidate_caches
+    _pyworker.install()
+    assert zipimport.zipimporter.invalidate_caches is patched
+    assert not hasattr(patched.__wrapped__, "__wrapped__")
+
+
+def test_spark_worker_reset_reads_no_archive(spark, record_property):
+    """On a Spark Python worker, after the engine is imported, a task's
+    import-cache reset reads each zip archive at most once (the first
+    reset after install) and then none at all."""
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        import warctools_spark  # noqa: F401
+
+        for _ in batches:
+            pass
+        archives = {
+            imp.archive
+            for imp in sys.path_importer_cache.values()
+            if isinstance(imp, zipimport.zipimporter)
+        }
+        calls = []
+        read = zipimport._read_directory
+
+        def counting(archive):
+            calls.append(archive)
+            return read(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+            first = len(calls)
+            importlib.invalidate_caches()
+            second = len(calls) - first
+        finally:
+            zipimport._read_directory = read
+        yield pd.DataFrame(
+            {
+                "first": [first],
+                "second": [second],
+                "archives": [len(archives)],
+                "pyspark_from_zip": [".zip" in (sys.modules["pyspark"].__file__ or "")],
+            }
+        )
+
+    row = (
+        spark.range(1, numPartitions=1)
+        .mapInPandas(
+            probe,
+            "first long, second long, archives long, pyspark_from_zip boolean",
+        )
+        .collect()[0]
+    )
+    record_property("pyspark_from_zip", row.pyspark_from_zip)
+    print(f"worker imported pyspark from a zip: {row.pyspark_from_zip}")
+    assert row.second == 0
+    assert row.first <= row.archives

@@ -22,3 +22,10 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+from warctools_spark import _pyworker
+
+# Every Python worker that unpickles an engine function imports this
+# package, so from then on its per-task import reset stops re-reading
+# unchanged zip archives (see _pyworker).
+_pyworker.install()
