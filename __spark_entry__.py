@@ -64,7 +64,7 @@ def entry(spark: SparkSession) -> DataFrame:
         [(url_for(i),) for i in range(0, n, 7)], "url string"
     )
     queue, seen = init_state(seeds)
-    res = run_epoch(spark, pages, queue, seen, epoch=0, k_per_host=10)
+    res = run_epoch(pages, queue, seen, epoch=0, k_per_host=10)
     return res.schedule.select("canon_url", "host", "depth", "url_sha1")
 
 
@@ -906,8 +906,9 @@ def _q_tpch_q5ish(spark, sf_dir):
 
 
 def _q_events_sessionize(spark, sf_dir):
-    """Stateful sessionization via gap>30min window — the batch
-    equivalent of the streaming session operator."""
+    """Sessionization via a gap>30min window: a session starts at a
+    user's first event and at every event more than 30 minutes after
+    the previous one."""
     from pyspark.sql import Window
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -962,7 +963,7 @@ def _q_frontier_epoch(spark, sf_dir):
         [(url_for(i),) for i in range(0, n, 7)], "url string"
     )
     queue, seen = init_state(seeds)
-    res = run_epoch(spark, pages, queue, seen, epoch=0, k_per_host=10)
+    res = run_epoch(pages, queue, seen, epoch=0, k_per_host=10)
     return res.schedule.select("canon_url", "host", "depth")
 
 

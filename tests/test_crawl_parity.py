@@ -28,12 +28,11 @@ def seeds(spark):
     return spark.createDataFrame([(u,) for u in urls], "url string"), urls
 
 
-def _spark_crawl(spark, pages, seed_df, use_bloom=False):
+def _spark_crawl(pages, seed_df, use_bloom=False):
     queue, seen = init_state(seed_df)
     schedules = []
     for e in range(EPOCHS):
         res = run_epoch(
-            spark,
             pages,
             queue,
             seen,
@@ -53,7 +52,7 @@ def test_engine_matches_simulator(spark, pages, seeds):
     seed_df, urls = seeds
     page_map = {r["url"]: bytes(r["html"]) for r in pages.collect()}
     sim_schedules, sim_seen = simulate_crawl(page_map, urls, EPOCHS, k_per_host=K)
-    eng_schedules, eng_seen = _spark_crawl(spark, pages, seed_df)
+    eng_schedules, eng_seen = _spark_crawl(pages, seed_df)
     assert eng_schedules == sim_schedules  # identical crawl ordering
     assert eng_seen == sorted(sim_seen)  # identical URL-seen set
 
@@ -62,8 +61,8 @@ def test_engine_bloom_and_salting_same_crawl(spark, pages, seeds):
     """The scale path (Bloom two-tier dedup) must not change crawl
     semantics."""
     seed_df, _ = seeds
-    plain = _spark_crawl(spark, pages, seed_df)
-    scaled = _spark_crawl(spark, pages, seed_df, use_bloom=True)
+    plain = _spark_crawl(pages, seed_df)
+    scaled = _spark_crawl(pages, seed_df, use_bloom=True)
     assert plain == scaled
 
 
@@ -87,16 +86,16 @@ def test_checkpoint_resume_exact(spark, pages, seeds, tmp_path):
     assert m["metrics"]["lineage"]  # per-partition lineage present
 
     # continuing from the checkpoint == continuing in-memory
-    res_a = run_epoch(spark, pages, queue, seen, epoch=2, k_per_host=K)
+    res_a = run_epoch(pages, queue, seen, epoch=2, k_per_host=K)
     sched_resumed = sorted(
         r["canon_url"] for r in res_a.schedule.select("canon_url").collect()
     )
 
     queue2, seen2 = init_state(seed_df)
     for e2 in range(2):
-        r = run_epoch(spark, pages, queue2, seen2, epoch=e2, k_per_host=K)
+        r = run_epoch(pages, queue2, seen2, epoch=e2, k_per_host=K)
         queue2, seen2 = r.queue, r.seen
-    res_b = run_epoch(spark, pages, queue2, seen2, epoch=2, k_per_host=K)
+    res_b = run_epoch(pages, queue2, seen2, epoch=2, k_per_host=K)
     sched_mem = sorted(
         r["canon_url"] for r in res_b.schedule.select("canon_url").collect()
     )
@@ -156,7 +155,7 @@ def test_engine_matches_simulator_with_robots(spark, pages, seeds):
     eng_schedules = []
     for e in range(EPOCHS):
         res = run_epoch(
-            spark, pages, queue, seen, epoch=e, k_per_host=K, robots=robots_df
+            pages, queue, seen, epoch=e, k_per_host=K, robots=robots_df
         )
         eng_schedules.append(
             sorted(r["canon_url"] for r in res.schedule.select("canon_url").collect())
@@ -179,9 +178,9 @@ def test_crawl_deterministic_across_partitioning(spark, pages, seeds):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
-        a = _spark_crawl(spark, pages, seed_df)
+        a = _spark_crawl(pages, seed_df)
         spark.conf.set("spark.sql.shuffle.partitions", "16")
-        b = _spark_crawl(spark, pages, seed_df)
+        b = _spark_crawl(pages, seed_df)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert a == b
@@ -218,7 +217,7 @@ def test_long_crawl_with_bloom_and_compaction(spark, pages, seeds, tmp_path):
 def test_queue_drains_scheduled(spark, pages, seeds):
     seed_df, _ = seeds
     queue, seen = init_state(seed_df)
-    res = run_epoch(spark, pages, queue, seen, epoch=0, k_per_host=1000)
+    res = run_epoch(pages, queue, seen, epoch=0, k_per_host=1000)
     # every seed was scheduled, so the next queue contains only new urls
     overlap = res.queue.join(
         queue.select("url_sha1"), on="url_sha1", how="inner"

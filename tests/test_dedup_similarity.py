@@ -487,6 +487,9 @@ def test_sitemap_seeds_extraction(spark):
             ("http://b.example/sitemap_index.xml",
              "<sitemapindex><sitemap><loc>http://b.example/sm1.xml</loc>"
              "</sitemap></sitemapindex>"),
+            ("http://c.example/sitemap.xml",
+             "<urlset><url><loc>http://c.example/p?x=1&amp;y=2</loc></url>"
+             "<url><loc>\n  http://c.example/q  \n</loc></url></urlset>"),
         ],
         "url string, body string",
     )
@@ -495,6 +498,8 @@ def test_sitemap_seeds_extraction(spark):
         ("http://a.example/sitemap.xml", "http://a.example/1"),
         ("http://a.example/sitemap.xml", "http://a.example/2"),
         ("http://b.example/sitemap_index.xml", "http://b.example/sm1.xml"),
+        ("http://c.example/sitemap.xml", "http://c.example/p?x=1&y=2"),
+        ("http://c.example/sitemap.xml", "http://c.example/q"),
     }
 
 

@@ -1,86 +1,10 @@
-"""Structured Streaming frontier + multimodal plumbing tests."""
+"""Multimodal plumbing tests: media synthesis, decode, resize, sniffing."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 from warctools_spark.operators import multimodal as MM
-from warctools_spark.sources.pages import synthesize_pages
-from warctools_spark.streaming import frontier_stream as FS
-
-
-@pytest.fixture(scope="module")
-def pages_dir(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("pages_stream"))
-    synthesize_pages(spark, SF_DIR).repartition(4).write.mode("overwrite").parquet(d)
-    return d
-
-
-def test_streaming_harvest_dedup_matches_batch(spark, pages_dir, tmp_path):
-    stream = FS.stream_pages(spark, pages_dir)
-    assert stream.isStreaming
-    links = FS.harvest_with_event_time(stream)
-    deduped = FS.dedup_stream(links)
-
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_stream_test")
-        .option("checkpointLocation", str(tmp_path / "ckpt1"))
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.sql("SELECT count(DISTINCT url_sha1) c, count(*) n FROM dedup_stream_test").collect()[0]
-
-    batch_pages = spark.read.parquet(pages_dir)
-    batch_links = FS.harvest_with_event_time(batch_pages)
-    expected = batch_links.select("url_sha1").distinct().count()
-    assert got["n"] == got["c"] == expected
-
-
-def test_streaming_host_metrics(spark, pages_dir, tmp_path):
-    stream = FS.stream_pages(spark, pages_dir)
-    metrics = FS.host_metrics_stream(
-        FS.harvest_with_event_time(stream), window="1 hour"
-    )
-    # append mode only emits windows the watermark has passed; with a
-    # bounded availableNow run the last windows stay open, so the test
-    # reads the aggregation in complete mode
-    q = (
-        metrics.writeStream.format("memory")
-        .queryName("host_metrics_test")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .outputMode("complete")
-        .start()
-    )
-    q.awaitTermination(300)
-    rows = spark.sql("SELECT * FROM host_metrics_test").collect()
-    assert rows
-    hosts = {r["host"] for r in rows}
-    assert "hot.example.com" in hosts
-    assert all(r["discovered"] > 0 for r in rows)
-
-
-def test_streaming_schedule_micro_batches(spark, pages_dir, tmp_path):
-    collected = []
-
-    def sink(df, batch_id):
-        collected.append((batch_id, df.groupBy("host").count().collect()))
-
-    stream = FS.stream_pages(spark, pages_dir, max_files_per_trigger=2)
-    links = FS.harvest_with_event_time(stream)
-    q = FS.schedule_micro_batches(
-        links, k_per_host=5, sink=sink, checkpoint=str(tmp_path / "ckpt3")
-    )
-    q.awaitTermination(300)
-    assert collected
-    for _bid, counts in collected:
-        assert all(r["count"] <= 5 for r in counts)
-
-
-# ---- multimodal ----
 
 
 @pytest.fixture(scope="module")

@@ -6,15 +6,12 @@
    case.
 2. rename_over on file:// is os.replace (atomic overwrite — the old
    regression window deleted the live file before renaming).
-3. A durable-stream manifest committed before the stream_id metric
-   existed is tolerated on replay from the original checkpoint, not a
-   permanent hard-fail.
-4. ngram_jaccard short-doc pairs score 0.0 (same guarded-denominator
+3. ngram_jaccard short-doc pairs score 0.0 (same guarded-denominator
    contract the round gave ngram_containment).
-5. drift_ratio distinguishes "no baseline recorded" (None) from a
+4. drift_ratio distinguishes "no baseline recorded" (None) from a
    legitimate 0.0 baseline (-> inf when drifted).
-6. _assign_to_centroids rejects unknown assign modes loudly.
-7. bpe_train mode="auto" equals the explicit arms (single-corpus-pass
+5. _assign_to_centroids rejects unknown assign modes loudly.
+6. bpe_train mode="auto" equals the explicit arms (single-corpus-pass
    checkpoint refactor changes no semantics).
 """
 
@@ -90,66 +87,7 @@ def test_rename_over_local_is_atomic_replace(spark, tmp_path):
     assert fs._fs.getScheme() == "file"  # the os.replace arm is live
 
 
-# ---- 3. stream: legacy manifest without stream_id ----
-
-def test_stream_replay_tolerates_legacy_manifest(spark, tmp_path):
-    """A manifest committed BEFORE the stream_id metric existed (then
-    replayed from the original, untouched checkpoint via the
-    sink-crash window) must be accepted as a replay and re-delivered —
-    not hard-fail the upgraded stream forever."""
-    from warctools_spark.plans.catalog import Catalog
-    from warctools_spark.streaming.frontier_stream import (
-        stream_frontier_durable,
-    )
-
-    schema = "url_sha1 string, canon_url string, host string, depth int"
-    src = str(tmp_path / "links")
-    os.makedirs(src)
-    rows = [(f"{i:040x}", f"http://h.example.com/{i}", "h.example.com", 1)
-            for i in range(6)]
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-        src + "/b0"
-    )
-
-    cat = Catalog(str(tmp_path / "cat"), n_buckets=4)
-
-    def crashing_sink(df, batch_id):
-        raise RuntimeError("sink died after commit")
-
-    q = stream_frontier_durable(
-        spark.readStream.schema(schema).parquet(src + "/b*"),
-        cat, checkpoint=str(tmp_path / "ckpt"), k_per_host=100,
-        sink=crashing_sink,
-    )
-    with pytest.raises(Exception, match="sink died"):
-        q.awaitTermination(120)
-    assert cat.list_epochs() == [0]
-
-    # rewrite the manifest the way a pre-stream_id version committed it
-    mpath = os.path.join(str(tmp_path / "cat"), "_manifests",
-                         "epoch_00000.json")
-    m = json.load(open(mpath))
-    assert m["metrics"].pop("stream_id", None) is not None
-    json.dump(m, open(mpath, "w"))
-
-    delivered = []
-
-    def good_sink(df, batch_id):
-        delivered.append(
-            (batch_id, sorted(r["url_sha1"] for r in df.collect()))
-        )
-
-    q2 = stream_frontier_durable(
-        spark.readStream.schema(schema).parquet(src + "/b*"),
-        cat, checkpoint=str(tmp_path / "ckpt"), k_per_host=100,
-        sink=good_sink,
-    )
-    q2.awaitTermination(120)
-    assert delivered == [(0, sorted(r[0] for r in rows))]
-    assert cat.list_epochs() == [0]  # replay, nothing re-committed
-
-
-# ---- 4. ngram_jaccard short docs ----
+# ---- 3. ngram_jaccard short docs ----
 
 def test_ngram_jaccard_short_docs_zero(spark):
     from warctools_spark.operators.dedup import ngram_jaccard
@@ -171,7 +109,7 @@ def test_ngram_jaccard_short_docs_zero(spark):
     assert rows[(1, 3)] == 0.0
 
 
-# ---- 5/6. IVF drift ratio + assign-mode validation ----
+# ---- 4/5. IVF drift ratio + assign-mode validation ----
 
 def test_drift_ratio_zero_baseline_reports_inf(spark, tmp_path):
     from warctools_spark.operators.similarity import (
@@ -207,7 +145,7 @@ def test_assign_to_centroids_rejects_unknown_mode(spark):
         _assign_to_centroids(df, {0: [0.0, 0.0]}, "exprs")
 
 
-# ---- 7. bpe auto arm unchanged ----
+# ---- 6. bpe auto arm unchanged ----
 
 def test_bpe_auto_mode_equals_explicit_arms(spark):
     from warctools_spark.operators.bpe import bpe_train

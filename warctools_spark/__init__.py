@@ -18,7 +18,6 @@ Layout:
   operators/  DataFrame-level operators (filter/index/dedup/politeness/
               similarity/text-analysis)
   plans/      frontier epoch pipeline, snapshot catalog, lineage
-  streaming/  structured-streaming variants
 """
 
 __version__ = "0.1.0"

@@ -13,7 +13,6 @@ Everything built-in-expressible stays JVM-side in exprs.py instead.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -250,8 +249,3 @@ def udf_write_warc(
             )
         )
     return pd.Series(out, dtype="object")
-
-
-def with_http_decode(df, html_col: str = "html", out_col: str = "http"):
-    """Attach the decoded-HTTP struct column."""
-    return df.withColumn(out_col, udf_decode_http(F.col(html_col)))

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from warctools_spark.operators.sitemap import _unescape_xml
+
 _HARVEST_SCHEMA = (
     "src_url string, link string, canon_url string, url_sha1 string, "
     "host string"
@@ -221,7 +223,9 @@ def sitemap_seeds(
 ) -> DataFrame:
     """Seed discovery from sitemap XML payloads: gate on
     sitemap-shaped documents (<urlset>/<sitemapindex> root), pull
-    every <loc> with one JVM regexp pass, distinct the result.
+    every <loc> with one JVM regexp pass, trim and XML-unescape it
+    (sitemaps.org writes each '&' in a URL as '&amp;'), distinct the
+    result.
 
     Crawl-frontier role: sitemaps are the highest-precision seed
     source a polite crawler has — their URLs enter the frontier at
@@ -230,13 +234,15 @@ def sitemap_seeds(
     (already small) seed URLs."""
     body = F.col(body_col)
     is_sitemap = body.rlike("<(urlset|sitemapindex)[\\s>]")
-    locs = F.regexp_extract_all(body, F.lit("<loc>([^<]*)</loc>"), F.lit(1))
+    # \s* rather than F.trim: trim strips only ' ', and pretty-printed
+    # sitemaps pad <loc> with newlines and tabs
+    locs = F.regexp_extract_all(
+        body, F.lit(r"<loc>\s*([^<]*?)\s*</loc>"), F.lit(1)
+    )
     return (
         pages.where(is_sitemap)
-        .select(
-            F.col(url_col).alias("sitemap_url"),
-            F.explode(locs).alias("seed_url"),
-        )
+        .select(F.col(url_col).alias("sitemap_url"), F.explode(locs).alias("loc"))
+        .select("sitemap_url", _unescape_xml(F.col("loc")).alias("seed_url"))
         .where(F.col("seed_url") != "")
         .distinct()
     )
@@ -350,12 +356,8 @@ def change_rate(
     us = F.unix_micros(F.col(ts_col).try_cast("timestamp"))
     # null/uncastable timestamps carry no interval information and
     # would sort arbitrarily into the lag window — dropped on the CAST
-    # result (a string ts_col full of junk filters here too), and the
-    # streaming twin (track_change_rate_cg) drops nulls identically.
-    # NB (r5 ADVICE): null URLS are kept here (the window/groupBy key
-    # admits a null group) but the streaming twin must drop them
-    # before the stateful operator — row-for-row parity claims are
-    # over non-null urls only.
+    # result (a string ts_col full of junk filters here too). Null
+    # urls are kept: the window/groupBy key admits a null group.
     obs = obs.where(us.isNotNull())
     w = Window.partitionBy(url_col).orderBy(us, F.col(digest_col))
     seq = obs.select(

@@ -76,9 +76,6 @@ class Catalog:
     def manifest_path(self, epoch: int) -> str:
         return self._join("_manifests", f"epoch_{epoch:05d}.json")
 
-    def manifest_exists(self, epoch: int) -> bool:
-        return self.fs.exists(self.manifest_path(epoch))
-
     # ---- commit ----
     def write_table(
         self, df: DataFrame, table: str, epoch: int, bucket_col: str | None = "host"
@@ -155,9 +152,6 @@ class Catalog:
             .saveAsTable(name)
         )
         return name
-
-    def read_bucketed_table(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.table(name)
 
     # ---- resume ----
     def latest_epoch(self) -> int | None:

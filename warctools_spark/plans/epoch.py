@@ -70,7 +70,6 @@ class EpochResult:
 
 
 def run_epoch(
-    spark: SparkSession,
     pages: DataFrame,
     queue: DataFrame,
     seen: DataFrame,
@@ -340,7 +339,6 @@ def run_crawl(
     all_metrics = []
     for e in range(start_epoch, start_epoch + epochs):
         result = run_epoch(
-            spark,
             pages,
             queue,
             seen,

@@ -50,9 +50,6 @@ class HadoopFS:
     def exists(self, p: str) -> bool:
         return self._fs.exists(self._path(p))
 
-    def is_dir(self, p: str) -> bool:
-        return self._fs.getFileStatus(self._path(p)).isDirectory()
-
     def listdir(self, p: str) -> list[str]:
         """Child names (not full paths) of a directory; [] if absent."""
         hp = self._path(p)
