@@ -13,10 +13,16 @@ extended to a full frontier step):
   queue'     = (queue \\ schedule) ∪ allowed
   seen'      = seen ∪ allowed
 
-Every epoch commits one snapshot of (queue, seen, schedule) plus a
-lineage row per shuffle partition (urls_in/deduped/scheduled/fetched)
-to the catalog; `resume_state` restores the exact state of any
-committed epoch.
+Each epoch-state table is materialised exactly once, by `_materialize`:
+with a catalog, `schedule`, `queue` and the Bloom table are written as
+the epoch's snapshot tables and read back (the write is the
+checkpoint); without one they are localCheckpoint()ed. `fresh` is the
+only in-epoch checkpoint (O(|fresh|)). `seen` is never copied: the
+epoch returns the lazy `seen ∪ fresh`, and run_crawl stores only each
+epoch's fresh keys as an append-only `seen_delta`. Every epoch commits
+a manifest naming its tables, its seen parts and a lineage row per
+shuffle partition of the schedule (`partition_id`, `rows`);
+`resume_state` restores the exact state of any committed epoch.
 
 Determinism: all orderings derive from data (depth, canon_url) — never
 from partition iteration order — so the crawl frontier is identical at
@@ -29,7 +35,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from warctools_spark.functions.udfs import (
@@ -66,7 +72,29 @@ class EpochResult:
     queue: DataFrame
     seen: DataFrame
     metrics: dict
-    fresh_seen: DataFrame = None  # this epoch's NEW keys (delta)
+    fresh_seen: DataFrame  # this epoch's NEW keys (delta)
+
+
+def _materialize(
+    df: DataFrame, obs: Observation | None, table: str, epoch: int,
+    catalog: Catalog | None,
+) -> DataFrame:
+    """The one place epoch state is materialised, with `obs` (if any)
+    counting its rows as an observe() aggregate on the same action.
+    With a catalog the snapshot write IS the checkpoint: the table is
+    written once and read back, which also cuts the lineage. Without
+    one, the rows are localCheckpoint()ed."""
+    if obs is not None:
+        df = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    if catalog is None:
+        return df.localCheckpoint(eager=True)
+    catalog.write_table(df, table, epoch)
+    spark = df.sparkSession
+    if table == "bloom":
+        # read_table drops `bucket` as a physical partition column, but
+        # for the filter table it IS the schema key
+        return spark.read.parquet(catalog.table_path(table, epoch))
+    return catalog.read_table(spark, table, epoch)
 
 
 def run_epoch(
@@ -76,21 +104,24 @@ def run_epoch(
     epoch: int,
     k_per_host: int = 10,
     robots: DataFrame | None = None,
-    use_bloom: bool = False,
     n_buckets: int = 32,
     bloom: DataFrame | None = None,
     pages_keyed: DataFrame | None = None,
+    catalog: Catalog | None = None,
 ) -> EpochResult:
-    """One frontier epoch. The output state is localCheckpoint()ed:
-    epoch N+1 starts from materialized partitions instead of
-    re-executing N chained UDF stages — bounded plan depth is what
-    keeps a 1000-epoch crawl schedulable."""
-    from pyspark.sql import Observation
-
+    """One frontier epoch. `schedule` and `queue` are materialised once
+    each (`_materialize`: catalog tables for this epoch, else
+    localCheckpoint) so epoch N+1 starts from materialized rows instead
+    of re-executing N chained UDF stages — bounded plan depth is what
+    keeps a 1000-epoch crawl schedulable. The returned `seen` is the
+    lazy `seen ∪ fresh`: no copy of the seen set. A `bloom` table
+    (covering `seen`) switches the seen probe to the two-tier dedup."""
     t0 = time.time()
+    o_sched, o_fresh, o_queue = (Observation() for _ in range(3))
 
     # 1. politeness schedule; with robots the crawl_delay_ms column
-    # adds the per-host fetch budget min(k, epoch_window / crawl_delay)
+    # adds the per-host fetch budget min(k, epoch_window / crawl_delay).
+    # Materialised BEFORE the fetch reads it, so the window runs once.
     queued = queue
     if robots is not None and "crawl_delay_ms" in robots.columns:
         queued = queue.join(
@@ -99,6 +130,7 @@ def run_epoch(
             how="left",
         )
     schedule = FR.politeness_schedule(queued, k_per_host).select(*QUEUE_COLS)
+    schedule = _materialize(schedule, o_sched, "schedule", epoch, catalog)
 
     # 2. simulated fetch: join the scheduled urls to the pages corpus.
     # pages is keyed by raw url; canonical keys make the join exact.
@@ -129,7 +161,7 @@ def run_epoch(
     # per-epoch rebuild over the whole seen set — at 10^10 keys the
     # rebuild, not the probe, would dominate the epoch.
     cand = FR.dedup_within_epoch(links)
-    if use_bloom or bloom is not None:
+    if bloom is not None:
         fresh = SEEN.two_tier_dedup(
             cand, seen, n_buckets=n_buckets, seen_filter=bloom
         )
@@ -141,37 +173,30 @@ def run_epoch(
         from warctools_spark.operators.robots import apply_robots
 
         fresh = apply_robots(fresh, robots).drop("crawl_delay_ms")
-    fresh = fresh.select(*QUEUE_COLS)
 
-    # 6/7. next state. The row-count metrics ride the checkpoint jobs
-    # as observe() aggregates — one action per materialized state
-    # table per epoch, zero extra count jobs.
-    def _cp(df, obs):
-        return df.observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint(eager=True)
-
-    o_sched, o_fresh, o_queue, o_seen = (Observation() for _ in range(4))
-    schedule = _cp(schedule, o_sched)
-    fresh = _cp(fresh, o_fresh)
-    queue_next = _cp(
-        queue.join(
-            schedule.select("url_sha1"), on="url_sha1", how="left_anti"
-        ).unionByName(fresh),
-        o_queue,
+    # 6/7. next state. `fresh` feeds both queue' and the caller's seen
+    # delta, so it is the one in-epoch checkpoint (O(|fresh|), never a
+    # snapshot table). The row-count metrics ride the materialising
+    # actions as observe() aggregates — zero extra count jobs.
+    fresh = _materialize(
+        fresh.select(*QUEUE_COLS), o_fresh, "fresh", epoch, None
     )
-    seen_next = _cp(seen.unionByName(fresh.select("url_sha1")), o_seen)
+    queue_next = queue.join(
+        schedule.select("url_sha1"), on="url_sha1", how="left_anti"
+    ).unionByName(fresh)
+    queue_next = _materialize(queue_next, o_queue, "queue", epoch, catalog)
+    fresh_seen = fresh.select("url_sha1")
 
     metrics = {
         "epoch": epoch,
         "scheduled": o_sched.get["n"],
         "deduped_new": o_fresh.get["n"],
         "queue_size": o_queue.get["n"],
-        "seen_size": o_seen.get["n"],
         "wall_s": time.time() - t0,
     }
     return EpochResult(
-        epoch, schedule, queue_next, seen_next, metrics, fresh.select("url_sha1")
+        epoch, schedule, queue_next, seen.unionByName(fresh_seen), metrics,
+        fresh_seen,
     )
 
 
@@ -286,12 +311,16 @@ def run_crawl(
         queue, seen = initial_state
     else:
         queue, seen = init_state(seeds)
+    # counted ONCE per crawl, then advanced by each epoch's fresh count:
+    # the deltas are disjoint from seen by construction (the same
+    # invariant compaction relies on), so no epoch re-counts seen
+    seen_size = seen.count()
     bloom = None
     if use_bloom:
         m_bits, k_hashes = SEEN.optimal_params(
             bloom_capacity_per_bucket, bloom_fpr
         )
-        # Resume path: the filter table is checkpointed per epoch, so a
+        # Resume path: the filter table is committed per epoch, so a
         # new driver process restores it in O(n_buckets) instead of
         # paying the O(|seen|) rebuild. Restore ONLY when actually
         # resuming (initial_state supplied): a fresh crawl over a
@@ -314,16 +343,18 @@ def run_crawl(
                     if e0 is not None
                     else None
                 )
-                if committed is None or committed != seen.count():
+                if committed is None or committed != seen_size:
                     bloom = None  # state drift: rebuild from `seen`
         if bloom is None:
+            # left lazy: the first epoch's probe and its union with
+            # that epoch's delta each build it, a per-crawl cost over
+            # the seed keys (or, on state drift, the resumed seen set)
             bloom = SEEN.build_bloom(
                 seen,
                 n_buckets=bloom_n_buckets,
                 m_bits=m_bits,
                 k_hashes=k_hashes,
             )
-        bloom = bloom.localCheckpoint(eager=True)
     # One canonicalize pass per CRAWL, not per epoch. The checkpointed
     # key map is two string columns (no html); DISK_ONLY keeps it out
     # of the executor heap entirely (a 10^10-row map is ~1 TB spread
@@ -345,11 +376,14 @@ def run_crawl(
             epoch=e,
             k_per_host=k_per_host,
             robots=robots,
-            use_bloom=use_bloom,
             n_buckets=bloom_n_buckets,
             bloom=bloom,
             pages_keyed=pages_keyed,
+            catalog=catalog,
         )
+        queue = result.queue
+        seen_size += result.metrics["deduped_new"]
+        result.metrics["seen_size"] = seen_size
         if use_bloom:
             delta_bloom = SEEN.build_bloom(
                 result.fresh_seen,
@@ -357,19 +391,20 @@ def run_crawl(
                 m_bits=m_bits,
                 k_hashes=k_hashes,
             )
-            bloom = SEEN.union_blooms(bloom, delta_bloom).localCheckpoint(
-                eager=True
+            bloom = _materialize(
+                SEEN.union_blooms(bloom, delta_bloom), None, "bloom", e, catalog
             )
-        queue = result.queue
         if catalog is not None:
-            # delta = what this epoch added to seen; epoch 0 also owns
-            # the seed keys so the union of deltas IS the seen set
+            # run_epoch wrote the schedule and queue tables; they join
+            # the snapshot when the manifest commits. delta = what this
+            # epoch added to seen; epoch 0 also owns the seed keys so
+            # the union of deltas IS the seen set
             delta = result.fresh_seen
             if e == 0:
                 delta = seen.unionByName(delta)
             tables = [
-                catalog.write_table(result.schedule, "schedule", e),
-                catalog.write_table(queue, "queue", e),
+                {"table": "schedule", "path": catalog.table_path("schedule", e)},
+                {"table": "queue", "path": catalog.table_path("queue", e)},
                 catalog.write_table(delta, "seen_delta", e, bucket_col=None),
             ]
             if use_bloom:
@@ -378,9 +413,8 @@ def run_crawl(
                 # the O(|seen|) rebuild entirely (restore_bloom).
                 tables.append(
                     {
-                        **catalog.write_table(
-                            bloom, "bloom", e, bucket_col=None
-                        ),
+                        "table": "bloom",
+                        "path": catalog.table_path("bloom", e),
                         "bloom_n_buckets": bloom_n_buckets,
                     }
                 )
@@ -402,10 +436,8 @@ def run_crawl(
             result.metrics["lineage"] = partition_lineage(result.schedule)
             result.metrics["seen_parts"] = parts
             catalog.commit(e, tables, result.metrics)
-            # read back the committed snapshot so each epoch's lineage
-            # is cut off from the previous epoch's lazy plan (bounded
-            # plan depth — crucial for long crawls)
-            queue = catalog.read_table(spark, "queue", e)
+            # seen = the committed parts: each epoch's plan reads
+            # parquet, cut off from the previous epoch's lazy plan
             seen = spark.read.parquet(*parts).select("url_sha1")
         else:
             seen = result.seen
