@@ -39,8 +39,10 @@ def _harvest_flat(it):
     one C pass replaces the r5 list<struct> pandas_udf + JVM explode,
     whose object-Series -> Arrow nested conversion dominated the
     return path (r6: harvest noop 9.5s -> 7.3s at sf1.0, identical
-    rows). canon_parts is lru_cached module-wide, so repeated link
-    targets amortize across batches in a reused worker."""
+    rows). canon_parts_fast returns an already-canonical href as is and
+    hashes it on every call, without touching canon_parts' lru cache;
+    only hrefs that need canonicalizing fall through to the cached
+    canon_parts."""
     from warctools_spark.kernels.canon import canon_parts_fast as canon_parts
     from warctools_spark.kernels.http_decode import decode_http
     from warctools_spark.kernels.links import extract_links
