@@ -1123,7 +1123,7 @@ def _q_dedup_survivors(spark, sf_dir):
 
 def _q_hyperplane_bands(spark, sf_dir):
     """Banded random-hyperplane LSH keys over the embedding corpus —
-    the bucket keys driving embedding_cosine_pairs, fully replayable
+    the bucket keys lsh_topk probes, fully replayable
     (deterministic md5-parity ±1 hyperplanes inlined as constants on
     both sides)."""
     from warctools_spark.operators.dedup import hyperplane_band_keys

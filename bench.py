@@ -277,16 +277,6 @@ def q_trustrank(spark, pages_path):
     ).count()
 
 
-def q_unigram_lm_train(spark, pages_path):
-    """Extra measurement: unigram-LM tokenizer training (seed, one EM
-    pass, prune, one EM pass over the corpus's word table)."""
-    from warctools_spark.operators.unigram_lm import unigram_train
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").repartition(CPUS)
-    vocab = unigram_train(docs, vocab_size=500, n_em=1)
-    return len(vocab)
-
-
 def main():
     from warctools_spark.session import get_spark
 
@@ -370,7 +360,6 @@ def main():
         ("kneser_ney", q_kneser_ney, 3),
         ("hits", q_hits, 3),
         ("trustrank", q_trustrank, 3),
-        ("unigram_lm_train", q_unigram_lm_train, 3),
     ):
         results[name], extra_cold[name], extra[name], spreads[name] = timed(
             fn, pages_path, runs=runs

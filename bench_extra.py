@@ -250,7 +250,6 @@ TIMED = {
     "kneser_ney": B.q_kneser_ney,
     "hits": B.q_hits,
     "trustrank": B.q_trustrank,
-    "unigram_lm_train": B.q_unigram_lm_train,
 }
 
 

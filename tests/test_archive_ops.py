@@ -1,6 +1,6 @@
 """Spark-level tests for the CLI-parity operators: read_warc ingest,
 warcfilter modes, warcindex, warcvalid, warc2warc -D round-trip,
-arc2warc, pairing and revisit joins."""
+arc2warc."""
 
 import gzip
 import io
@@ -10,11 +10,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import reference_available
 from warctools_spark.operators import archive_ops as AO
-from warctools_spark.operators.arc2warc import (
-    arc_to_warc,
-    pair_request_response,
-    resolve_revisits,
-)
+from warctools_spark.operators.arc2warc import arc_to_warc
 from warctools_spark.sources.warc import read_warc
 
 HTTP_PAYLOAD = (
@@ -250,17 +246,3 @@ def test_arc_to_warc_uuid_parity(spark, warc_dir):
         b"http://c.example/1" + b"20131113120000"
     ).decode()
     assert row["warc_id"] == ref_id
-
-
-def test_pair_request_response(records):
-    pairs = pair_request_response(records).collect()
-    assert len(pairs) == 1
-    assert pairs[0]["response_id"] == "<urn:uuid:00000000-0000-0000-0000-000000000001>"
-    assert pairs[0]["request_id"] == "<urn:uuid:00000000-0000-0000-0000-000000000002>"
-
-
-def test_resolve_revisits(records):
-    res = resolve_revisits(records).collect()
-    assert len(res) == 1
-    assert res[0]["revisit_id"] == "<urn:uuid:00000000-0000-0000-0000-000000000005>"
-    assert res[0]["canonical_id"] == "<urn:uuid:00000000-0000-0000-0000-000000000006>"

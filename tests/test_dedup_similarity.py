@@ -1,5 +1,5 @@
 """Training-data operator tests: dedup family (exact, MinHash LSH,
-SimHash, Jaccard), similarity search (brute-force + IVF), text
+SimHash, Jaccard), similarity search (brute-force), text
 analysis, robots gating on the frontier."""
 
 import pytest
@@ -84,15 +84,6 @@ def test_simhash_near_dups_close(docs_with_dups):
     assert sum(f > 12 for f in far) >= 8
 
 
-def test_embedding_cosine_pairs_vs_bruteforce(spark):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(200).cache()
-    lsh = D.embedding_cosine_pairs(emb, threshold=0.2, bands=8, bits_per_band=4)
-    assert lsh.count() > 0
-    # every reported pair is above threshold and correct
-    for r in lsh.limit(5).collect():
-        assert r["cosine"] >= 0.2
-
-
 def test_lsh_degenerate_bucket_capped(spark):
     """5k identical docs: without the cap this is 12.5M pairs in one
     task; with it the pair count is linear (star) and the oversize
@@ -115,9 +106,9 @@ def test_lsh_degenerate_bucket_capped(spark):
 
 
 def test_hyperplane_lsh_recall(spark):
-    """Clustered synthetic corpus: banded hyperplane LSH must recall
-    ≥90% of true cosine≥0.9 pairs found by brute force, with bounded
-    bucket work."""
+    """Clustered synthetic corpus: pairs sharing a banded hyperplane-LSH
+    key must recall ≥90% of true cosine≥0.9 pairs found by brute
+    force."""
     import math
     import random
 
@@ -151,30 +142,28 @@ def test_hyperplane_lsh_recall(spark):
     }
     assert len(truth) >= n_clusters * (per_cluster * (per_cluster - 1) // 2) * 0.9
 
+    keyed = emb.select(
+        "vec_id",
+        F.explode(D.hyperplane_band_keys("embedding", 4, 8, dims)).alias("k"),
+    ).select("vec_id", "k.band", "k.band_key")
+    a, b = keyed.alias("a"), keyed.alias("b")
     got = {
         (r["id_a"], r["id_b"])
-        for r in D.embedding_cosine_pairs(
-            emb, threshold=0.9, dims=dims, bands=4, bits_per_band=8
-        ).collect()
+        for r in a.join(b, ["band", "band_key"])
+        .where(F.col("a.vec_id") < F.col("b.vec_id"))
+        .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
+        .distinct()
+        .collect()
     }
-    assert got <= truth | got  # sanity
-    # no false positives (exact verify stage) and high recall
-    assert all(cos(vecs[a], vecs[b]) >= 0.9 for a, b in got)
     recall = len(got & truth) / len(truth)
     assert recall >= 0.9, recall
 
 
-def test_brute_force_vs_ivf_topk(spark):
+def test_brute_force_topk_ranks_query_first(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
     q = [float(v) for v in emb.where(F.col("vec_id") == 3).collect()[0]["embedding"]]
     exact = S.brute_force_topk(emb, q, k=5).collect()
     assert exact[0]["vec_id"] == 3 and exact[0]["cosine"] == 1.0
-    approx = S.ivf_topk(emb, q, k=5, dims=4, probe_hamming=1)
-    got = [r["vec_id"] for r in approx.collect()]
-    # the query itself is always recalled; recall@5 >= 3 for this corpus
-    assert 3 in got
-    overlap = len(set(got) & {r["vec_id"] for r in exact})
-    assert overlap >= 3
 
 
 def test_text_analysis_sanity(spark):

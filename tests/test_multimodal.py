@@ -1,4 +1,4 @@
-"""Multimodal plumbing tests: media synthesis, decode, resize, sniffing."""
+"""Multimodal plumbing tests: media synthesis, decode, features, sniffing."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,10 +16,8 @@ def media(spark):
 
 def test_media_schema_and_meta(media):
     assert media.schema["blob"].dataType.typeName() == "binary"
-    decoded = MM.decode_image_meta(media)
-    rows = decoded.collect()
-    assert all(r["image"]["ok"] for r in rows)
-    assert all(r["image"]["width"] == 8 for r in rows)  # 64-dim -> 8x8
+    rows = media.collect()
+    assert all(MM._decode_img1(bytes(r["blob"]))["width"] == 8 for r in rows)  # 64-dim -> 8x8
 
 
 def test_media_bad_blob_is_error_row(spark, media):
@@ -29,8 +27,8 @@ def test_media_bad_blob_is_error_row(spark, media):
         [(999, "img1", bytearray(b"NOPE"), ("image/x-img1", 4))],
         MM.MEDIA_SCHEMA,
     )
-    decoded = MM.decode_image_meta(media.unionByName(bad))
-    assert decoded.where(~F.col("image.ok")).count() == 1
+    feats = MM.image_features(media.unionByName(bad))
+    assert feats.where(F.col("features").isNull()).count() == 1
 
 
 def test_real_codec_is_stubbed(spark):
@@ -38,44 +36,14 @@ def test_real_codec_is_stubbed(spark):
         [(1, "image", bytearray(b"\x89PNG..."), ("image/png", 8))],
         MM.MEDIA_SCHEMA,
     )
-    # NotImplementedError inside the codec -> ok=false row, not a crash
-    decoded = MM.decode_image_meta(bad)
-    assert decoded.collect()[0]["image"]["ok"] is False
+    # NotImplementedError inside the codec -> null features, not a crash
+    assert MM.image_features(bad).collect()[0]["features"] is None
 
 
 def test_image_features(media):
     feats = MM.image_features(media)
     rows = feats.collect()
     assert all(r["features"] is not None and len(r["features"]) == 10 for r in rows)
-
-
-def test_resize_and_frame_sample(media, spark):
-    resized = MM.resize_stub(media.limit(10), 4, 4)
-    rows = resized.collect()
-    assert all(r["blob"] is not None for r in rows)
-    d = MM._decode_img1(bytes(rows[0]["blob"]))
-    assert (d["width"], d["height"]) == (4, 4)
-    frames = MM.frame_sample_stub(media.limit(5), every_n=10)
-    assert frames.count() == 5 * 3
-
-
-def test_audio_features(spark):
-    """AUD1 plumbing: synthesize from embeddings, decode, features."""
-    from warctools_spark.operators.multimodal import (
-        audio_features,
-        synthesize_audio,
-    )
-
-    audio = synthesize_audio(spark, SF_DIR)
-    feats = audio_features(audio)
-    rows = feats.collect()
-    assert len(rows) == spark.read.parquet(f"{SF_DIR}/embeddings.parquet").count()
-    for r in rows[:20]:
-        assert r["sample_rate"] == 16000
-        assert r["n_samples"] == 64
-        assert 0 < r["rms"] <= 1.0
-        assert abs(r["peak"] - 1.0) < 1e-3  # scaled to full scale
-        assert 0 <= r["zcr"] <= 1
 
 
 def test_sniff_mime_on_media_and_real_magics(spark):

@@ -278,8 +278,8 @@ def test_warc_filter_any_latin1_only(spark):
 # ---------------------------------------------------------------
 
 
-def test_embedding_pairs_dims_mismatch_raises(spark):
-    from warctools_spark.operators.dedup import embedding_cosine_pairs
+def test_lsh_topk_corpus_dims_mismatch_fails_job(spark):
+    from warctools_spark.operators.similarity import lsh_topk
 
     emb = spark.createDataFrame(
         [(i, [float(i), 1.0, 0.0]) for i in range(6)],
@@ -288,11 +288,10 @@ def test_embedding_pairs_dims_mismatch_raises(spark):
     # explicit dims skips the driver-side scan; the executor-side
     # _require_dims guard fails the job on the first action instead
     with pytest.raises(Exception) as ei:
-        embedding_cosine_pairs(emb, threshold=0.9, dims=8).collect()
+        lsh_topk(emb, [1.0] * 8, k=3, dims=8).collect()
     assert "not 8-dimensional" in str(ei.value)
     # dims=None derives from the data and works
-    out = embedding_cosine_pairs(emb, threshold=0.99, dims=None)
-    assert out.count() > 0
+    assert lsh_topk(emb, [1.0, 1.0, 0.0], k=3).count() > 0
 
 
 def test_lsh_topk_query_dims_mismatch_raises(spark):
@@ -592,16 +591,16 @@ def test_ragged_embedding_fails_job_not_silently(spark):
     via an order-independent min/max aggregate (r03 ADVICE), so a
     ragged column raises the same ValueError at ANY partition order;
     with explicit dims the executor-side raise_error guard fires."""
-    from warctools_spark.operators.dedup import embedding_cosine_pairs
+    from warctools_spark.operators.similarity import lsh_topk
 
     emb = spark.createDataFrame(
         [(0, [1.0, 0.0, 0.0]), (1, [0.9, 0.1, 0.0]), (2, [1.0, 0.0])],
         "vec_id long, embedding array<double>",
     )
     with pytest.raises(ValueError, match="ragged embedding column"):
-        embedding_cosine_pairs(emb, threshold=0.5, dims=None)
+        lsh_topk(emb, [1.0, 0.0, 0.0], k=2)
     with pytest.raises(Exception) as ei:
-        embedding_cosine_pairs(emb, threshold=0.5, dims=3).collect()
+        lsh_topk(emb, [1.0, 0.0, 0.0], k=2, dims=3).collect()
     assert "not 3-dimensional" in str(ei.value)
 
 
@@ -765,32 +764,18 @@ def test_inverted_index_segmented_bounds_and_reconstructs(spark):
     assert set(by_term) == set(flat)
 
 
-def test_ridge_fit_recovers_linear_relation(spark):
-    import numpy as np
+def test_gram_moments_are_exact_in_one_aggregate(spark):
+    from warctools_spark.operators.modeling import gram_moments
 
-    from warctools_spark.operators.modeling import (
-        gram_moments,
-        linear_score,
-        ridge_fit,
-    )
-
-    # y = 2 + 3*a - b exactly; tiny l2 so recovery is near-exact
     rows = [(a, b, 2 + 3 * a - b) for a in range(6) for b in range(6)]
     df = spark.createDataFrame(rows, "a int, b int, y int")
-    m = ridge_fit(df, ["a", "b"], "y", l2=1e-9)
-    assert abs(m["intercept"] - 2) < 1e-5
-    assert abs(m["weights"]["a"] - 3) < 1e-6
-    assert abs(m["weights"]["b"] + 1) < 1e-6
-    # scoring expression reproduces the label
-    scored = df.withColumn("p", linear_score(m, ["a", "b"])).collect()
-    assert all(abs(r["p"] - r["y"]) < 1e-4 for r in scored)
-    # driver math agrees with a direct numpy ridge solve
-    X = np.array([[1, a, b] for a, b, _ in rows], dtype=float)
-    y = np.array([r[2] for r in rows], dtype=float)
-    reg = np.eye(3) * 1e-9
-    reg[0, 0] = 0
-    w = np.linalg.solve(X.T @ X + reg, X.T @ y)
-    assert abs(m["intercept"] - w[0]) < 1e-9
+    # exact integer sums of every column and pairwise product
+    got = gram_moments(df, ["a", "b"], "y").collect()[0]
+    assert got["n"] == len(rows)
+    for i in range(3):
+        assert got[f"s_{i}"] == sum(r[i] for r in rows)
+        for j in range(i, 3):
+            assert got[f"m_{i}_{j}"] == sum(r[i] * r[j] for r in rows)
     # one aggregate, map-side combined, no Python in the plan
     plan = _plan(gram_moments(df, ["a", "b"], "y"))
     assert "partial_count" in plan or "partial_sum" in plan

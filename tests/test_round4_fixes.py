@@ -198,52 +198,6 @@ def test_pages_canonicalized_once_per_crawl(spark, pages, seed_df, tmp_path):
     assert len(calls) == 1
 
 
-def test_wav_audio_codec_real_path(spark):
-    """r03 brief #9: the audio seam's real-codec arm — RIFF/WAVE via
-    the stdlib wave module (always present, unlike Pillow), exercised
-    end-to-end through audio_features."""
-    import io
-    import math
-    import struct
-    import wave
-
-    from warctools_spark.operators.multimodal import (
-        _decode_real_audio,
-        audio_features,
-    )
-
-    rate, n = 8000, 800
-    pcm = b"".join(
-        struct.pack("<h", int(20000 * math.sin(2 * math.pi * 440 * i / rate)))
-        for i in range(n)
-    )
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(pcm)
-    blob = buf.getvalue()
-
-    dec = _decode_real_audio(blob)
-    assert dec["sample_rate"] == rate
-    assert dec["n_channels"] == 1
-    assert dec["pcm"] == pcm
-
-    media = spark.createDataFrame(
-        [(1, "audio", bytearray(blob))],
-        "media_id long, kind string, blob binary",
-    )
-    row = audio_features(media).collect()[0]
-    assert row["sample_rate"] == rate
-    assert row["n_samples"] == n
-    assert abs(row["duration_s"] - n / rate) < 1e-9
-    assert 0.3 < row["rms"] < 0.5  # sine RMS = peak/sqrt(2) ~ 0.43
-    # compressed formats still raise the documented seam error
-    with pytest.raises(NotImplementedError):
-        _decode_real_audio(b"\xff\xfb\x90\x00 not a wav")
-
-
 def test_split_assign_deterministic_and_partition_invariant(spark):
     from warctools_spark.operators.sampling import split_assign
 
@@ -488,125 +442,6 @@ def test_catalog_rollback_time_travel(spark, pages, seed_df, tmp_path):
     assert metrics[0]["seen_size"] == m2[2]["seen_size"]
     with pytest.raises(ValueError, match="no snapshot"):
         cat.rollback(99)
-
-
-def test_ivf_index_persist_and_partition_pruned_query(spark, tmp_path):
-    """build-once/query-many IVF: the persisted index returns exactly
-    what the train-per-call path returns, and the query plan scans
-    ONLY the probed cells' partitions (PartitionFilters on cluster)."""
-    import re
-
-    from warctools_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_index_topk,
-        ivf_kmeans_topk,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = [float(v) for v in
-         emb.where(F.col("vec_id") == 0).select("embedding")
-         .collect()[0][0]]
-    path = str(tmp_path / "ivf")
-    centroids = build_ivf_index(emb, path, n_cells=8, iterations=2)
-    assert len(centroids) == 8
-
-    got = ivf_index_topk(spark, path, q, k=10, n_probe=2)
-    expect = [(r["vec_id"], r["cosine"])
-              for r in ivf_kmeans_topk(emb, q, k=10, n_cells=8,
-                                       n_probe=2).collect()]
-    assert [(r["vec_id"], r["cosine"]) for r in got.collect()] == expect
-
-    plan = got._sc._jvm.PythonSQLUtils.explainString(
-        got._jdf.queryExecution(), "formatted"
-    )
-    m = re.search(r"PartitionFilters: \[.*cluster.*\]", plan)
-    assert m, plan  # the cluster IN filter prunes partitions at scan
-    # only 2 of 8 partition dirs are read
-    files = re.search(r"partitions read: (\d+)", plan)
-    if files:  # phrasing varies by Spark version; filter assert above
-        assert int(files.group(1)) <= 2
-
-
-def test_bpe_train_matches_reference_implementation(spark):
-    """Distributed BPE (Sennrich et al. 2016) must reproduce a direct
-    single-node implementation exactly: merge order, final vocab
-    segmentation, and inference on documents — at any parallelism."""
-    from collections import Counter
-
-    from warctools_spark.operators.bpe import apply_bpe, bpe_train
-
-    texts = ["low lower lowest low low", "new newer newest new"]
-    docs = spark.createDataFrame(
-        list(enumerate(texts)), "doc_id long, text string"
-    )
-
-    def ref_train(texts, k):
-        wf = Counter(w for t in texts for w in t.split())
-        segs = {w: list(w) for w in wf}
-        merges = []
-        for _ in range(k):
-            pc = Counter()
-            for w, f in wf.items():
-                s = segs[w]
-                for i in range(len(s) - 1):
-                    pc[(s[i], s[i + 1])] += f
-            if not pc:
-                break
-            best = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-            merges.append(best)
-            x, y = best
-            for w in segs:
-                out, p = [], None
-                for cur in segs[w]:
-                    if p is None:
-                        p = cur
-                    elif p == x and cur == y:
-                        out.append(x + y)
-                        p = None
-                    else:
-                        out.append(p)
-                        p = cur
-                if p is not None:
-                    out.append(p)
-                segs[w] = out
-        return merges, segs
-
-    ref_merges, ref_segs = ref_train(texts, 6)
-    merges, segs = bpe_train(docs, n_merges=6)
-    assert [tuple(m) for m in merges] == ref_merges
-    assert {r["word"]: r["symbols"] for r in segs.collect()} == ref_segs
-    # parallelism invariance: same merges from a repartitioned corpus
-    merges16, _ = bpe_train(docs.repartition(16), n_merges=6)
-    assert merges16 == merges
-
-    out = {r["doc_id"]: r["tokens"]
-           for r in apply_bpe(docs, merges).collect()}
-    # inference segments every word exactly as the trained vocab does
-    assert out[0] == ["low", "low", "er", "low", "es", "t", "low", "low"]
-    assert out[1] == ["new", "new", "er", "new", "es", "t", "new"]
-    # greedy left-to-right overlap rule: 'a a a' merges once
-    aaa = spark.createDataFrame([(9, "aaa")], "doc_id long, text string")
-    toks = apply_bpe(aaa, [("a", "a")]).collect()[0]["tokens"]
-    assert toks == ["aa", "a"]
-
-
-def test_apply_bpe_pandas_mode_equals_expr_mode(spark):
-    """The constant-plan-size Arrow arm (for 32k-merge production
-    tokenizers) produces exactly the expression-fold arm's output."""
-    from warctools_spark.operators.bpe import apply_bpe, bpe_train
-
-    docs = spark.createDataFrame(
-        [(0, "low lower lowest low low"), (1, "new newer newest new")],
-        "doc_id long, text string",
-    )
-    merges, _ = bpe_train(docs, n_merges=6)
-    a = {r["doc_id"]: r["tokens"]
-         for r in apply_bpe(docs, merges, mode="expr").collect()}
-    b = {r["doc_id"]: r["tokens"]
-         for r in apply_bpe(docs, merges, mode="pandas").collect()}
-    assert a == b
-    with pytest.raises(ValueError, match="unknown mode"):
-        apply_bpe(docs, merges, mode="nope")
 
 
 def test_bigram_logprob_semantics(spark):

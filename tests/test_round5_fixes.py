@@ -1,12 +1,8 @@
 """Round-5 fixes (VERDICT r04 brief + ADVICE r04):
 
 #2 bigram_logprob joins per-doc-aggregated bigrams, not occurrences.
-#3 BPE driver-mode incremental trainer: exact sequential merge order
-   at production merge counts without one Spark job per merge.
 #5 ngram_containment jaccard denominator guarded — two docs shorter
    than n tokens yield 0.0, not null.
-ADVICE: apply_bpe keeps empty docs; distributed-loop checkpoint blocks
-   actually freed.
 """
 
 import pytest
@@ -100,121 +96,6 @@ def test_ngram_containment_short_docs_zero(spark):
     assert mixed["jaccard"] == 0.0
 
 
-def _ref_bpe_train(word_freq, k):
-    """Naive sequential reference: full recount + argmax per merge
-    (count desc, pair ascending) — the semantics both arms must hit."""
-    from collections import Counter
-
-    segs = {w: list(w) for w in word_freq}
-    merges = []
-    for _ in range(k):
-        pc = Counter()
-        for w, f in word_freq.items():
-            s = segs[w]
-            for i in range(len(s) - 1):
-                pc[(s[i], s[i + 1])] += f
-        if not pc:
-            break
-        best = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        merges.append(best)
-        x, y = best
-        for w in segs:
-            out, p = [], None
-            for cur in segs[w]:
-                if p is None:
-                    p = cur
-                elif p == x and cur == y:
-                    out.append(x + y)
-                    p = None
-                else:
-                    out.append(p)
-                    p = cur
-            if p is not None:
-                out.append(p)
-            segs[w] = out
-    return merges, segs
-
-
-def test_bpe_driver_trainer_matches_reference_at_120_merges():
-    """The incremental heap trainer must reproduce the naive
-    recount-per-merge reference exactly for >= 100 merges on a corpus
-    big enough to exercise stale-heap-entry and index maintenance."""
-    import random
-
-    from collections import Counter
-
-    from warctools_spark.operators.bpe import _train_driver
-
-    rng = random.Random(42)
-    syll = ["lo", "wer", "ne", "west", "ing", "ed", "un", "re", "ab",
-            "ba", "ca", "da", "xy", "zz", "qu", "th", "er", "on"]
-    words = [
-        "".join(rng.choice(syll) for _ in range(rng.randint(1, 4)))
-        for _ in range(3000)
-    ]
-    wf = Counter(words)
-    ref_merges, ref_segs = _ref_bpe_train(dict(wf), 120)
-    merges, segs = _train_driver(sorted(wf.items()), 120)
-    assert merges == ref_merges
-    assert segs == ref_segs
-
-
-def test_bpe_train_driver_equals_distributed(spark):
-    """Both training arms produce the identical merge sequence and
-    final vocab segmentation."""
-    from warctools_spark.operators.bpe import bpe_train
-
-    docs = spark.createDataFrame(
-        [(0, "low lower lowest low low"), (1, "new newer newest new"),
-         (2, "renew renewed unending abba abba")],
-        "doc_id long, text string",
-    )
-    m_drv, s_drv = bpe_train(docs, n_merges=25, mode="driver")
-    m_dst, s_dst = bpe_train(docs, n_merges=25, mode="distributed")
-    assert [tuple(m) for m in m_drv] == [tuple(m) for m in m_dst]
-    a = {r["word"]: (r["symbols"], r["n"]) for r in s_drv.collect()}
-    b = {r["word"]: (r["symbols"], r["n"]) for r in s_dst.collect()}
-    assert a == b
-    with pytest.raises(ValueError, match="unknown mode"):
-        bpe_train(docs, n_merges=1, mode="nope")
-
-
-def test_bpe_distributed_loop_frees_superseded_checkpoints(spark):
-    """The distributed merge loop must not accumulate one persisted
-    vocab copy per merge: superseded localCheckpoint blocks are
-    unpersisted (the Dataset.rdd()-is-a-fresh-RDD trap)."""
-    from warctools_spark.operators.bpe import bpe_train
-
-    sc = spark.sparkContext
-    before = sc._jsc.sc().getPersistentRDDs().size()
-    docs = spark.createDataFrame(
-        [(0, "low lower lowest low low"), (1, "new newer newest new")],
-        "doc_id long, text string",
-    )
-    bpe_train(docs, n_merges=8, mode="distributed")
-    after = sc._jsc.sc().getPersistentRDDs().size()
-    # only the final segs checkpoint may remain, not 8 generations
-    assert after - before <= 1
-
-
-def test_apply_bpe_keeps_empty_documents(spark):
-    """Empty / whitespace-only docs must survive tokenization with an
-    empty token array (row count is corpus-invariant), in both modes."""
-    from warctools_spark.operators.bpe import apply_bpe
-
-    docs = spark.createDataFrame(
-        [(0, "low low"), (1, ""), (2, "   "), (3, "new")],
-        "doc_id long, text string",
-    )
-    for mode in ("expr", "pandas"):
-        rows = {r["doc_id"]: r
-                for r in apply_bpe(docs, [("l", "o")], mode=mode).collect()}
-        assert set(rows) == {0, 1, 2, 3}
-        assert rows[1]["tokens"] == [] and rows[1]["n_bpe_tokens"] == 0
-        assert rows[2]["tokens"] == [] and rows[2]["n_bpe_tokens"] == 0
-        assert rows[0]["tokens"] == ["lo", "w", "lo", "w"]
-
-
 def test_catalog_file_scheme_root_full_cycle(spark, tmp_path):
     """Catalog(root='file://...') exercises the Hadoop FileSystem seam
     end-to-end (same code path as s3a://): commit, resume, expire,
@@ -306,30 +187,6 @@ def test_catalog_expire_refuses_when_references_resolve_nowhere(
     assert cat.read_table(spark, "queue", 0).count() == 10
 
 
-def test_ivf_index_file_scheme_equals_plain(spark, tmp_path):
-    """build_ivf_index / ivf_index_topk through a file:// path (the
-    Hadoop FS seam) return exactly the plain-path results."""
-    from warctools_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_index_topk,
-    )
-
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).limit(200)
-    q = [0.1] * len(emb.first()["embedding"])
-    p1 = str(tmp_path / "idx_plain")
-    p2 = "file://" + str(tmp_path / "idx_scheme")
-    c1 = build_ivf_index(emb, p1, n_cells=4, iterations=2)
-    c2 = build_ivf_index(emb, p2, n_cells=4, iterations=2)
-    assert c1 == c2
-    r1 = [(r["vec_id"], r["cosine"])
-          for r in ivf_index_topk(spark, p1, q, k=5, n_probe=2).collect()]
-    r2 = [(r["vec_id"], r["cosine"])
-          for r in ivf_index_topk(spark, p2, q, k=5, n_probe=2).collect()]
-    assert r1 == r2
-
-
 def test_rfc9309_specificity_counts_octets_not_chars(spark):
     """RFC 9309 most-specific-rule precedence is by OCTET count of the
     pattern. Chosen so character count TIES (where Allow would win)
@@ -362,64 +219,3 @@ def test_rfc9309_specificity_counts_octets_not_chars(spark):
     )
     out2 = apply_robots(frontier2, robots2, match_mode="rfc9309").collect()
     assert len(out2) == 1
-
-
-def test_ivf_index_append_query_equality_and_pruning(spark, tmp_path):
-    """Round-5 brief #8: append new vectors to a persisted IVF index
-    without retraining. Queries over the appended index must equal the
-    ground truth computed by assigning the UNION to the ORIGINAL
-    centroids (the no-retrain contract), and the probed scan must
-    still prune partitions."""
-    from warctools_spark.operators.similarity import (
-        _assign_to_centroids,
-        brute_force_topk,
-        build_ivf_index,
-        ivf_index_append,
-        ivf_index_topk,
-        _select_probe_cells,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    base = emb.where(F.col("vec_id") < 300)
-    extra = emb.where(
-        (F.col("vec_id") >= 300) & (F.col("vec_id") < 450)
-    )
-    path = str(tmp_path / "idx")
-    centroids = build_ivf_index(base, path, n_cells=4, iterations=2)
-    rep = ivf_index_append(extra, path)
-    assert rep["n_appended"] == extra.count()
-    assert rep["baseline_mean_dist"] > 0
-    assert rep["drift_ratio"] == pytest.approx(
-        rep["mean_dist"] / rep["baseline_mean_dist"]
-    )
-
-    dims = len(next(iter(centroids.values())))
-    q = [0.05 * ((i % 5) - 2) for i in range(dims)]
-    got = [
-        (r["vec_id"], r["cosine"])
-        for r in ivf_index_topk(spark, path, q, k=8, n_probe=2).collect()
-    ]
-    # ground truth: union assigned to the ORIGINAL centroids, probe
-    # the same cells, exact rerank
-    union = base.unionByName(extra).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("__v")
-    )
-    assigned = _assign_to_centroids(union, centroids, "expr")
-    probe = _select_probe_cells(centroids, q, 2)
-    cands = assigned.where(F.col("cluster").isin(probe)).select(
-        "vec_id", F.col("__v").alias("embedding")
-    )
-    want = [
-        (r["vec_id"], r["cosine"])
-        for r in brute_force_topk(cands, q, k=8).collect()
-    ]
-    assert got == want
-
-    # the appended index still partition-prunes the probed cells
-    sel = spark.read.parquet(path + "/vectors").where(
-        F.col("cluster").isin(probe)
-    )
-    plan = _plan(sel)
-    import re as _re
-
-    assert _re.search(r"PartitionFilters: \[cluster#\d+ IN \(", plan), plan

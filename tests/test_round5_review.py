@@ -8,11 +8,7 @@
    regression window deleted the live file before renaming).
 3. ngram_jaccard short-doc pairs score 0.0 (same guarded-denominator
    contract the round gave ngram_containment).
-4. drift_ratio distinguishes "no baseline recorded" (None) from a
-   legitimate 0.0 baseline (-> inf when drifted).
 5. _assign_to_centroids rejects unknown assign modes loudly.
-6. bpe_train mode="auto" equals the explicit arms (single-corpus-pass
-   checkpoint refactor changes no semantics).
 """
 
 import json
@@ -109,31 +105,7 @@ def test_ngram_jaccard_short_docs_zero(spark):
     assert rows[(1, 3)] == 0.0
 
 
-# ---- 4/5. IVF drift ratio + assign-mode validation ----
-
-def test_drift_ratio_zero_baseline_reports_inf(spark, tmp_path):
-    from warctools_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_index_append,
-    )
-
-    # 2 identical vectors per cell -> every vector IS its centroid,
-    # baseline mean_dist == 0.0
-    base = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [4.0, 4.0]), (2, [0.0, 0.0]), (3, [4.0, 4.0])],
-        "vec_id bigint, embedding array<double>",
-    )
-    path = str(tmp_path / "ivf")
-    build_ivf_index(base, path, n_cells=2, iterations=2)
-    rep = ivf_index_append(
-        spark.createDataFrame(
-            [(10, [1.0, 1.0])], "vec_id bigint, embedding array<double>"
-        ),
-        path,
-    )
-    assert rep["baseline_mean_dist"] == 0.0
-    assert rep["drift_ratio"] == float("inf")
-
+# ---- 5. assign-mode validation ----
 
 def test_assign_to_centroids_rejects_unknown_mode(spark):
     from warctools_spark.operators.similarity import _assign_to_centroids
@@ -143,21 +115,3 @@ def test_assign_to_centroids_rejects_unknown_mode(spark):
     )
     with pytest.raises(ValueError, match="assign_mode"):
         _assign_to_centroids(df, {0: [0.0, 0.0]}, "exprs")
-
-
-# ---- 6. bpe auto arm unchanged ----
-
-def test_bpe_auto_mode_equals_explicit_arms(spark):
-    from warctools_spark.operators.bpe import bpe_train
-
-    docs = spark.createDataFrame(
-        [(1, "low lower lowest low low"), (2, "new newer newest new")],
-        "doc_id bigint, text string",
-    )
-    m_auto, s_auto = bpe_train(docs, n_merges=8, mode="auto")
-    m_drv, _ = bpe_train(docs, n_merges=8, mode="driver")
-    assert m_auto == m_drv
-    segs = {
-        r["word"]: r["symbols"] for r in s_auto.collect()
-    }
-    assert segs  # vocab survived the checkpoint/unpersist cycle

@@ -208,74 +208,7 @@ def test_novelty_bounds_and_row_count(docs):
     assert all(r.n_novel <= r.n_shingles for r in rows)
 
 
-# ------------------------------------------------- sketch mergeability
-
-
-def test_cms_merge_equals_whole_corpus_grid(spark, docs):
-    from warctools_spark.operators.sketches import (
-        cms_counters,
-        cms_lookup,
-        cms_merge,
-    )
-
-    a = docs.where("doc_id % 2 = 0")
-    b = docs.where("doc_id % 2 = 1")
-    merged = cms_merge(cms_counters(a), cms_counters(b))
-    whole = cms_counters(docs)
-    assert merged.exceptAll(whole).count() == 0
-    assert whole.exceptAll(merged).count() == 0
-    # point queries through the merged grid match the whole-corpus grid
-    probes = spark.createDataFrame([("the",), ("absent-token",)], "token string")
-    got = {r.token: r.n_cms for r in cms_lookup(merged, probes).collect()}
-    want = {r.token: r.n_cms for r in cms_lookup(whole, probes).collect()}
-    assert got == want
-    assert got["absent-token"] >= 0  # missing buckets read as 0
-
-
-def test_hll_merge_equals_union_registers(spark):
-    from warctools_spark.operators.sketches import (
-        hll_estimate,
-        hll_merge,
-        hll_registers,
-    )
-
-    a = spark.range(0, 6000).select(F.concat(F.lit("u-"), "id").alias("u"))
-    b = spark.range(4000, 9000).select(F.concat(F.lit("u-"), "id").alias("u"))
-    merged = hll_merge(hll_registers(a, "u"), hll_registers(b, "u"))
-    union = hll_registers(a.union(b), "u")
-    assert merged.exceptAll(union).count() == 0
-    assert union.exceptAll(merged).count() == 0
-    est = hll_estimate(merged).collect()[0].n_hll
-    assert abs(est - 9000) / 9000 < 4 * 1.04 / (256 ** 0.5)
-
-
-def test_sketch_parameter_mismatch_raises(spark, docs):
-    from pyspark.errors import SparkRuntimeException
-    from warctools_spark.operators.sketches import (
-        cms_counters,
-        cms_lookup,
-        cms_merge,
-        hll_estimate,
-        hll_merge,
-        hll_registers,
-    )
-
-    probes = spark.createDataFrame([("the",)], "token string")
-    sub = docs.limit(50)
-    # consume with different build parameters -> execution-time error,
-    # never a silently-wrong estimate
-    with pytest.raises(SparkRuntimeException):
-        cms_lookup(cms_counters(sub, width=2048), probes, width=1024).collect()
-    with pytest.raises(SparkRuntimeException):
-        hll_estimate(hll_registers(sub, "doc_id", m=512), m=256).collect()
-    # folding states built with different parameters -> same
-    with pytest.raises(SparkRuntimeException):
-        cms_merge(cms_counters(sub), cms_counters(sub, seed="other")).collect()
-    with pytest.raises(SparkRuntimeException):
-        hll_merge(
-            hll_registers(sub, "doc_id", m=256),
-            hll_registers(sub, "doc_id", m=128),
-        ).collect()
+# ---------------------------------------------------- hll small m
 
 
 def test_hll_small_m_uses_tabulated_alpha(spark):

@@ -381,20 +381,8 @@ def test_canon_parts_fast_equals_canon_parts():
                 rng.choice(alpha) for _ in range(rng.randint(0, 25))
             )
         )
-    from warctools_spark.kernels.canon import (
-        canonicalize_url,
-        canonicalize_url_fast,
-        url_host,
-        url_host_fast,
-        url_sha1,
-        url_sha1_fast,
-    )
-
     for u in cases:
         assert canon_parts(u) == canon_parts_fast(u), repr(u)
-        assert canonicalize_url(u) == canonicalize_url_fast(u), repr(u)
-        assert url_sha1(u) == url_sha1_fast(u), repr(u)
-        assert url_host(u) == url_host_fast(u), repr(u)
 
 
 # ------------------------------------------------------------ links fastpath

@@ -9,8 +9,3 @@ from warctools_spark.functions.udfs import (  # noqa: F401
     udf_warc_uuid,
     udf_write_warc,
 )
-from warctools_spark.functions.exprs import (  # noqa: F401
-    block_digest_col,
-    host_bucket,
-    warc_date_str,
-)

@@ -1,29 +1,10 @@
 """JVM-side column expression helpers — everything here stays inside
-whole-stage codegen (no Python in the hot path).
-
-These are the Spark built-ins for reference scalar behaviors
-(SURVEY.md §2.10): block digests, WARC date strings, host bucketing.
-"""
+whole-stage codegen (no Python in the hot path)."""
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def block_digest_col(content: Column) -> Column:
-    """'sha256:' + hexdigest (warc.py:139-144) — built-in sha2."""
-    return F.concat(F.lit("sha256:"), F.sha2(content, 256))
-
-
-def warc_date_str(ts: Column) -> Column:
-    """ISO-8601 'Z' with sub-seconds truncated (warc.py:361-365)."""
-    return F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss'Z'")
-
-
-def host_bucket(host: Column, num_buckets: int) -> Column:
-    """Stable host-hash bucket for co-located storage + joins."""
-    return F.pmod(F.xxhash64(host), F.lit(num_buckets)).cast("int")
 
 
 def portable_hash60(col: Column, seed: str) -> Column:

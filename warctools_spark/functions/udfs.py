@@ -16,15 +16,8 @@ import pandas as pd
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-
-from warctools_spark.kernels.canon import (
-    canon_parts_fast as canon_parts,
-    canonicalize_url_fast as canonicalize_url,
-    url_host_fast as url_host,
-    url_sha1_fast as url_sha1,
-)
-
-
+from warctools_spark.kernels.canon import canon_parts_fast as canon_parts
+from warctools_spark.kernels.canon import url_host
 from warctools_spark.kernels.http_decode import decode_http
 from warctools_spark.kernels.links import extract_links
 from warctools_spark.kernels.warc_write import warc_uuid, write_warc_record
@@ -194,14 +187,16 @@ def udf_harvest_canon(url: pd.Series, html: pd.Series) -> pd.Series:
 
 @pandas_udf(T.StringType())
 def udf_canonicalize_url(url: pd.Series) -> pd.Series:
-    return url.map(lambda u: canonicalize_url(u) if u is not None else None)
+    return url.map(lambda u: canon_parts(u)[0] if u is not None else None)
 
 
 @pandas_udf(T.StringType())
 def udf_url_sha1(url: pd.Series) -> pd.Series:
-    return url.map(lambda u: url_sha1(u) if u is not None else None)
+    return url.map(lambda u: canon_parts(u)[1] if u is not None else None)
 
 
+# url_host, not canon_parts(u)[2]: canon_parts strips the URL first,
+# so the two differ on a bare host with trailing blanks ('http://a.com ')
 @pandas_udf(T.StringType())
 def udf_url_host(url: pd.Series) -> pd.Series:
     return url.map(lambda u: url_host(u) if u is not None else None)

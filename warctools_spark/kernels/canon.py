@@ -148,36 +148,3 @@ def canon_parts_fast(url: str) -> tuple[str, str, str]:
                 host,
             )
     return canon_parts(url)
-
-
-def _is_fast_canonical(url: str) -> bool:
-    m = _FAST_CANON_RX.match(url)
-    if m is None:
-        return False
-    path = m.group(1)
-    return "//" not in path and "/." not in path
-
-
-def canonicalize_url_fast(url: str) -> str:
-    """== canonicalize_url(url), skipping urlparse when the URL is
-    already canonical (pinned by the canon fastpath test)."""
-    if _is_fast_canonical(url):
-        return url
-    return canonicalize_url(url)
-
-
-def url_sha1_fast(url: str) -> str:
-    """== url_sha1(url) with the same fast path."""
-    if _is_fast_canonical(url):
-        return hashlib.sha1(url.encode("utf-8")).hexdigest()
-    return url_sha1(url)
-
-
-def url_host_fast(url: str) -> str:
-    """== url_host(url): for fast-canonical URLs the netloc IS the
-    lowercased hostname (the regex admits no port/userinfo/case)."""
-    m = _FAST_CANON_RX.match(url)
-    if m is not None:
-        i = url.index("/") + 2
-        return url[i : url.index("/", i)]
-    return url_host(url)

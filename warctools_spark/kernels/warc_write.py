@@ -105,14 +105,11 @@ def write_sidecar_record(
     payload: bytes,
     gzip_record: bool = False,
 ) -> bytes:
-    """The sidecar-record convention shared by the WET and WAT
-    families (operators/archive_ops.py::wet_conversion,
-    operators/wat.py::wat_records): a derived record whose
+    """The sidecar-record convention of the WET family
+    (operators/archive_ops.py::wet_conversion): a derived record whose
     WARC-Record-ID is `urn:uuid:<prefix><md5(url)>` and whose
     WARC-Refers-To is `urn:uuid:<md5(url)>` — the deterministic uuid
-    of the response record it was derived from. Keeping the
-    convention in ONE place means the two sidecar families cannot
-    silently desynchronize.
+    of the response record it was derived from.
 
     Target-URI is UTF-8-encoded (ASCII-identical for ASCII urls;
     IRIs serialize instead of raising like latin-1 would) — readers

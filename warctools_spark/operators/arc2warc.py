@@ -142,59 +142,3 @@ def arc_to_warc(
         F.col("source_file"),
         F.col("offset"),
     )
-
-
-def pair_request_response(records: DataFrame) -> DataFrame:
-    """request<->response pairing via WARC-Concurrent-To self-join
-    (the implicit join of warc.py:289-320 make_request/make_response)."""
-    concurrent_to = F.expr(
-        "get(filter(headers, h -> lower(h.name) = 'warc-concurrent-to'), 0).value"
-    )
-    responses = records.where(F.col("record_type") == "response").select(
-        F.col("record_id").alias("response_id"),
-        F.col("url").alias("url"),
-        concurrent_to.alias("concurrent_to"),
-    )
-    requests = records.where(F.col("record_type") == "request").select(
-        F.col("record_id").alias("request_id"),
-        concurrent_to.alias("req_concurrent_to"),
-    )
-    # either side may carry the Concurrent-To pointer
-    a = responses.join(
-        requests, responses["concurrent_to"] == requests["request_id"], "inner"
-    ).select("url", "response_id", "request_id")
-    b = responses.join(
-        requests, requests["req_concurrent_to"] == responses["response_id"], "inner"
-    ).select("url", "response_id", "request_id")
-    return a.unionByName(b).distinct()
-
-
-def resolve_revisits(records: DataFrame) -> DataFrame:
-    """revisit -> canonical response resolution via payload-digest
-    self-join + row_number (SURVEY §2.6: WARC-Payload-Digest + revisit
-    profile, warc.py:25,49)."""
-    from pyspark.sql import Window
-
-    digest = F.expr(
-        "get(filter(headers, h -> lower(h.name) = 'warc-payload-digest'), 0).value"
-    )
-    responses = records.where(F.col("record_type") == "response").select(
-        digest.alias("payload_digest"),
-        F.col("record_id").alias("canonical_id"),
-        F.col("warc_date").alias("canonical_date"),
-    )
-    w = Window.partitionBy("payload_digest").orderBy(
-        "canonical_date", "canonical_id"
-    )
-    canonical = (
-        responses.where(F.col("payload_digest").isNotNull())
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn")
-    )
-    revisits = records.where(F.col("record_type") == "revisit").select(
-        digest.alias("payload_digest"),
-        F.col("record_id").alias("revisit_id"),
-        F.col("url"),
-    )
-    return revisits.join(canonical, on="payload_digest", how="left")

@@ -223,9 +223,8 @@ def wet_conversion(pages: DataFrame, gzip_output: bool = False) -> DataFrame:
             for url, ts, html in zip(
                 pdf["url"], pdf["warc_ts"], pdf["html"]
             ):
-                # same skip-don't-crash posture as wat_records: rows
-                # that never identified or dated a response have no
-                # sidecar to derive
+                # skip, don't crash: rows that never identified or
+                # dated a response have no sidecar to derive
                 if url is None or html is None or pd.isna(ts):
                     continue
                 text = decode_http(bytes(html), kind="response").decoded_body()
@@ -306,8 +305,7 @@ def cdx_index(pages: DataFrame) -> DataFrame:
 def revisit_records(pages: DataFrame) -> DataFrame:
     """Writer-side digest dedup (the WARC `revisit` mechanism): the
     first page per payload digest stays a `response` record; every
-    repeat becomes a `revisit` referencing the original's URL/date —
-    the archive-write twin of arc2warc's resolve_revisits read path.
+    repeat becomes a `revisit` referencing the original's URL/date.
 
     First-occurrence selection is min(struct(warc_ts, url)) under a
     hash agg (map-side combine; same skew-proof shape as
@@ -557,43 +555,4 @@ def write_zipnum(
     with open(os.path.join(dest, "zipnum-summary.txt"), "w") as fh:
         for bk, fname, off, ln, _n in rows:
             fh.write(f"{bk} {fname} {off} {ln}\n")
-    return out
-
-
-def zipnum_lookup(path: str, key_prefix: str) -> list[str]:
-    """Replay-client read path for a `write_zipnum` directory: binary-
-    search the in-memory summary for blocks that may contain the key
-    prefix, gunzip ONLY those members, scan their lines. Driver-side
-    by design — this is the lookup a wayback server does per request,
-    not a Spark job; it exists so tests (and the CLI) prove the
-    written layout actually supports point lookups."""
-    import bisect
-    import gzip as _gzip
-    import os
-
-    dest = path.rstrip("/")
-    summary = []
-    with open(os.path.join(dest, "zipnum-summary.txt")) as fh:
-        for ln in fh:
-            bk, fname, off, length = ln.rsplit(" ", 3)
-            summary.append((bk, fname, int(off), int(length)))
-    # blocks are [first_key_i, first_key_{i+1}) ranges in global order;
-    # a prefix can span adjacent blocks
-    keys = [bk for bk, _, _, _ in summary]
-    lo = max(bisect.bisect_right(keys, key_prefix) - 1, 0)
-    out = []
-    for i in range(lo, len(summary)):
-        bk, fname, off, length = summary[i]
-        # a later block whose first key is already past every string
-        # with this prefix cannot contain a match (lines are globally
-        # sorted); the block AT lo must always be scanned — matches
-        # may start mid-block
-        if i > lo and bk > key_prefix and not bk.startswith(key_prefix):
-            break
-        with open(os.path.join(dest, fname), "rb") as fh:
-            fh.seek(off)
-            member = fh.read(length)
-        for line in _gzip.decompress(member).decode("utf-8").splitlines():
-            if line.startswith(key_prefix):
-                out.append(line)
     return out

@@ -12,8 +12,8 @@ semantics). Shuffle discipline:
   linearly in documents rather than quadratically in pairs;
 * SimHash: 64-bit fingerprint scan-side; candidate pairing via band
   keys on 16-bit chunks (hamming<=3 within any chunk-equal pair set);
-* embedding near-dup: cosine over `array<float>` via built-in
-  zip_with/aggregate — JVM-side, no Python.
+* embedding near-dup keys: banded random-hyperplane signs over
+  `array<float>` via built-in zip_with/aggregate — JVM-side, no Python.
 """
 
 from __future__ import annotations
@@ -422,69 +422,6 @@ def _require_dims(df: DataFrame, vec_col: str, dims: int) -> DataFrame:
             ).cast("boolean")
         )
     )
-
-
-def embedding_cosine_pairs(
-    emb: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int | None = None,
-    bands: int = 4,
-    bits_per_band: int = 8,
-    max_bucket_size: int = 1000,
-    return_stats: bool = False,
-) -> DataFrame:
-    """Embedding near-duplicate pairs above a cosine threshold via
-    banded random-hyperplane LSH (SimHash for vectors).
-
-    Scale shape: each vector lands in `bands` buckets of ~n/2^bits
-    expected occupancy; candidate pairs come from the same capped
-    bucket-pairing machinery as MinHash LSH (oversized buckets → O(n)
-    star pairs), then the exact cosine is computed only for
-    candidates. Work is O(n·bands + Σ bucket²·[bucket≤cap]) — never
-    the n²/2^bits of a single coarse sign key. Recall vs brute force
-    is pinned by test_hyperplane_lsh_recall.
-    """
-    dims = _resolve_dims(emb, vec_col, dims)
-    keyed = _require_dims(emb, vec_col, dims).select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
-    )
-    banded = keyed.select(
-        id_col,
-        F.explode(
-            hyperplane_band_keys("__v", bands, bits_per_band, dims)
-        ).alias("bk"),
-    ).select(
-        id_col,
-        F.col("bk.band").alias("band"),
-        F.col("bk.band_key").alias("band_key"),
-    )
-    pairs, sized = _capped_bucket_pairs(banded, id_col, max_bucket_size)
-    a = keyed.select(
-        F.col(id_col).alias("id_a"), F.col("__v").alias("__va")
-    )
-    b = keyed.select(
-        F.col(id_col).alias("id_b"), F.col("__v").alias("__vb")
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("__va"), F.col("__vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    scored = (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("cosine", dot / (norm("__va") * norm("__vb")))
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-    if not return_stats:
-        return scored
-    return scored, _bucket_stats(sized, max_bucket_size)
 
 
 def dup_clusters(

@@ -1,22 +1,19 @@
-"""Closed-form model fitting over corpus features — the quality-
-classifier training stage of a data pipeline (e.g. fit a linear
-scorer on integer quality features against a weak label like
-lang == 'en', then gate the corpus on the score).
+"""Exact moments for closed-form model fitting over corpus features —
+the distributed half of a quality-classifier training stage (e.g. a
+linear scorer on integer quality features against a weak label like
+lang == 'en').
 
-Scale shape: training is ONE aggregate. The Gram moments X'X (with
-intercept) and X'y are k(k+1)/2 + k + 2 sums of products — all
-map-side combinable expressions, so the cluster sees a single
-partial-agg pass over the corpus and the driver receives one row of
-exact integer sums (integer features => bit-exact, SQL-oracle-able).
-The (k+1)x(k+1) ridge solve runs on the driver with numpy — the same
-O(k^2) driver traffic any distributed linear solver bottoms out at.
-Scoring is a pure Catalyst expression (no Python, no shuffle).
+Scale shape: ONE aggregate. The Gram moments X'X (with intercept)
+and X'y are k(k+1)/2 + k + 2 sums of products — all map-side
+combinable expressions, so the cluster sees a single partial-agg
+pass over the corpus and the driver receives one row of exact
+integer sums (integer features => bit-exact, SQL-oracle-able). The
+(k+1)x(k+1) solve on that row is O(k^2) driver work.
 """
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -36,56 +33,3 @@ def gram_moments(
                 F.sum(F.col(a) * F.col(b)).alias(f"m_{i}_{j}")
             )
     return df.agg(*aggs)
-
-
-def ridge_fit(
-    df: DataFrame,
-    feature_cols: list[str],
-    label_col: str,
-    l2: float = 1.0,
-) -> dict:
-    """Fit ridge regression y ~ w0 + w·x from one moments pass.
-
-    Solves (A'A + l2·I) w = A'y where A = [1 | X], assembled on the
-    driver from the exact gram_moments sums (the intercept row/column
-    comes from n and the feature sums). The intercept is not
-    regularized. Returns {"intercept": w0, "weights": {col: w}}."""
-    k = len(feature_cols)
-    row = gram_moments(df, feature_cols, label_col).collect()[0]
-    n = float(row["n"])
-    if n == 0:
-        raise ValueError("cannot fit on an empty DataFrame")
-    s = [float(row[f"s_{i}"]) for i in range(k + 1)]
-
-    def m(i: int, j: int) -> float:
-        i, j = min(i, j), max(i, j)
-        return float(row[f"m_{i}_{j}"])
-
-    # A'A over [1 | X]: top-left n, borders are feature sums
-    ata = np.empty((k + 1, k + 1))
-    ata[0, 0] = n
-    for i in range(k):
-        ata[0, i + 1] = ata[i + 1, 0] = s[i]
-        for j in range(k):
-            ata[i + 1, j + 1] = m(i, j)
-    aty = np.empty(k + 1)
-    aty[0] = s[k]  # sum of labels
-    for i in range(k):
-        aty[i + 1] = m(i, k)
-    reg = np.eye(k + 1) * l2
-    reg[0, 0] = 0.0  # do not regularize the intercept
-    w = np.linalg.solve(ata + reg, aty)
-    return {
-        "intercept": float(w[0]),
-        "weights": {c: float(w[i + 1]) for i, c in enumerate(feature_cols)},
-    }
-
-
-def linear_score(model: dict, feature_cols: list[str]) -> Column:
-    """Catalyst scoring expression for a ridge_fit model — JVM-only,
-    usable in any select/filter (`df.where(linear_score(m, cols) >
-    0.5)`)."""
-    expr = F.lit(model["intercept"])
-    for c in feature_cols:
-        expr = expr + F.lit(model["weights"][c]) * F.col(c)
-    return expr

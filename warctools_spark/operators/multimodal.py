@@ -1,17 +1,16 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed
-metadata, with decode/feature/resize/frame-sample as Arrow-batched
-pandas UDFs.
+"""Multimodal columns: images as opaque binary + typed metadata, with
+decode and feature extraction as Arrow-batched mapInPandas passes,
+and payload MIME sniffing by magic bytes.
 
-The Spark-side plumbing (schemas, batch shapes, partitioning, UDF
-signatures) is real and tested; the actual codec step is STUBBED
-behind `register_codec` because the container ships no image/audio
-libraries. A deterministic fake codec ("IMG1"/"AUD1" containers,
-below) exercises the full path end-to-end; plugging Pillow/ffmpeg in
-production means registering a real codec, nothing else changes.
+The Spark-side plumbing (schemas, batch shapes, UDF signatures) is
+real and tested; the codec step sits behind `register_codec` because
+the container ships no image libraries. A deterministic fake codec
+(the "IMG1" container, below) exercises the full path end-to-end;
+plugging Pillow in production means registering a real codec,
+nothing else changes.
 
 Fake container format (deterministic, self-describing):
   IMG1 | width:u16 | height:u16 | channels:u8 | payload bytes
-  AUD1 | sample_rate:u32 | n_samples:u32 | payload bytes
 """
 
 from __future__ import annotations
@@ -27,21 +26,12 @@ from pyspark.sql import types as T
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),  # image | audio | video
+        T.StructField("kind", T.StringType()),  # codec name: img1 | image
         T.StructField("blob", T.BinaryType()),
         T.StructField("meta", T.StructType([
             T.StructField("mime", T.StringType()),
             T.StructField("bytes", T.LongType()),
         ])),
-    ]
-)
-
-IMAGE_META = T.StructType(
-    [
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("ok", T.BooleanType()),
     ]
 )
 
@@ -131,30 +121,6 @@ def synthesize_media(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def decode_image_meta(media: DataFrame, blob_col: str = "blob") -> DataFrame:
-    """Attach decoded image metadata; undecodable rows get ok=false
-    (errors are data, never batch aborts)."""
-
-    @F.pandas_udf(IMAGE_META)
-    def _meta(kind: pd.Series, blob: pd.Series) -> pd.DataFrame:
-        out = {"width": [], "height": [], "channels": [], "ok": []}
-        for k, b in zip(kind, blob):
-            try:
-                d = _codecs[k](bytes(b))
-                out["width"].append(d["width"])
-                out["height"].append(d["height"])
-                out["channels"].append(d["channels"])
-                out["ok"].append(True)
-            except Exception:
-                out["width"].append(None)
-                out["height"].append(None)
-                out["channels"].append(None)
-                out["ok"].append(False)
-        return pd.DataFrame(out)
-
-    return media.withColumn("image", _meta(F.col("kind"), F.col(blob_col)))
-
-
 def image_features(media: DataFrame, blob_col: str = "blob") -> DataFrame:
     """Feature extraction: mean/std/histogram over decoded pixels via
     mapInPandas (batch shape: one row in -> one row out, feature
@@ -180,187 +146,6 @@ def image_features(media: DataFrame, blob_col: str = "blob") -> DataFrame:
             yield pd.DataFrame({"media_id": ids, "features": feats})
 
     return media.mapInPandas(gen, "media_id long, features array<double>")
-
-
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: nearest-neighbor over the fake codec (real
-    codecs would go through the same UDF shape)."""
-
-    def gen(batches):
-        for pdf in batches:
-            rows = {"media_id": [], "blob": []}
-            for mid, k, b in zip(pdf["media_id"], pdf["kind"], pdf["blob"]):
-                try:
-                    d = _codecs[k](bytes(b))
-                    px = np.frombuffer(d["payload"], dtype=np.uint8)[
-                        : d["width"] * d["height"]
-                    ].reshape(d["height"], d["width"])
-                    yi = (np.arange(height) * d["height"] // height).clip(
-                        0, d["height"] - 1
-                    )
-                    xi = (np.arange(width) * d["width"] // width).clip(
-                        0, d["width"] - 1
-                    )
-                    out = px[np.ix_(yi, xi)]
-                    blob = encode_img1(width, height, 1, out.tobytes())
-                except Exception:
-                    blob = None
-                rows["media_id"].append(int(mid))
-                rows["blob"].append(blob)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(gen, "media_id long, blob binary")
-
-
-def frame_sample_stub(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: 1 row -> N frame rows (UDTF
-    shape). The fake 'video' is the image repeated; a real codec
-    registers a demuxer with the same signature."""
-
-    def gen(batches):
-        for pdf in batches:
-            rows = {"media_id": [], "frame_no": [], "frame": []}
-            for mid, k, b in zip(pdf["media_id"], pdf["kind"], pdf["blob"]):
-                try:
-                    _codecs[k](bytes(b))
-                except Exception:
-                    continue
-                for i in range(0, 30, every_n):
-                    rows["media_id"].append(int(mid))
-                    rows["frame_no"].append(i)
-                    rows["frame"].append(bytes(b))
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(gen, "media_id long, frame_no int, frame binary")
-
-
-# ---- audio ----
-
-def encode_aud1(sample_rate: int, payload: bytes) -> bytes:
-    """Fake audio container: 'AUD1' + u32 sample rate + s16le PCM."""
-    return b"AUD1" + struct.pack(">I", sample_rate) + payload
-
-
-def _decode_aud1(blob: bytes) -> dict:
-    if blob[:4] != b"AUD1" or len(blob) < 8:
-        raise ValueError("not an AUD1 blob")
-    (rate,) = struct.unpack(">I", blob[4:8])
-    return {"sample_rate": rate, "pcm": blob[8:]}
-
-
-def _decode_wav(blob: bytes) -> dict:
-    """RIFF/WAVE decode via the stdlib `wave` module (r03 brief #9) —
-    the real-codec arm of the audio seam, mirroring the Pillow image
-    path: no external dependency, PCM WAV only. Multi-channel audio is
-    downmixed by interleaved s16 pass-through (callers see the raw
-    frame bytes; sample_rate and n_channels carry the layout)."""
-    import io
-    import wave
-
-    with wave.open(io.BytesIO(blob), "rb") as w:
-        if w.getsampwidth() != 2:
-            raise ValueError(
-                f"only 16-bit PCM WAV supported (got sampwidth="
-                f"{w.getsampwidth()})"
-            )
-        return {
-            "sample_rate": w.getframerate(),
-            "n_channels": w.getnchannels(),
-            "pcm": w.readframes(w.getnframes()),
-        }
-
-
-def _decode_real_audio(blob: bytes) -> dict:
-    """Audio codec dispatch: RIFF/WAVE decodes via the stdlib `wave`
-    module; compressed formats (mp3/flac/ogg) stay behind the
-    documented seam — register_codec('audio', fn) with a
-    soundfile/ffmpeg-backed decoder in production."""
-    if blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
-        return _decode_wav(blob)
-    raise NotImplementedError(
-        "compressed audio codecs (mp3/flac/ogg) are not available in "
-        "this container; register_codec('audio', fn) with a "
-        "soundfile-backed decoder in production"
-    )
-
-
-register_codec("aud1", _decode_aud1)
-register_codec("audio", _decode_real_audio)
-
-
-def synthesize_audio(spark, sf_dir: str, sample_rate: int = 16000) -> DataFrame:
-    """Deterministic audio table from the embeddings parquet: each
-    vector becomes an AUD1 blob whose s16 PCM samples are the scaled
-    embedding — same no-external-data rule as synthesize_media."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-    def gen(batches):
-        for pdf in batches:
-            rows = {"media_id": [], "kind": [], "blob": [], "meta": []}
-            for vid, vec in zip(pdf["vec_id"], pdf["embedding"]):
-                arr = np.asarray(vec, dtype=np.float64)
-                peak = np.abs(arr).max() or 1.0
-                pcm = (arr / peak * 32767.0).astype("<i2")
-                blob = encode_aud1(sample_rate, pcm.tobytes())
-                rows["media_id"].append(int(vid))
-                rows["kind"].append("aud1")
-                rows["blob"].append(blob)
-                rows["meta"].append(
-                    {"mime": "audio/x-aud1", "bytes": len(blob)}
-                )
-            yield pd.DataFrame(rows)
-
-    return emb.mapInPandas(
-        gen,
-        "media_id long, kind string, blob binary, "
-        "meta struct<mime:string, bytes:long>",
-    )
-
-
-def audio_features(media: DataFrame, blob_col: str = "blob") -> DataFrame:
-    """Per-clip features over the decoded PCM: duration, RMS, peak,
-    zero-crossing rate — the audio twin of image_features; numpy over
-    Arrow batches, no per-row Python beyond the codec seam."""
-
-    def feats(batches):
-        for pdf in batches:
-            rows = {
-                "media_id": [],
-                "sample_rate": [],
-                "n_samples": [],
-                "duration_s": [],
-                "rms": [],
-                "peak": [],
-                "zcr": [],
-            }
-            for mid, kind, blob in zip(
-                pdf["media_id"], pdf["kind"], pdf["blob"]
-            ):
-                dec = _codecs[kind](bytes(blob))
-                pcm = np.frombuffer(dec["pcm"], dtype="<i2").astype(
-                    np.float64
-                ) / 32768.0
-                n = len(pcm)
-                rate = int(dec["sample_rate"])
-                zc = (
-                    float(np.mean(np.signbit(pcm[1:]) != np.signbit(pcm[:-1])))
-                    if n > 1
-                    else 0.0
-                )
-                rows["media_id"].append(int(mid))
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(n)
-                rows["duration_s"].append(n / rate if rate else 0.0)
-                rows["rms"].append(float(np.sqrt(np.mean(pcm**2))) if n else 0.0)
-                rows["peak"].append(float(np.abs(pcm).max()) if n else 0.0)
-                rows["zcr"].append(zc)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(
-        feats,
-        "media_id long, sample_rate int, n_samples int, duration_s double, "
-        "rms double, peak double, zcr double",
-    )
 
 
 # magic-byte table for payload MIME sniffing (public file signatures)
@@ -390,286 +175,3 @@ def sniff_mime(blob_col) -> "F.Column":
             F.startswith(F.hex(col), F.lit(hexs.upper())), F.lit(mime)
         ).otherwise(out)
     return out
-
-
-def image_dhash(media: DataFrame, blob_col: str = "blob") -> DataFrame:
-    """64-bit difference hash (dHash — the classic perceptual image
-    fingerprint: Krawetz's published recipe; also what most dedup
-    pipelines run before embedding-level near-dup): decode, nearest-
-    neighbor resample the luma plane to 9x8 with pure integer index
-    mapping (no filtering — deterministic on every platform), set
-    bit r*8+c iff px[r,c] > px[r,c+1]. Robust to rescaling and mild
-    recompression; byte-identical images always collide.
-
-    Goes through the registered codec table, so the fake IMG1 codec
-    exercises the full path in-container and Pillow-backed real
-    decode uses the same code when present. Output
-    (media_id, dhash bigint — two's complement of the 64-bit value);
-    undecodable rows carry null."""
-
-    def gen(batches):
-        for pdf in batches:
-            ids, hashes = [], []
-            for mid, k, b in zip(pdf["media_id"], pdf["kind"], pdf[blob_col]):
-                try:
-                    d = _codecs[k](bytes(b))
-                    w, h = d["width"], d["height"]
-                    c = int(d.get("channels", 1) or 1)
-                    px = np.frombuffer(d["payload"], dtype=np.uint8)[
-                        : w * h * c
-                    ]
-                    if c > 1:
-                        # interleaved multi-channel -> integer channel
-                        # sum (monotonic in the mean, no float luma)
-                        px = (
-                            px.reshape(h, w, c).astype(np.int32).sum(axis=2)
-                        )
-                    else:
-                        px = px.reshape(h, w)
-                    xi = (np.arange(9) * w // 9).clip(0, w - 1)
-                    yi = (np.arange(8) * h // 8).clip(0, h - 1)
-                    small = px[np.ix_(yi, xi)].astype(np.int32)
-                    bits = small[:, :-1] > small[:, 1:]
-                    val = 0
-                    for i, bit in enumerate(bits.flatten()):
-                        if bit:
-                            val |= 1 << i
-                    if val >= 1 << 63:
-                        val -= 1 << 64
-                    hashes.append(val)
-                except Exception:
-                    hashes.append(None)
-                ids.append(int(mid))
-            yield pd.DataFrame({"media_id": ids, "dhash": hashes})
-
-    return media.mapInPandas(gen, "media_id long, dhash long")
-
-
-def image_neardup_pairs(
-    hashes: DataFrame,
-    max_hamming: int = 3,
-    n_bands: int = 4,
-    distinct_hashes: bool = True,
-) -> DataFrame:
-    """Near-duplicate image pairs from a dhash table: band the 64-bit
-    hash into `n_bands` 16-bit keys (pigeonhole: any pair within
-    hamming distance n_bands-1 shares at least one clean band, so the
-    default 4 bands give EXACT recall for max_hamming <= 3), bucket-
-    join on (band_ix, key), then filter on the true bit_count(xor).
-    Output: (media_id_a, media_id_b, hamming), a < b, deduped.
-
-    The same banded shape as the simhash/LSH text family: candidate
-    generation is bounded by bucket sizes, never all-pairs; the
-    arithmetic-shift-then-mask band key is sign-safe for two's-
-    complement hashes and replays identically in DuckDB.
-
-    `distinct_hashes=True` (the scale default) first collapses
-    byte-identical perceptual hashes to one representative
-    (min media_id) — a viral image duplicated 10^6 times would
-    otherwise put 10^6 rows in the SAME bucket and the join would
-    generate 10^12 pairs (the exact trap the minhash family caps).
-    Exact-duplicate membership is a groupBy(dhash) away and is not a
-    pair problem; pairs here relate DISTINCT hash values. Set False
-    on small data to relate every media_id directly."""
-    if not 1 <= n_bands <= 4:
-        raise ValueError("n_bands must be in 1..4 (16-bit bands of 64)")
-    if max_hamming > n_bands - 1:
-        raise ValueError(
-            f"banding recall is only exact for max_hamming <= n_bands-1 "
-            f"(= {n_bands - 1}); raise n_bands or lower max_hamming"
-        )
-    h = hashes.where(F.col("dhash").isNotNull())
-    if distinct_hashes:
-        h = h.groupBy("dhash").agg(F.min("media_id").alias("media_id"))
-    bands = h.select(
-        "media_id",
-        "dhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_ix"),
-                        F.shiftright(F.col("dhash"), 16 * i)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("key"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("b"),
-    ).select("media_id", "dhash", "b.band_ix", "b.key")
-    a = bands.select(
-        F.col("media_id").alias("media_id_a"),
-        F.col("dhash").alias("__ha"),
-        "band_ix",
-        "key",
-    )
-    b = bands.select(
-        F.col("media_id").alias("media_id_b"),
-        F.col("dhash").alias("__hb"),
-        "band_ix",
-        "key",
-    )
-    ham = F.bit_count(F.col("__ha").bitwiseXOR(F.col("__hb")))
-    return (
-        a.join(b, ["band_ix", "key"])
-        .where(F.col("media_id_a") < F.col("media_id_b"))
-        .select("media_id_a", "media_id_b", ham.alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
-def audio_fingerprint(
-    media: DataFrame,
-    blob_col: str = "blob",
-    frame: int = 2048,
-    hop: int = 1024,
-    n_bands: int = 33,
-) -> DataFrame:
-    """Per-frame 32-bit audio fingerprints — the Haitsma & Kalker
-    scheme (\"A Highly Robust Audio Fingerprinting System\", ISMIR
-    2002, the public classic): overlapping frames -> FFT magnitude ->
-    `n_bands` log-spaced energy bands -> bit m set iff the band-energy
-    DIFFERENCE (E[m]-E[m+1]) increased vs the previous frame. Robust
-    to volume scaling (differences of differences), codec noise, and
-    small time shifts (the hop overlap); the first frame has no
-    predecessor and emits nothing.
-
-    Decodes via the codec table (AUD1 fake codec in-container, stdlib
-    WAV, production codecs behind the same seam), mono s16le; multi-
-    channel PCM uses the first channel. Output:
-    (media_id, frame_ix, fp int) — one row per frame after the first.
-    Undecodable/too-short rows emit nothing (fingerprinting is not
-    row-preserving and says so).
-
-    One Arrow pass, no shuffle; numpy rfft per frame is the kernel
-    cost, O(samples log frame) per clip."""
-    if frame // 2 < n_bands + 2:
-        raise ValueError(
-            f"frame={frame} has only {frame // 2} positive-frequency "
-            f"bins — need at least n_bands+2 (= {n_bands + 2})"
-        )
-
-    def gen(batches):
-        for pdf in batches:
-            ids, ixs, fps = [], [], []
-            for mid, k, b in zip(pdf["media_id"], pdf["kind"], pdf[blob_col]):
-                try:
-                    d = _codecs[k](bytes(b))
-                    pcm = np.frombuffer(d["pcm"], dtype="<i2")
-                    nch = int(d.get("n_channels", 1) or 1)
-                    if nch > 1:
-                        pcm = pcm[::nch]
-                    if len(pcm) < frame + hop:
-                        continue
-                    x = pcm.astype(np.float64)
-                    n_frames = 1 + (len(x) - frame) // hop
-                    # log-spaced band edges over the positive spectrum
-                    # (skip DC), bumped to strictly increasing ints so
-                    # every clip at a given frame size gets the SAME
-                    # n_bands+1 edges (naive int-cast collapses the
-                    # low end of a geomspace)
-                    edges, prev_e = [], 1
-                    for v in np.geomspace(2, frame // 2, n_bands + 1):
-                        prev_e = max(int(v), prev_e + 1)
-                        edges.append(prev_e)
-                    edges = np.asarray(edges)
-                    prev = None
-                    for i in range(n_frames):
-                        seg = x[i * hop : i * hop + frame]
-                        mag = np.abs(np.fft.rfft(seg))
-                        # slice to the documented upper edge: reduceat's
-                        # final segment otherwise runs to Nyquist, so the
-                        # top band would absorb every bin above edges[-1]
-                        # (r5 ADVICE fix)
-                        e = np.add.reduceat(mag[: edges[-1]], edges[:-1])[: n_bands]
-                        diff = e[:-1] - e[1:]
-                        if prev is not None:
-                            bits = (diff - prev) > 0
-                            val = 0
-                            for j, bit in enumerate(bits):
-                                if bit:
-                                    val |= 1 << j
-                            ids.append(int(mid))
-                            ixs.append(i)
-                            fps.append(val)
-                        prev = diff
-                except Exception:
-                    continue
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_ix": ixs, "fp": fps}
-            )
-
-    return media.mapInPandas(gen, "media_id long, frame_ix int, fp long")
-
-
-def audio_match_pairs(
-    fps: DataFrame,
-    min_matches: int = 5,
-    max_fp_freq: int = 1000,
-) -> DataFrame:
-    """Clip pairs that share a consistent run of fingerprint frames —
-    the offset-histogram vote of landmark audio matching (Wang,
-    ISMIR 2003): join frames on equal fp, histogram the frame-offset
-    delta per clip pair, and keep pairs whose best single offset
-    explains >= min_matches matching frames. Output:
-    (media_id_a, media_id_b, offset, n_matches), a < b, best offset
-    per pair (ties -> smallest offset).
-
-    Scale guards: fp values occurring in more than `max_fp_freq`
-    frames corpus-wide are dropped BEFORE the self-join (silence and
-    constant tones produce degenerate fingerprints that would
-    quadratically explode the equality buckets — the winnowing
-    df-gate, same reasoning); the join then carries only
-    discriminative frames, and the offset histogram is a
-    map-side-combinable agg."""
-    # the SMALL set by construction is the over-frequent one (silence,
-    # constant tones) — broadcast THAT and anti-join; broadcasting the
-    # keep side would ship ~every distinct fp to every executor
-    hot = (
-        fps.groupBy("fp")
-        .agg(F.count("*").alias("__n"))
-        .where(F.col("__n") > max_fp_freq)
-        .select("fp")
-    )
-    keep = fps.join(F.broadcast(hot), "fp", "left_anti").select(
-        "media_id", "frame_ix", "fp"
-    )
-    a = keep.select(
-        F.col("media_id").alias("media_id_a"),
-        F.col("frame_ix").alias("__fa"),
-        "fp",
-    )
-    b = keep.select(
-        F.col("media_id").alias("media_id_b"),
-        F.col("frame_ix").alias("__fb"),
-        "fp",
-    )
-    votes = (
-        a.join(b, "fp")
-        .where(F.col("media_id_a") < F.col("media_id_b"))
-        .groupBy(
-            "media_id_a",
-            "media_id_b",
-            (F.col("__fb") - F.col("__fa")).alias("offset"),
-        )
-        .agg(F.count("*").cast("long").alias("n_matches"))
-    )
-    best = votes.groupBy("media_id_a", "media_id_b").agg(
-        F.max(
-            F.struct(
-                F.col("n_matches").alias("n"),
-                (-F.col("offset")).alias("negoff"),
-            )
-        ).alias("__b")
-    )
-    return (
-        best.select(
-            "media_id_a",
-            "media_id_b",
-            (-F.col("__b.negoff")).cast("long").alias("offset"),
-            F.col("__b.n").alias("n_matches"),
-        )
-        .where(F.col("n_matches") >= min_matches)
-    )

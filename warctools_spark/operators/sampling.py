@@ -381,91 +381,3 @@ def dsir_select(
         .limit(k)
         .select(id_col, "n_grams", "log_weight", "dsir_score")
     )
-
-
-def temperature_rates(
-    docs: DataFrame,
-    alpha: float = 0.3,
-    n_target: int | None = None,
-    stratum_col: str = "source",
-) -> DataFrame:
-    """Temperature-based mixing rates (the multilingual-LM exponent
-    sampling of Lample & Conneau 2019 §3.1, also mT5/XLM-R): target
-    share of stratum i is
-
-        q_i = p_i^alpha / sum_j p_j^alpha,   p_i = n_i / N
-
-    alpha < 1 flattens the head (boosts low-resource strata), alpha=1
-    keeps natural proportions, alpha=0 is uniform. Output per
-    stratum: n_corpus, p (natural share), q (target share), and —
-    when `n_target` is given — `rate`, the per-row keep probability
-    min(1, n_target * q_i / n_i) realizing q in expectation under the
-    budget. All from ONE count agg; the power/normalize runs on the
-    stratum-sized table (round-9, ORACLES.md #5)."""
-    if alpha < 0:
-        raise ValueError("alpha must be >= 0")
-    # null-stratum rows are excluded from the normalization: they can
-    # never equi-join back to a rate in temperature_mix, so counting
-    # them would waste their q mass and systematically undershoot
-    # n_target (r5 ADVICE fix)
-    counts = (
-        docs.where(F.col(stratum_col).isNotNull())
-        .groupBy(stratum_col)
-        .agg(F.count("*").cast("long").alias("n_corpus"))
-    )
-    tot = F.broadcast(
-        counts.agg(
-            F.sum("n_corpus").cast("double").alias("__N"),
-        )
-    )
-    base = counts.crossJoin(tot).withColumn(
-        "__w", F.pow(F.col("n_corpus") / F.col("__N"), F.lit(float(alpha)))
-    )
-    z = F.broadcast(base.agg(F.sum("__w").alias("__Z")))
-    out = (
-        base.crossJoin(z)
-        .select(
-            stratum_col,
-            "n_corpus",
-            F.round(F.col("n_corpus") / F.col("__N"), 9).alias("p"),
-            F.round(F.col("__w") / F.col("__Z"), 9).alias("q"),
-            *(
-                [
-                    F.round(
-                        F.least(
-                            F.lit(1.0),
-                            F.lit(float(n_target))
-                            * (F.col("__w") / F.col("__Z"))
-                            / F.col("n_corpus"),
-                        ),
-                        9,
-                    ).alias("rate")
-                ]
-                if n_target is not None
-                else []
-            ),
-        )
-    )
-    return out
-
-
-def temperature_mix(
-    docs: DataFrame,
-    alpha: float = 0.3,
-    n_target: int = 1000,
-    seed: str = "temp-mix-v1",
-    stratum_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Sample the corpus to the temperature-mixed target: keep a row
-    iff hash_unit(seed, id) < rate(its stratum). Deterministic —
-    the same (corpus, alpha, n_target, seed) always selects the same
-    rows at any parallelism, and the achieved mix converges to q_i
-    (mix_report audits it). Join is a broadcast of the stratum-sized
-    rate table."""
-    rates = temperature_rates(docs, alpha, n_target, stratum_col).select(
-        stratum_col, "rate"
-    )
-    return docs.join(F.broadcast(rates), stratum_col).where(
-        hash_unit(F.col(id_col), seed) < F.col("rate")
-    ).drop("rate")

@@ -3,9 +3,11 @@
 * brute-force cosine top-k: exact baseline, one pass over the table,
   JVM-side zip_with/aggregate arithmetic, top-k via orderBy+limit
   (Spark's TakeOrderedAndProject — no full sort materialization).
-* IVF-style bucketed ANN: coarse quantization by sign-pattern cells
-  (deterministic, data-independent); queries probe only their own cell
-  and its neighbors, cutting the scan by ~2^bucket_dims at scale.
+* banded hyperplane-LSH ANN: candidates share the query's band key
+  in any band, reranked by exact cosine.
+* k-means IVF ANN: deterministic Lloyd centroids as the coarse
+  quantizer; queries probe their n_probe nearest cells only.
+* k-means clustering and SemDeDup-style survivors on top of it.
 """
 
 from __future__ import annotations
@@ -53,39 +55,6 @@ def brute_force_topk(
     )
 
 
-def sign_cell(vec: Column, dims: int) -> Column:
-    """Coarse IVF cell: sign pattern of the first `dims` components."""
-    return F.concat_ws(
-        "",
-        *[F.when(vec[i] >= 0, F.lit("1")).otherwise(F.lit("0")) for i in range(dims)],
-    )
-
-
-def ivf_topk(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int = 4,
-    probe_hamming: int = 1,
-) -> DataFrame:
-    """ANN top-k: scan only cells within `probe_hamming` sign flips of
-    the query's cell. Recall is tested against brute force; at scale
-    the scan cost drops by ~2^dims / (#probed cells)."""
-    qcell = "".join("1" if v >= 0 else "0" for v in query_vec[:dims])
-    cells = {qcell}
-    if probe_hamming >= 1:
-        for i in range(dims):
-            flipped = list(qcell)
-            flipped[i] = "0" if flipped[i] == "1" else "1"
-            cells.add("".join(flipped))
-    celled = emb.withColumn("cell", sign_cell(F.col(vec_col), dims)).where(
-        F.col("cell").isin(list(cells))
-    )
-    return brute_force_topk(celled, query_vec, k, id_col, vec_col)
-
-
 def lsh_topk(
     emb: DataFrame,
     query_vec: list[float],
@@ -97,7 +66,7 @@ def lsh_topk(
     dims: int | None = None,
 ) -> DataFrame:
     """ANN top-k via banded hyperplane LSH probe + exact rerank — the
-    scale path beyond the sign-cell IVF: candidates are rows sharing
+    scale path beyond brute force: candidates are rows sharing
     the query's band key in ANY band (expected corpus fraction
     ~bands/2^bits), reranked by exact cosine.
 
@@ -215,8 +184,8 @@ def _assign_to_centroids(
 ) -> DataFrame:
     """Assign rows (with a `__v` array<double> column) to the nearest
     of a literal centroid dict — the single assignment implementation
-    shared by the Lloyd loop, the per-call IVF query path, and
-    ivf_index_append, so their cluster semantics cannot drift apart.
+    shared by the Lloyd loop and the IVF query path, so their cluster
+    semantics cannot drift apart.
     Returns df + (cluster, __d2)."""
     from pyspark.sql.functions import pandas_udf
 
@@ -348,11 +317,11 @@ def ivf_kmeans_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN top-k over a kmeans-trained IVF index (the classic
-    inverted-file ANN: Lloyd centroids as the coarse quantizer instead
-    of the data-independent sign cells of ivf_topk). Train `n_cells`
-    deterministic Lloyd centroids, pick the `n_probe` cells whose
-    centroids are nearest the query (driver-side — n_cells distances),
-    and exact-rerank only the vectors assigned to those cells.
+    inverted-file ANN: Lloyd centroids as the coarse quantizer).
+    Train `n_cells` deterministic Lloyd centroids, pick the `n_probe`
+    cells whose centroids are nearest the query (driver-side — n_cells
+    distances), and exact-rerank only the vectors assigned to those
+    cells.
 
     Scale shape: training is the kmeans_assign plan (map-side combined
     centroid update, k*dims rows to the driver per iteration); the
@@ -442,147 +411,3 @@ def semdedup_survivors(
     return keyed.join(dropped, id_col, "left_anti").select(
         F.col(id_col), "cluster"
     )
-
-
-def build_ivf_index(
-    emb: DataFrame,
-    path: str,
-    n_cells: int = 8,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
-    """Materialize the IVF index ivf_kmeans_topk trains per call:
-    vectors written partitioned by their Lloyd cluster id (the
-    inverted-file layout) plus a centroids sidecar. Train once, query
-    many — each query then reads only its probed cells' partitions
-    (see ivf_index_topk, partition pruning plan-asserted in tests).
-    Returns the centroid dict {cluster: [floats]}.
-
-    Sidecar + vectors I/O goes through the Hadoop FileSystem resolved
-    from `path` (plans/fs.py), so path="s3a://bucket/index" is the
-    same code path as the local stand-in."""
-    import json
-
-    from warctools_spark.plans.fs import HadoopFS
-
-    assigned, centroids = _lloyd(
-        emb, n_cells, iterations, id_col, vec_col, 6, "expr"
-    )
-    # checkpoint before the two consumers below: otherwise the parquet
-    # write materializes the full Lloyd lineage once and the baseline
-    # aggregate re-runs it from scratch (ivf_index_append already does
-    # this for the same reason)
-    assigned = assigned.localCheckpoint(eager=True)
-    (
-        assigned.select(id_col, "cluster", F.col("__v").alias("embedding"))
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(path.rstrip("/") + "/vectors")
-    )
-    # baseline quantization quality for the append-path drift metric
-    base = assigned.agg(
-        F.avg(F.sqrt(F.col("__d2"))).alias("mean_dist")
-    ).collect()[0]
-    sidecar = {
-        "n_cells": n_cells,
-        "centroids": {str(c): v for c, v in centroids.items()},
-        "mean_dist": float(base["mean_dist"]),
-    }
-    fs = HadoopFS(emb.sparkSession, path)
-    fs.write_text_atomic(
-        path.rstrip("/") + "/centroids.json", json.dumps(sidecar)
-    )
-    return centroids
-
-
-def ivf_index_append(
-    emb: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    assign_mode: str = "auto",
-) -> dict:
-    """Incremental IVF maintenance: assign NEW vectors to the
-    EXISTING centroids (no retrain — one map-side assignment pass,
-    zero shuffles) and append them to their cells' partitions. The
-    crawl keeps producing embeddings; this is the path that absorbs
-    them without re-reading the indexed corpus.
-
-    Returns a drift report: {"n_appended", "mean_dist" (of the
-    appended batch to its assigned centroids), "baseline_mean_dist"
-    (recorded in the sidecar at build time), "drift_ratio"}. A
-    drift_ratio well above 1 means the new data no longer matches the
-    trained quantizer — the retrain trigger: rebuild with
-    build_ivf_index over the union (queries keep working unchanged
-    meanwhile, just with degraded cell balance)."""
-    import json
-
-    from warctools_spark.operators.dedup import _require_dims
-    from warctools_spark.plans.fs import HadoopFS
-
-    fs = HadoopFS(emb.sparkSession, path)
-    sidecar = json.loads(fs.read_text(path.rstrip("/") + "/centroids.json"))
-    centroids = {int(c): v for c, v in sidecar["centroids"].items()}
-    dims = len(next(iter(centroids.values())))
-    if assign_mode == "auto":
-        assign_mode = "pandas" if len(centroids) * dims >= 1024 else "expr"
-    keyed = _require_dims(emb, vec_col, dims).select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
-    )
-    assigned = _assign_to_centroids(
-        keyed, centroids, assign_mode
-    ).localCheckpoint(eager=True)
-    (
-        assigned.select(id_col, "cluster", F.col("__v").alias("embedding"))
-        .write.mode("append")
-        .partitionBy("cluster")
-        .parquet(path.rstrip("/") + "/vectors")
-    )
-    stats = assigned.agg(
-        F.count("*").alias("n"),
-        F.avg(F.sqrt(F.col("__d2"))).alias("mean_dist"),
-    ).collect()[0]
-    baseline = sidecar.get("mean_dist")
-    mean_dist = float(stats["mean_dist"]) if stats["n"] else 0.0
-    if baseline is None:
-        drift = None  # pre-baseline sidecar: no data, not "no drift"
-    elif baseline == 0.0:
-        # every base vector coincided with its centroid; ANY appended
-        # distance is infinite relative drift, not a missing metric
-        drift = 0.0 if mean_dist == 0.0 else float("inf")
-    else:
-        drift = mean_dist / baseline
-    return {
-        "n_appended": int(stats["n"]),
-        "mean_dist": mean_dist,
-        "baseline_mean_dist": baseline,
-        "drift_ratio": drift,
-    }
-
-
-def ivf_index_topk(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Query a persisted IVF index: pick the n_probe cells whose
-    centroids are nearest the query (driver-side, from the sidecar —
-    no job), then scan ONLY those cells' partitions (`cluster IN`
-    reaches the parquet scan as a PartitionFilter) and exact-rerank.
-    Identical results to the train-per-call ivf_kmeans_topk at the
-    same parameters (tested)."""
-    import json
-
-    from warctools_spark.plans.fs import HadoopFS
-
-    fs = HadoopFS(spark, path)
-    sidecar = json.loads(fs.read_text(path.rstrip("/") + "/centroids.json"))
-    centroids = {int(c): v for c, v in sidecar["centroids"].items()}
-    probe = _select_probe_cells(centroids, query_vec, n_probe)
-    vectors = spark.read.parquet(path.rstrip("/") + "/vectors")
-    cands = vectors.where(F.col("cluster").isin(probe))
-    return brute_force_topk(cands, query_vec, k, id_col, vec_col="embedding")

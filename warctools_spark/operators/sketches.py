@@ -1,13 +1,12 @@
-"""Mergeable streaming sketches: count-min and HyperLogLog.
+"""Streaming sketches: count-min and HyperLogLog.
 
 A 10^10-URL frontier needs corpus-level statistics (hot tokens, hot
 hosts, distinct-URL cardinality) that are too big to compute exactly
 per monitoring tick. Sketches answer them in CONSTANT memory: a
 count-min sketch is a depth x width counter grid, a HyperLogLog is m
 one-byte registers — both built with one map-side-combinable agg,
-both mergeable across partitions/epochs by elementwise sum/max, so a
-running crawl can fold each epoch's sketch into a lifetime sketch
-without ever re-scanning history.
+whose partial states combine across partitions by elementwise
+sum/max.
 
 Unlike Spark's built-in approx_count_distinct (HLL++ with opaque
 per-JVM hashing), these are built from the repo's engine-portable
@@ -29,122 +28,12 @@ from warctools_spark.functions.exprs import portable_hash60 as _hash60
 
 
 def _cms_bucket_array(col: Column, width: int, depth: int, seed: str) -> Column:
-    """The depth bucket hashes for one token, posexplode-ready. This
-    is the ONE definition both the grid build and point lookups go
-    through — they are only correct together because the expression
-    is shared (a drift in either side makes every lookup silently
-    wrong while the grid itself still oracle-checks)."""
+    """The depth bucket hashes for one token, posexplode-ready."""
     return F.array(
         *[
             (_hash60(F.concat(F.lit(f"{j}:"), col), seed) % F.lit(width))
             for j in range(depth)
         ]
-    )
-
-
-def _with_params(df: DataFrame, **params) -> DataFrame:
-    """Stamp sketch parameters onto the state table as constant
-    columns, so consume/merge paths can verify them at execution time
-    instead of silently mis-hashing against a grid built with
-    different parameters."""
-    for k, v in params.items():
-        df = df.withColumn(k, F.lit(v))
-    return df
-
-
-def _assert_params(df: DataFrame, what: str, **params) -> DataFrame:
-    """Lazily assert every state row carries the expected parameters
-    (raises at execution — the states are lazy, so an eager check
-    would force a job). Returns the state with param columns dropped.
-    Done via .where(assert_true(..).isNull()) — a dropped unused
-    column would be pruned by Catalyst and never evaluated."""
-    cond = F.lit(True)
-    for k, v in params.items():
-        cond = cond & (F.col(k) == F.lit(v))
-    msg = (
-        f"{what}: state was built with different parameters than "
-        f"requested {params} — estimates would be silently wrong"
-    )
-    return df.where(F.assert_true(cond, F.lit(msg)).isNull()).drop(
-        *params.keys()
-    )
-
-
-def _assert_uniform_params(df: DataFrame, what: str, cols: list[str]) -> DataFrame:
-    """Lazily assert all states being folded share one parameter set
-    (mixed-parameter grids would union without colliding and read
-    back as plausible garbage)."""
-    n = df.select(*cols).distinct().agg(F.count("*").alias("__nparam"))
-    msg = f"{what}: cannot fold sketches built with different parameters"
-    return (
-        df.crossJoin(F.broadcast(n))
-        .where(F.assert_true(F.col("__nparam") == 1, F.lit(msg)).isNull())
-        .drop("__nparam")
-    )
-
-
-def cms_counters(
-    docs: DataFrame,
-    width: int = 1024,
-    depth: int = 4,
-    seed: str = "cms-v1",
-    text_col: str = "text",
-) -> DataFrame:
-    """The count-min counter grid for a corpus (or ONE epoch of one):
-    (j, bucket, cnt) + constant (width, depth, seed) parameter stamp,
-    at most depth*width rows. This is the sketch's mergeable state —
-    persist it per epoch, fold epochs with cms_merge(), answer point
-    queries with cms_lookup(); both verify the stamp at execution."""
-    freq = _token_freq(docs, text_col)
-    grid = _cms_hashed(freq, width, depth, seed).groupBy("j", "bucket").agg(
-        F.sum("n_exact").cast("long").alias("cnt")
-    )
-    return _with_params(grid, width=width, depth=depth, seed=seed)
-
-
-def cms_merge(*grids: DataFrame) -> DataFrame:
-    """Fold counter grids (e.g. one per crawl epoch) into one:
-    elementwise sum. Exactly equals the grid built from the unioned
-    corpora — CMS is linear in the input counts. Raises at execution
-    if the grids were built with different (width, depth, seed)."""
-    it = iter(grids)
-    out = next(it)
-    for g in it:
-        out = out.unionByName(g)
-    out = _assert_uniform_params(out, "cms_merge", ["width", "depth", "seed"])
-    return (
-        out.groupBy("j", "bucket", "width", "depth", "seed")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .select("j", "bucket", "cnt", "width", "depth", "seed")
-    )
-
-
-def cms_lookup(
-    counters: DataFrame,
-    tokens: DataFrame,
-    width: int = 1024,
-    depth: int = 4,
-    seed: str = "cms-v1",
-    token_col: str = "token",
-) -> DataFrame:
-    """Point-query the sketch: estimated corpus count for each probe
-    token — min over the depth rows of its counters. The grid
-    broadcasts (constant size); the probe side is never shuffled.
-    Raises at execution if the grid's parameter stamp differs from
-    the (width, depth, seed) the probes are hashed with."""
-    counters = _assert_params(
-        counters, "cms_lookup", width=width, depth=depth, seed=seed
-    )
-    hashed = tokens.select(
-        F.col(token_col).alias("token"),
-        F.posexplode(
-            _cms_bucket_array(F.col(token_col), width, depth, seed)
-        ).alias("j", "bucket"),
-    )
-    return (
-        hashed.join(F.broadcast(counters), ["j", "bucket"], "left")
-        .groupBy("token")
-        .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).cast("long").alias("n_cms"))
     )
 
 
@@ -256,19 +145,16 @@ def hll_registers(
     m: int = 256,
     seed: str = "hll-v1",
 ) -> DataFrame:
-    """The HLL register table for a value set (or ONE epoch of one):
-    (idx, minv) + constant (m, seed) parameter stamp, at most m rows
-    — the sketch's mergeable state.
-    minv is the MIN of the post-index hash bits per register, which
-    carries the max leading-zero rank (bitlen is monotone); persist
-    it per epoch and fold epochs with hll_merge(). One map-side-
-    combinable min() agg is the only corpus-sized stage."""
+    """The HLL register table for a value set: (idx, minv), at most m
+    rows. minv is the MIN of the post-index hash bits per register,
+    which carries the max leading-zero rank (bitlen is monotone). One
+    map-side-combinable min() agg is the only corpus-sized stage."""
     _check_m(m)
     p = m.bit_length() - 1
     h = _hash60(F.col(value_col), seed)
     # idx from the low p bits, v from the high bits — bit ops, never
     # float division (a 60-bit value does not fit a double mantissa)
-    reg = (
+    return (
         df.select(
             h.bitwiseAND(F.lit(m - 1)).alias("idx"),
             F.shiftright(h, p).alias("v"),
@@ -276,35 +162,6 @@ def hll_registers(
         .groupBy("idx")
         .agg(F.min("v").alias("minv"))
     )
-    return _with_params(reg, m=m, seed=seed)
-
-
-def hll_merge(*regs: DataFrame) -> DataFrame:
-    """Fold register tables (e.g. one per crawl epoch) into one:
-    elementwise min(minv) = elementwise max rank. Exactly equals the
-    registers built from the unioned value sets — HLL state depends
-    only on the set of hashes seen. Raises at execution if the
-    register tables were built with different (m, seed)."""
-    it = iter(regs)
-    out = next(it)
-    for r in it:
-        out = out.unionByName(r)
-    out = _assert_uniform_params(out, "hll_merge", ["m", "seed"])
-    return (
-        out.groupBy("idx", "m", "seed")
-        .agg(F.min("minv").alias("minv"))
-        .select("idx", "minv", "m", "seed")
-    )
-
-
-def hll_estimate(regs: DataFrame, m: int = 256) -> DataFrame:
-    """Distinct-count estimate from a register table alone — the
-    production monitoring path: no rescan of the corpus, just the
-    <= m-row state. Output: one row (n_hll). Raises at execution if
-    the registers' parameter stamp says they were built with a
-    different m (the estimate would be silently garbage)."""
-    regs = _assert_params(regs.drop("seed"), "hll_estimate", m=m)
-    return _hll_stats(regs, m).select(F.round(F.col("__est"), 4).alias("n_hll"))
 
 
 def _check_m(m: int) -> None:
@@ -356,48 +213,3 @@ def _hll_stats(reg: DataFrame, m: int) -> DataFrame:
         F.lit(float(m)) * F.log(F.lit(float(m)) / F.col("V")),
     ).otherwise(est_raw)
     return stats.select("Z", "V", est.alias("__est"))
-
-
-def hll_overlap(
-    a: DataFrame,
-    b: DataFrame,
-    value_col: str,
-    m: int = 256,
-    seed: str = "hll-v1",
-) -> DataFrame:
-    """Sketch-based corpus-overlap estimate via inclusion-exclusion:
-    |A ∩ B| ≈ est(A) + est(B) - est(A ∪ B), with est(A ∪ B) computed
-    by MERGING the two register tables (HLL union is exact on the
-    register level — no rescan of either corpus). The data-governance
-    question this answers at 100 TB: "how much of the new crawl is
-    already in the old corpus?" in O(m) state per side.
-
-    Output: one row (n_a, n_b, n_union, n_intersect) — all estimates,
-    rounded to 4 decimals; n_intersect floors at 0 (inclusion-
-    exclusion on estimates can go slightly negative for disjoint
-    sets).
-
-    The three estimates share one parameter set by construction; the
-    per-side register build is the only corpus-sized work (one
-    map-side-combinable min() agg each)."""
-    ra = hll_registers(a, value_col, m, seed)
-    rb = hll_registers(b, value_col, m, seed)
-    ru = hll_merge(ra, rb)
-    ea = hll_estimate(ra, m).select(F.col("n_hll").alias("n_a"))
-    eb = hll_estimate(rb, m).select(F.col("n_hll").alias("n_b"))
-    eu = hll_estimate(ru, m).select(F.col("n_hll").alias("n_union"))
-    return (
-        ea.crossJoin(eb)
-        .crossJoin(eu)
-        .select(
-            "n_a",
-            "n_b",
-            "n_union",
-            F.round(
-                F.greatest(
-                    F.col("n_a") + F.col("n_b") - F.col("n_union"), F.lit(0.0)
-                ),
-                4,
-            ).alias("n_intersect"),
-        )
-    )

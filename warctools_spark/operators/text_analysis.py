@@ -1114,69 +1114,6 @@ def host_quality_rollup(
     )
 
 
-def vocab_coverage(
-    docs: DataFrame,
-    vocab: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    token_col: str = "token",
-) -> DataFrame:
-    """Per-document tokenizer-vocabulary coverage / OOV report: what
-    fraction of a doc's (lowercased, whitespace) tokens appear in the
-    given vocabulary table. The acceptance gate for a trained
-    tokenizer (bpe_train's frequency pass, token_frequencies top-k,
-    or any external vocab) against a new crawl epoch: coverage
-    dropping across epochs means the vocab no longer fits the corpus.
-
-    Output: (id, n_tokens, n_in_vocab, coverage), one row per input
-    doc; empty/whitespace docs keep a row with n_tokens=0 and
-    coverage=1.0 (an empty doc is fully covered by any vocab).
-    coverage rounds to 4 decimals.
-
-    Scale: tokens explode once; the vocab side is a distinct token
-    list (vocab-sized, broadcastable) left-joined to flag membership;
-    the per-doc agg is map-side combinable. A 10^5-entry vocab vs a
-    10^9-doc corpus is one broadcast-hash-join on the exploded stream
-    — no corpus-sized shuffle key, no skew (membership is a flag, hot
-    tokens collapse in the partial agg)."""
-    v = F.broadcast(
-        vocab.select(F.lower(F.col(token_col)).alias("__tok")).distinct()
-    )
-    toks = docs.select(
-        F.col(id_col).alias("__id"),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("__tok"),
-    ).where(F.col("__tok") != "")
-    per_doc = (
-        toks.join(v.withColumn("__in", F.lit(1)), "__tok", "left")
-        .groupBy("__id")
-        .agg(
-            F.count("*").cast("long").alias("n_tokens"),
-            F.sum(F.coalesce(F.col("__in"), F.lit(0)))
-            .cast("long")
-            .alias("n_in_vocab"),
-        )
-    )
-    return (
-        docs.select(F.col(id_col).alias("__id"))
-        .join(per_doc, "__id", "left")
-        .select(
-            F.col("__id").alias(id_col),
-            F.coalesce(F.col("n_tokens"), F.lit(0).cast("long")).alias(
-                "n_tokens"
-            ),
-            F.coalesce(F.col("n_in_vocab"), F.lit(0).cast("long")).alias(
-                "n_in_vocab"
-            ),
-            F.round(
-                F.when(
-                    F.coalesce(F.col("n_tokens"), F.lit(0)) == 0, F.lit(1.0)
-                ).otherwise(F.col("n_in_vocab") / F.col("n_tokens")),
-                4,
-            ).alias("coverage"),
-        )
-    )
-
-
 def kneser_ney_logprob(
     docs: DataFrame,
     text_col: str = "text",
@@ -1290,86 +1227,4 @@ def kneser_ney_logprob(
                 F.sum(F.col("__c") * neg_lp) / F.sum("__c"), 4
             ).alias("mean_neg_logprob_kn"),
         )
-    )
-
-
-def anchor_text_profile(
-    pairs: DataFrame,
-    top_k: int = 5,
-    link_col: str = "link",
-    anchor_col: str = "anchor",
-) -> DataFrame:
-    """Per-TARGET anchor-text profile — the classic off-page document
-    signal (anchor-text indexing: Brin & Page 1998 §2.2 use the link
-    text to describe the page it points AT; every production search
-    stack since does the same): aggregate what the rest of the web
-    calls a URL.
-
-    Input: (link, anchor) pairs (anchor_text_pairs). Output, one row
-    per distinct target link:
-
-      link, n_anchors          total anchor occurrences
-      n_unique_anchors         distinct normalized anchor strings
-      top_anchors              array of the top_k (term, c) structs —
-                               whitespace terms of the normalized
-                               anchors, by (count desc, term asc)
-
-    Normalization is lower + trim; empty anchors ("click-through
-    images") are dropped from terms but still counted in n_anchors.
-
-    Plan: one (link, term) explode + hash agg, then a per-link
-    rowsBetween-free top-k via sort_array over collected (c, term)
-    structs — the collect is bounded per link by distinct terms of
-    its anchors, and a mega-target (everyone links the homepage)
-    still pre-aggregates (link, term) map-side before the wire. A
-    pathological target with unbounded distinct anchor vocabulary is
-    capped by the agg key cardinality, not by row fan-in."""
-    norm = F.lower(F.trim(F.col(anchor_col)))
-    base = pairs.select(F.col(link_col).alias("link"), norm.alias("__a"))
-    counts = base.groupBy("link").agg(
-        F.count("*").cast("long").alias("n_anchors"),
-        F.count_distinct(F.col("__a")).cast("long").alias(
-            "n_unique_anchors"
-        ),
-    )
-    terms = (
-        base.where(F.col("__a") != "")
-        .select("link", F.explode(F.split(F.col("__a"), r"\s+")).alias("t"))
-        .where(F.col("t") != "")
-        .groupBy("link", "t")
-        .agg(F.count("*").cast("long").alias("c"))
-    )
-    top = (
-        terms.groupBy("link")
-        .agg(
-            F.slice(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            (-F.col("c")).alias("nc"),
-                            F.col("t").alias("term"),
-                            F.col("c").alias("c"),
-                        )
-                    )
-                ),
-                1,
-                top_k,
-            ).alias("__top")
-        )
-        .select(
-            "link",
-            F.transform(
-                F.col("__top"),
-                lambda s: F.struct(s["term"].alias("term"), s["c"].alias("c")),
-            ).alias("top_anchors"),
-        )
-    )
-    return counts.join(top, "link", "left").select(
-        "link",
-        "n_anchors",
-        "n_unique_anchors",
-        F.coalesce(
-            F.col("top_anchors"),
-            F.array().cast("array<struct<term:string,c:bigint>>"),
-        ).alias("top_anchors"),
     )

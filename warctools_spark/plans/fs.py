@@ -4,9 +4,9 @@ Everything the catalog does to its root — manifests, expiry sweeps,
 sidecar JSON — goes through the JVM's `org.apache.hadoop.fs.FileSystem`
 resolved FROM THE PATH, the same API `sources/warc.py::expand_files`
 already uses for inputs. That makes `Catalog(root="s3a://bucket/crawl")`
-and `build_ivf_index(path="s3a://...")` the SAME code path as the local
-stand-in (verified in tests with a `file://` root): a real 100 TB crawl
-catalog lives on an object store, not the driver's local disk.
+the SAME code path as the local stand-in (verified in tests with a
+`file://` root): a real 100 TB crawl catalog lives on an object store,
+not the driver's local disk.
 
 Atomicity note: `write_text_atomic` is write-temp + rename. On local
 file:// the rename is os.replace — atomic even when overwriting. On
