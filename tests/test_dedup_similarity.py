@@ -159,7 +159,8 @@ def test_hyperplane_lsh_recall(spark):
     assert recall >= 0.9, recall
 
 
-def test_brute_force_topk_ranks_query_first(spark):
+def test_brute_force_vs_ivf_topk(spark):
+    """The exact top-k ranks the query vector itself first."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
     q = [float(v) for v in emb.where(F.col("vec_id") == 3).collect()[0]["embedding"]]
     exact = S.brute_force_topk(emb, q, k=5).collect()

@@ -60,6 +60,24 @@ ALLOWLIST = {
         "the cuckoo table's incremental insert, the north rule's delete-capable seen set",
     "warctools_spark.operators.cuckoo.delete_from_cuckoo":
         "the north rule's fallback for deletes; run_crawl never calls it (recrawl retraction is undecided)",
+    # Frontier operators staged for the crawl loop, oracle-tested in
+    # test_round6_candidates ahead of their run_crawl wiring.
+    "warctools_spark.operators.frontier.change_rate":
+        "staged frontier operator: per-URL change rate, the recrawl interval run_crawl does not schedule yet",
+    "warctools_spark.operators.robots.robots_refetch_due":
+        "staged frontier operator: RFC 9309 robots.txt cache expiry for the next epoch's hosts",
+    "warctools_spark.operators.graph.pagerank":
+        "staged frontier operator: host-graph budget signal, the untrusted twin of trustrank",
+    "warctools_spark.operators.sitemap.parse_sitemaps":
+        "staged frontier operator: urlset and sitemapindex entries with lastmod/changefreq/priority",
+    "warctools_spark.operators.sitemap.discover_seeds":
+        "staged frontier operator: scoped sitemap seeds in init_state's queue shape",
+    "warctools_spark.operators.urlspace.scope_prefixes":
+        "staged frontier operator: SURT scope prefixes of the crawl seeds",
+    "warctools_spark.operators.urlspace.scope_filter":
+        "staged frontier operator: keeps URLs inside the seeds' SURT scope",
+    "warctools_spark.operators.urlspace.url_templates":
+        "staged frontier operator: per-host path templates, the spider-trap counts",
 }
 
 _FORMAT = re.compile(r"%(\([^)]*\))?[rsd]")

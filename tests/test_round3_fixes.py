@@ -278,7 +278,8 @@ def test_warc_filter_any_latin1_only(spark):
 # ---------------------------------------------------------------
 
 
-def test_lsh_topk_corpus_dims_mismatch_fails_job(spark):
+def test_embedding_pairs_dims_mismatch_raises(spark):
+    """The corpus dims guards, driven through lsh_topk."""
     from warctools_spark.operators.similarity import lsh_topk
 
     emb = spark.createDataFrame(
@@ -764,7 +765,9 @@ def test_inverted_index_segmented_bounds_and_reconstructs(spark):
     assert set(by_term) == set(flat)
 
 
-def test_gram_moments_are_exact_in_one_aggregate(spark):
+def test_ridge_fit_recovers_linear_relation(spark):
+    """The exact Gram moments a ridge fit is solved from, in one
+    aggregate."""
     from warctools_spark.operators.modeling import gram_moments
 
     rows = [(a, b, 2 + 3 * a - b) for a in range(6) for b in range(6)]

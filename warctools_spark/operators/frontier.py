@@ -211,7 +211,8 @@ def link_rank(
             )
             # eager=False (r6): plan still truncates to a LogicalRDD
             # per round (flat depth); materialization cascades at the
-            # first consumer instead of blocking the driver each round
+            # first consumer instead of blocking the driver each
+            # iteration (see graph.pagerank)
             .localCheckpoint(eager=False)
         )
     return ranks
@@ -327,4 +328,112 @@ def url_trap_features(
         dup_frac.alias("dup_segment_frac"),
         has_sess.alias("has_session_id"),
         F.round(score, 6).alias("trap_score"),
+    )
+
+
+def change_rate(
+    obs: DataFrame,
+    url_col: str = "url",
+    ts_col: str = "ts",
+    digest_col: str = "digest",
+    cap_us: int = 30 * 24 * 3600 * 1_000_000,
+) -> DataFrame:
+    """Per-URL Poisson change-rate estimation from a fetch-observation
+    log — the bias-corrected estimator of Cho & Garcia-Molina,
+    "Estimating Frequency of Change" (ACM TOIT 2003, §4.2):
+
+        lambda_hat = -ln( (n - X + 0.5) / (n + 0.5) ) / mean_interval
+
+    where n is the number of refetch intervals for the url and X the
+    intervals whose payload digest differed from the previous fetch.
+    The naive X/n undercounts because several changes inside one
+    interval are detected as one; the log form inverts the Poisson
+    no-change probability, and the +0.5 terms keep the estimator
+    finite at X = n (always changed) and exactly 0 at X = 0. This is
+    the principled upgrade of the `recrawl_priority` driver query's
+    events-per-span rate: it feeds the same scheduler slot
+    (politeness bounds how often you MAY fetch; lambda_hat how often
+    you SHOULD).
+
+    Output, one row per distinct url — single-observation urls keep
+    their row (n_intervals 0, rate 0, due at the cap):
+
+      url, n_obs, n_intervals, n_changes,
+      rate_per_hour   lambda_hat * 3.6e9 us, round-6
+      next_due_us     last fetch + min(cap_us, floor(1/lambda_hat)) —
+                      the expected-next-change refetch time, capped
+                      (default 30 days) so never-changing urls still
+                      recrawl
+
+    Plan: one window (lag of digest and timestamp, partitioned by
+    url — keys are urls, so no host-class skew; a url refetched
+    millions of times is itself a scheduler bug), one
+    map-side-combinable hash agg. Counts stay exact integers; the
+    only floats are the final ln and division (round-6, ORACLES.md
+    #5). Microsecond arithmetic matches recrawl_priority's
+    convention so the two schedules compose."""
+    # try_cast: ANSI mode (Spark 4 default) makes a plain cast THROW on
+    # junk strings instead of yielding null (ORACLES.md #12)
+    us = F.unix_micros(F.col(ts_col).try_cast("timestamp"))
+    # null/uncastable timestamps carry no interval information and
+    # would sort arbitrarily into the lag window — dropped on the CAST
+    # result (a string ts_col full of junk filters here too). Null
+    # urls are kept: the window/groupBy key admits a null group.
+    obs = obs.where(us.isNotNull())
+    w = Window.partitionBy(url_col).orderBy(us, F.col(digest_col))
+    seq = obs.select(
+        F.col(url_col).alias("url"),
+        us.alias("__us"),
+        F.col(digest_col).alias("__d"),
+        F.lag(us).over(w).alias("__prev_us"),
+        F.lag(F.col(digest_col)).over(w).alias("__prev_d"),
+    )
+    base = seq.groupBy("url").agg(
+        F.count("*").cast("long").alias("n_obs"),
+        F.max("__us").alias("__last_us"),
+    )
+    iv = (
+        seq.where(F.col("__prev_us").isNotNull())
+        .groupBy("url")
+        .agg(
+            F.count("*").cast("long").alias("n_intervals"),
+            F.sum((~F.col("__d").eqNullSafe(F.col("__prev_d"))).cast("long"))
+            .cast("long")
+            .alias("n_changes"),
+            F.sum(F.col("__us") - F.col("__prev_us"))
+            .cast("long")
+            .alias("__sum_gap"),
+        )
+    )
+    n = F.col("n_intervals").cast("double")
+    x = F.col("n_changes").cast("double")
+    # lambda in changes per microsecond: -ln((n-X+.5)/(n+.5)) * n / sum_gap
+    lam = (
+        -F.log((n - x + F.lit(0.5)) / (n + F.lit(0.5)))
+        * n
+        / F.col("__sum_gap").cast("double")
+    )
+    joined = base.join(iv, "url", "left")
+    lam_or_zero = F.when(
+        F.col("n_intervals").isNotNull() & (F.col("__sum_gap") > 0), lam
+    ).otherwise(F.lit(0.0))
+    # degenerate zero-span logs (every fetch same microsecond) fall to
+    # the cap like never-changing urls — lam is not finite there
+    due = F.when(
+        (F.col("n_changes").isNotNull())
+        & (F.col("n_changes") > 0)
+        & (F.col("__sum_gap") > 0),
+        F.least(F.lit(cap_us).cast("long"), F.floor(F.lit(1.0) / lam).cast("long")),
+    ).otherwise(F.lit(cap_us).cast("long"))
+    return joined.select(
+        "url",
+        "n_obs",
+        F.coalesce(F.col("n_intervals"), F.lit(0).cast("long")).alias(
+            "n_intervals"
+        ),
+        F.coalesce(F.col("n_changes"), F.lit(0).cast("long")).alias(
+            "n_changes"
+        ),
+        F.round(lam_or_zero * F.lit(3.6e9), 6).alias("rate_per_hour"),
+        (F.col("__last_us") + due).alias("next_due_us"),
     )

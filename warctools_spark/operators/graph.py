@@ -1,13 +1,13 @@
-"""Link-graph analytics over the host graph: TrustRank and HITS.
+"""Link-graph analytics over the host graph: PageRank, TrustRank and
+HITS.
 
 A crawl scheduler needs a global host-importance signal — which hosts
-deserve budget, which spam farms to starve. PageRank-family scores
-over the host-level link graph (host_graph: ~5 orders of magnitude
-smaller than the URL graph at Common-Crawl scale) are the classic
-answer (Page et al. 1999; also the original motivation for the
-crawl-order literature). No reference counterpart — warctools has no
-graph analytics; the algorithms are cited from the public papers
-only.
+deserve budget, which spam farms to starve. PageRank over the
+host-level link graph (host_graph: ~5 orders of magnitude smaller
+than the URL graph at Common-Crawl scale) is the classic answer
+(Page et al. 1999; also the original motivation for the crawl-order
+literature). No reference counterpart — warctools has no graph
+analytics; the algorithms are cited from the public papers only.
 
 Determinism contract (the same discipline as every operator here):
 each iteration's ranks are rounded to `round_iter` decimals, so the
@@ -33,6 +33,112 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def pagerank(
+    edges: DataFrame,
+    n_iter: int = 10,
+    damping: float = 0.85,
+    src_col: str = "src_host",
+    dst_col: str = "dst_host",
+    weight_col: str | None = None,
+    round_iter: int = 12,
+    round_final: int = 6,
+) -> DataFrame:
+    """Weighted PageRank with uniform dangling-mass redistribution:
+
+        PR_{t+1}(v) = (1-d)/N
+                    + d * ( sum_{u->v} PR_t(u) * w(u,v)/W_out(u)
+                          + dangling_t / N )
+
+    where dangling_t is the rank mass sitting on nodes with no
+    out-edges and N counts distinct nodes on either side of an edge.
+    Self-loops count as ordinary edges. PR_0 = 1/N.
+
+    Output: (node, pagerank) — one row per node, pagerank rounded to
+    `round_final` decimals; sums to ~1.0.
+
+    The iteration count is FIXED (not convergence-tested) so the
+    result is a pure function of (edges, n_iter, damping) and can be
+    replayed exactly in any engine.
+    """
+    if not 0.0 < damping < 1.0:
+        raise ValueError("damping must be in (0, 1)")
+    w = (
+        F.col(weight_col).cast("double")
+        if weight_col
+        else F.lit(1.0)
+    )
+    # materialize the edge projection ONCE: nodes/share/sinks all
+    # derive from it, and without this checkpoint each of those three
+    # setup tables re-executed the upstream edge aggregation from
+    # source (r6; same discipline hits() already had)
+    e = edges.select(
+        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
+    ).localCheckpoint(eager=False)
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    n = nodes.count()
+    if n == 0:
+        return nodes.select("node", F.lit(0.0).alias("pagerank"))
+    # normalized out-share per (src, dst): w / W_out(src); computed
+    # ONCE — the loop only ever joins against this fixed table
+    wout = e.groupBy("src").agg(F.sum("w").alias("wout"))
+    share = (
+        e.groupBy("src", "dst")
+        .agg(F.sum("w").alias("w"))
+        .join(wout, "src")
+        .select("src", "dst", (F.col("w") / F.col("wout")).alias("share"))
+        .localCheckpoint(eager=False)
+    )
+    # nodes with no out-edges contribute their mass uniformly
+    sinks = nodes.join(
+        wout.select(F.col("src").alias("node")), "node", "left_anti"
+    ).localCheckpoint(eager=False)
+    # a graph with no sinks has dangling mass EXACTLY 0 every
+    # iteration (coalesce(sum over empty) = 0.0) — skip the
+    # per-iteration dangling join+broadcast entirely. One cheap count
+    # on the already-materialized sinks table buys n_iter fewer jobs.
+    has_sinks = sinks.count() > 0
+
+    ranks = nodes.select("node", F.lit(round(1.0 / n, round_iter)).alias("pr"))
+    base = (1.0 - damping) / n
+    for _ in range(n_iter):
+        contrib = (
+            share.join(ranks, share.src == ranks.node)
+            .groupBy("dst")
+            .agg(F.sum(F.col("pr") * F.col("share")).alias("c"))
+        )
+        new_ranks = nodes.join(contrib, nodes.node == contrib.dst, "left")
+        if has_sinks:
+            dangling = sinks.join(ranks, "node").agg(
+                F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dang")
+            )
+            new_ranks = new_ranks.crossJoin(F.broadcast(dangling))
+            dang_term = F.col("dang") / F.lit(float(n))
+        else:
+            dang_term = F.lit(0.0)
+        ranks = new_ranks.select(
+            "node",
+            F.round(
+                F.lit(base)
+                + F.lit(damping)
+                * (F.coalesce(F.col("c"), F.lit(0.0)) + dang_term),
+                round_iter,
+            ).alias("pr"),
+            # eager=False (r6): the checkpoint truncates the PLAN to a
+            # LogicalRDD immediately either way — lineage stays O(1)
+            # per iteration — but deferring materialization turns
+            # n_iter blocking driver jobs into one cascaded action at
+            # the first consumer (each iteration's RDD is still
+            # computed exactly once and cached; the double reference
+            # under has_sinks reads the cache, not the plan)
+        ).localCheckpoint(eager=False)
+    return ranks.select("node", F.round(F.col("pr"), round_final).alias("pagerank"))
+
+
 def trustrank(
     edges: DataFrame,
     seeds,
@@ -49,8 +155,8 @@ def trustrank(
     seed set of trusted hosts, so trust decays with link distance from
     the seeds and spam farms that PageRank rewards (dense mutual
     linking far from any reputable host) score ~0. The crawl scheduler
-    uses it as the anti-spam twin of PageRank: budget by TrustRank,
-    starve by the (PageRank - TrustRank) gap.
+    uses it as the anti-spam twin of `pagerank`: budget by trustrank,
+    starve by (pagerank - trustrank) gap.
 
         TR_{t+1}(v) = (1-d)*t(v) + d*( sum_{u->v} TR_t(u)*share(u,v)
                                       + dangling_t * t(v) )
@@ -64,7 +170,7 @@ def trustrank(
     that never appear in `edges` are ignored (trust is normalized over
     the seeds actually in the graph). Raises if none remain.
 
-    The module's determinism contract and per-iteration shape:
+    Same determinism contract and per-iteration shape as `pagerank`:
     one shuffle per iteration (map-side-combined sum by dst), 1-row
     broadcast dangling term, O(1) lineage via localCheckpoint, ranks
     rounded to `round_iter` decimals each step so the trajectory is
@@ -121,8 +227,8 @@ def trustrank(
     ).localCheckpoint(eager=False)
     # no sinks -> dangling mass is exactly 0.0 every iteration (and
     # 0.0 * t == 0.0 for the non-negative teleport vector): skip the
-    # per-iteration dangling join+broadcast (one count on the
-    # materialized sinks table)
+    # per-iteration dangling join+broadcast (same shortcut as
+    # pagerank; one count on the materialized sinks table)
     has_sinks = sinks.count() > 0
 
     ranks = teleport.select("node", F.round(F.col("t"), round_iter).alias("pr"))
@@ -149,9 +255,8 @@ def trustrank(
                 * (F.coalesce(F.col("c"), F.lit(0.0)) + dang_term),
                 round_iter,
             ).alias("pr"),
-            # eager=False: the plan still truncates to a LogicalRDD
-            # per iteration (O(1) lineage), but n_iter blocking driver
-            # jobs become one cascaded action at the first consumer (r6)
+            # eager=False: see pagerank — same O(1) lineage, n_iter
+            # fewer blocking driver jobs (r6)
         ).localCheckpoint(eager=False)
     return ranks.select("node", F.round(F.col("pr"), round_final).alias("trustrank"))
 
@@ -172,14 +277,14 @@ def hits(
         hub_{t+1}(u)  = sum_{u->v} w(u,v) * auth_{t+1}(v)
 
     each L1-normalized (sum = 1) after its update. For a crawl
-    scheduler the two scores split PageRank's single signal: good
+    scheduler the two scores split pagerank's single signal: good
     HUBS (directories, feeds, sitemaps-of-links) are where frontier
     expansion pays off; good AUTHORITIES are what deserves content
     budget. Output: (node, hub, authority), one row per node;
     sourceless nodes have authority 0, sinkless nodes hub 0 — both
     exactly, never NULL.
 
-    The module's shape and determinism contract: fixed
+    Same shape and determinism contract as `pagerank`: fixed
     iteration count, per-iteration ROUND(round_iter) so the
     trajectory is partitioning/engine-exact, localCheckpoint per step
     for O(1) lineage. Each iteration is TWO map-side-combined

@@ -15,8 +15,7 @@ regexp_extract_all over the payload, explode, per-entry
 regexp_extract, entity unescape via a replace chain. No Python UDF,
 no shuffle; the whole operator is one WholeStageCodegen span over
 the scan, so it runs at JVM scan speed on 100 TB of fetched
-sitemaps. (Compare wat.py, which needs Python kernels; this one
-deliberately does not.)
+sitemaps.
 
 Scope notes: recursion through a sitemapindex is a fetch-loop
 concern (feed the emitted `loc` rows back through the fetch join),
@@ -30,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from warctools_spark.operators.frontier import _unescape_xml
+
 # (?s) so entries spanning lines match; non-greedy keeps one block
 # per entry. Entries missing a <loc> are dropped (the spec requires
 # loc); all other fields are optional and null when absent.
@@ -40,27 +41,6 @@ _SMAP_BLOCK = r"(?s)<sitemap>(.*?)</sitemap>"
 def _field(block: Column, tag: str) -> Column:
     got = F.regexp_extract(block, r"(?s)<%s>\s*(.*?)\s*</%s>" % (tag, tag), 1)
     return F.nullif(got, F.lit(""))
-
-
-def _unescape_xml(c: Column) -> Column:
-    """The five predefined XML entities, &amp; last so freshly
-    produced '&' can't re-trigger another entity (spec-correct for
-    well-formed input that escapes every literal '&').
-
-    Documented limit: numeric character references (&#38; / &#x26;)
-    pass through unchanged — sitemaps.org's own escaping table uses
-    only the named entities, and decoding arbitrary charrefs is not
-    expressible as a Catalyst replace chain; a consumer needing them
-    decoded should post-process the rare rows containing '&#'."""
-    for ent, ch in (
-        ("&lt;", "<"),
-        ("&gt;", ">"),
-        ("&quot;", '"'),
-        ("&apos;", "'"),
-        ("&amp;", "&"),
-    ):
-        c = F.replace(c, F.lit(ent), F.lit(ch))
-    return c
 
 
 def parse_sitemaps(
