@@ -126,6 +126,8 @@ def test_canon_parts_equals_components():
         "not a url",
         "http://h/p/./q",
         "ftp://odd.example/x",
+        "http://a.com ",
+        "http://a.com\x0c",
     ]
     for u in urls:
         assert canon_parts(u) == (canonicalize_url(u), url_sha1(u), url_host(u)), u

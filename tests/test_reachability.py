@@ -1,12 +1,15 @@
 """Every def in the warctools_spark package is reached from an entry point.
 
 A static scan, no Spark: parse every program file, and follow names
-from the entry points below to the package's top-level functions and
-classes. A def is reached when reached code names it, directly
-(``foo``), through an imported module (``FR.foo``), through a re-export,
-or as a string constant next to an imported module (``getattr(FR,
-"foo")``). A class counts as one def with all its methods; a module's
-own top-level statements run as soon as reached code imports it. Code
+from the entry points below to the package's top-level functions,
+classes and module-level names. A def is reached when reached code
+names it, directly (``foo``), through an imported module (``FR.foo``),
+through a re-export, or as a string constant next to an imported module
+(``getattr(FR, "foo")``). A class counts as one def with all its
+methods. A module-level name assigned in the package (``_FOO = ...``)
+counts as a def whose body is its assignment, so a constant no program
+code reads fails the scan like an uncalled function. A module's other
+top-level statements run as soon as reached code imports it. Code
 inside a string that runs as a script (``python -c``) is scanned too.
 
 Tests are not entry points: code that only tests call is deleted, not
@@ -60,24 +63,6 @@ ALLOWLIST = {
         "the cuckoo table's incremental insert, the north rule's delete-capable seen set",
     "warctools_spark.operators.cuckoo.delete_from_cuckoo":
         "the north rule's fallback for deletes; run_crawl never calls it (recrawl retraction is undecided)",
-    # Frontier operators staged for the crawl loop, oracle-tested in
-    # test_round6_candidates ahead of their run_crawl wiring.
-    "warctools_spark.operators.frontier.change_rate":
-        "staged frontier operator: per-URL change rate, the recrawl interval run_crawl does not schedule yet",
-    "warctools_spark.operators.robots.robots_refetch_due":
-        "staged frontier operator: RFC 9309 robots.txt cache expiry for the next epoch's hosts",
-    "warctools_spark.operators.graph.pagerank":
-        "staged frontier operator: host-graph budget signal, the untrusted twin of trustrank",
-    "warctools_spark.operators.sitemap.parse_sitemaps":
-        "staged frontier operator: urlset and sitemapindex entries with lastmod/changefreq/priority",
-    "warctools_spark.operators.sitemap.discover_seeds":
-        "staged frontier operator: scoped sitemap seeds in init_state's queue shape",
-    "warctools_spark.operators.urlspace.scope_prefixes":
-        "staged frontier operator: SURT scope prefixes of the crawl seeds",
-    "warctools_spark.operators.urlspace.scope_filter":
-        "staged frontier operator: keeps URLs inside the seeds' SURT scope",
-    "warctools_spark.operators.urlspace.url_templates":
-        "staged frontier operator: per-host path templates, the spider-trap counts",
 }
 
 _FORMAT = re.compile(r"%(\([^)]*\))?[rsd]")
@@ -92,6 +77,21 @@ def _module_name(rel: Path) -> str:
     return rel.stem  # scripts import their siblings by bare name
 
 
+def _assigned(node: ast.AST) -> list[str]:
+    """Names a module-level ``NAME = ...`` statement binds; dunders
+    (``__version__``) are read by the import system, not by code."""
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign) and node.value is not None:
+        targets = [node.target]
+    else:
+        return []
+    names = [t.id for t in targets if isinstance(t, ast.Name)]
+    if len(names) != len(targets):
+        return []
+    return [n for n in names if not (n.startswith("__") and n.endswith("__"))]
+
+
 class _Module:
     def __init__(self, name: str, path: Path, tree: ast.Module):
         self.name, self.path, self.tree = name, path, tree
@@ -101,6 +101,10 @@ class _Module:
             for n in tree.body
             if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
         }
+        if name.split(".")[0] == PKG:
+            for n in tree.body:
+                for target in _assigned(n):
+                    self.defs.setdefault(target, n)
         defs = set(map(id, self.defs.values()))
         self.top = [n for n in tree.body if id(n) not in defs]
         # name -> ("module", mod) | ("symbol", mod, name), from every
@@ -196,6 +200,8 @@ class Scan:
         for top in nodes:
             for node in ast.walk(top):
                 if isinstance(node, ast.Name):
+                    if isinstance(node.ctx, ast.Store):
+                        continue  # binding a name does not read it
                     if node.id in m.defs:
                         out.add((m.name, node.id))
                     elif node.id in m.bindings:

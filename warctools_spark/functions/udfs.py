@@ -195,8 +195,6 @@ def udf_url_sha1(url: pd.Series) -> pd.Series:
     return url.map(lambda u: canon_parts(u)[1] if u is not None else None)
 
 
-# url_host, not canon_parts(u)[2]: canon_parts strips the URL first,
-# so the two differ on a bare host with trailing blanks ('http://a.com ')
 @pandas_udf(T.StringType())
 def udf_url_host(url: pd.Series) -> pd.Series:
     return url.map(lambda u: url_host(u) if u is not None else None)

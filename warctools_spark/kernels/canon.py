@@ -96,16 +96,17 @@ def canon_parts(url: str) -> tuple[str, str, str]:
     if not path.startswith("/"):
         path = "/" + path
     canon = urlunparse((scheme, netloc, path, p.params, p.query, ""))
-    # NB: url_host() parses the RAW url; host here comes from the same
-    # raw parse, so the values agree by construction
+    # NB: url_host() parses the same stripped url, so the values agree
+    # by construction
     return canon, hashlib.sha1(canon.encode("utf-8")).hexdigest(), host
 
 
 @lru_cache(maxsize=1 << 16)
 def url_host(url: str) -> str:
-    """Lowercased host for politeness partitioning."""
+    """Lowercased host for politeness partitioning, parsed from the
+    stripped URL like canonicalize_url and canon_parts."""
     try:
-        return (urlparse(url).hostname or "").lower()
+        return (urlparse(url.strip()).hostname or "").lower()
     except ValueError:
         return ""
 

@@ -55,7 +55,6 @@ _ARC_SPLIT = re.compile(rb"\b\s|\s\b")
 
 # ARC header-name constants (arc.py:14-25)
 ARC_URL = b"URL"
-ARC_IP = b"IP-address"
 ARC_DATE = b"Archive-date"
 ARC_CONTENT_TYPE = b"Content-type"
 ARC_CONTENT_LENGTH = b"Archive-length"
@@ -64,17 +63,9 @@ ARC_CONTENT_LENGTH = b"Archive-length"
 WARC_DATE = b"WARC-Date"
 WARC_TYPE = b"WARC-Type"
 WARC_ID = b"WARC-Record-ID"
-WARC_CONCURRENT_TO = b"WARC-Concurrent-To"
-WARC_REFERS_TO = b"WARC-Refers-To"
 WARC_CONTENT_LENGTH = b"Content-Length"
 WARC_CONTENT_TYPE = b"Content-Type"
 WARC_URL = b"WARC-Target-URI"
-WARC_BLOCK_DIGEST = b"WARC-Block-Digest"
-WARC_PAYLOAD_DIGEST = b"WARC-Payload-Digest"
-WARC_IP_ADDRESS = b"WARC-IP-Address"
-WARC_FILENAME = b"WARC-Filename"
-WARC_WARCINFO_ID = b"WARC-Warcinfo-ID"
-WARC_PROFILE = b"WARC-Profile"
 
 
 @dataclass

@@ -21,19 +21,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),  # codec name: img1 | image
-        T.StructField("blob", T.BinaryType()),
-        T.StructField("meta", T.StructType([
-            T.StructField("mime", T.StringType()),
-            T.StructField("bytes", T.LongType()),
-        ])),
-    ]
-)
 
 _codecs: dict = {}
 

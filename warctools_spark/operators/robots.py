@@ -167,69 +167,3 @@ def apply_robots(
         )
         .drop("path", "disallow", "allow")
     )
-
-
-def robots_refetch_due(
-    fetch_log: DataFrame,
-    hosts: DataFrame,
-    as_of_us: int,
-    max_age_us: int = 24 * 3600 * 1_000_000,
-    error_backoff_us: int = 3600 * 1_000_000,
-) -> DataFrame:
-    """Which hosts need a robots.txt (re)fetch before the next epoch —
-    RFC 9309 §2.4 cache semantics: a cached robots response MAY be
-    used for up to 24 hours (the default `max_age_us`), after which
-    the crawler SHOULD refetch; fetch errors use a shorter backoff so
-    an unreachable robots endpoint is retried rather than cached for
-    a day.
-
-    fetch_log(host, fetch_ts, ok boolean): every robots fetch attempt
-    so far. hosts: single-column table of hosts the next epoch wants
-    to touch (the frontier's schedule hosts). Output, one row per
-    wanted host:
-
-      host, last_fetch_us (null = never fetched), last_ok,
-      due (boolean — fetch robots before crawling this host)
-
-    due is: never fetched, OR last successful fetch older than
-    max_age_us, OR last attempt failed and is older than
-    error_backoff_us. Deterministic pure function of
-    (log, hosts, as_of_us).
-
-    Plan: one max-struct hash agg over the fetch log (latest attempt
-    per host, ties broken by ok then host order inside the struct —
-    map-side combinable, no window), left join onto the wanted-host
-    list. Host-keyed like every other robots table, so it bucket-joins
-    with the politeness path."""
-    us = F.unix_micros(F.col("fetch_ts").try_cast("timestamp"))
-    latest = (
-        fetch_log.where(us.isNotNull())
-        .groupBy("host")
-        .agg(
-            F.max(F.struct(us.alias("us"), F.col("ok").alias("ok"))).alias(
-                "__l"
-            )
-        )
-        .select(
-            "host",
-            F.col("__l.us").alias("last_fetch_us"),
-            F.col("__l.ok").alias("last_ok"),
-        )
-    )
-    h = hosts.select(F.col(hosts.columns[0]).alias("host")).distinct()
-    age = F.lit(int(as_of_us)) - F.col("last_fetch_us")
-    # a null ok (fetch outcome unknown) is treated as a failure so the
-    # expression stays BOOLEAN — due=NULL would silently drop the host
-    # from a .where("due") consumer forever
-    ok = F.coalesce(F.col("last_ok"), F.lit(False))
-    due = (
-        F.col("last_fetch_us").isNull()
-        | (ok & (age > F.lit(int(max_age_us))))
-        | (~ok & (age > F.lit(int(error_backoff_us))))
-    )
-    return h.join(latest, "host", "left").select(
-        "host",
-        "last_fetch_us",
-        "last_ok",
-        due.alias("due"),
-    )

@@ -1,120 +1,18 @@
-"""URL-space shape analysis: collapse URLs to path templates and
-aggregate per (host, template) — the classic crawler-trap /
-infinite-URL-space detector (calendar pages, session ids, faceted
-search explosions). A scheduler starves templates whose URL counts
-explode without new content; the crawl literature calls these spider
-traps (IRLbot, Lee et al. 2009; also the motivation for URL
-frontier budgets in Mercator, Heydon & Najork 1999). No reference
-counterpart — warctools has no frontier analytics.
+"""SURT keys: the Sort-friendly URI Reordering Transform of a URL,
+the Internet Archive's sort and lookup key for CDX indexes
+(`archive_ops.cdxj_lines` keys every line with it). No reference
+counterpart in warctools.
 
-Template rule (deterministic, engine-portable — RE2-compatible
-patterns shared verbatim with the DuckDB replay):
-  1. hex runs of >= 8 chars CONTAINING AT LEAST ONE LETTER
-     (session ids, content hashes) -> '{h}' — applied first so digit
-     runs inside them don't split the token. The letter requirement
-     keeps 8+-digit runs (dates like 20260817, epoch timestamps,
-     growing numeric ids) in the '{n}' class, so a numeric id space
-     straddling the 7/8-digit boundary stays ONE template. RE2 has
-     no lookahead, so the condition is spelled as an exact 8-branch
-     union over the position of the first letter.
-  2. digit runs -> '{n}'
-Query strings and fragments are dropped before templating (they are
-the highest-cardinality trap axis; the template keeps only the path
-shape). Host matches parse_url(..., 'HOST') semantics — userinfo
-and port stripped, lowercased — so the output joins against every
-other host-keyed operator (host_agg, host_quality_rollup,
-ngram_novelty rollups). Host/path are taken with one regexp each
-rather than parse_url so the oracle replay is the same expression.
-
-Scale: an explicit two-level aggregation instead of count_distinct's
-Expand rewrite — first collapse to (host, template, url) rows, then
-to (host, template). Both stages are map-side combinable, so a trap
-host emitting 10^7 urls of one template combines per task before
-EITHER wire: the first shuffle's key includes the url (uniformly
-spread by definition), and the second shuffle's input is one row per
-distinct url that the partial agg collapses to one row per
-(host, template) per task. No driver state, no skew beyond what the
-partial aggs absorb — the same hot-key arithmetic as host_agg.
+The regexes are RE2-compatible and shared verbatim with the DuckDB
+replay in the tests, so both engines compute the same expression.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# host as parse_url(..., 'HOST') sees it: userinfo and port stripped
 _HOST_RE = "^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?([^/?#:]+)"
-_PATH_RE = "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]+([^?#]*)"
-# >= 8 hex chars with >= 1 letter, as a union over the first-letter
-# position (RE2 has no lookahead; branch p: p leading digits, the
-# letter, then enough hex to reach total length 8 — greedy tails
-# extend every branch to the end of the run)
-_HEX_RUN = "|".join(
-    ["[0-9]{%d}[a-fA-F][0-9a-fA-F]{%d,}" % (p, 7 - p) for p in range(7)]
-    + ["[0-9]{7,}[a-fA-F][0-9a-fA-F]*"]
-)
-_NUM_RUN = "[0-9]+"
-# the fetchable url: everything before the fragment — '#section'
-# variants are one url to a server and must not inflate n_distinct
-_FETCH_RE = "^([^#]*)"
-
-
-def url_templates(
-    df: DataFrame,
-    url_col: str = "url",
-    min_urls: int = 1,
-) -> DataFrame:
-    """urls -> one row per (host, template):
-
-      host        parse_url-HOST-equivalent (userinfo/port stripped,
-                  lowercased)
-      template    path with lettered hex runs -> '{h}', digit runs
-                  -> '{n}'
-      n_urls      input rows collapsing to the template
-      n_distinct  distinct FETCHABLE urls among them (fragment
-                  stripped — '#toc' variants are one url to a
-                  server; n_urls > n_distinct means literal
-                  refetches, not a widening space)
-      sample_url  min over the fetchable urls — a stable example
-
-    Rows whose url lacks a scheme://authority prefix are dropped
-    (nothing to aggregate by). `min_urls` prunes the long tail at the
-    agg output (post-shuffle — the partial agg has already collapsed
-    the heavy templates, so the filter is on host×template rows, not
-    urls).
-
-    The trap signal is the caller's policy; the canonical one is
-    `n_distinct` large while content novelty (e.g. ngram_novelty) is
-    flat for the same host.
-    """
-    url = F.col(url_col)
-    host = F.lower(F.regexp_extract(url, _HOST_RE, 1))
-    path = F.regexp_extract(url, _PATH_RE, 1)
-    template = F.regexp_replace(
-        F.regexp_replace(path, _HEX_RUN, "{h}"), _NUM_RUN, "{n}"
-    )
-    fetch_url = F.regexp_extract(url, _FETCH_RE, 1)
-    per_url = (
-        df.where(host != "")
-        .groupBy(
-            host.alias("host"),
-            template.alias("template"),
-            fetch_url.alias("u"),
-        )
-        .agg(F.count("*").alias("c"))
-    )
-    return (
-        per_url.groupBy("host", "template")
-        .agg(
-            F.sum("c").alias("n_urls"),
-            F.count("*").alias("n_distinct"),
-            F.min("u").alias("sample_url"),
-        )
-        .where(F.col("n_urls") >= min_urls)
-    )
-
-
-# --------------------------------------------------------------- SURT
-
 # path+query (fragment dropped) after the authority; '' for bare
 # authority urls — surt_key coalesces that to '/'
 _PATHQ_RE = "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]+([^#]*)"
@@ -162,90 +60,3 @@ def surt_key(url) -> "F.Column":
             .otherwise(pathq),
         ),
     ).otherwise(F.lit(""))
-
-
-def scope_prefixes(seeds: DataFrame, mode: str = "prefix") -> DataFrame:
-    """Seed urls -> SURT scope prefixes, per Heritrix's scoping rules
-    (crawler.archive.org: SurtPrefixedDecideRule / 'implied prefix'):
-
-      mode='prefix'  the seed's surt truncated to its directory —
-                     full surt if the path ends '/', else everything
-                     up to and including the last '/' (which also
-                     drops any query). Seed http://a.com/d/p.html
-                     scopes com,a)/d/ and below.
-      mode='host'    exactly the seed's host, any path:
-                     'com,a,www)' — the ')' makes the boundary exact.
-      mode='domain'  the seed's host (leading 'www.' stripped) and
-                     every subdomain: TWO prefixes per seed,
-                     'com,a)' and 'com,a,' — the separator chars make
-                     label boundaries exact, so 'com,another' never
-                     matches. (No public-suffix list in this
-                     environment; the seed host itself is the domain
-                     anchor, as Heritrix does without its PSL.)
-
-    Output: (prefix) distinct, seed-sized. Seeds with non-DNS hosts
-    are dropped.
-    """
-    u = F.col(seeds.columns[0])
-    surt = surt_key(u)
-    host_rev = F.element_at(F.split(surt, r"\)"), 1)
-    if mode == "prefix":
-        # query dropped before directory truncation ('?' never
-        # starts a directory), then cut after the last '/'
-        pref = seeds.select(
-            F.regexp_replace(
-                F.element_at(F.split(surt, r"\?"), 1), "[^/]*$", ""
-            ).alias("prefix")
-        )
-    elif mode == "host":
-        pref = seeds.select(F.concat(host_rev, F.lit(")")).alias("prefix"))
-    elif mode == "domain":
-        dom = F.regexp_replace(host_rev, "(,www)+$", "")
-        pref = seeds.select(
-            F.explode(
-                F.array(F.concat(dom, F.lit(")")), F.concat(dom, F.lit(",")))
-            ).alias("prefix")
-        )
-    else:
-        raise ValueError(f"unknown scope mode {mode!r}")
-    # seeds whose surt is '' (non-DNS host) reduce to a bare
-    # separator — never a valid scope
-    return pref.where(
-        ~F.col("prefix").isin("", ")", ",")
-    ).distinct()
-
-
-def scope_filter(
-    df: DataFrame,
-    seeds,
-    mode: str = "prefix",
-    url_col: str = "url",
-    keep_surt: bool = False,
-) -> DataFrame:
-    """Keep only candidates inside the seeds' crawl scope — the gate
-    between link harvest and the frontier (Heritrix's DecideRule
-    chain; Mercator's 'URL filter' stage). `seeds` is a list of urls
-    or a single-column DataFrame.
-
-    Plan: the prefix table is seed-sized -> broadcast; the match is a
-    broadcast left-semi (nested-loop on startswith), so the candidate
-    side streams with NO shuffle at any scale. Cost is
-    O(|prefixes|) cheap prefix compares per candidate row — fine for
-    the usual 10^2..10^4 seed lists; for larger seed sets pre-group
-    prefixes by first label and join on that key first. Candidates
-    whose url has a non-DNS host are never in scope (surt '').
-    """
-    if not isinstance(seeds, DataFrame):
-        seeds = df.sparkSession.createDataFrame(
-            [(str(s),) for s in seeds], "seed_url string"
-        )
-    pref = scope_prefixes(seeds, mode)
-    out = df.withColumn("__surt", surt_key(url_col))
-    kept = out.join(
-        F.broadcast(pref),
-        out["__surt"].startswith(F.col("prefix")),
-        "left_semi",
-    )
-    if keep_surt:
-        return kept.withColumnRenamed("__surt", "surt")
-    return kept.drop("__surt")
