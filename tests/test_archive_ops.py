@@ -149,6 +149,68 @@ def test_warc_valid(records):
     from warctools_spark.sources.warc import read_warc as _rw
 
 
+def _cut_records():
+    return [
+        _warc_record(b"00000000-0000-0000-0000-00000000010%d" % i, b"response",
+                     b"http://cut.example/%d" % i)
+        for i in range(3)
+    ]
+
+
+def _read_cut(spark, path, data):
+    """read_warc + warc_valid over a truncated segment: both collect
+    without a task failure."""
+    path.write_bytes(data)
+    rows = read_warc(spark, str(path)).collect()
+    valid = AO.warc_valid(read_warc(spark, str(path))).collect()
+    good = sorted(
+        (r["offset"], r["record_id"], bytes(r["content"]))
+        for r in rows if not r["errors"]
+    )
+    return good, {(r["offset"], tuple(r["errors"])) for r in valid}
+
+
+def test_truncated_gzip_segment(spark, tmp_path):
+    """A .warc.gz cut in the middle of its third gzip member: the two
+    records before the cut come back intact at their member offsets,
+    and the cut is reported twice — the partial record as an error row
+    at the cut member's offset, plus a row with a null offset naming
+    the truncated member."""
+    members = [gzip.compress(r, mtime=0) for r in _cut_records()]
+    cut = len(members[0]) + len(members[1])
+    good, bad = _read_cut(
+        spark, tmp_path / "cut.warc.gz",
+        b"".join(members)[: cut + len(members[2]) // 2],
+    )
+    assert good == [
+        (0, "<urn:uuid:00000000-0000-0000-0000-000000000100>", HTTP_PAYLOAD),
+        (len(members[0]), "<urn:uuid:00000000-0000-0000-0000-000000000101>",
+         HTTP_PAYLOAD),
+    ]
+    assert len(bad) == 2
+    assert (None, ("truncated gzip member at offset %d" % cut,)) in bad
+    ((off, errors),) = bad - {(None, ("truncated gzip member at offset %d" % cut,))}
+    assert off == cut and errors
+
+
+def test_truncated_plain_segment(spark, tmp_path):
+    """A plain .warc cut in the middle of its third record: the two
+    records before the cut intact, the cut one error row at its
+    offset."""
+    recs = _cut_records()
+    cut = len(recs[0]) + len(recs[1])
+    good, bad = _read_cut(
+        spark, tmp_path / "cut.warc", b"".join(recs)[: cut + len(recs[2]) // 2]
+    )
+    assert good == [
+        (0, "<urn:uuid:00000000-0000-0000-0000-000000000100>", HTTP_PAYLOAD),
+        (len(recs[0]), "<urn:uuid:00000000-0000-0000-0000-000000000101>",
+         HTTP_PAYLOAD),
+    ]
+    ((off, errors),) = bad
+    assert off == cut and errors
+
+
 def test_warc2warc_roundtrip(spark, records):
     """-D decode: chunked response content replaced by decoded message
     with recomputed Content-Length; reparse gives the decoded body."""

@@ -8,6 +8,8 @@ small join side, map-side top-k (WindowGroupLimit) for politeness
 windows, and partial aggregation for counts.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -318,3 +320,35 @@ def test_round4_ops_stay_jvm_side(spark):
     # per-doc window partitioning: the only sort is within doc_id
     # partitions, never a global ordering
     assert "hashpartitioning(doc_id" in p
+
+
+def _python_nodes(df) -> list[tuple[str, str]]:
+    """(node name, plan line) of each Python-evaluating node in df's
+    executed plan."""
+    tree = df._jdf.queryExecution().executedPlan().toString()
+    rx = re.compile(r"(ArrowEvalPython|BatchEvalPython|MapInPandas) ")
+    return [(m.group(1), line) for line in tree.splitlines() if (m := rx.search(line))]
+
+
+def test_warc2warc_decode_is_one_arrow_pass(spark, tmp_path):
+    """Decode and re-serialise share one Python node, so the stage
+    holds one Python worker per task for them (the read's MapInPandas
+    is the other)."""
+    from tests.test_archive_ops import WARC_FILE
+    from warctools_spark.operators.archive_ops import warc2warc_decode
+    from warctools_spark.sources.warc import read_warc
+
+    (tmp_path / "plan.warc").write_bytes(WARC_FILE)
+    records = read_warc(spark, str(tmp_path / "plan.warc"))
+    nodes = _python_nodes(warc2warc_decode(records, gzip_output=True))
+    assert [name for name, _ in nodes] == ["ArrowEvalPython", "MapInPandas"]
+
+
+def test_cdx_index_is_one_python_udf(spark, pages_parquet):
+    """Every cdx_index column (status, mime, digest and length) comes
+    from one decode per page: one Python node evaluating one UDF."""
+    from warctools_spark.operators.archive_ops import cdx_index
+
+    ((name, line),) = _python_nodes(cdx_index(spark.read.parquet(pages_parquet)))
+    assert name == "ArrowEvalPython"
+    assert len(set(re.findall(r"pythonUDF\d+", line))) == 1

@@ -18,7 +18,10 @@ from pyspark.sql.functions import pandas_udf
 
 from warctools_spark.kernels.canon import canon_parts_fast as canon_parts
 from warctools_spark.kernels.canon import url_host
-from warctools_spark.kernels.http_decode import decode_http
+from warctools_spark.kernels.http_decode import (
+    decode_http,
+    decode_http_with_09_fallback,
+)
 from warctools_spark.kernels.links import extract_links
 from warctools_spark.kernels.warc_write import warc_uuid, write_warc_record
 
@@ -38,6 +41,40 @@ HTTP_STRUCT = T.StructType(
 )
 
 
+def _header_names(ignore_headers) -> tuple:
+    return tuple(
+        h if isinstance(h, bytes) else h.encode("latin-1") for h in ignore_headers
+    )
+
+
+def _decode(payload, ignore_headers=(), http09_fallback=False):
+    """The one decode dispatch of the UDF layer: an HTTP response
+    (messaging.py feed-whole+close semantics), or with http09_fallback
+    the 0.9 interpretation of a payload with no HTTP/1.x status line
+    (messaging.py:696-738)."""
+    if http09_fallback:
+        return decode_http_with_09_fallback(
+            bytes(payload), ignore_headers=ignore_headers
+        )
+    return decode_http(bytes(payload), kind="response", ignore_headers=ignore_headers)
+
+
+def _mime(res):
+    mime = res.mime
+    return mime.decode("latin-1") if mime is not None else None
+
+
+def _body_text(res) -> str:
+    """Decoded HTTP body as UTF-8 text, latin-1 when it is not UTF-8
+    (= message.get_body() after the decoded-message inflate attempt,
+    messaging.py:253-263 + 238-247)."""
+    body = res.decoded_body()
+    try:
+        return body.decode("utf-8")
+    except UnicodeDecodeError:
+        return body.decode("latin-1")
+
+
 def make_udf_decode_http(ignore_headers=(), http09_fallback=False):
     """HTTP response decode udf, optionally ignoring headers at parse
     time — e.g. ("Transfer-Encoding",) replicates warc2warc
@@ -46,10 +83,7 @@ def make_udf_decode_http(ignore_headers=(), http09_fallback=False):
     http09_fallback=True re-interprets payloads with no parseable
     HTTP/1.x status line as HTTP/0.9 (whole payload = body, implied
     200 — messaging.py:696-738) instead of surfacing an error row."""
-    ignore = tuple(
-        h if isinstance(h, bytes) else h.encode("latin-1")
-        for h in ignore_headers
-    )
+    ignore = _header_names(ignore_headers)
 
     @pandas_udf(HTTP_STRUCT)
     def _udf(html: pd.Series) -> pd.DataFrame:
@@ -62,37 +96,20 @@ def _decode_http_batch(
     html: pd.Series, ignore_headers=(), http09_fallback=False
 ) -> pd.DataFrame:
     """HTTP response decode (messaging.py feed-whole+close semantics)."""
-    from warctools_spark.kernels.http_decode import decode_http_with_09_fallback
-
-    out = {k: [] for k in ("code", "mime", "complete", "body", "decoded_body", "decoded_message", "errors")}
+    out = {k: [] for k in HTTP_STRUCT.fieldNames()}
     for payload in html:
         if payload is None:
-            res = None
-        elif http09_fallback:
-            res = decode_http_with_09_fallback(
-                bytes(payload), ignore_headers=ignore_headers
-            )
-        else:
-            res = decode_http(
-                bytes(payload), kind="response", ignore_headers=ignore_headers
-            )
-        if res is None:
-            out["code"].append(None)
-            out["mime"].append(None)
-            out["complete"].append(None)
-            out["body"].append(None)
-            out["decoded_body"].append(None)
-            out["decoded_message"].append(None)
-            out["errors"].append(None)
-        else:
-            mime = res.mime
-            out["code"].append(res.code)
-            out["mime"].append(mime.decode("latin-1") if mime is not None else None)
-            out["complete"].append(res.complete)
-            out["body"].append(res.body)
-            out["decoded_body"].append(res.decoded_body())
-            out["decoded_message"].append(res.get_decoded_message())
-            out["errors"].append(res.errors)
+            for col in out.values():
+                col.append(None)
+            continue
+        res = _decode(payload, ignore_headers, http09_fallback)
+        out["code"].append(res.code)
+        out["mime"].append(_mime(res))
+        out["complete"].append(res.complete)
+        out["body"].append(res.body)
+        out["decoded_body"].append(res.decoded_body())
+        out["decoded_message"].append(res.get_decoded_message())
+        out["errors"].append(res.errors)
     return pd.DataFrame(out)
 
 
@@ -102,20 +119,41 @@ udf_decode_http = make_udf_decode_http()
 @pandas_udf(T.StringType())
 def udf_extract_text(html: pd.Series) -> pd.Series:
     """Byte-parity text extraction: decoded HTTP body as UTF-8 text
-    (= message.get_body() after the decoded-message inflate attempt,
-    messaging.py:253-263 + 238-247)."""
-    vals = []
+    (see _body_text)."""
+    return pd.Series(
+        [
+            None if payload is None else _body_text(decode_http(bytes(payload)))
+            for payload in html
+        ],
+        dtype="object",
+    )
+
+
+CDX_STRUCT = T.StructType(
+    [
+        T.StructField("code", T.IntegerType()),
+        T.StructField("mime", T.StringType()),
+        T.StructField("text", T.StringType()),
+    ]
+)
+
+
+@pandas_udf(CDX_STRUCT)
+def udf_cdx_fields(html: pd.Series) -> pd.DataFrame:
+    """(code, mime, text) of one decode per page: the status and mime
+    of udf_decode_http and the text of udf_extract_text, without the
+    decoded message's second inflate."""
+    out = {k: [] for k in CDX_STRUCT.fieldNames()}
     for payload in html:
         if payload is None:
-            vals.append(None)
+            for col in out.values():
+                col.append(None)
             continue
-        res = decode_http(bytes(payload), kind="response")
-        body = res.decoded_body()
-        try:
-            vals.append(body.decode("utf-8"))
-        except UnicodeDecodeError:
-            vals.append(body.decode("latin-1"))
-    return pd.Series(vals, dtype="object")
+        res = decode_http(bytes(payload))
+        out["code"].append(res.code)
+        out["mime"].append(_mime(res))
+        out["text"].append(_body_text(res))
+    return pd.DataFrame(out)
 
 
 @pandas_udf(T.ArrayType(T.StringType()))
@@ -208,6 +246,26 @@ def udf_warc_uuid(text: pd.Series) -> pd.Series:
     )
 
 
+def _warc_record_bytes(rid, rtype, url, date, ctype, body, gz) -> bytes:
+    """One row's WARC record bytes (warc.py:76-127), optionally one
+    gzip member (record.py:167-185); null header values are left out."""
+    headers = []
+    for name, value in (
+        (b"WARC-Type", rtype),
+        (b"WARC-Record-ID", rid),
+        (b"WARC-Date", date),
+        (b"WARC-Target-URI", url),
+    ):
+        if value is not None:
+            headers.append((name, value.encode("latin-1")))
+    return write_warc_record(
+        headers,
+        ctype.encode("latin-1") if ctype is not None else None,
+        bytes(body) if body is not None else b"",
+        gzip_record=bool(gz),
+    )
+
+
 @pandas_udf(T.BinaryType())
 def udf_write_warc(
     record_id: pd.Series,
@@ -218,27 +276,57 @@ def udf_write_warc(
     content: pd.Series,
     gzip_flag: pd.Series,
 ) -> pd.Series:
-    """Serialize rows to WARC record bytes (warc.py:76-127), optionally
-    one gzip member per record (record.py:167-185)."""
-    out = []
-    for rid, rtype, u, d, ct, body, gz in zip(
-        record_id, record_type, url, date_str, content_type, content, gzip_flag
-    ):
-        headers = []
-        if rtype is not None:
-            headers.append((b"WARC-Type", rtype.encode("latin-1")))
-        if rid is not None:
-            headers.append((b"WARC-Record-ID", rid.encode("latin-1")))
-        if d is not None:
-            headers.append((b"WARC-Date", d.encode("latin-1")))
-        if u is not None:
-            headers.append((b"WARC-Target-URI", u.encode("latin-1")))
-        out.append(
-            write_warc_record(
-                headers,
-                ct.encode("latin-1") if ct is not None else None,
-                bytes(body) if body is not None else b"",
-                gzip_record=bool(gz),
+    """Serialize rows to WARC record bytes (see _warc_record_bytes)."""
+    return pd.Series(
+        [
+            _warc_record_bytes(*row)
+            for row in zip(
+                record_id, record_type, url, date_str, content_type, content, gzip_flag
             )
-        )
-    return pd.Series(out, dtype="object")
+        ],
+        dtype="object",
+    )
+
+
+W2W_STRUCT = T.StructType(
+    [
+        T.StructField("out_content", T.BinaryType()),
+        T.StructField("record_bytes", T.BinaryType()),
+    ]
+)
+
+
+def warc2warc_row(
+    rid, rtype, url, date, ctype, content, gz, ignore_headers=(), http09_fallback=False
+):
+    """warc2warc -D for one record (warc2warc.py:33-61): an http
+    `response` record whose payload decodes complete and without
+    errors gets the decoded message as its content (chunking
+    stripped, body inflated, Content-Length rewritten); every other
+    record keeps its content. Returns (out_content, record_bytes)."""
+    out = content
+    if (
+        content is not None
+        and rtype == "response"
+        and ctype is not None
+        and ctype.startswith("application/http")
+    ):
+        res = _decode(content, ignore_headers, http09_fallback)
+        if res.complete and not res.errors:
+            out = res.get_decoded_message()
+    return out, _warc_record_bytes(rid, rtype, url, date, ctype, out, gz)
+
+
+def make_udf_warc2warc(ignore_headers=(), http09_fallback=False):
+    """warc2warc -D as one Arrow pass: (record_id, record_type, url,
+    warc_date, content_type, content, gzip flag) ->
+    struct<out_content, record_bytes>. `ignore_headers` and
+    `http09_fallback` as in make_udf_decode_http."""
+    ignore = _header_names(ignore_headers)
+
+    @pandas_udf(W2W_STRUCT)
+    def _udf(*cols: pd.Series) -> pd.DataFrame:
+        rows = [warc2warc_row(*row, ignore, http09_fallback) for row in zip(*cols)]
+        return pd.DataFrame(rows, columns=W2W_STRUCT.fieldNames())
+
+    return _udf

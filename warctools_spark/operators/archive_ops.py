@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from warctools_spark.functions.udfs import udf_decode_http, udf_write_warc
+from warctools_spark.functions.udfs import udf_decode_http
 
 
 def _null_safe_rlike(col: Column, pattern: str) -> Column:
@@ -98,54 +98,36 @@ def warc2warc_decode(
     wget_chunk_fix: bool = False,
     http09_fallback: bool = False,
 ) -> DataFrame:
-    """warc2warc -D (warc2warc.py:33-61): for response records with an
-    http payload, replace content with the decoded message (chunking
-    stripped, gzip inflated, Content-Length rewritten); leave other
-    records untouched. Adds `record_bytes` with the re-serialized WARC
-    record (± per-record gzip member). `wget_chunk_fix` ignores
-    Transfer-Encoding headers while decoding — warc2warc
-    --wget-chunk-fix (warc2warc.py:26,31-34). `http09_fallback`
-    interprets payloads with no HTTP/1.x status line as HTTP/0.9
-    (messaging.py:696-738) instead of leaving them as error rows —
-    extra capability; the reference CLIs never invoke HTTP09Response."""
-    from warctools_spark.functions.udfs import make_udf_decode_http
+    """warc2warc -D (warc2warc.py:33-61) in one Arrow pass.
 
-    if wget_chunk_fix or http09_fallback:
-        decode = make_udf_decode_http(
-            (b"Transfer-Encoding",) if wget_chunk_fix else (),
-            http09_fallback=http09_fallback,
-        )
-    else:
-        decode = udf_decode_http
-    is_http_response = (F.col("record_type") == "response") & F.col(
-        "content_type"
-    ).startswith("application/http")
-    decoded = records.withColumn(
-        "http",
-        F.when(is_http_response, decode(F.col("content"))).otherwise(
-            F.lit(None)
-        ),
+    Returns the input columns plus two:
+    - `out_content`: for a `response` record with an application/http
+      payload that decodes complete and without errors, the decoded
+      message (chunking stripped, gzip inflated, Content-Length
+      rewritten); for every other record its content unchanged;
+    - `record_bytes`: the record re-serialised with `out_content`, as
+      one gzip member per record when `gzip_output`.
+
+    One pandas UDF does both per row (functions.udfs.warc2warc_row),
+    so the stage holds one Python node: only http responses are
+    decoded, each once. `wget_chunk_fix` ignores Transfer-Encoding
+    headers while decoding — warc2warc --wget-chunk-fix
+    (warc2warc.py:26,31-34). `http09_fallback` interprets payloads
+    with no HTTP/1.x status line as HTTP/0.9 (messaging.py:696-738)
+    instead of leaving them undecoded — extra capability; the
+    reference CLIs never invoke HTTP09Response."""
+    from warctools_spark.functions.udfs import make_udf_warc2warc
+
+    w2w = make_udf_warc2warc(
+        (b"Transfer-Encoding",) if wget_chunk_fix else (),
+        http09_fallback=http09_fallback,
     )
-    # only a clean decode replaces the body (warc2warc.py:50-59)
-    use_decoded = (
-        is_http_response
-        & F.col("http.complete")
-        & (F.size(F.coalesce(F.col("http.errors"), F.array())) == 0)
-    )
-    out_content = F.when(use_decoded, F.col("http.decoded_message")).otherwise(
-        F.col("content")
-    )
-    return decoded.withColumn("out_content", out_content).withColumn(
-        "record_bytes",
-        udf_write_warc(
-            F.col("record_id"),
-            F.col("record_type"),
-            F.col("url"),
-            F.col("warc_date"),
-            F.col("content_type"),
-            F.col("out_content"),
-            F.lit(gzip_output),
-        ),
+    cols = ("record_id", "record_type", "url", "warc_date", "content_type", "content")
+    fused = w2w(*map(F.col, cols), F.lit(gzip_output))
+    return (
+        records.withColumn("_w2w", fused)
+        .select("*", "_w2w.out_content", "_w2w.record_bytes")
+        .drop("_w2w")
     )
 
 
@@ -276,13 +258,14 @@ def cdx_index(pages: DataFrame) -> DataFrame:
     (field set per the public CDX conventions; digest is sha256 hex
     rather than the legacy sha1-base32, documented engine choice).
 
-    Everything except the HTTP decode (one Arrow pass) is JVM
-    expression work; the output is sorted downstream by (urlkey, ts)
-    when written, which is what makes binary-search replay possible
-    on a plain sorted file at archive scale."""
-    from warctools_spark.functions.udfs import udf_decode_http, udf_extract_text
+    Everything except the HTTP decode (one Arrow pass, one decode per
+    page for status, mime and text) is JVM expression work; the output
+    is sorted downstream by (urlkey, ts) when written, which is what
+    makes binary-search replay possible on a plain sorted file at
+    archive scale."""
+    from warctools_spark.functions.udfs import udf_cdx_fields
 
-    h = udf_decode_http(F.col("html"))
+    h = udf_cdx_fields(F.col("html"))
     host = F.parse_url("url", F.lit("HOST"))
     path = F.parse_url("url", F.lit("PATH"))
     surt = F.concat(
@@ -290,7 +273,7 @@ def cdx_index(pages: DataFrame) -> DataFrame:
         F.lit(")"),
         path,
     )
-    text = udf_extract_text(F.col("html"))
+    text = h["text"]
     return pages.select(
         surt.alias("urlkey"),
         F.date_format("warc_ts", "yyyyMMddHHmmss").alias("ts14"),
