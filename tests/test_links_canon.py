@@ -93,6 +93,87 @@ def test_broken_html_returns_what_it_can():
     assert extract_links(BASE, b"") == []
 
 
+# Start-tag shapes the strict tier's single findall treats specially,
+# plus plain text, other tags, and constructs that send a document to
+# a lower tier (entities, comments, script, '<' inside a quoted value).
+_SCAN_FRAGMENTS = [
+    # empty values read like missing ones
+    '<a href="">', "<a href=''>", "<a href=>", "<a href= >", "<a href>",
+    '<base href="">', "<base href=''>", "<base href=>",
+    # unquoted values ending in '/'
+    "<a href=x{}/>", "<a href=x{}/ >", "<img src=i{}/>", '<a href="q{}"/>',
+    # a '/' between the name and the attributes
+    "<a / href=y{}>", "<a/href=z{}>", "<img/src=s{}>",
+    # several attributes, repeated ones, and attributes outside the table
+    "<img lowsrc=a{} src=b{} href=c{}>", "<embed src=e{} href=f{}/>",
+    "<object data=o{} data=p{}>", '<a href="a{}" class="b">',
+    '<a class="b" href="a{}">', "<a href=h{} href=k{}>", "<a name=n{}>",
+    # meta content with two url=, and upper-case meta
+    '<meta content="0;url=m{};url=n{}">', '<META CONTENT="5;URL=u{}">',
+    "<meta http-equiv=refresh content='0;url=r{}'>", '<meta content="">',
+    # newline and tab inside quoted values, whitespace around '='
+    '<a href="n\nl{}">', '<a href="t\tb{}">', "<img src='x\ty{}'>",
+    '<a href = "s{}.html" >', "<a  href\t=\tmix{}.html >", "<a\nhref=nl{}>",
+    # upper- and mixed-case names
+    "<A HREF=U{}.HTM>", '<IMG SRC="I{}.PNG">', '<Base Href="http://B{}.ex/d/">',
+    "<AREA HREF=ar{}>",
+    # base overrides, relative and absolute targets
+    '<base href="http://b{}.ex/d/">', "<base href=../r{}/>",
+    "<a href=../up{}.html>", "<a href=./d{}>", "<a href=/root{}>",
+    '<a href="http://ex{}.com/p">', "<a href=?q={}>",
+    # every other tag of the table
+    "<applet code=c{}>", "<bgsound src=s{}>", "<body background=bk{}>",
+    "<fig src=fg{}>", '<form action="/f{}">', "<frame src=fr{}>",
+    "<iframe src=if{}>", "<input src=btn{}.png>", "<link href=l{}.css>",
+    "<layer src=ly{}>", "<overlay src=ov{}>", "<table background=t{}>",
+    "<td background=bg{}.gif>", "<th background=th{}>",
+    # names that only start like a link tag, or end at non-ASCII space
+    "<abbr title=x{}>", "<tdx background=no{}>", "<a\xa0x href=w{}>",
+    "<a\x0bb href=v{}>", "<a \xa0href=sp{}>", "<imgx src=no{}>",
+    # text, other tags, end tags
+    "text{} ", "<div class=c{}>", "</div>", "<p>", "</a>", "<br/>", "\n",
+    # constructs the strict grammar rejects
+    "&amp;", "<!-- c{} -->", "<script>var x=1</script>",
+    '<a title="<a href=no{}>">', '<a href="g>t{}">', "< notag>", "<3",
+]
+
+
+def _html_parser_links(base, body):
+    from warctools_spark.kernels.links import _CTL_STRIP, _LinkCollector
+
+    c = _LinkCollector(base)
+    c.feed(body)
+    c.close()
+    return [x.translate(_CTL_STRIP) for x in c.abs_links()]
+
+
+def test_extract_links_differential_vs_html_parser():
+    """extract_links equals the HTMLParser collector (feed + abs_links
+    + control-character strip) on 20,000 seeded documents; on those the
+    strict tier accepts, its single findall pass also yields the
+    collector's raw links and base."""
+    import random
+
+    from warctools_spark.kernels import links as L
+
+    rng = random.Random(20261019)
+    base = "http://h.example/d/p.html"
+    strict = 0
+    for _ in range(20000):
+        body = "".join(
+            rng.choice(_SCAN_FRAGMENTS).format(*(rng.randint(0, 99) for _ in "abc"))
+            for _ in range(rng.randint(1, 12))
+        )
+        assert extract_links(base, body) == _html_parser_links(base, body), repr(body)
+        if L._STRICT_DOC.fullmatch(body) is not None:
+            strict += 1
+            c = L._LinkCollector(base)
+            c.feed(body)
+            c.close()
+            assert L._strict_scan_links(body, base) == (c.links, c.base), repr(body)
+    assert strict > 5000  # the single pass is what most documents exercise
+
+
 def test_canonicalize():
     assert canonicalize_url("HTTP://Example.ORG:80/a/b") == "http://example.org/a/b"
     assert canonicalize_url("https://example.org:443/") == "https://example.org/"

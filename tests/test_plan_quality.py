@@ -70,6 +70,59 @@ def test_anti_join_broadcasts_small_seen(spark, pages_parquet):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
+def _epoch_dedup_lines(spark, pages_parquet) -> list[str]:
+    """The simple physical plan of dedup_against_seen(dedup_within_epoch
+    (harvest)), root first, against a 100-key seen set."""
+    pages = spark.read.parquet(pages_parquet)
+    links = harvest_canonicalized(pages).withColumn("depth", F.lit(1))
+    seen = spark.range(100).select(F.md5(F.col("id").cast("string")).alias("url_sha1"))
+    fresh = dedup_against_seen(dedup_within_epoch(links), seen)
+    return fresh._sc._jvm.PythonSQLUtils.explainString(
+        fresh._jdf.queryExecution(), "simple"
+    ).splitlines()
+
+
+def _first(lines, *needles) -> int:
+    return next(i for i, ln in enumerate(lines) if all(n in ln for n in needles))
+
+
+def test_broadcast_seen_probe_runs_below_within_epoch_dedup(spark, pages_parquet):
+    """A broadcastable seen set is probed in the harvest's map stage:
+    the LeftAnti BroadcastHashJoin sits between MapInPandas and
+    dedup_within_epoch's partial aggregate, so only fresh links are
+    sorted, aggregated and shuffled on url_sha1."""
+    lines = _epoch_dedup_lines(spark, pages_parquet)
+    order = [
+        _first(lines, "Exchange hashpartitioning(url_sha1"),
+        _first(lines, "partial_min(struct("),
+        _first(lines, "BroadcastHashJoin", "LeftAnti"),
+        _first(lines, "MapInPandas"),
+    ]
+    assert order == sorted(order), "\n".join(lines)
+
+
+def test_sort_merge_seen_probe_stays_above_within_epoch_dedup(spark, pages_parquet):
+    """With broadcast off (a seen set too large to broadcast), the
+    anti-join is not pushed: the SortMergeJoin LeftAnti stays above the
+    final aggregate, and the partial aggregate stays below the url_sha1
+    Exchange, so raw links never cross the wire."""
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        lines = _epoch_dedup_lines(spark, pages_parquet)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert not any("BroadcastHashJoin" in ln for ln in lines), "\n".join(lines)
+    order = [
+        _first(lines, "SortMergeJoin", "LeftAnti"),
+        _first(lines, "functions=[min(struct("),
+        _first(lines, "Exchange hashpartitioning(url_sha1"),
+        _first(lines, "partial_min(struct("),
+        _first(lines, "MapInPandas"),
+    ]
+    assert order == sorted(order), "\n".join(lines)
+
+
 def test_politeness_window_uses_group_limit(spark, pages_parquet):
     pages = spark.read.parquet(pages_parquet)
     links = harvest_canonicalized(pages).withColumn("depth", F.lit(1))

@@ -243,9 +243,9 @@ def test_http09_warc2warc_operator(spark, tmp_path):
     from warctools_spark.operators.archive_ops import warc2warc_decode
 
     recs = _records_df(spark, tmp_path).cache()
-    out = warc2warc_decode(recs, http09_fallback=True).collect()[0]
-    # clean decode: the 0.9 message IS the raw payload, so the body
-    # replacement is the identity and the record re-serializes
+    out = warc2warc_decode(recs).collect()[0]
+    # no status line: -D keeps the payload; a 0.9 decode would give the
+    # same bytes back as its message, so warc2warc has no 0.9 option
     assert bytes(out["out_content"]) == HTTP09_BODY
     assert out["record_bytes"]
 

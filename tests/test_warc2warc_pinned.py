@@ -2,7 +2,7 @@
 
 `fixtures/warc2warc_sha256.json` holds the sha256 of every
 `record_bytes` that `warc2warc_decode` gave for the corpus below under
-four settings, recorded before the operator became one Arrow pass. The
+three settings, recorded before the operator became one Arrow pass. The
 test checks the operator still gives exactly those bytes, so it needs
 no reference installation.
 
@@ -29,7 +29,6 @@ SETTINGS = {
     "plain": {},
     "gzip_output": {"gzip_output": True},
     "wget_chunk_fix": {"wget_chunk_fix": True},
-    "http09_fallback": {"http09_fallback": True},
 }
 
 HTTP_RESPONSE = "application/http; msgtype=response"
@@ -144,9 +143,7 @@ def test_warc2warc_record_bytes_pinned(spark, corpus_path):
 
 def test_pinned_settings_differ():
     """gzip_output changes every record and wget_chunk_fix the chunked
-    http responses. http09_fallback changes none: a clean 0.9 decode
-    gives the raw payload back as the message, so the record
-    re-serialises unchanged."""
+    http responses."""
     want = json.loads(FIXTURE.read_text())
     base = want["plain"]
 
@@ -155,7 +152,6 @@ def test_pinned_settings_differ():
 
     assert changed("gzip_output") == set(base)
     assert changed("wget_chunk_fix") == {_rid(3), _rid(4)}
-    assert changed("http09_fallback") == set()
 
 
 def test_row_decodes_only_http_responses_once(monkeypatch):
@@ -185,7 +181,6 @@ def test_row_decodes_only_http_responses_once(monkeypatch):
                 r["record_id"], r["record_type"], r["url"], r["warc_date"],
                 r["content_type"], r["content"], kw.get("gzip_output", False),
                 (b"Transfer-Encoding",) if kw.get("wget_chunk_fix") else (),
-                kw.get("http09_fallback", False),
             )
         assert decoded == want, name
 

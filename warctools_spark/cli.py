@@ -196,7 +196,6 @@ def cmd_warc2warc(args):
             recs,
             gzip_output=bool(args.gzip),
             wget_chunk_fix=bool(args.wget_chunk_fix),
-            http09_fallback=bool(getattr(args, "http09", False)),
         )
     sink = open(args.output, "wb") if args.output else sys.stdout.buffer
     for r in out_df.orderBy("source_file", "offset").toLocalIterator():
@@ -459,10 +458,6 @@ def main(argv=None):
     s.add_argument(
         "--wget-chunk-fix", dest="wget_chunk_fix", action="store_true",
         help="ignore Transfer-Encoding headers when decoding (-D)",
-    )
-    s.add_argument(
-        "--http09", action="store_true",
-        help="decode payloads with no HTTP/1.x status line as HTTP/0.9 (-D)",
     )
     s.add_argument("-o", "--output")
     s.add_argument("inputs", nargs="+")

@@ -296,9 +296,7 @@ W2W_STRUCT = T.StructType(
 )
 
 
-def warc2warc_row(
-    rid, rtype, url, date, ctype, content, gz, ignore_headers=(), http09_fallback=False
-):
+def warc2warc_row(rid, rtype, url, date, ctype, content, gz, ignore_headers=()):
     """warc2warc -D for one record (warc2warc.py:33-61): an http
     `response` record whose payload decodes complete and without
     errors gets the decoded message as its content (chunking
@@ -311,22 +309,22 @@ def warc2warc_row(
         and ctype is not None
         and ctype.startswith("application/http")
     ):
-        res = _decode(content, ignore_headers, http09_fallback)
+        res = _decode(content, ignore_headers)
         if res.complete and not res.errors:
             out = res.get_decoded_message()
     return out, _warc_record_bytes(rid, rtype, url, date, ctype, out, gz)
 
 
-def make_udf_warc2warc(ignore_headers=(), http09_fallback=False):
+def make_udf_warc2warc(ignore_headers=()):
     """warc2warc -D as one Arrow pass: (record_id, record_type, url,
     warc_date, content_type, content, gzip flag) ->
-    struct<out_content, record_bytes>. `ignore_headers` and
-    `http09_fallback` as in make_udf_decode_http."""
+    struct<out_content, record_bytes>. `ignore_headers` as in
+    make_udf_decode_http."""
     ignore = _header_names(ignore_headers)
 
     @pandas_udf(W2W_STRUCT)
     def _udf(*cols: pd.Series) -> pd.DataFrame:
-        rows = [warc2warc_row(*row, ignore, http09_fallback) for row in zip(*cols)]
+        rows = [warc2warc_row(*row, ignore) for row in zip(*cols)]
         return pd.DataFrame(rows, columns=W2W_STRUCT.fieldNames())
 
     return _udf

@@ -130,7 +130,7 @@ def url_host(url: str) -> str:
 import re as _re
 
 _FAST_CANON_RX = _re.compile(
-    r"\Ahttps?://[a-z0-9.-]+(/[^?#;\s]*)(\?[^#\s]+)?\Z"
+    r"\Ahttps?://([a-z0-9.-]+)(/[^?#;\s]*)(\?[^#\s]+)?\Z"
 )
 
 
@@ -139,13 +139,7 @@ def canon_parts_fast(url: str) -> tuple[str, str, str]:
     with a no-allocation fast path for already-canonical URLs."""
     m = _FAST_CANON_RX.match(url)
     if m is not None:
-        path = m.group(1)
+        host, path = m.group(1, 2)
         if "//" not in path and "/." not in path:
-            i = url.index("/") + 2  # first '/' is the one after ':'
-            host = url[i : url.index("/", i)]
-            return (
-                url,
-                hashlib.sha1(url.encode("utf-8")).hexdigest(),
-                host,
-            )
+            return url, hashlib.sha1(url.encode("utf-8")).hexdigest(), host
     return canon_parts(url)

@@ -60,6 +60,21 @@ def _meta_urls(attrs):
     return urls
 
 
+def _take(tag, attrs, links, base):
+    """One start tag's links appended to `links`; returns the base, which
+    a <base href> overrides (warclinks.py:159-163: last href wins)."""
+    if tag == "base":
+        hrefs = [v for k, v in attrs if k == "href" and v]
+        return hrefs[-1] if hrefs else base
+    if tag == "meta":
+        links.extend(_meta_urls(attrs))
+    else:
+        names = _TAG_ATTRS.get(tag)
+        if names:
+            links.extend(v for k, v in attrs if k in names and v)
+    return base
+
+
 class _LinkCollector(HTMLParser):
     def __init__(self, base: str):
         super().__init__(convert_charrefs=True)
@@ -67,18 +82,7 @@ class _LinkCollector(HTMLParser):
         self.base = base
 
     def handle_starttag(self, tag, attrs):
-        if tag == "base":
-            # warclinks.py:159-163 — last href wins
-            hrefs = [v for k, v in attrs if k == "href" and v]
-            if hrefs:
-                self.base = hrefs[-1]
-            return
-        if tag == "meta":
-            self.links.extend(_meta_urls(attrs))
-            return
-        names = _TAG_ATTRS.get(tag)
-        if names:
-            self.links.extend(v for k, v in attrs if k in names and v)
+        self.base = _take(tag, attrs, self.links, self.base)
 
     def abs_links(self):
         """get_abs_links (warclinks.py:170-199)."""
@@ -188,7 +192,6 @@ def _fast_scan_links(body: str, base: str) -> tuple[list[str], str]:
     find = body.find
     tag_end = _TAG_END_NAMED.match
     post_name = _POST_NAME.match
-    attrfind = _hp.attrfind_tolerant.match
     while True:
         lt = find("<", pos)
         if lt < 0:
@@ -211,38 +214,33 @@ def _fast_scan_links(body: str, base: str) -> tuple[list[str], str]:
             raise _FallBack()
         tag = m.group(1).lower()
         if tag in _LINK_TAGS:
-            attrs = []
             k = post_name(body, m.end(1)).end()
-            while k < endpos:
-                am = attrfind(body, k)
-                if not am:
-                    break
-                name, rest, value = am.group(1, 2, 3)
-                if not rest:
-                    value = None
-                elif (
-                    value[:1] == "'" == value[-1:]
-                    or value[:1] == '"' == value[-1:]
-                ):
-                    value = value[1:-1]
-                # guard ensures no '&' anywhere -> unescape() is identity
-                attrs.append((name.lower(), value))
-                k = am.end()
-            if tag == "base":
-                # warclinks.py:159-163 — last href wins
-                hrefs = [v for n, v in attrs if n == "href" and v]
-                if hrefs:
-                    base = hrefs[-1]
-            elif tag == "meta":
-                links.extend(_meta_urls(attrs))
-            else:
-                names = _TAG_ATTRS[tag]
-                links.extend(v for n, v in attrs if n in names and v)
+            base = _take(tag, _attrs(body, k, endpos), links, base)
         pos = endpos + (1 if body[endpos : endpos + 1] == ">" else 2)
 
 
 class _FallBack(Exception):
     pass
+
+
+def _attrs(s: str, k: int, end: int) -> list[tuple[str, str | None]]:
+    """html.parser's attribute list for s[k:end], tokenized with its own
+    attrfind_tolerant. Callers admit no '&', so unescape() is the
+    identity and is skipped."""
+    attrs = []
+    attrfind = _hp.attrfind_tolerant.match
+    while k < end:
+        am = attrfind(s, k)
+        if not am:
+            break
+        name, rest, value = am.group(1, 2, 3)
+        if not rest:
+            value = None
+        elif value[:1] == "'" == value[-1:] or value[:1] == '"' == value[-1:]:
+            value = value[1:-1]
+        attrs.append((name.lower(), value))
+        k = am.end()
+    return attrs
 
 
 # ---- strict whole-document scanner ----
@@ -253,13 +251,14 @@ class _FallBack(Exception):
 # inside — tokenization is position-free: every '<' begins exactly one
 # tag, every tag ends at its first unquoted '>', and html.parser's
 # tolerant tokenizer provably consumes the same spans. Then link
-# extraction needs just TWO C-level regex passes (the validating
-# fullmatch + a finditer over link-bearing tag names) instead of a
-# Python loop with 2-3 regex calls per tag; attributes of matched link
-# tags are still parsed with the stdlib's own attrfind_tolerant, so
-# attr semantics are bit-identical. Documents rejected by the strict
-# grammar fall through to _fast_scan_links unchanged (conservative:
-# rejection can never change results, only speed).
+# extraction needs just TWO C-level regex passes: the validating
+# fullmatch and one findall over the link-bearing tags, whose match
+# already holds the attribute of the common one-attribute tag. Only a
+# tag with another attribute shape goes through the stdlib's own
+# attrfind_tolerant in Python, so attr semantics are bit-identical.
+# Documents rejected by the strict grammar fall through to
+# _fast_scan_links unchanged (conservative: rejection can never change
+# results, only speed).
 #
 # Grammar notes (each restriction maps to a tokenizer-divergence risk):
 #   * quoted values only directly after '=' — a bare quote in the attr
@@ -289,6 +288,8 @@ _STRICT_STAG = (
 _STRICT_DOC = re.compile(
     "(?:[^<&\\x00]++|</[^><\"'&\\x00]*+>|" + _STRICT_STAG + ")*+"
 )
+
+
 def _ci(name: str) -> str:
     """Case-class expansion ('a' -> '[aA]') — measurably faster than
     re.IGNORECASE, which disables the engine's literal optimizations."""
@@ -297,74 +298,44 @@ def _ci(name: str) -> str:
     )
 
 
-_STRICT_LINK_STAG = re.compile(
-    "<("
-    + "|".join(_ci(n) for n in sorted(_LINK_TAGS, key=len, reverse=True))
-    + ")((?:"
-    + _STRICT_ATTR
-    + ")*+)[\\s/]*+>"
-)
-
-# anchored one-shot parse of the overwhelmingly common attr region
-# shape — exactly one name=value attribute; equivalence with the
-# attrfind_tolerant loop on strict-grammar regions is pinned by the
-# fastpath differential tests
-_STRICT_ONE_ATTR = re.compile(
+# One findall match per link-bearing start tag of a strict document:
+# (tag, name, "value", 'value', bare value, attribute region).
+#   * A first-letter lookahead rejects the other tags before the name
+#     alternation, which tries the overwhelmingly common 'a' first.
+#   * The name must end where tagfind_tolerant ends it ([\t\n\r\f />]);
+#     after '<a\xa0x' html.parser reads the tag 'a\xa0x', not 'a'.
+#   * The first alternative is one name=value attribute, captured
+#     inline; every other shape is captured whole as the region.
+# An empty value reads like a missing one ('' in findall's tuples);
+# base, meta and the tag table all drop both.
+_STRICT_LINK_TAG = re.compile(
+    "<(?=[%s])(" % "".join(c + c.upper() for c in sorted({n[0] for n in _LINK_TAGS}))
+    + "|".join(_ci(n) for n in sorted(_LINK_TAGS, key=lambda n: (n != "a", n)))
+    + ")(?=[\\t\\n\\r\\f />])(?:"
     "\\s++([^\\s/=><\"'&\\x00]++)\\s*+=\\s*+"
     "(?:\"([^\"<&\\x00]*+)\"|'([^'<&\\x00]*+)'|([^\\s><\"'=&\\x00]*+))"
-    "[\\s/]*+\\Z"
+    "|((?:" + _STRICT_ATTR + ")*+))[\\s/]*+>"
 )
 
 
 def _strict_scan_links(body: str, base: str) -> tuple[list[str], str]:
     """(links, base) for documents already validated by
-    _STRICT_DOC.fullmatch — attr tokenization delegated to the same
-    stdlib attrfind_tolerant loop as _fast_scan_links."""
+    _STRICT_DOC.fullmatch, from one findall."""
     links: list[str] = []
     post_name = _POST_NAME.match
-    attrfind = _hp.attrfind_tolerant.match
-    one_attr = _STRICT_ONE_ATTR.match
-    for m in _STRICT_LINK_STAG.finditer(body):
-        tag = m.group(1).lower()
-        region = m.group(2)
-        if not region:
-            attrs = []
+    for tag, name, dq, sq, bare, region in _STRICT_LINK_TAG.findall(body):
+        tag = tag.lower()
+        if name:
+            value = dq or sq or bare
+            names = _TAG_ATTRS.get(tag)  # None for base and meta
+            if names:
+                if value and name.lower() in names:
+                    links.append(value)
+                continue
+            attrs = ((name.lower(), value),)
         else:
-            am1 = one_attr(region)
-            if am1 is not None:
-                n, v1, v2, v3 = am1.group(1, 2, 3, 4)
-                attrs = [
-                    (n.lower(), v1 if v1 is not None else v2 if v2 is not None else v3)
-                ]
-            else:
-                endpos = m.end() - 1  # the '>'
-                if body[endpos - 1 : endpos] == "/":
-                    endpos -= 1  # '/>' — mirror locatestarttagend's stop
-                attrs = []
-                k = post_name(body, m.end(1)).end()
-                while k < endpos:
-                    am = attrfind(body, k)
-                    if not am:
-                        break
-                    name, rest, value = am.group(1, 2, 3)
-                    if not rest:
-                        value = None
-                    elif (
-                        value[:1] == "'" == value[-1:]
-                        or value[:1] == '"' == value[-1:]
-                    ):
-                        value = value[1:-1]
-                    attrs.append((name.lower(), value))
-                    k = am.end()
-        if tag == "base":
-            hrefs = [v for n, v in attrs if n == "href" and v]
-            if hrefs:
-                base = hrefs[-1]
-        elif tag == "meta":
-            links.extend(_meta_urls(attrs))
-        else:
-            names = _TAG_ATTRS[tag]
-            links.extend(v for n, v in attrs if n in names and v)
+            attrs = _attrs(region, post_name(region).end(), len(region))
+        base = _take(tag, attrs, links, base)
     return links, base
 
 

@@ -96,7 +96,6 @@ def warc2warc_decode(
     records: DataFrame,
     gzip_output: bool = False,
     wget_chunk_fix: bool = False,
-    http09_fallback: bool = False,
 ) -> DataFrame:
     """warc2warc -D (warc2warc.py:33-61) in one Arrow pass.
 
@@ -112,16 +111,10 @@ def warc2warc_decode(
     so the stage holds one Python node: only http responses are
     decoded, each once. `wget_chunk_fix` ignores Transfer-Encoding
     headers while decoding — warc2warc --wget-chunk-fix
-    (warc2warc.py:26,31-34). `http09_fallback` interprets payloads
-    with no HTTP/1.x status line as HTTP/0.9 (messaging.py:696-738)
-    instead of leaving them undecoded — extra capability; the
-    reference CLIs never invoke HTTP09Response."""
+    (warc2warc.py:26,31-34)."""
     from warctools_spark.functions.udfs import make_udf_warc2warc
 
-    w2w = make_udf_warc2warc(
-        (b"Transfer-Encoding",) if wget_chunk_fix else (),
-        http09_fallback=http09_fallback,
-    )
+    w2w = make_udf_warc2warc((b"Transfer-Encoding",) if wget_chunk_fix else ())
     cols = ("record_id", "record_type", "url", "warc_date", "content_type", "content")
     fused = w2w(*map(F.col, cols), F.lit(gzip_output))
     return (

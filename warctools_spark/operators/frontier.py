@@ -110,17 +110,19 @@ def dedup_against_seen(candidates: DataFrame, seen: DataFrame) -> DataFrame:
 
 def dedup_within_epoch(candidates: DataFrame) -> DataFrame:
     """Collapse duplicate discoveries of the same URL inside one epoch,
-    keeping the lowest (depth, discovery) — deterministic via min over
-    a sortable struct, no row_number shuffle-and-sort needed."""
+    keeping the row that is lowest in lexicographic (depth, src_url,
+    canon_url, host, link) order — deterministic via min over a
+    sortable struct, no row_number shuffle-and-sort needed.
+
+    The fields are picked inside the aggregate, not in a Project over
+    it: with no Project between, Catalyst's PushDownLeftSemiAntiJoin
+    moves a broadcast dedup_against_seen below the aggregate, into the
+    harvest's map stage, so the sort-aggregations see only fresh links.
+    Spark pushes the anti-join only when it plans a broadcast hash
+    join; a sort-merge anti-join stays above the final aggregate."""
+    m = F.min(F.struct("depth", "src_url", "canon_url", "host", "link"))
     return candidates.groupBy("url_sha1").agg(
-        F.min(F.struct("depth", "src_url", "canon_url", "host", "link")).alias("m")
-    ).select(
-        "url_sha1",
-        F.col("m.depth").alias("depth"),
-        F.col("m.src_url").alias("src_url"),
-        F.col("m.canon_url").alias("canon_url"),
-        F.col("m.host").alias("host"),
-        F.col("m.link").alias("link"),
+        *(m[c].alias(c) for c in ("depth", "src_url", "canon_url", "host", "link"))
     )
 
 

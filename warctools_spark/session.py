@@ -13,6 +13,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# A JVM heap grows toward -Xmx before it collects hard, so a default
+# near the host's RAM gets a local driver OOM-killed. 4g holds the test
+# suite; SPARK_GRAFT_DRIVER_MEM sizes it for larger inputs.
+DEFAULT_DRIVER_MEMORY = "4g"
 
 
 def engine_conf(builder, shuffle_partitions: int | None = None):
@@ -30,7 +34,10 @@ def engine_conf(builder, shuffle_partitions: int | None = None):
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", DEFAULT_DRIVER_MEMORY),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
