@@ -172,6 +172,15 @@ def test_crash_before_commit_resumes_exactly(
         assert all("/bloom/epoch=00000/" in f for f in restored.inputFiles())
 
     e, queue, seen = resume_state(spark, cat)
+    # no manifest expires, but the orphan sweep reclaims exactly the
+    # uncommitted epoch-1 dirs and keeps every referenced one
+    swept = cat.expire_snapshots()
+    orphans = ["bloom"] * use_bloom + ["queue", "schedule", "seen_delta"]
+    assert swept["expired_epochs"] == []
+    assert sorted(swept["deleted_dirs"]) == [f"{t}/epoch=00001" for t in orphans]
+    assert all(
+        os.path.exists(os.path.join(cat.root, p)) for p in cat.referenced_paths([0])
+    )
     run_crawl(
         spark, pages, seed_df, epochs=2, k_per_host=K, catalog=cat,
         use_bloom=use_bloom, start_epoch=e + 1, initial_state=(queue, seen),

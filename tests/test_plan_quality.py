@@ -192,34 +192,6 @@ def test_politeness_skewed_host_topk_below_exchange(spark):
     ), "\n".join(lines)
 
 
-def test_bucketed_seen_join_no_exchange(spark, tmp_path):
-    """When `seen` outgrows broadcast, the catalog's bucketed tables
-    give a zero-shuffle anti-join (both sides co-bucketed on url_sha1)."""
-    from warctools_spark.plans.catalog import Catalog
-
-    cat = Catalog(str(tmp_path / "cat"), n_buckets=8)
-    cand = spark.range(5000).select(
-        F.md5(F.col("id").cast("string")).alias("url_sha1"), "id"
-    )
-    seen = spark.range(0, 5000, 2).select(
-        F.md5(F.col("id").cast("string")).alias("url_sha1")
-    )
-    t1 = cat.write_bucketed_table(spark, cand, "queue_bt", 0)
-    t2 = cat.write_bucketed_table(spark, seen, "seen_bt", 0)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = spark.table(t1).join(spark.table(t2), "url_sha1", "left_anti")
-        plan = _plan(j)
-        assert "Exchange" not in plan  # storage-partitioned: no shuffle
-        assert "SortMergeJoin" in plan and "LeftAnti" in plan
-        assert j.count() == 2500
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql(f"DROP TABLE IF EXISTS {t1}")
-        spark.sql(f"DROP TABLE IF EXISTS {t2}")
-
-
 def test_host_agg_partial_aggregation(spark, pages_parquet):
     pages = spark.read.parquet(pages_parquet)
     links = harvest_canonicalized(pages)

@@ -1,23 +1,36 @@
-"""Every def in the warctools_spark package is reached from an entry point.
+"""Every def in the warctools_spark package is reached from an entry point,
+and every option it offers is set by some caller.
 
 A static scan, no Spark: parse every program file, and follow names
 from the entry points below to the package's top-level functions,
-classes and module-level names. A def is reached when reached code
-names it, directly (``foo``), through an imported module (``FR.foo``),
-through a re-export, or as a string constant next to an imported module
-(``getattr(FR, "foo")``). A class counts as one def with all its
-methods. A module-level name assigned in the package (``_FOO = ...``)
-counts as a def whose body is its assignment, so a constant no program
-code reads fails the scan like an uncalled function. A module's other
-top-level statements run as soon as reached code imports it. Code
-inside a string that runs as a script (``python -c``) is scanned too.
+classes, methods and module-level names. A def is reached when reached
+code names it, directly (``foo``), through an imported module
+(``FR.foo``), through a re-export, or as a string constant next to an
+imported module (``getattr(FR, "foo")``). A method of a package class
+is a def of its own: it is reached when its class is and reached code
+names it as an attribute (``x.foo``) or as a string constant; dunder
+methods run with their class. A module-level name assigned in the
+package (``_FOO = ...``) counts as a def whose body is its assignment,
+so a constant no program code reads fails the scan like an uncalled
+function. A module's other top-level statements run as soon as reached
+code imports it. Code inside a string that runs as a script
+(``python -c``) is scanned too.
+
+An option is a keyword default of a public package function, method or
+class constructor.
+It is set when some call site in the package, the entry files or
+``tests/`` passes it by keyword or by position, or passes ``**kwargs``.
+A call whose first argument is a string constant naming a package
+function (``call("fn", x, kw=v)``, a dispatch through ``getattr``)
+counts as a call of that function with the remaining arguments. An
+option no call site sets is a constant, and is written as one.
 
 Tests are not entry points: code that only tests call is deleted, not
-kept. The few defs kept on purpose without a program caller are in
-ALLOWLIST, each with its reason.
+kept. The few defs and options kept on purpose without a program caller
+are in ALLOWLIST, each with its reason.
 
-Run ``python tests/test_reachability.py`` to list unreached defs with
-their sizes.
+Run ``python tests/test_reachability.py`` to list unreached defs and
+unset options with their sizes, and to count the options only tests set.
 """
 
 from __future__ import annotations
@@ -33,8 +46,6 @@ PKG = "warctools_spark"
 # imported by something outside this repository.
 ENTRY_FILES = (
     "__spark_entry__.py",
-    "bench.py",
-    "bench_extra.py",
     "jobs/run_crawl.py",
     "tools/check_oracles.py",
     "tools/package.py",
@@ -63,6 +74,12 @@ ALLOWLIST = {
         "the cuckoo table's incremental insert, the north rule's delete-capable seen set",
     "warctools_spark.operators.cuckoo.delete_from_cuckoo":
         "the north rule's fallback for deletes; run_crawl never calls it (recrawl retraction is undecided)",
+    "warctools_spark.cli.main(argv=)":
+        "the process's input: None reads sys.argv, as the console script does",
+    "warctools_spark.kernels.robots.parse_robots(agent=)":
+        "deployment setting: the crawler's user-agent token picks the robots.txt group",
+    "warctools_spark.operators.unpack.unpack_to_files(wayback_prefix=)":
+        "deployment setting: the replay base URL in each unpack log row (warcunpack_ia -W)",
 }
 
 _FORMAT = re.compile(r"%(\([^)]*\))?[rsd]")
@@ -89,27 +106,60 @@ def _assigned(node: ast.AST) -> list[str]:
     names = [t.id for t in targets if isinstance(t, ast.Name)]
     if len(names) != len(targets):
         return []
-    return [n for n in names if not (n.startswith("__") and n.endswith("__"))]
+    return [n for n in names if not _dunder(n)]
+
+
+def _dunder(name: str) -> bool:
+    return name.startswith("__") and name.endswith("__")
+
+
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _decorated(node: ast.AST, name: str) -> bool:
+    return any(isinstance(d, ast.Name) and d.id == name for d in node.decorator_list)
 
 
 class _Module:
-    def __init__(self, name: str, path: Path, tree: ast.Module):
+    def __init__(self, name: str, path: Path, tree: ast.Module, in_pkg: bool = False):
         self.name, self.path, self.tree = name, path, tree
         self.is_pkg = path.name == "__init__.py"
         self.defs = {
             n.name: n
             for n in tree.body
-            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            if isinstance(n, (*_FUNCS, ast.ClassDef))
         }
-        if name.split(".")[0] == PKG:
+        # attribute name -> ["Class.name", ...]: the methods of a package
+        # class are defs of their own, keyed "Class.name", unless it
+        # derives from an outside class, whose code may call any of them
+        self.methods: dict[str, list[str]] = {}
+        if in_pkg:
             for n in tree.body:
                 for target in _assigned(n):
                     self.defs.setdefault(target, n)
+            for cls in tree.body:
+                if not isinstance(cls, ast.ClassDef) or cls.bases:
+                    continue
+                for f in cls.body:
+                    if isinstance(f, _FUNCS) and not _dunder(f.name):
+                        q = f"{cls.name}.{f.name}"
+                        self.defs[q] = f
+                        self.methods.setdefault(f.name, []).append(q)
         defs = set(map(id, self.defs.values()))
         self.top = [n for n in tree.body if id(n) not in defs]
         # name -> ("module", mod) | ("symbol", mod, name), from every
         # import anywhere in the file (function-local ones included)
         self.bindings: dict[str, tuple] = {}
+
+    def body(self, name: str) -> list[ast.AST]:
+        """What runs when def `name` is reached: a class's body without
+        the methods that are defs of their own."""
+        node = self.defs[name]
+        if not isinstance(node, ast.ClassDef):
+            return [node]
+        return [*node.decorator_list, *node.bases, *node.keywords] + [
+            s for s in node.body if f"{name}.{getattr(s, 'name', '')}" not in self.defs
+        ]
 
     def absolute(self, node: ast.ImportFrom) -> str:
         if not node.level:
@@ -122,18 +172,28 @@ class _Module:
 
 
 class Scan:
-    def __init__(self, repo: Path = REPO):
+    def __init__(self, repo: Path = REPO, entry_files=ENTRY_FILES, allowlist=ALLOWLIST):
+        self.allowlist = allowlist
         files = sorted((repo / PKG).rglob("*.py"))
-        files += [repo / f for f in ENTRY_FILES if not f.startswith(PKG + "/")]
+        files += [repo / f for f in entry_files if not f.startswith(PKG + "/")]
         self.modules: dict[str, _Module] = {}
         for path in files:
-            rel = path.relative_to(repo)
-            m = _Module(_module_name(rel), path, ast.parse(path.read_text(), str(rel)))
+            m = self._parse(repo, path)
             self.modules[m.name] = m
-        for m in self.modules.values():
+        # tests set options but reach nothing: they are not entry points
+        tests = sorted((repo / "tests").rglob("*.py"))
+        self.tests = [self._parse(repo, p) for p in tests]
+        for m in [*self.modules.values(), *self.tests]:
             for node in ast.walk(m.tree):
                 self._bind(m, node)
-        self.entry = [_module_name(Path(f)) for f in ENTRY_FILES]
+        self.entry = [_module_name(Path(f)) for f in entry_files]
+
+    @staticmethod
+    def _parse(repo: Path, path: Path) -> _Module:
+        rel = path.relative_to(repo)
+        name = _module_name(rel)
+        tree = ast.parse(path.read_text(), str(rel))
+        return _Module(name, path, tree, in_pkg=name.split(".")[0] == PKG)
 
     def _bind(self, m: _Module, node: ast.AST) -> None:
         if isinstance(node, ast.Import):
@@ -193,8 +253,9 @@ class Scan:
                 return out + self._symbol(mod, attr)
         return out
 
-    def refs(self, m: _Module, nodes: list[ast.AST]) -> set[tuple]:
-        """(module, def-or-None) pairs the given statements reach."""
+    def refs(self, m: _Module, nodes: list[ast.AST], names: set) -> set[tuple]:
+        """(module, def-or-None) pairs the given statements reach; the
+        attribute names and string constants they use go into `names`."""
         out: set[tuple] = set()
         near = {m.name} | {b[1] for b in m.bindings.values() if b[0] == "module"}
         for top in nodes:
@@ -207,6 +268,7 @@ class Scan:
                     elif node.id in m.bindings:
                         out.update(self._binding(m.bindings[node.id]))
                 elif isinstance(node, ast.Attribute):
+                    names.add(node.attr)
                     out.update(self._resolve_attr(m, node))
                 elif isinstance(node, ast.Import):
                     for a in node.names:
@@ -219,14 +281,15 @@ class Scan:
                 elif isinstance(node, ast.Constant) and isinstance(node.value, str):
                     s = node.value
                     if s.isidentifier():
+                        names.add(s)
                         for mod in near:
                             if mod in self.modules and s in self.modules[mod].defs:
                                 out.add((mod, s))
                     elif "import " in s:
-                        out |= self._script_refs(m, s)
+                        out |= self._script_refs(m, s, names)
         return out
 
-    def _script_refs(self, m: _Module, src: str) -> set[tuple]:
+    def _script_refs(self, m: _Module, src: str, names: set) -> set[tuple]:
         try:
             tree = ast.parse(_FORMAT.sub("None", src))
         except SyntaxError:
@@ -234,67 +297,259 @@ class Scan:
         sub = _Module(m.name, m.path, tree)
         for node in ast.walk(tree):
             self._bind(sub, node)
-        return self.refs(sub, tree.body)
+        return self.refs(sub, tree.body, names)
 
     # -- the fixpoint --------------------------------------------------
     def reached(self, extra_roots=()) -> set[tuple]:
-        todo = [(name, None) for name in self.entry] + list(ENTRY_DEFS) + list(extra_roots)
+        todo = [(name, None) for name in self.entry] + list(ENTRY_DEFS)
+        todo += extra_roots
         done: set[tuple] = set()
+        names: set[str] = set()
         while todo:
-            key = todo.pop()
-            if key in done or key[0] not in self.modules:
-                continue
-            if key[1] is not None and key[1] not in self.modules[key[0]].defs:
-                continue  # a def of an embedded script, scanned with it
-            done.add(key)
-            mod, name = key
-            m = self.modules[mod]
-            body = m.top if name is None else [m.defs[name]]
-            todo += self.refs(m, body)
-            todo.append((mod, None))
+            while todo:
+                key = todo.pop()
+                if key in done or key[0] not in self.modules:
+                    continue
+                if key[1] is not None and key[1] not in self.modules[key[0]].defs:
+                    continue  # a def of an embedded script, scanned with it
+                done.add(key)
+                mod, name = key
+                m = self.modules[mod]
+                body = m.top if name is None else m.body(name)
+                todo += self.refs(m, body, names)
+                todo.append((mod, None))
+                if name is not None and "." in name:
+                    todo.append((mod, name.split(".")[0]))
+            # a reached class's methods that reached code names
+            for mod, cls in list(done):
+                m = self.modules[mod]
+                for attr in names & m.methods.keys():
+                    todo += [(mod, q) for q in m.methods[attr]
+                             if q.startswith(f"{cls}.") and (mod, q) not in done]
         return done
 
-    def package_defs(self) -> dict[str, ast.AST]:
+    def package_defs(self) -> dict[str, tuple]:
+        """Qualified name -> (module, def) of every package def."""
         return {
-            f"{m.name}.{name}": node
+            f"{m.name}.{name}": (m.name, name)
             for m in self.modules.values()
             if m.name.split(".")[0] == PKG
-            for name, node in m.defs.items()
+            for name in m.defs
         }
 
-    def unreached(self, extra_roots=()) -> dict[str, ast.AST]:
-        done = self.reached(extra_roots)
-        return {q: n for q, n in self.package_defs().items() if _key(q) not in done}
+    def node(self, key: tuple) -> ast.AST:
+        return self.modules[key[0]].defs[key[1]]
+
+    def unreached(self) -> dict[str, tuple]:
+        defs = self.package_defs()
+        done = self.reached([defs[q] for q in self.allowlist if q in defs])
+        return {q: k for q, k in defs.items() if k not in done}
+
+    # -- options -------------------------------------------------------
+    def options(self) -> dict[str, tuple]:
+        """``qual(name=)`` -> (module, def, parameter name, parameter
+        index or None for keyword-only) of every keyword default of a
+        public package function, method or class constructor."""
+        out = {}
+        for q, (mod, name) in self.package_defs().items():
+            node = self.node((mod, name))
+            if any(p.startswith("_") for p in name.split(".")):
+                continue
+            if isinstance(node, ast.ClassDef):
+                node = next((f for f in node.body
+                             if isinstance(f, _FUNCS) and f.name == "__init__"), None)
+            if not isinstance(node, _FUNCS):
+                continue
+            a = node.args
+            pos = a.posonlyargs + a.args
+            first = len(pos) - len(a.defaults)
+            for i, arg in enumerate(pos[first:], first):
+                out[f"{q}({arg.arg}=)"] = (mod, name, arg.arg, i)
+            for arg, d in zip(a.kwonlyargs, a.kw_defaults):
+                if d is not None:
+                    out[f"{q}({arg.arg}=)"] = (mod, name, arg.arg, None)
+        return out
+
+    def _call_targets(self, m: _Module, func: ast.AST) -> list[tuple]:
+        """(module, def, bound) for each package def a call may run;
+        `bound` counts the leading parameters the call does not pass
+        (``self``). An attribute call on an object matches every
+        method of that name."""
+        if isinstance(func, ast.Name):
+            if func.id in m.defs:
+                found = [(m.name, func.id)] if m.name in self.modules else []
+            elif func.id in m.bindings:
+                found = self._binding(m.bindings[func.id])
+            else:
+                return []
+        elif isinstance(func, ast.Attribute):
+            found = self._resolve_attr(m, func)
+            if not any(d for _, d in found):
+                return [
+                    (mod, q, int(not _decorated(other.defs[q], "staticmethod")))
+                    for mod, other in self.modules.items()
+                    for q in other.methods.get(func.attr, [])
+                ]
+        else:
+            return []
+        out = []
+        for mod, name in found:
+            node = self.modules[mod].defs.get(name) if name else None
+            if isinstance(node, (*_FUNCS, ast.ClassDef)):
+                out.append((mod, name, int(isinstance(node, ast.ClassDef))))
+        return out
+
+    def calls(self) -> dict[tuple, list[tuple]]:
+        """(module, def) -> [(where, positional count or None for
+        ``*args``, keyword names or None for ``**kwargs``)] over every
+        call site, `where` being "program" or "tests"."""
+        out: dict[tuple, list[tuple]] = {}
+        for where, mods in (("program", self.modules.values()), ("tests", self.tests)):
+            for m in mods:
+                # ``cls(...)`` in a class's own code constructs it
+                own = {id(c): (m.name, cls.name, 1)
+                       for cls in m.tree.body if isinstance(cls, ast.ClassDef)
+                       for c in ast.walk(cls) if isinstance(c, ast.Call)
+                       and isinstance(c.func, ast.Name) and c.func.id == "cls"}
+                for call in ast.walk(m.tree):
+                    if not isinstance(call, ast.Call):
+                        continue
+                    if id(call) in own:
+                        targets = [(own[id(call)], call.args)]
+                    else:
+                        targets = [
+                            (t, call.args) for t in self._call_targets(m, call.func)
+                        ]
+                    # call("fn", *args, **kw): a dispatch by name
+                    first = call.args[0] if call.args else None
+                    if isinstance(call.func, ast.Name) and isinstance(
+                        first, ast.Constant
+                    ) and isinstance(first.value, str):
+                        targets += [
+                            ((mod, first.value, 0), call.args[1:])
+                            for mod, other in self.modules.items()
+                            if mod.split(".")[0] == PKG
+                            and isinstance(other.defs.get(first.value), _FUNCS)
+                        ]
+                    kws = [kw.arg for kw in call.keywords]
+                    for (mod, name, bound), args in targets:
+                        star = any(isinstance(a, ast.Starred) for a in args)
+                        out.setdefault((mod, name), []).append(
+                            (where, None if star else len(args) + bound,
+                             None if None in kws else set(kws)))
+        return out
+
+    def setters(self) -> dict[str, set]:
+        """Option -> where a call site sets it ({"program", "tests"} or
+        a subset; empty when none does), allowlisted options left out."""
+        calls = self.calls()
+        out = {}
+        for q, (mod, name, param, index) in self.options().items():
+            if q in self.allowlist:
+                continue
+            out[q] = {
+                where for where, npos, kws in calls.get((mod, name), ())
+                if npos is None or kws is None or param in kws
+                or (index is not None and npos > index)
+            }
+        return out
 
 
-def _key(qual: str) -> tuple:
-    return tuple(qual.rsplit(".", 1))
+def _lines(node: ast.AST, param: str | None = None) -> int:
+    """A def's size in lines; for an option, the lines of its def that
+    name the parameter (the signature included)."""
+    if param is None:
+        return node.end_lineno - node.lineno + 1
+    return len({n.lineno for n in ast.walk(node)
+                if isinstance(n, ast.Name) and n.id == param
+                or isinstance(n, ast.arg) and n.arg == param})
 
 
 def test_every_package_def_is_reached():
-    dead = Scan().unreached(_key(q) for q in ALLOWLIST)
+    dead = Scan().unreached()
     assert not dead, (
         "package defs no entry point reaches (delete them with their tests, "
         "or allowlist them with a reason): %s" % sorted(dead)
     )
 
 
+def test_every_option_is_set():
+    unset = sorted(q for q, where in Scan().setters().items() if not where)
+    assert not unset, (
+        "keyword defaults no call site sets (make each a constant, or "
+        "allowlist it with a reason): %s" % unset
+    )
+
+
 def test_allowlist_is_minimal():
-    scan = Scan()
-    defs = scan.package_defs()
-    missing = [q for q in ALLOWLIST if q not in defs]
-    assert not missing, "allowlisted defs that no longer exist: %s" % missing
-    unreached = scan.unreached()
-    live = [q for q in ALLOWLIST if q not in unreached]
+    bare = Scan(allowlist={})
+    defs, options = bare.package_defs(), bare.options()
+    missing = [q for q in ALLOWLIST if q not in defs and q not in options]
+    assert not missing, "allowlisted names that no longer exist: %s" % missing
+    unreached = bare.unreached()
+    live = [q for q in ALLOWLIST if q in defs and q not in unreached]
     assert not live, "allowlisted defs an entry point already reaches: %s" % live
+    setters = bare.setters()
+    live = [q for q in ALLOWLIST if q in options and setters[q]]
+    assert not live, "allowlisted options a call site already sets: %s" % live
     assert all(reason.strip() for reason in ALLOWLIST.values())
 
 
-if __name__ == "__main__":
-    rows = sorted(
-        (q, n.end_lineno - n.lineno + 1)
-        for q, n in Scan().unreached(_key(q) for q in ALLOWLIST).items()
+def test_scan_reports_planted_method_and_option(tmp_path):
+    """The guard itself, on a tiny package: it names exactly the method
+    no code calls and the option no call site sets."""
+    pkg = tmp_path / PKG
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "mod.py").write_text(
+        "class Box:\n"
+        "    def __init__(self):\n"
+        "        self.n = 0\n"
+        "\n"
+        "    def used(self):\n"
+        "        return self.n\n"
+        "\n"
+        "    def unused(self):\n"
+        "        return -self.n\n"
+        "\n"
+        "\n"
+        "def run(x, by_position=1, by_keyword=2, by_dispatch=3, never=4):\n"
+        "    return x + by_position + by_keyword + by_dispatch + never\n"
     )
+    (tmp_path / "main.py").write_text(
+        "from warctools_spark import mod\n"
+        "\n"
+        "\n"
+        "def call(name, *args, **kw):\n"
+        "    return getattr(mod, name)(*args, **kw)\n"
+        "\n"
+        "\n"
+        "mod.Box().used()\n"
+        "mod.run(0, 5)\n"
+        "mod.run(0, by_keyword=6)\n"
+        'call("run", 0, by_dispatch=7)\n'
+    )
+    scan = Scan(tmp_path, entry_files=("main.py",), allowlist={})
+    assert sorted(scan.unreached()) == ["warctools_spark.mod.Box.unused"]
+    setters = scan.setters()
+    assert sorted(q for q, where in setters.items() if not where) == [
+        "warctools_spark.mod.run(never=)"
+    ]
+    assert setters["warctools_spark.mod.run(by_position=)"] == {"program"}
+
+
+if __name__ == "__main__":
+    scan = Scan()
+    rows = sorted((q, _lines(scan.node(k))) for q, k in scan.unreached().items())
     for q, lines in rows:
         print("%5d  %s" % (lines, q))
     print("%5d  total (%d defs)" % (sum(n for _, n in rows), len(rows)))
+    setters, options = scan.setters(), scan.options()
+    rows = sorted((q, _lines(scan.node(options[q][:2]), options[q][2]))
+                  for q, where in setters.items() if not where)
+    for q, lines in rows:
+        print("%5d  %s" % (lines, q))
+    print("%5d  total (%d unset options of %d)"
+          % (sum(n for _, n in rows), len(rows), len(options)))
+    only = sorted(q for q, where in setters.items() if where == {"tests"})
+    print("%d options only tests set, e.g. %s" % (len(only), ", ".join(only[:3])))

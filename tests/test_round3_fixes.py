@@ -44,21 +44,22 @@ def test_dedup_against_seen_no_distinct_agg(spark):
 
 
 def test_dedup_against_seen_bucketed_zero_exchange(spark, tmp_path):
-    """dedup_against_seen itself (not a hand-built join) over the
-    catalog's bucketed tables: storage-partitioned anti-join with no
+    """dedup_against_seen itself (not a hand-built join) over two tables
+    co-bucketed on url_sha1: storage-partitioned anti-join with no
     Exchange and no distinct aggregate."""
     from warctools_spark.operators.frontier import dedup_against_seen
-    from warctools_spark.plans.catalog import Catalog
 
-    cat = Catalog(str(tmp_path / "cat"), n_buckets=8)
     cand = spark.range(5000).select(
         F.md5(F.col("id").cast("string")).alias("url_sha1"), "id"
     )
     seen = spark.range(0, 5000, 2).select(
         F.md5(F.col("id").cast("string")).alias("url_sha1")
     )
-    t1 = cat.write_bucketed_table(spark, cand, "queue_r3", 0)
-    t2 = cat.write_bucketed_table(spark, seen, "seen_r3", 0)
+    t1, t2 = "queue_r3", "seen_r3"
+    for df, name in ((cand, t1), (seen, t2)):
+        df.write.mode("overwrite").option("path", str(tmp_path / name)).bucketBy(
+            8, "url_sha1"
+        ).sortBy("url_sha1").saveAsTable(name)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

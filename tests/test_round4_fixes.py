@@ -413,37 +413,6 @@ def test_catalog_expire_snapshots_preserves_resume(spark, pages, seed_df, tmp_pa
     }
 
 
-def test_catalog_rollback_time_travel(spark, pages, seed_df, tmp_path):
-    """Rollback drops newer manifests only; resume lands on the target
-    epoch and the next expire sweeps the orphaned data dirs."""
-    import os
-
-    cat = Catalog(str(tmp_path / "cat"), n_buckets=8)
-    run_crawl(
-        spark, pages, seed_df, epochs=3, k_per_host=K, catalog=cat,
-    )
-    assert cat.rollback(1) == [2]
-    assert cat.latest_epoch() == 1
-    e, queue, seen = resume_state(spark, cat)
-    assert e == 1
-    # orphaned epoch-2 data still on disk until expire sweeps it
-    assert os.path.exists(cat.table_path("schedule", 2))
-    cat.expire_snapshots(keep_last=2)
-    assert not os.path.exists(cat.table_path("schedule", 2))
-    assert not os.path.exists(cat.table_path("seen_delta", 2))
-    # continuing from the rolled-back state matches a fresh 3-epoch run
-    metrics = run_crawl(
-        spark, pages, seed_df, epochs=1, k_per_host=K, catalog=cat,
-        start_epoch=e + 1, initial_state=(queue, seen),
-    )
-    cat2 = Catalog(str(tmp_path / "fresh"), n_buckets=8)
-    m2 = run_crawl(spark, pages, seed_df, epochs=3, k_per_host=K, catalog=cat2)
-    assert metrics[0]["scheduled"] == m2[2]["scheduled"]
-    assert metrics[0]["seen_size"] == m2[2]["seen_size"]
-    with pytest.raises(ValueError, match="no snapshot"):
-        cat.rollback(99)
-
-
 def test_bigram_logprob_semantics(spark):
     """Order sensitivity: a doc whose words appear in the corpus's
     common ORDER scores lower (more fluent) than the same words

@@ -3,11 +3,14 @@ epoch on the same input at local[8] vs local[32], reporting urls/sec at
 both and efficiency = (tput_32 / tput_8) / 4. Target >= 0.8.
 
 Each parallelism level runs in its own subprocess (fresh JVM) so
-nothing is shared but the materialized pages parquet. Writes
+nothing is shared but the materialized pages and seen parquet, built
+once (at the high level) in a third. Writes
 BENCH/scaling_<low>_<high>.json (BENCH/BASELINE.md is curated by hand
 from these).
 
 Usage: python tools/scaling_bench.py [low_cpus high_cpus [expand]]
+Corpus: $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), cached
+under /tmp/warctools_spark_bench.
 """
 
 from __future__ import annotations
@@ -19,6 +22,36 @@ import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+PAGES_CACHE = "/tmp/warctools_spark_bench"
+
+
+def corpus_paths(sf_dir: str, expand: int) -> tuple[str, str]:
+    """The cached pages corpus and its seen table for one input."""
+    sf = os.path.basename(sf_dir.rstrip("/"))
+    return tuple(
+        os.path.join(PAGES_CACHE, f"{table}_{sf}_x{expand}.parquet")
+        for table in ("pages", "seen")
+    )
+
+
+def materialize_pages(spark, sf_dir: str, expand: int, partitions: int) -> None:
+    """Pages corpus + a seen-set table (half the link universe), the
+    state a mid-crawl epoch reads. Deterministic; reused across runs."""
+    from pyspark.sql import functions as F
+
+    from warctools_spark.functions.udfs import udf_url_sha1
+    from warctools_spark.sources.pages import synthesize_pages
+
+    pages_path, seen_path = corpus_paths(sf_dir, expand)
+    if not os.path.exists(os.path.join(pages_path, "_SUCCESS")):
+        synthesize_pages(spark, sf_dir, expand=expand, repartition=partitions).write.mode(
+            "overwrite"
+        ).parquet(pages_path)
+    if not os.path.exists(os.path.join(seen_path, "_SUCCESS")):
+        pages = spark.read.parquet(pages_path)
+        pages.select(udf_url_sha1(F.col("url")).alias("url_sha1")).where(
+            F.col("url_sha1").substr(1, 1) < "8"
+        ).write.mode("overwrite").parquet(seen_path)
 
 RUNNER = r"""
 import json, os, sys, time
@@ -27,7 +60,7 @@ from warctools_spark.session import get_spark
 from pyspark.sql import functions as F
 
 cpus = int(sys.argv[1])
-pages_path = sys.argv[2]
+pages_path, seen_path = sys.argv[2:4]
 # shuffle partitioning held CONSTANT across cluster sizes (as it would
 # be on a real cluster comparison) — only the executor core count
 # varies; otherwise the small run measures spill, not scaling
@@ -38,8 +71,6 @@ from warctools_spark.operators.frontier import (
     dedup_against_seen, dedup_within_epoch, harvest_canonicalized,
     politeness_schedule,
 )
-
-seen_path = pages_path.replace("pages_", "seen_")
 
 def epoch():
     pages = spark.read.parquet(pages_path)
@@ -64,10 +95,10 @@ spark.stop()
 """
 
 
-def run_level(cpus: int, pages_path: str) -> dict:
+def run_level(cpus: int, pages_path: str, seen_path: str) -> dict:
     script = RUNNER % {"repo": str(REPO)}
     out = subprocess.run(
-        [sys.executable, "-c", script, str(cpus), pages_path],
+        [sys.executable, "-c", script, str(cpus), pages_path, seen_path],
         capture_output=True,
         text=True,
         timeout=1200,
@@ -85,11 +116,8 @@ def main():
     expand = int(sys.argv[3]) if len(sys.argv) > 3 else 40
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    # materialize pages once (shared, deterministic)
-    env = dict(os.environ, SPARK_GRAFT_EXPAND=str(expand), SPARK_GRAFT_SF_DIR=sf_dir)
-    sf = os.path.basename(sf_dir.rstrip("/"))
-    pages_path = f"/tmp/warctools_spark_bench/pages_{sf}_x{expand}.parquet"
-    seen_path = pages_path.replace("pages_", "seen_")
+    # materialize pages once (shared, deterministic), at the high level
+    pages_path, seen_path = corpus_paths(sf_dir, expand)
     if not (
         os.path.exists(os.path.join(pages_path, "_SUCCESS"))
         and os.path.exists(os.path.join(seen_path, "_SUCCESS"))
@@ -98,19 +126,19 @@ def main():
             [
                 sys.executable,
                 "-c",
-                "import sys; sys.path.insert(0, %r); "
-                "import bench; "
+                "import sys; sys.path[:0] = [%r, %r]; "
+                "import scaling_bench; "
                 "from warctools_spark.session import get_spark; "
-                "s = get_spark(master='local[32]', shuffle_partitions=32); "
-                "bench.materialize_pages(s); s.stop()" % str(REPO),
+                "s = get_spark(master='local[%d]', shuffle_partitions=%d); "
+                "scaling_bench.materialize_pages(s, %r, %d, %d); s.stop()"
+                % (str(REPO / "tools"), str(REPO), high, high, sf_dir, expand, high),
             ],
-            env=env,
             check=True,
             timeout=1200,
         )
 
-    r_low = run_level(low, pages_path)
-    r_high = run_level(high, pages_path)
+    r_low = run_level(low, pages_path, seen_path)
+    r_high = run_level(high, pages_path, seen_path)
     speedup = r_high["urls_per_sec"] / r_low["urls_per_sec"]
     efficiency = speedup / (high / low)
     result = {

@@ -30,11 +30,8 @@ _REGISTRY = {
 }
 
 
-def register_sql_functions(spark: SparkSession, prefix: str = "") -> list[str]:
+def register_sql_functions(spark: SparkSession) -> list[str]:
     """Register all engine UDFs as SQL functions. Returns the names."""
-    names = []
     for name, fn in _REGISTRY.items():
-        full = prefix + name
-        spark.udf.register(full, fn)
-        names.append(full)
-    return names
+        spark.udf.register(name, fn)
+    return list(_REGISTRY)

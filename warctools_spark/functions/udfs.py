@@ -75,19 +75,15 @@ def _body_text(res) -> str:
         return body.decode("latin-1")
 
 
-def make_udf_decode_http(ignore_headers=(), http09_fallback=False):
-    """HTTP response decode udf, optionally ignoring headers at parse
-    time — e.g. ("Transfer-Encoding",) replicates warc2warc
-    --wget-chunk-fix (warc2warc.py:26,31-34).
+def make_udf_decode_http(http09_fallback=False):
+    """HTTP response decode udf.
 
     http09_fallback=True re-interprets payloads with no parseable
     HTTP/1.x status line as HTTP/0.9 (whole payload = body, implied
     200 — messaging.py:696-738) instead of surfacing an error row."""
-    ignore = _header_names(ignore_headers)
-
     @pandas_udf(HTTP_STRUCT)
     def _udf(html: pd.Series) -> pd.DataFrame:
-        return _decode_http_batch(html, ignore, http09_fallback)
+        return _decode_http_batch(html, http09_fallback=http09_fallback)
 
     return _udf
 
@@ -318,8 +314,9 @@ def warc2warc_row(rid, rtype, url, date, ctype, content, gz, ignore_headers=()):
 def make_udf_warc2warc(ignore_headers=()):
     """warc2warc -D as one Arrow pass: (record_id, record_type, url,
     warc_date, content_type, content, gzip flag) ->
-    struct<out_content, record_bytes>. `ignore_headers` as in
-    make_udf_decode_http."""
+    struct<out_content, record_bytes>. `ignore_headers` are dropped at
+    parse time — e.g. ("Transfer-Encoding",) replicates warc2warc
+    --wget-chunk-fix (warc2warc.py:26,31-34)."""
     ignore = _header_names(ignore_headers)
 
     @pandas_udf(W2W_STRUCT)

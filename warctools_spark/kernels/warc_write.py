@@ -28,7 +28,6 @@ def write_warc_record(
     content_type: bytes | None,
     content: bytes | None,
     version: bytes = WARC_VERSION,
-    nl: bytes = b"\r\n",
     gzip_record: bool = False,
 ) -> bytes:
     """Serialize one WARC record.
@@ -39,29 +38,29 @@ def write_warc_record(
     """
     out = io.BytesIO()
     out.write(version)
-    out.write(nl)
+    out.write(b"\r\n")
     for k, v in headers:
         if k not in (CONTENT_TYPE, CONTENT_LENGTH):
             out.write(k)
             out.write(b": ")
             out.write(v)
-            out.write(nl)
+            out.write(b"\r\n")
     if content_type:
         out.write(CONTENT_TYPE)
         out.write(b": ")
         out.write(content_type)
-        out.write(nl)
+        out.write(b"\r\n")
     if content is None:
         content = b""
     out.write(CONTENT_LENGTH)
     out.write(b": ")
     out.write(str(len(content)).encode("ascii"))
-    out.write(nl)
-    out.write(nl)  # end of headers
+    out.write(b"\r\n")
+    out.write(b"\r\n")  # end of headers
     if content:
         out.write(content)
-    out.write(nl)
-    out.write(nl)
+    out.write(b"\r\n")
+    out.write(b"\r\n")
     raw = out.getvalue()
     if gzip_record:
         return gzip_member(raw)

@@ -47,7 +47,7 @@ def _is_http_response(content: bytes) -> bool:
     return res.complete and not res.leftover
 
 
-def _convert_one(url, date, content_type, content, ip, resources, responses):
+def _convert_one(url, date, content_type, content, ip):
     url_b = (url or "").encode("latin-1")
     date_b = (date or "").encode("latin-1")
     warc_id = warc_uuid(url_b + date_b).decode("ascii")
@@ -66,11 +66,7 @@ def _convert_one(url, date, content_type, content, ip, resources, responses):
         ct = "application/octet-stream"
 
     lurl = (url or "").lower()
-    if any(lurl.startswith(p) for p in resources):
-        rtype = "resource"
-    elif any(lurl.startswith(p) for p in responses):
-        rtype = "response"
-    elif lurl.startswith("http"):
+    if lurl.startswith("http"):
         if content is not None and _is_http_response(bytes(content)):
             ct = "application/http;msgtype=response"
             rtype = "response"
@@ -95,9 +91,7 @@ def _convert_one(url, date, content_type, content, ip, resources, responses):
     return warc_id, warc_date, rtype, ct, ip_out
 
 
-def arc_to_warc(
-    records: DataFrame, resources: tuple = (), responses: tuple = ()
-) -> DataFrame:
+def arc_to_warc(records: DataFrame) -> DataFrame:
     """ARC records frame -> WARC-typed columns (+ original content).
     Input: the frame from sources/warc.read_warc over .arc files."""
 
@@ -108,9 +102,7 @@ def arc_to_warc(
     ) -> pd.DataFrame:
         rows = {k: [] for k in ("warc_id", "warc_date", "warc_type", "content_type", "ip_address")}
         for u, d, ct, c, i in zip(url, date, ctype, content, ip):
-            wid, wdate, wtype, wct, wip = _convert_one(
-                u, d, ct, c, i, resources, responses
-            )
+            wid, wdate, wtype, wct, wip = _convert_one(u, d, ct, c, i)
             rows["warc_id"].append(wid)
             rows["warc_date"].append(wdate)
             rows["warc_type"].append(wtype)

@@ -191,9 +191,7 @@ class CuckooFilter:
         return out
 
 
-def build_cuckoo(
-    seen: DataFrame, n_buckets: int = 32, load: float = 0.7
-) -> DataFrame:
+def build_cuckoo(seen: DataFrame, n_buckets: int = 32) -> DataFrame:
     """seen(url_sha1) -> one row per host-hash bucket:
     (bucket, nb, version, overflowed, bits)."""
     keyed = seen.select(
@@ -204,7 +202,7 @@ def build_cuckoo(
     per_bucket = max(total // max(n_buckets, 1), 1)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        flt = CuckooFilter.sized_for(max(len(pdf), per_bucket), load)
+        flt = CuckooFilter.sized_for(max(len(pdf), per_bucket), 0.7)
         # sorted: deterministic kicks; batch: one vectorized key parse
         overflowed = flt.insert_batch(sorted(pdf["url_sha1"]))
         bucket = int(pdf["bucket"].iloc[0]) if len(pdf) else -1

@@ -27,32 +27,28 @@ def normalized_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
-def exact_dedup(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact duplicate groups by md5 of normalized text: one row per
     distinct content, keeping the lowest id (deterministic canonical)."""
     return (
         docs.select(
-            F.md5(normalized_text(F.col(text_col))).alias("content_md5"),
-            F.col(id_col),
+            F.md5(normalized_text(F.col("text"))).alias("content_md5"),
+            F.col("doc_id"),
         )
         .groupBy("content_md5")
         .agg(
-            F.min(id_col).alias("canonical_id"),
+            F.min("doc_id").alias("canonical_id"),
             F.count("*").alias("dup_count"),
         )
     )
 
 
-def exact_dedup_keep_first(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup_keep_first(docs: DataFrame) -> DataFrame:
     """The documents that survive exact dedup (lowest id per content)."""
-    canon = exact_dedup(docs, text_col, id_col).select(
-        F.col("canonical_id").alias(id_col)
+    canon = exact_dedup(docs).select(
+        F.col("canonical_id").alias("doc_id")
     )
-    return docs.join(canon, on=id_col, how="inner")
+    return docs.join(canon, on="doc_id", how="inner")
 
 
 def shingles(col: Column, n: int = 3) -> Column:
@@ -88,11 +84,11 @@ _MH_A = [1000003 + 37 * i for i in range(64)]
 _MH_B = [777767777 + 101 * i for i in range(64)]
 
 
-def shingle_hashes(col: Column, n: int = 3) -> Column:
+def shingle_hashes(col: Column) -> Column:
     """One md5 per shingle -> bigint (mod 2^31-1). The expensive hash
     happens once; the MinHash family is cheap affine mixes of it."""
     return F.transform(
-        shingles(col, n),
+        shingles(col),
         lambda s: F.pmod(
             F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint"),
             F.lit(_MH_P),
@@ -100,11 +96,11 @@ def shingle_hashes(col: Column, n: int = 3) -> Column:
     )
 
 
-def minhash_signature(col: Column, num_hashes: int = 16, n: int = 3) -> Column:
+def minhash_signature(col: Column, num_hashes: int = 16) -> Column:
     """MinHash signature: array of num_hashes minima over the shingle
     set under the affine family h_i(x) = (a_i*x + b_i) mod (2^31-1).
     Scan-side only — no shuffle; one md5 pass per shingle."""
-    hs = shingle_hashes(col, n)
+    hs = shingle_hashes(col)
 
     def _mix(i):
         return lambda h: (h * _MH_A[i] + _MH_B[i]) % _MH_P
@@ -184,11 +180,8 @@ def _bucket_stats(sizes: DataFrame, max_bucket_size: int) -> DataFrame:
 
 def minhash_lsh_candidates(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 16,
     bands: int = 4,
-    parallelism: int | None = None,
     max_bucket_size: int = 200,
     return_stats: bool = False,
 ) -> DataFrame:
@@ -212,24 +205,23 @@ def minhash_lsh_candidates(
     rows_per_band = num_hashes // bands
     # small-file inputs arrive as one partition; the signature pass is
     # CPU-bound, so spread it before computing (cheap: raw text only)
-    p = parallelism or docs.sparkSession.sparkContext.defaultParallelism
-    docs = docs.repartition(p)
+    docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
     # two-step projection: shingle hashes materialize once (Catalyst's
     # CollapseProject does not inline non-cheap exprs referenced many
     # times, so the md5 pass is not duplicated 16x)
-    hs = docs.select(F.col(id_col), shingle_hashes(F.col(text_col)).alias("hs"))
+    hs = docs.select(F.col("doc_id"), shingle_hashes(F.col("text")).alias("hs"))
 
     def _mix(i):
         return lambda h: (h * _MH_A[i] + _MH_B[i]) % _MH_P
 
     sig = hs.select(
-        id_col,
+        "doc_id",
         F.array(
             *[F.array_min(F.transform("hs", _mix(i))) for i in range(num_hashes)]
         ).alias("sig"),
     )
     banded = sig.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.array(
                 *[
@@ -247,11 +239,11 @@ def minhash_lsh_candidates(
                 ]
             )
         ).alias("bk"),
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
+    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
     # bucket-collect instead of self-join: a self-join would execute the
     # signature pipeline twice; one groupBy + in-bucket pair explosion
     # scans once and shuffles once.
-    pairs, sized = _capped_bucket_pairs(banded, id_col, max_bucket_size)
+    pairs, sized = _capped_bucket_pairs(banded, "doc_id", max_bucket_size)
     if not return_stats:
         return pairs
     return pairs, _bucket_stats(sized, max_bucket_size)
@@ -260,8 +252,6 @@ def minhash_lsh_candidates(
 def ngram_jaccard(
     docs: DataFrame,
     pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for candidate pairs (the LSH
@@ -269,10 +259,10 @@ def ngram_jaccard(
     BOTH docs are shorter than n tokens (empty shingle sets) score
     0.0, not null — the same guarded-denominator contract as
     ngram_containment."""
-    sh = docs.select(F.col(id_col), shingles(F.col(text_col), n).alias("sh"))
+    sh = docs.select(F.col("doc_id"), shingles(F.col("text"), n).alias("sh"))
     out = (
-        pairs.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
+        pairs.join(sh.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
+        .join(sh.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
         .withColumn(
             "inter", F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
         )
@@ -427,7 +417,6 @@ def _require_dims(df: DataFrame, vec_col: str, dims: int) -> DataFrame:
 def dup_clusters(
     pairs: DataFrame,
     vertices: DataFrame,
-    id_col: str = "doc_id",
     max_iter: int = 50,
     on_nonconverged: str = "raise",
     checkpoint_dir: str | None = None,
@@ -478,7 +467,7 @@ def dup_clusters(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)
     labels = (
-        vertices.select(F.col(id_col).alias("node"))
+        vertices.select(F.col("doc_id").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
     )
@@ -596,19 +585,16 @@ def dup_clusters(
 
         warnings.warn(msg, RuntimeWarning, stacklevel=2)
     return labels.select(
-        F.col("node").alias(id_col), F.col("label").alias("cluster_id")
+        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
 
 
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
-    n: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Benchmark-contamination flags: a training document is
-    contaminated if it shares ANY word n-gram (default 13, the GPT-3
+    contaminated if it shares ANY word 13-gram (the GPT-3
     decontamination window) with any benchmark document.
 
     Shape at scale: both sides explode to (shingle) rows; the probe
@@ -618,29 +604,27 @@ def decontaminate(
     (id, contaminated boolean)."""
     probe = (
         benchmark.select(
-            F.explode(shingles(F.col(text_col), n)).alias("shingle")
+            F.explode(shingles(F.col("text"), 13)).alias("shingle")
         )
         .distinct()
     )
     corpus = docs.select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), n)).alias("shingle")
+        F.col("doc_id"), F.explode(shingles(F.col("text"), 13)).alias("shingle")
     )
     hit_ids = (
         corpus.join(F.broadcast(probe), on="shingle", how="left_semi")
-        .select(id_col)
+        .select("doc_id")
         .distinct()
         .withColumn("contaminated", F.lit(True))
     )
-    return docs.select(id_col).join(hit_ids, on=id_col, how="left").select(
-        id_col, F.coalesce("contaminated", F.lit(False)).alias("contaminated")
+    return docs.select("doc_id").join(hit_ids, on="doc_id", how="left").select(
+        "doc_id", F.coalesce("contaminated", F.lit(False)).alias("contaminated")
     )
 
 
 def segment_dedup(
     docs: DataFrame,
     k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     mode: str = "window",
 ) -> DataFrame:
     """C4-style corpus-level segment dedup (Raffel et al. 2020 §2.2
@@ -662,8 +646,8 @@ def segment_dedup(
     Everything is JVM built-ins; no Python in the path."""
     if mode == "line":
         segs = docs.select(
-            F.col(id_col),
-            F.posexplode(F.split(F.col(text_col), r"\n")).alias("pos", "seg"),
+            F.col("doc_id"),
+            F.posexplode(F.split(F.col("text"), r"\n")).alias("pos", "seg"),
         )
     else:
         # hoist the token array into its own projection: with the
@@ -671,9 +655,9 @@ def segment_dedup(
         # whole document once PER SEGMENT (see word_ngrams r6 note);
         # as a projected column it materializes once per row
         toked = docs.select(
-            F.col(id_col),
-            F.split(F.trim(F.col(text_col)), r"\s+").alias("__toks"),
-            (F.length(F.trim(F.col(text_col))) > 0).alias("__nonempty"),
+            F.col("doc_id"),
+            F.split(F.trim(F.col("text")), r"\s+").alias("__toks"),
+            (F.length(F.trim(F.col("text"))) > 0).alias("__nonempty"),
         )
         tk = F.col("__toks")
         n_seg = F.ceil(F.size(tk) / F.lit(k)).cast("int")
@@ -685,7 +669,7 @@ def segment_dedup(
             ),
         ).otherwise(F.array().cast("array<string>"))
         segs = toked.select(
-            F.col(id_col), F.posexplode(segs_arr).alias("pos", "seg")
+            F.col("doc_id"), F.posexplode(segs_arr).alias("pos", "seg")
         )
     # keeper resolution only matters for segments occurring >= 2 times:
     # a unique segment is trivially its own keeper. Restricting the
@@ -695,7 +679,7 @@ def segment_dedup(
     keepers = (
         segs.groupBy("seg")
         .agg(
-            F.min(F.struct(F.col(id_col), F.col("pos"))).alias("keeper"),
+            F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("keeper"),
             F.count("*").alias("__n"),
         )
         .where(F.col("__n") >= 2)
@@ -706,14 +690,14 @@ def segment_dedup(
         .where(
             F.col("keeper").isNull()
             | (
-                (F.col(f"keeper.{id_col}") == F.col(id_col))
+                (F.col("keeper.doc_id") == F.col("doc_id"))
                 & (F.col("keeper.pos") == F.col("pos"))
             )
         )
-        .select(id_col, "pos", "seg")
+        .select("doc_id", "pos", "seg")
     )
     sep = "\n" if mode == "line" else " "
-    rebuilt = kept.groupBy(id_col).agg(
+    rebuilt = kept.groupBy("doc_id").agg(
         F.concat_ws(
             sep,
             F.transform(
@@ -723,13 +707,13 @@ def segment_dedup(
         ).alias("clean_text"),
         F.count("*").alias("n_kept"),
     )
-    n_total = segs.groupBy(id_col).agg(F.count("*").alias("n_segments"))
+    n_total = segs.groupBy("doc_id").agg(F.count("*").alias("n_segments"))
     return (
-        docs.select(id_col)
-        .join(n_total, id_col, "left")
-        .join(rebuilt, id_col, "left")
+        docs.select("doc_id")
+        .join(n_total, "doc_id", "left")
+        .join(rebuilt, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("clean_text", F.lit("")).alias("clean_text"),
             F.coalesce("n_segments", F.lit(0)).alias("n_segments"),
             F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
@@ -741,8 +725,6 @@ def duplicate_spans(
     docs: DataFrame,
     k: int = 10,
     min_span_tokens: int = 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Exact substring-duplication spans, the Lee et al. 2022
     "Deduplicating Training Data Makes Language Models Better"
@@ -770,8 +752,8 @@ def duplicate_spans(
     from warctools_spark.operators.text_analysis import word_ngrams
 
     grams = docs.select(
-        F.col(id_col),
-        F.posexplode(word_ngrams(F.col(text_col), k)).alias("pos", "gram"),
+        F.col("doc_id"),
+        F.posexplode(word_ngrams(F.col("text"), k)).alias("pos", "gram"),
     )
     # r6 shape, two changes over r5:
     # (1) ONE gram-stream materialization: the explicit repartition by
@@ -793,7 +775,7 @@ def duplicate_spans(
     first = (
         g2.groupBy("gram")
         .agg(
-            F.min(F.struct(F.col(id_col), F.col("pos"))).alias("first"),
+            F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("first"),
             F.count("*").alias("__n"),
         )
         .where(F.col("__n") >= 2)
@@ -802,13 +784,13 @@ def duplicate_spans(
     dups = (
         g2.join(first, "gram")
         .where(
-            (F.col("first")[id_col] != F.col(id_col))
+            (F.col("first")["doc_id"] != F.col("doc_id"))
             | (F.col("first")["pos"] != F.col("pos"))
         )
-        .select(id_col, "pos")
+        .select("doc_id", "pos")
     )
     w = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -824,20 +806,20 @@ def duplicate_spans(
         ).otherwise(0),
     )
     w2 = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     islands = marked.withColumn("island", F.sum("new_island").over(w2))
     return (
-        islands.groupBy(id_col, "island")
+        islands.groupBy("doc_id", "island")
         .agg(
             F.min("pos").alias("span_start"),
             (F.max("pos") + k).alias("span_end"),
         )
         .withColumn("n_tokens", F.col("span_end") - F.col("span_start"))
         .where(F.col("n_tokens") >= min_span_tokens)
-        .select(id_col, "span_start", "span_end", "n_tokens")
+        .select("doc_id", "span_start", "span_end", "n_tokens")
     )
 
 
@@ -845,8 +827,6 @@ def remove_duplicate_spans(
     docs: DataFrame,
     k: int = 10,
     min_span_tokens: int = 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Rewrite documents with their duplicated spans (duplicate_spans
     semantics — first corpus occurrence survives) cut out: tokens
@@ -858,14 +838,14 @@ def remove_duplicate_spans(
     """
     from warctools_spark.operators.text_analysis import tokens
 
-    spans = duplicate_spans(docs, k, min_span_tokens, text_col, id_col)
-    per_doc = spans.groupBy(id_col).agg(
+    spans = duplicate_spans(docs, k, min_span_tokens)
+    per_doc = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("spans")
     )
     toks = F.when(
-        F.length(F.trim(F.col(text_col))) == 0, F.array().cast("array<string>")
-    ).otherwise(tokens(F.col(text_col)))
-    joined = docs.join(per_doc, id_col, "left").withColumn(
+        F.length(F.trim(F.col("text"))) == 0, F.array().cast("array<string>")
+    ).otherwise(tokens(F.col("text")))
+    joined = docs.join(per_doc, "doc_id", "left").withColumn(
         "spans", F.coalesce(F.col("spans"), F.array())
     )
     keep = F.filter(
@@ -876,7 +856,7 @@ def remove_duplicate_spans(
         ),
     )
     return joined.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array_join(F.transform(keep, lambda s: s["t"]), " ").alias(
             "clean_text"
         ),
@@ -887,8 +867,6 @@ def remove_duplicate_spans(
 def ngram_containment(
     docs: DataFrame,
     pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
 ) -> DataFrame:
     """Exact ASYMMETRIC n-gram containment for candidate pairs:
@@ -899,16 +877,16 @@ def ngram_containment(
     pass serves the dedup policy ("drop if contained" vs "drop if
     near-identical"). Same join shape as ngram_jaccard: two hash
     joins of the pairs table against the shingle projection."""
-    sh = docs.select(F.col(id_col), shingles(F.col(text_col), n).alias("sh"))
+    sh = docs.select(F.col("doc_id"), shingles(F.col("text"), n).alias("sh"))
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     return (
         pairs.join(
-            sh.withColumnRenamed(id_col, "id_a")
+            sh.withColumnRenamed("doc_id", "id_a")
             .withColumnRenamed("sh", "sh_a"),
             "id_a",
         )
         .join(
-            sh.withColumnRenamed(id_col, "id_b")
+            sh.withColumnRenamed("doc_id", "id_b")
             .withColumnRenamed("sh", "sh_b"),
             "id_b",
         )

@@ -168,15 +168,14 @@ def link_rank(
     edges: DataFrame,
     vertices: DataFrame,
     iterations: int = 3,
-    damping: float = 0.85,
     id_col: str = "node",
 ) -> DataFrame:
     """PageRank-style crawl priority over the harvested link graph —
     the data-derived refinement of BFS ordering for the frontier's
-    priority queue: rank' = (1-d)/n + d * Σ_in rank/out_deg, a fixed
-    number of synchronous iterations (dangling mass intentionally not
-    redistributed; iteration count is the determinism contract the
-    oracle replays).
+    priority queue: rank' = (1-d)/n + d * Σ_in rank/out_deg with
+    damping d = 0.85, a fixed number of synchronous iterations
+    (dangling mass intentionally not redistributed; iteration count is
+    the determinism contract the oracle replays).
 
     Shuffle profile per iteration: one join on src (edges ⋈ ranks,
     both keyed) and one sum-agg on dst with map-side combine; ranks
@@ -207,8 +206,8 @@ def link_rank(
             .select(
                 "node",
                 (
-                    F.lit((1.0 - damping) * base)
-                    + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
+                    F.lit((1.0 - 0.85) * base)
+                    + F.lit(0.85) * F.coalesce("in_sum", F.lit(0.0))
                 ).alias("rank"),
             )
             # eager=False (r6): plan still truncates to a LogicalRDD
@@ -241,9 +240,7 @@ def _unescape_xml(c: Column) -> Column:
     return c
 
 
-def sitemap_seeds(
-    pages: DataFrame, url_col: str = "url", body_col: str = "body"
-) -> DataFrame:
+def sitemap_seeds(pages: DataFrame) -> DataFrame:
     """Seed discovery from sitemap XML payloads: gate on
     sitemap-shaped documents (<urlset>/<sitemapindex> root), pull
     every <loc> with one JVM regexp pass, trim and XML-unescape it
@@ -255,7 +252,7 @@ def sitemap_seeds(
     depth 0 alongside the configured seed list. regexp_extract_all is
     whole-stage-codegen'd; the only shuffle is the final distinct on
     (already small) seed URLs."""
-    body = F.col(body_col)
+    body = F.col("body")
     is_sitemap = body.rlike("<(urlset|sitemapindex)[\\s>]")
     # \s* rather than F.trim: trim strips only ' ', and pretty-printed
     # sitemaps pad <loc> with newlines and tabs
@@ -264,7 +261,7 @@ def sitemap_seeds(
     )
     return (
         pages.where(is_sitemap)
-        .select(F.col(url_col).alias("sitemap_url"), F.explode(locs).alias("loc"))
+        .select(F.col("url").alias("sitemap_url"), F.explode(locs).alias("loc"))
         .select("sitemap_url", _unescape_xml(F.col("loc")).alias("seed_url"))
         .where(F.col("seed_url") != "")
         .distinct()
@@ -287,9 +284,7 @@ def discover_sitemap_seeds(pages: DataFrame) -> DataFrame:
     return sitemap_seeds(bodies)
 
 
-def url_trap_features(
-    urls: DataFrame, url_col: str = "url"
-) -> DataFrame:
+def url_trap_features(urls: DataFrame) -> DataFrame:
     """Crawl-trap signals per URL — the classic frontier defenses
     against calendar pages, session-id explosions and recursive path
     loops (each one an infinite URL space a polite crawler must not
@@ -302,8 +297,8 @@ def url_trap_features(
       has_session_id      sess/sid/phpsessid/jsessionid param present
       trap_score          weighted sum; schedule sorts ascending
     """
-    path = F.parse_url(F.col(url_col), F.lit("PATH"))
-    query = F.parse_url(F.col(url_col), F.lit("QUERY"))
+    path = F.parse_url(F.col("url"), F.lit("PATH"))
+    query = F.parse_url(F.col("url"), F.lit("QUERY"))
     segs = F.filter(F.split(path, "/"), lambda s: s != "")
     n_seg = F.size(segs)
     n_dist = F.size(F.array_distinct(segs))
@@ -324,7 +319,7 @@ def url_trap_features(
         + F.when(has_sess, 5).otherwise(0)
     )
     return urls.select(
-        F.col(url_col),
+        F.col("url"),
         n_seg.alias("path_depth"),
         n_params.alias("n_query_params"),
         dup_frac.alias("dup_segment_frac"),

@@ -108,7 +108,7 @@ def synthesize_media(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def image_features(media: DataFrame, blob_col: str = "blob") -> DataFrame:
+def image_features(media: DataFrame) -> DataFrame:
     """Feature extraction: mean/std/histogram over decoded pixels via
     mapInPandas (batch shape: one row in -> one row out, feature
     array column)."""

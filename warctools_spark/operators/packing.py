@@ -29,8 +29,6 @@ from warctools_spark.operators.text_analysis import token_count
 def pack_sequences(
     docs: DataFrame,
     seq_len: int = 2048,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_parts: int | None = None,
 ) -> DataFrame:
     """(doc_id, n_tokens, tok_start, seq_first, seq_last): each doc's
@@ -41,13 +39,13 @@ def pack_sequences(
         n_parts = spark.sparkContext.defaultParallelism
 
     sized = docs.select(
-        F.col(id_col), token_count(F.col(text_col)).alias("n_tokens")
-    ).repartitionByRange(n_parts, F.col(id_col))
+        F.col("doc_id"), token_count(F.col("text")).alias("n_tokens")
+    ).repartitionByRange(n_parts, F.col("doc_id"))
 
     with_pid = sized.withColumn("__pid", F.spark_partition_id())
     w = (
         Window.partitionBy("__pid")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     # localCheckpoint: two actions consume `local` (the totals collect
@@ -83,7 +81,7 @@ def pack_sequences(
     )
     tok_start = F.col("__cum") - F.col("n_tokens")
     return cum.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         tok_start.alias("tok_start"),
         F.floor(tok_start / seq_len).cast("long").alias("seq_first"),

@@ -32,30 +32,26 @@ def hash_unit(id_col: Column, seed: str) -> Column:
 def stratified_sample(
     docs: DataFrame,
     fractions: dict[str, float],
-    seed: str = "mix-v1",
-    stratum_col: str = "source",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Keep each row iff hash_unit(seed, id) < fraction[its stratum].
     Strata absent from `fractions` are dropped (fraction 0)."""
     frac = F.lit(0.0)
     for name, f in sorted(fractions.items()):
-        frac = F.when(F.col(stratum_col) == name, F.lit(float(f))).otherwise(frac)
-    return docs.where(hash_unit(F.col(id_col), seed) < frac)
+        frac = F.when(F.col("source") == name, F.lit(float(f))).otherwise(frac)
+    return docs.where(hash_unit(F.col("doc_id"), "mix-v1") < frac)
 
 
 def mix_report(
     docs: DataFrame,
     sampled: DataFrame,
-    stratum_col: str = "source",
 ) -> DataFrame:
     """Achieved-vs-corpus mixing ratios per stratum (audit table)."""
-    tot = docs.groupBy(stratum_col).agg(F.count("*").alias("n_corpus"))
-    got = sampled.groupBy(stratum_col).agg(F.count("*").alias("n_sampled"))
+    tot = docs.groupBy("source").agg(F.count("*").alias("n_corpus"))
+    got = sampled.groupBy("source").agg(F.count("*").alias("n_sampled"))
     return (
-        tot.join(got, stratum_col, "left")
+        tot.join(got, "source", "left")
         .select(
-            stratum_col,
+            "source",
             "n_corpus",
             F.coalesce("n_sampled", F.lit(0)).alias("n_sampled"),
             F.round(
@@ -68,9 +64,6 @@ def mix_report(
 def fixed_n_sample(
     docs: DataFrame,
     n_per_stratum: int,
-    seed: str = "mix-v1",
-    stratum_col: str = "source",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Exactly-N-per-stratum deterministic sample: rank rows inside
     each stratum by the (seed, id) hash and keep the N smallest.
@@ -85,8 +78,8 @@ def fixed_n_sample(
     test_plan_quality)."""
     from pyspark.sql import Window
 
-    h = hash_unit(F.col(id_col), seed)
-    w = Window.partitionBy(stratum_col).orderBy(h.asc(), F.col(id_col).asc())
+    h = hash_unit(F.col("doc_id"), "mix-v1")
+    w = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
     return (
         docs.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= n_per_stratum)
@@ -123,8 +116,6 @@ def skew_report(
 def split_assign(
     docs: DataFrame,
     weights: dict[str, float] | None = None,
-    seed: str = "split-v1",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic train/val/test assignment: each row lands in the
     split whose cumulative-weight interval contains hash_unit(seed,
@@ -139,7 +130,7 @@ def split_assign(
     total = float(sum(weights.values()))
     expr = None
     cum = 0.0
-    u = hash_unit(F.col(id_col), seed)
+    u = hash_unit(F.col("doc_id"), "split-v1")
     items = sorted(weights.items())
     for name, w in items[:-1]:
         # round the cumulative threshold to 12 decimals: float
@@ -259,11 +250,6 @@ def _bucket_log_ratio(
 def dsir_weights(
     docs: DataFrame,
     target: DataFrame | None = None,
-    n_buckets: int = _DSIR_BUCKETS,
-    alpha: float = 1.0,
-    seed: str = "dsir-v1",
-    text_col: str = "text",
-    id_col: str = "doc_id",
     target_predicate: Column | str | None = None,
 ) -> DataFrame:
     """DSIR importance log-weights: score every raw document by how
@@ -303,19 +289,19 @@ def dsir_weights(
         )
         both = _hashed_gram_counts(
             docs.withColumn("__is_target", pred.cast("boolean")),
-            text_col,
-            id_col,
-            n_buckets,
-            seed,
+            "text",
+            "doc_id",
+            _DSIR_BUCKETS,
+            "dsir-v1",
         )
         docs_b = both.drop("__is_target")
         target_b = both.where(F.col("__is_target")).drop("__is_target")
     else:
-        docs_b = _hashed_gram_counts(docs, text_col, id_col, n_buckets, seed)
+        docs_b = _hashed_gram_counts(docs, "text", "doc_id", _DSIR_BUCKETS, "dsir-v1")
         target_b = _hashed_gram_counts(
-            target, text_col, id_col, n_buckets, seed
+            target, "text", "doc_id", _DSIR_BUCKETS, "dsir-v1"
         )
-    lam = _bucket_log_ratio(docs_b, target_b, n_buckets, alpha)
+    lam = _bucket_log_ratio(docs_b, target_b, _DSIR_BUCKETS, 1.0)
     wts = (
         docs_b.join(F.broadcast(lam), "bucket")
         .groupBy("__id")
@@ -325,10 +311,10 @@ def dsir_weights(
         )
     )
     return (
-        docs.select(F.col(id_col).alias("__id"))
+        docs.select(F.col("doc_id").alias("__id"))
         .join(wts, "__id", "left")
         .select(
-            F.col("__id").alias(id_col),
+            F.col("__id").alias("doc_id"),
             F.coalesce(F.col("n_grams"), F.lit(0).cast("long")).alias("n_grams"),
             F.coalesce(F.col("log_weight"), F.lit(0.0)).alias("log_weight"),
         )
@@ -339,11 +325,6 @@ def dsir_select(
     docs: DataFrame,
     target: DataFrame | None = None,
     k: int = 100,
-    n_buckets: int = _DSIR_BUCKETS,
-    alpha: float = 1.0,
-    seed: str = "dsir-v1",
-    text_col: str = "text",
-    id_col: str = "doc_id",
     target_predicate: Column | str | None = None,
 ) -> DataFrame:
     """DSIR selection stage: Gumbel-top-k resampling over the
@@ -351,7 +332,7 @@ def dsir_select(
     replacement with probability proportional to w(x) (Xie et al.
     2023 §2.2; Gumbel trick: argtop-k of log w + Gumbel noise). The
     noise is DERIVED from md5(id), not drawn, so the selected set is
-    a pure function of (seed, corpus) — reproducible across reruns,
+    a pure function of the corpus — reproducible across reruns,
     partitionings and engines, like every sampler in this module.
 
     Scores are rounded to 4 decimals BEFORE the top-k ordering with
@@ -361,23 +342,14 @@ def dsir_select(
     Scale: top-k by ORDER BY+LIMIT compiles to TakeOrderedAndProject
     — per-partition heaps then a driver merge of k rows, never a
     global sort."""
-    wts = dsir_weights(
-        docs,
-        target,
-        n_buckets,
-        alpha,
-        seed,
-        text_col,
-        id_col,
-        target_predicate=target_predicate,
-    )
+    wts = dsir_weights(docs, target, target_predicate=target_predicate)
     # u in (0,1): (h + 0.5) / MOD can't hit the ln(0) endpoints
-    h = _hash_mod(F.col(id_col), seed + "-gumbel", _MOD)
+    h = _hash_mod(F.col("doc_id"), "dsir-v1-gumbel", _MOD)
     u = (h.cast("double") + 0.5) / F.lit(float(_MOD))
     g = -F.log(-F.log(u))
     return (
         wts.withColumn("dsir_score", F.round(F.col("log_weight") + g, 4))
-        .orderBy(F.col("dsir_score").desc(), F.col(id_col).asc())
+        .orderBy(F.col("dsir_score").desc(), F.col("doc_id").asc())
         .limit(k)
-        .select(id_col, "n_grams", "log_weight", "dsir_score")
+        .select("doc_id", "n_grams", "log_weight", "dsir_score")
     )

@@ -105,7 +105,6 @@ def build_bloom(
     m_bits: int | None = None,
     k_hashes: int | None = None,
     fpr: float = 0.01,
-    expected_per_bucket: int | None = None,
 ) -> DataFrame:
     """seen(url_sha1) -> one row per bucket:
     (bucket int, m int, k int, version int, bits binary).
@@ -114,9 +113,7 @@ def build_bloom(
     keys into one bitset; only n_buckets * m/8 bytes cross the wire.
     """
     if m_bits is None or k_hashes is None:
-        n = expected_per_bucket or max(
-            seen.count() // max(n_buckets, 1), 1
-        )
+        n = max(seen.count() // max(n_buckets, 1), 1)
         m_bits, k_hashes = optimal_params(n, fpr)
     m, k = m_bits, k_hashes
 
@@ -307,7 +304,6 @@ def two_tier_dedup(
     candidates: DataFrame,
     seen: DataFrame,
     n_buckets: int = 32,
-    fpr: float = 0.01,
     seen_filter: DataFrame | None = None,
 ) -> DataFrame:
     """Exact frontier \\ seen with a filter fast path.
@@ -316,7 +312,7 @@ def two_tier_dedup(
     exactness is preserved because filter negatives cannot be in `seen`.
 
     `seen_filter` is a Bloom or cuckoo table (see probe_bucketed);
-    None builds a Bloom table over `seen` at the target `fpr`. Pass a
+    None builds a Bloom table over `seen` at a 1% target FPR. Pass a
     prebuilt table (e.g. incrementally maintained via union_blooms or
     cuckoo.insert_into_cuckoo across epochs) to skip the O(|seen|)
     rebuild. It MUST cover at least the keys of `seen` — extra keys
@@ -324,7 +320,7 @@ def two_tier_dedup(
     positive), but a missing key would leak a duplicate.
     """
     if seen_filter is None:
-        seen_filter = build_bloom(seen, n_buckets=n_buckets, fpr=fpr)
+        seen_filter = build_bloom(seen, n_buckets=n_buckets)
     probed = probe_bucketed(candidates, seen_filter, n_buckets)
     definitely_new = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
     suspects = probed.where(F.col("maybe_seen")).drop("maybe_seen")

@@ -43,14 +43,13 @@ def brute_force_topk(
     emb: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k with a deterministic id tiebreak."""
     return (
         cosine_to_query(emb, query_vec, vec_col)
-        .select(F.col(id_col), F.round(F.col("cosine"), 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+        .select(F.col("vec_id"), F.round(F.col("cosine"), 6).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -59,16 +58,12 @@ def lsh_topk(
     emb: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bands: int = 4,
-    bits_per_band: int = 8,
     dims: int | None = None,
 ) -> DataFrame:
     """ANN top-k via banded hyperplane LSH probe + exact rerank — the
     scale path beyond brute force: candidates are rows sharing
-    the query's band key in ANY band (expected corpus fraction
-    ~bands/2^bits), reranked by exact cosine.
+    the query's band key in ANY of 4 bands of 8 bits (expected corpus
+    fraction ~4/2^8), reranked by exact cosine.
 
     Plan shape: the probe is a literal isin() filter on precomputed
     band keys — pushdown-able to the scan, and partition-pruning if
@@ -86,8 +81,8 @@ def lsh_topk(
     # dims must match BOTH sides: a mismatch makes the corpus-side
     # zip_with null out (all-zeros keys) while the driver-side query
     # keys stay real — candidates go near-empty with no error
-    dims = _resolve_dims(emb, vec_col, dims)
-    emb = _require_dims(emb, vec_col, dims)
+    dims = _resolve_dims(emb, "embedding", dims)
+    emb = _require_dims(emb, "embedding", dims)
     if len(query_vec) != dims:
         raise ValueError(
             f"query_vec has {len(query_vec)} dims but corpus embeddings "
@@ -96,20 +91,20 @@ def lsh_topk(
 
     # query-side keys computed driver-side with the same hyperplanes
     probe_keys = []
-    for b in range(bands):
+    for b in range(4):
         bits = []
-        for j in range(bits_per_band):
+        for j in range(8):
             h = _hyperplane(b, j, dims)
             dot = sum(x * y for x, y in zip(query_vec, h))
             bits.append("1" if dot >= 0 else "0")
         probe_keys.append(f"{b}:{''.join(bits)}")
 
     keyed = emb.withColumn(
-        "__v", F.col(vec_col).cast("array<double>")
+        "__v", F.col("embedding").cast("array<double>")
     ).withColumn(
         "__bk",
         F.transform(
-            hyperplane_band_keys("__v", bands, bits_per_band, dims),
+            hyperplane_band_keys("__v", 4, 8, dims),
             lambda s: F.concat(
                 s["band"].cast("string"), F.lit(":"), s["band_key"]
             ),
@@ -120,7 +115,7 @@ def lsh_topk(
             "__bk", F.array(*[F.lit(p) for p in probe_keys])
         )
     ).drop("__bk", "__v")
-    return brute_force_topk(cands, query_vec, k, id_col, vec_col)
+    return brute_force_topk(cands, query_vec, k)
 
 
 def _sq_dist(vec: Column, centroid: list[float]) -> Column:
@@ -139,9 +134,6 @@ def kmeans_assign(
     emb: DataFrame,
     k: int = 8,
     iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_centroids: int = 6,
     assign_mode: str = "auto",
 ) -> DataFrame:
     """Deterministic Lloyd k-means over an embedding column — the
@@ -151,7 +143,7 @@ def kmeans_assign(
 
     Determinism: centroids initialize to the vectors of the k lowest
     ids (no RNG); assignment argmin breaks ties on cluster id; updated
-    centroids round to `round_centroids` decimals so the ~1e-13
+    centroids round to 6 decimals so the ~1e-13
     summation-order noise of a distributed avg cannot flip later
     assignments between runs or engines.
 
@@ -170,10 +162,10 @@ def kmeans_assign(
     cluster). Returns (id, cluster, dist) with dist rounded to 6.
     """
     assigned, _ = _lloyd(
-        emb, k, iterations, id_col, vec_col, round_centroids, assign_mode
+        emb, k, iterations, "vec_id", "embedding", 6, assign_mode
     )
     return assigned.select(
-        id_col,
+        "vec_id",
         "cluster",
         F.round(F.sqrt(F.col("__d2")), 6).alias("dist"),
     )
@@ -313,8 +305,6 @@ def ivf_kmeans_topk(
     n_cells: int = 8,
     iterations: int = 2,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN top-k over a kmeans-trained IVF index (the classic
     inverted-file ANN: Lloyd centroids as the coarse quantizer).
@@ -334,11 +324,11 @@ def ivf_kmeans_topk(
     once and reused across queries — this entry trains per call only
     so the whole path stays one oracle-checkable expression."""
     assigned, centroids = _lloyd(
-        emb, n_cells, iterations, id_col, vec_col, 6, "expr"
+        emb, n_cells, iterations, "vec_id", "embedding", 6, "expr"
     )
     probe = _select_probe_cells(centroids, query_vec, n_probe)
     cands = assigned.where(F.col("cluster").isin(probe))
-    return brute_force_topk(cands, query_vec, k, id_col, vec_col="__v")
+    return brute_force_topk(cands, query_vec, k, vec_col="__v")
 
 
 def _select_probe_cells(
@@ -372,8 +362,6 @@ def semdedup_survivors(
     k: int = 8,
     iterations: int = 2,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023 pattern, public): cluster the
     embeddings, then drop any vector whose cluster contains a
@@ -386,17 +374,17 @@ def semdedup_survivors(
     (n/k)² work — k is the knob that bounds per-task cost. Keeper
     choice (lowest id) is deterministic; the cosine is rounded to 6
     before thresholding so engine fp noise cannot flip membership."""
-    assigned = kmeans_assign(emb, k, iterations, id_col, vec_col).select(
-        F.col(id_col), "cluster"
+    assigned = kmeans_assign(emb, k, iterations).select(
+        F.col("vec_id"), "cluster"
     )
     keyed = emb.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
-    ).join(assigned, id_col)
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("__v")
+    ).join(assigned, "vec_id")
     a = keyed.select(
-        F.col(id_col).alias("id_a"), "cluster", F.col("__v").alias("__va")
+        F.col("vec_id").alias("id_a"), "cluster", F.col("__v").alias("__va")
     )
     b = keyed.select(
-        F.col(id_col).alias("id_b"), "cluster", F.col("__v").alias("__vb")
+        F.col("vec_id").alias("id_b"), "cluster", F.col("__v").alias("__vb")
     )
     cos = _dot(F.col("__va"), F.col("__vb")) / (
         _norm(F.col("__va")) * _norm(F.col("__vb"))
@@ -405,9 +393,9 @@ def semdedup_survivors(
         a.join(b, "cluster")
         .where(F.col("id_b") < F.col("id_a"))
         .where(F.round(cos, 6) >= threshold)
-        .select(F.col("id_a").alias(id_col))
+        .select(F.col("id_a").alias("vec_id"))
         .distinct()
     )
-    return keyed.join(dropped, id_col, "left_anti").select(
-        F.col(id_col), "cluster"
+    return keyed.join(dropped, "vec_id", "left_anti").select(
+        F.col("vec_id"), "cluster"
     )

@@ -60,14 +60,10 @@ def _cms_hashed(
 
 def cms_top_tokens(
     docs: DataFrame,
-    width: int = 1024,
-    depth: int = 4,
     k: int = 20,
-    seed: str = "cms-v1",
-    text_col: str = "text",
 ) -> DataFrame:
     """Count-min-sketch heavy hitters: estimate every token's corpus
-    count from a depth x width counter grid — est(t) = min over rows
+    count from a depth x width (4 x 1024) counter grid — est(t) = min over rows
     j of counter[j][h_j(t)] — and return the top-k by estimate, with
     the exact count alongside as the overestimate audit (CMS error is
     one-sided: n_cms >= n_exact always, overshoot <= corpus_tokens *
@@ -82,8 +78,8 @@ def cms_top_tokens(
     input. The counter grid is depth*width rows REGARDLESS of corpus
     size — it broadcasts, and a per-epoch grid merges into a lifetime
     grid by elementwise sum."""
-    freq = _token_freq(docs, text_col)
-    hashed = _cms_hashed(freq, width, depth, seed)
+    freq = _token_freq(docs, "text")
+    hashed = _cms_hashed(freq, 1024, 4, "cms-v1")
     counters = hashed.groupBy("j", "bucket").agg(
         F.sum("n_exact").cast("long").alias("cnt")
     )
@@ -102,7 +98,6 @@ def hll_distinct(
     df: DataFrame,
     value_col: str,
     m: int = 256,
-    seed: str = "hll-v1",
 ) -> DataFrame:
     """Deterministic HyperLogLog distinct-count estimate, with the
     exact count alongside as the error audit. Standard HLL over a
@@ -124,7 +119,7 @@ def hll_distinct(
     the audit only; a production tick reads just the register table.
 
     m=256 -> ~1.04/sqrt(256) = 6.5% standard error in ~256 bytes."""
-    reg = hll_registers(df, value_col, m, seed)
+    reg = hll_registers(df, value_col, m)
     exact = df.agg(F.countDistinct(value_col).cast("long").alias("n_exact"))
     return (
         _hll_stats(reg, m)
@@ -143,7 +138,6 @@ def hll_registers(
     df: DataFrame,
     value_col: str,
     m: int = 256,
-    seed: str = "hll-v1",
 ) -> DataFrame:
     """The HLL register table for a value set: (idx, minv), at most m
     rows. minv is the MIN of the post-index hash bits per register,
@@ -151,7 +145,7 @@ def hll_registers(
     map-side-combinable min() agg is the only corpus-sized stage."""
     _check_m(m)
     p = m.bit_length() - 1
-    h = _hash60(F.col(value_col), seed)
+    h = _hash60(F.col(value_col), "hll-v1")
     # idx from the low p bits, v from the high bits — bit ops, never
     # float division (a 60-bit value does not fit a double mantissa)
     return (

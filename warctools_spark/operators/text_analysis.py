@@ -62,10 +62,10 @@ def lang_id(col: Column) -> Column:
     return best
 
 
-def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(docs: DataFrame) -> DataFrame:
     """Length / punctuation / stopword / repetition features per doc —
     the standard web-text quality gates."""
-    c = F.col(text_col)
+    c = F.col("text")
     toks = tokens(c)
     n_tok = token_count(c)
     return docs.withColumns(
@@ -89,10 +89,10 @@ def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Composite 0..100 quality score from integer features (exact
     arithmetic; oracle-replayable)."""
-    feats = quality_features(docs, text_col)
+    feats = quality_features(docs)
     rep_ratio = F.col("n_distinct_tokens") / F.greatest(F.col("n_tokens"), F.lit(1))
     stop_ratio = F.col("n_stopwords_en") / F.greatest(F.col("n_tokens"), F.lit(1))
     punct_ratio = F.col("n_punct") / F.greatest(F.col("n_chars2"), F.lit(1))
@@ -105,9 +105,9 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return feats.withColumn("quality_score", F.round(score, 4))
 
 
-def fingerprint(col: Column, k: int = 8, prenormalized: bool = False) -> Column:
+def fingerprint(col: Column, prenormalized: bool = False) -> Column:
     """Rolling-window document fingerprint: min-md5 over character
-    k-gram windows (winnowing-style selection of 1 hash), plus the
+    8-gram windows (winnowing-style selection of 1 hash), plus the
     full-content md5 — both engine-agnostic.
 
     prenormalized=True expects `col` to already be the normalized
@@ -118,24 +118,24 @@ def fingerprint(col: Column, k: int = 8, prenormalized: bool = False) -> Column:
     norm = col if prenormalized else F.trim(
         F.regexp_replace(F.lower(col), r"\s+", " ")
     )
-    n = F.length(norm) - (k - 1)
+    n = F.length(norm) - 7
     grams = F.when(
         n > 0,
-        F.transform(F.sequence(F.lit(1), n), lambda i: F.substring(norm, i, k)),
+        F.transform(F.sequence(F.lit(1), n), lambda i: F.substring(norm, i, 8)),
     ).otherwise(F.array(norm))
     return F.array_min(F.transform(grams, F.md5))
 
 
-def doc_fingerprints(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def doc_fingerprints(docs: DataFrame) -> DataFrame:
     # hoist the normalized text into a projected column: inlined in
     # fingerprint()'s per-position lambda the whole-document regexp
     # normalize would re-run once PER CHARACTER GRAM (the §word_ngrams
     # r6 lesson, quadratic in doc length here)
     normed = docs.select(
-        F.col(id_col), normalize(F.col(text_col)).alias("__norm")
+        F.col("doc_id"), normalize(F.col("text")).alias("__norm")
     )
     return normed.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.md5(F.col("__norm")).alias("content_md5"),
         fingerprint(F.col("__norm"), prenormalized=True).alias(
             "min_kgram_md5"
@@ -147,9 +147,7 @@ def normalize(col: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
-def token_frequencies(
-    docs: DataFrame, text_col: str = "text", top_k: int | None = None
-) -> DataFrame:
+def token_frequencies(docs: DataFrame, top_k: int | None = None) -> DataFrame:
     """Global token frequency table (corpus statistics for tokenizer
     training / vocabulary audits): explode normalized whitespace
     tokens, one hash-agg count with map-side partial aggregation —
@@ -157,7 +155,7 @@ def token_frequencies(
     per occurrence. Optional exact global top-k via
     TakeOrderedAndProject (no full sort)."""
     toks = docs.select(
-        F.explode(tokens(F.col(text_col))).alias("token")
+        F.explode(tokens(F.col("text"))).alias("token")
     ).where(F.col("token") != "")
     counts = toks.groupBy("token").agg(F.count("*").alias("n"))
     if top_k:
@@ -174,14 +172,14 @@ PII_PATTERNS = {
 }
 
 
-def scrub_pii(col: Column, kinds: tuple = ("email", "ipv4", "phone")) -> Column:
+def scrub_pii(col: Column) -> Column:
     """Redact PII spans with <KIND> placeholders — the standard
     pre-training scrub pass; pure JVM regexp_replace chain, applied in
     a fixed order so overlapping matches resolve deterministically
     (ipv4 before phone: the phone charset includes digits and dots, so
     it would otherwise swallow IP addresses)."""
     out = col
-    for kind in kinds:
+    for kind in ("email", "ipv4", "phone"):
         out = F.regexp_replace(
             out, PII_PATTERNS[kind], "<%s>" % kind.upper()
         )
@@ -217,9 +215,7 @@ def word_ngrams(col: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def repetition_features(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_features(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition quality gates (Rae et al. 2021 §A1.1):
     per-document fraction of tokens that are repeats, fraction taken
     by the single most frequent token, and the same two measures over
@@ -236,18 +232,18 @@ def repetition_features(
 
     def stats(n: int, prefix: str) -> DataFrame:
         rows = docs.select(
-            F.col(id_col), F.explode(word_ngrams(F.col(text_col), n)).alias("g")
+            F.col("doc_id"), F.explode(word_ngrams(F.col("text"), n)).alias("g")
         ).where(F.col("g") != "")
-        per_gram = rows.groupBy(id_col, "g").agg(F.count("*").alias("c"))
-        return per_gram.groupBy(id_col).agg(
+        per_gram = rows.groupBy("doc_id", "g").agg(F.count("*").alias("c"))
+        return per_gram.groupBy("doc_id").agg(
             F.sum("c").alias(f"{prefix}_total"),
             F.count("*").alias(f"{prefix}_distinct"),
             F.max("c").alias(f"{prefix}_top"),
         )
 
     t1, t2 = stats(1, "t1"), stats(2, "t2")
-    base = docs.select(id_col)
-    out = base.join(t1, id_col, "left").join(t2, id_col, "left")
+    base = docs.select("doc_id")
+    out = base.join(t1, "doc_id", "left").join(t2, "doc_id", "left")
     tot1 = F.greatest(F.coalesce("t1_total", F.lit(0)), F.lit(1))
     tot2 = F.greatest(F.coalesce("t2_total", F.lit(0)), F.lit(1))
 
@@ -258,7 +254,7 @@ def repetition_features(
         )
 
     return out.select(
-        id_col,
+        "doc_id",
         F.coalesce("t1_total", F.lit(0)).alias("n_tokens"),
         frac(
             1 - F.coalesce("t1_distinct", F.lit(0)) / tot1, "t1_total"
@@ -275,14 +271,12 @@ def repetition_features(
     )
 
 
-def gopher_gate(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def gopher_gate(docs: DataFrame) -> DataFrame:
     """Composed Gopher-style document gate (Rae et al. 2021 Table A1):
     length + repetition thresholds folded into a keep/drop decision
     with machine-readable reasons. Same plan shape as
     repetition_features (it is that plan plus a projection)."""
-    feats = repetition_features(docs, text_col=text_col, id_col=id_col)
+    feats = repetition_features(docs)
     reasons = F.concat_ws(
         ",",
         F.filter(
@@ -299,7 +293,7 @@ def gopher_gate(
         ),
     )
     return feats.select(
-        id_col,
+        "doc_id",
         reasons.alias("drop_reasons"),
     ).withColumn("keep", F.col("drop_reasons") == "")
 
@@ -333,7 +327,6 @@ def strip_boilerplate(col: Column) -> Column:
 def ngram_frequencies(
     docs: DataFrame,
     n: int = 2,
-    text_col: str = "text",
     top_k: int | None = None,
 ) -> DataFrame:
     """Global word n-gram frequency table (vocabulary induction /
@@ -341,7 +334,7 @@ def ngram_frequencies(
     as token_frequencies: explode, one map-side-combined hash agg,
     exact top-k via TakeOrderedAndProject."""
     grams = docs.select(
-        F.explode(word_ngrams(F.col(text_col), n)).alias("gram")
+        F.explode(word_ngrams(F.col("text"), n)).alias("gram")
     ).where(F.col("gram") != "")
     counts = grams.groupBy("gram").agg(F.count("*").alias("n"))
     if top_k:
@@ -383,9 +376,6 @@ def anchor_text_pairs(
 def tfidf_keywords(
     docs: DataFrame,
     k: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_docs: int | None = None,
 ) -> DataFrame:
     """Per-document top-k keywords by TF-IDF — the classic relevance
     signal for corpus exploration / keyword indexing over a crawl.
@@ -402,15 +392,14 @@ def tfidf_keywords(
     ordering is deterministic and oracle-checkable."""
     from pyspark.sql import Window
 
-    if n_docs is None:
-        n_docs = docs.select(id_col).distinct().count()
+    n_docs = docs.select("doc_id").distinct().count()
     toks = docs.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term")
+        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("term")
     ).where(F.col("term") != "")
-    tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     score = F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df"))
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         score.desc(), F.col("term").asc()
     )
     return (
@@ -418,7 +407,7 @@ def tfidf_keywords(
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
         .select(
-            id_col,
+            "doc_id",
             "term",
             "tf",
             "df",
@@ -429,8 +418,6 @@ def tfidf_keywords(
 
 def inverted_index(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_df: int = 1,
     segment_size: int | None = 100_000,
 ) -> DataFrame:
@@ -444,21 +431,17 @@ def inverted_index(
     required."""
     if segment_size is None:
         return inverted_index_flat(
-            docs, text_col=text_col, id_col=id_col, min_df=min_df
+            docs, min_df=min_df
         )
     return inverted_index_segmented(
         docs,
         segment_size=segment_size,
-        text_col=text_col,
-        id_col=id_col,
         min_df=min_df,
     )
 
 
 def inverted_index_flat(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_df: int = 1,
 ) -> DataFrame:
     """Flat positional inverted index: one row per term with its
@@ -476,18 +459,18 @@ def inverted_index_flat(
     entry point; this variant is for small corpora or strict
     one-row-per-term consumers."""
     toks = docs.select(
-        F.col(id_col),
-        F.posexplode(tokens(F.col(text_col))).alias("pos", "term"),
+        F.col("doc_id"),
+        F.posexplode(tokens(F.col("text"))).alias("pos", "term"),
     ).where(F.col("term") != "")
     agg = toks.groupBy("term").agg(
         F.count("*").alias("n_postings"),
-        F.countDistinct(id_col).alias("df"),
+        F.countDistinct("doc_id").alias("df"),
         F.array_join(
             F.transform(
                 F.sort_array(
-                    F.collect_list(F.struct(F.col(id_col), F.col("pos")))
+                    F.collect_list(F.struct(F.col("doc_id"), F.col("pos")))
                 ),
-                lambda s: F.concat_ws(":", s[id_col].cast("string"),
+                lambda s: F.concat_ws(":", s["doc_id"].cast("string"),
                                       s["pos"].cast("string")),
             ),
             ",",
@@ -496,12 +479,7 @@ def inverted_index_flat(
     return agg.where(F.col("df") >= min_df)
 
 
-def unigram_logprob(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    total_tokens: int | None = None,
-) -> DataFrame:
+def unigram_logprob(docs: DataFrame) -> DataFrame:
     """Per-document mean unigram negative log-probability under the
     corpus's own unigram model — the CCNet-style fluency/quality proxy
     (a document of globally-rare tokens scores high = unusual; boiler-
@@ -513,21 +491,12 @@ def unigram_logprob(
     vocab fits), one per-doc avg agg. Every count is exact, the only
     float is the final ln/avg (rounded for oracle comparison)."""
     toks = docs.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token")
+        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("token")
     ).where(F.col("token") != "")
     freq = toks.groupBy("token").agg(F.count("*").alias("n"))
-    if total_tokens is None:
-        # lazy total: sum the (small) vocab table and broadcast the
-        # single row — no extra eager pass over the corpus
-        total = F.broadcast(
-            freq.agg(F.sum("n").cast("double").alias("__T"))
-        )
-    else:
-        total = F.broadcast(
-            docs.sparkSession.range(1).select(
-                F.lit(float(total_tokens)).alias("__T")
-            )
-        )
+    # lazy total: sum the (small) vocab table and broadcast the single
+    # row — no extra eager pass over the corpus
+    total = F.broadcast(freq.agg(F.sum("n").cast("double").alias("__T")))
     neg_lp = -F.log(F.col("n") / F.col("__T"))
     # round to 4: the avg sums doubles in partition order, so the last
     # ~1e-11 is nondeterministic — 1e-4 is far above the noise floor
@@ -535,7 +504,7 @@ def unigram_logprob(
     return (
         toks.join(freq, "token")
         .crossJoin(total)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_tokens"),
             F.round(F.avg(neg_lp), 4).alias("mean_neg_logprob"),
@@ -548,7 +517,6 @@ def chunk_documents(
     window: int = 256,
     stride: int = 128,
     text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Sliding-window token chunking — the context-window prep stage
     for RAG indexing / long-document training: each doc becomes
@@ -573,7 +541,7 @@ def chunk_documents(
     # in the per-chunk lambda the split()/token_count would re-run
     # once per chunk (word_ngrams r6 note)
     toked = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         tokens(F.col(text_col)).alias("__toks"),
         token_count(F.col(text_col)).alias("__n"),
     )
@@ -598,8 +566,8 @@ def chunk_documents(
             F.array_join(F.slice(toks, s + 1, window), " ").alias("chunk"),
         ),
     )
-    return toked.select(F.col(id_col), F.explode(chunks).alias("c")).select(
-        id_col,
+    return toked.select(F.col("doc_id"), F.explode(chunks).alias("c")).select(
+        "doc_id",
         F.col("c.chunk_id").alias("chunk_id"),
         F.col("c.tok_start").alias("tok_start"),
         F.col("c.n_tokens").alias("n_tokens"),
@@ -610,7 +578,6 @@ def chunk_documents(
 def corpus_drift(
     docs_a: DataFrame,
     docs_b: DataFrame,
-    text_col: str = "text",
 ) -> DataFrame:
     """One-row drift report between two corpus snapshots (e.g. this
     month's crawl vs last month's): token totals, vocabulary sizes and
@@ -625,8 +592,8 @@ def corpus_drift(
     the final smoothed log terms (rounded to 4, far above the
     summation-order noise floor).
     """
-    fa = token_frequencies(docs_a, text_col).withColumnRenamed("n", "na")
-    fb = token_frequencies(docs_b, text_col).withColumnRenamed("n", "nb")
+    fa = token_frequencies(docs_a).withColumnRenamed("n", "na")
+    fb = token_frequencies(docs_b).withColumnRenamed("n", "nb")
     # LAZY local checkpoint of the (vocab-sized) joined table: both
     # the totals branch and the KL aggregate read it, so without this
     # each branch would re-scan both corpora. eager=False keeps
@@ -669,8 +636,6 @@ def corpus_drift(
 def inverted_index_segmented(
     docs: DataFrame,
     segment_size: int = 100_000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_df: int = 1,
 ) -> DataFrame:
     """Skew-proof inverted index: a stopword-grade term whose postings
@@ -695,16 +660,16 @@ def inverted_index_segmented(
     # BELOW the explode — once per document, not once per posting
     # (r6: the per-posting md5+conv alone cost ~1s at sf1.0)
     doc_hash = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
+        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
     ).cast("bigint")
     toks = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         doc_hash.alias("__dh"),
-        F.posexplode(tokens(F.col(text_col))).alias("pos", "term"),
+        F.posexplode(tokens(F.col("text"))).alias("pos", "term"),
     ).where(F.col("term") != "")
     counts = toks.groupBy("term").agg(
         F.count("*").alias("n_term_postings"),
-        F.countDistinct(id_col).alias("df"),
+        F.countDistinct("doc_id").alias("df"),
     )
     n_segments = F.ceil(
         F.col("n_term_postings") / F.lit(segment_size)
@@ -722,10 +687,10 @@ def inverted_index_segmented(
             F.array_join(
                 F.transform(
                     F.sort_array(
-                        F.collect_list(F.struct(F.col(id_col), F.col("pos")))
+                        F.collect_list(F.struct(F.col("doc_id"), F.col("pos")))
                     ),
                     lambda s: F.concat_ws(
-                        ":", s[id_col].cast("string"), s["pos"].cast("string")
+                        ":", s["doc_id"].cast("string"), s["pos"].cast("string")
                     ),
                 ),
                 ",",
@@ -734,38 +699,32 @@ def inverted_index_segmented(
     )
 
 
-def length_report(
-    docs: DataFrame, text_col: str = "text", exact: bool = True
-) -> DataFrame:
+def length_report(docs: DataFrame) -> DataFrame:
     """One-row token-length distribution report (the pre-training
     sanity check before length filtering / packing): doc count, token
     totals, mean, min/max, and interpolated p25/p50/p75/p95.
 
-    exact=True uses SQL `percentile` (interpolated, matches DuckDB's
+    Uses SQL `percentile` (interpolated, matches DuckDB's
     quantile_cont bit-for-bit) — it buffers the group's values in the
-    aggregation, fine up to ~10^8 docs. At larger scale pass
-    exact=False for approx_percentile (t-digest, bounded memory,
-    no SQL oracle)."""
-    n = token_count(F.col(text_col))
+    aggregation, fine up to ~10^8 docs."""
+    n = token_count(F.col("text"))
     base = docs.select(n.alias("n_tokens"))
-    pct = "percentile" if exact else "approx_percentile"
     return base.agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tokens").alias("total_tokens"),
         F.round(F.avg("n_tokens"), 6).alias("mean_tokens"),
         F.min("n_tokens").alias("min_tokens"),
         F.max("n_tokens").alias("max_tokens"),
-        F.expr(f"{pct}(n_tokens, 0.25)").alias("p25"),
-        F.expr(f"{pct}(n_tokens, 0.5)").alias("p50"),
-        F.expr(f"{pct}(n_tokens, 0.75)").alias("p75"),
-        F.expr(f"{pct}(n_tokens, 0.95)").alias("p95"),
+        F.expr("percentile(n_tokens, 0.25)").alias("p25"),
+        F.expr("percentile(n_tokens, 0.5)").alias("p50"),
+        F.expr("percentile(n_tokens, 0.75)").alias("p75"),
+        F.expr("percentile(n_tokens, 0.95)").alias("p95"),
     )
 
 
 def bpe_pair_counts(
     docs: DataFrame,
     top_n: int = 200,
-    text_col: str = "text",
 ) -> DataFrame:
     """Corpus-wide adjacent-character-pair frequencies inside
     whitespace words — the counting step of one BPE tokenizer-training
@@ -778,7 +737,7 @@ def bpe_pair_counts(
     sized, not corpus-sized — so the plan is a linear scan at 100 TB.
     Deterministic order: count desc, pair asc."""
     words = docs.select(
-        F.explode(tokens(F.col(text_col))).alias("w")
+        F.explode(tokens(F.col("text"))).alias("w")
     ).where(F.length("w") >= 2)
     pairs = words.select(
         F.explode(
@@ -800,8 +759,6 @@ def winnow_fingerprints(
     docs: DataFrame,
     k: int = 8,
     w: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken,
     SIGMOD 2003 — the MOSS algorithm): hash every character k-gram of
@@ -825,26 +782,26 @@ def winnow_fingerprints(
     keep it engine-portable for the oracle."""
     from pyspark.sql import Window
 
-    s = normalize(F.col(text_col))
-    base = docs.select(F.col(id_col), s.alias("__s")).where(
+    s = normalize(F.col("text"))
+    base = docs.select(F.col("doc_id"), s.alias("__s")).where(
         F.length("__s") >= k
     )
     g = base.select(
-        id_col,
+        "doc_id",
         (F.length("__s") - (k - 1)).alias("__n_grams"),
         F.explode(
             F.sequence(F.lit(1), F.length("__s") - (k - 1))
         ).alias("__gpos"),
         "__s",
     ).select(
-        id_col,
+        "doc_id",
         "__n_grams",
         "__gpos",
         F.md5(F.col("__s").substr(F.col("__gpos"), F.lit(k))).alias("__h"),
     )
     # rightmost-min tie-break: min over (hash, -pos) structs
     win = (
-        Window.partitionBy(id_col).orderBy("__gpos").rowsBetween(0, w - 1)
+        Window.partitionBy("doc_id").orderBy("__gpos").rowsBetween(0, w - 1)
     )
     sel = g.withColumn(
         "__m",
@@ -857,17 +814,13 @@ def winnow_fingerprints(
         F.col("__gpos") <= F.greatest(F.col("__n_grams") - (w - 1), F.lit(1))
     )
     return sel.select(
-        id_col,
+        "doc_id",
         (-F.col("__m.negpos")).cast("long").alias("pos"),
         F.col("__m.h").alias("fingerprint"),
     ).dropDuplicates()
 
 
-def bigram_logprob(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bigram_logprob(docs: DataFrame) -> DataFrame:
     """Per-document mean bigram negative log-probability under the
     corpus's own bigram model: mean over a doc's bigrams of
     -ln( count(w1 w2) / count(w1 as a bigram prefix) ) — the
@@ -887,29 +840,29 @@ def bigram_logprob(
     sum(c * neg_lp) / sum(c), identical to the occurrence average.
     All exact-integer counts; round-4 output for oracle
     comparison."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     z = F.arrays_zip(
         F.slice(toks, 1, F.size(toks) - 1),
         F.slice(toks, 2, F.size(toks) - 1),
     )
     bg = (
         docs.where(F.size(toks) >= 2)
-        .select(F.col(id_col), F.explode(z).alias("z"))
+        .select(F.col("doc_id"), F.explode(z).alias("z"))
         .select(
-            id_col,
+            "doc_id",
             F.col("z.0").alias("w1"),
             F.col("z.1").alias("w2"),
         )
         .where((F.col("w1") != "") & (F.col("w2") != ""))
     )
-    bgc = bg.groupBy(id_col, "w1", "w2").agg(F.count("*").alias("__c"))
+    bgc = bg.groupBy("doc_id", "w1", "w2").agg(F.count("*").alias("__c"))
     c12 = bgc.groupBy("w1", "w2").agg(F.sum("__c").alias("n12"))
     c1 = c12.groupBy("w1").agg(F.sum("n12").alias("n1"))
     neg_lp = -F.log(F.col("n12") / F.col("n1"))
     return (
         bgc.join(c12, ["w1", "w2"])
         .join(c1, "w1")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("__c").alias("n_bigrams"),
             F.round(
@@ -925,8 +878,6 @@ def winnow_match_scores(
     w: int = 4,
     min_shared: int = 3,
     max_doc_freq: int = 100,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Document-pair match scores from winnowing fingerprints — the
     MOSS pipeline's pairing stage: two docs sharing >= `min_shared`
@@ -944,9 +895,8 @@ def winnow_match_scores(
     combined) -> df-gated self-join co-partitioned on the fingerprint
     -> per-pair countDistinct >= min_shared."""
     fp = (
-        winnow_fingerprints(docs, k=k, w=w, text_col=text_col,
-                            id_col=id_col)
-        .select(id_col, "fingerprint")
+        winnow_fingerprints(docs, k=k, w=w)
+        .select("doc_id", "fingerprint")
         .distinct()
     )
     keep = (
@@ -956,8 +906,8 @@ def winnow_match_scores(
         .select("fingerprint")
     )
     fpk = fp.join(keep, "fingerprint")
-    a = fpk.withColumnRenamed(id_col, "id_a")
-    b = fpk.withColumnRenamed(id_col, "id_b")
+    a = fpk.withColumnRenamed("doc_id", "id_a")
+    b = fpk.withColumnRenamed("doc_id", "id_b")
     return (
         a.join(b, "fingerprint")
         .where(F.col("id_a") < F.col("id_b"))
@@ -967,11 +917,7 @@ def winnow_match_scores(
     )
 
 
-def ccnet_buckets(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def ccnet_buckets(docs: DataFrame) -> DataFrame:
     """CCNet-style perplexity bucketing (Wenzek et al. 2020,
     arXiv:1911.00359 §4.3): rank documents by language-model score —
     here the corpus-unigram mean_neg_logprob from unigram_logprob()
@@ -992,7 +938,7 @@ def ccnet_buckets(
     only ORDER BY is over that constant-bounded table."""
     from pyspark.sql import Window
 
-    s = unigram_logprob(docs, text_col=text_col, id_col=id_col)
+    s = unigram_logprob(docs)
     sc = s.groupBy("mean_neg_logprob").agg(F.count("*").cast("long").alias("__cnt"))
     w = Window.orderBy("mean_neg_logprob").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -1009,16 +955,11 @@ def ccnet_buckets(
         .alias("ppl_bucket"),
     )
     return s.join(F.broadcast(buckets), "mean_neg_logprob").select(
-        id_col, "n_tokens", "mean_neg_logprob", "ppl_bucket"
+        "doc_id", "n_tokens", "mean_neg_logprob", "ppl_bucket"
     )
 
 
-def ngram_novelty(
-    docs: DataFrame,
-    n: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def ngram_novelty(docs: DataFrame) -> DataFrame:
     """Per-document n-gram novelty: the fraction of a doc's distinct
     word n-gram shingles whose globally-FIRST occurrence (by doc id
     order) is this doc — the RefinedWeb/FineWeb-style "how much of
@@ -1044,20 +985,20 @@ def ngram_novelty(
     from warctools_spark.operators.dedup import shingles
 
     counts = docs.select(
-        F.col(id_col),
-        F.size(shingles(F.col(text_col), n)).cast("long").alias("n_shingles"),
+        F.col("doc_id"),
+        F.size(shingles(F.col("text"), 5)).cast("long").alias("n_shingles"),
     )
     sh = docs.select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), n)).alias("gram")
+        F.col("doc_id"), F.explode(shingles(F.col("text"), 5)).alias("gram")
     )
-    first = sh.groupBy("gram").agg(F.min(id_col).alias("__first"))
+    first = sh.groupBy("gram").agg(F.min("doc_id").alias("__first"))
     novel = first.groupBy("__first").agg(
         F.count("*").cast("long").alias("n_novel")
-    ).withColumnRenamed("__first", id_col)
+    ).withColumnRenamed("__first", "doc_id")
     return (
-        counts.join(novel, id_col, "left")
+        counts.join(novel, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_shingles",
             F.coalesce(F.col("n_novel"), F.lit(0).cast("long")).alias(
                 "n_novel"
@@ -1071,12 +1012,7 @@ def ngram_novelty(
     )
 
 
-def host_quality_rollup(
-    docs: DataFrame,
-    host_col: str = "host",
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
+def host_quality_rollup(docs: DataFrame) -> DataFrame:
     """Per-host reputation rollup — the host-level signal a frontier
     scheduler uses to up/down-prioritize WHOLE hosts (a spam farm is
     cheaper to kill at the host than per URL): doc count, mean
@@ -1092,15 +1028,15 @@ def host_quality_rollup(
     partial agg, so host skew never concentrates raw rows. Entropy
     uses the exact H = ln(n) - sum(c*ln(c))/n rearrangement so both
     aggs stay single-pass."""
-    q = quality_score(docs, text_col)
-    roll = q.groupBy(host_col).agg(
+    q = quality_score(docs)
+    roll = q.groupBy("host").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.round(F.avg("quality_score"), 4).alias("mean_quality"),
     )
-    hl = docs.groupBy(host_col, lang_col).agg(
+    hl = docs.groupBy("host", "lang").agg(
         F.count("*").cast("long").alias("__c")
     )
-    ent = hl.groupBy(host_col).agg(
+    ent = hl.groupBy("host").agg(
         F.count("*").cast("long").alias("n_langs"),
         F.round(
             F.log(F.sum("__c").cast("double"))
@@ -1109,122 +1045,7 @@ def host_quality_rollup(
             4,
         ).alias("lang_entropy"),
     )
-    return roll.join(ent, host_col).select(
-        host_col, "n_docs", "mean_quality", "n_langs", "lang_entropy"
+    return roll.join(ent, "host").select(
+        "host", "n_docs", "mean_quality", "n_langs", "lang_entropy"
     )
 
-
-def kneser_ney_logprob(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    discount: float = 0.75,
-) -> DataFrame:
-    """Per-document mean trigram negative log-probability under an
-    interpolated Kneser-Ney model trained on the corpus itself — the
-    strongest member of the CCNet-style fluency family here
-    (unigram_logprob -> bigram_logprob -> this). Interpolated KN with
-    a fixed absolute discount D (Kneser & Ney 1995; Chen & Goodman
-    1998 eq. 4.25-4.27 is THE public reference):
-
-      P(w3|w1w2) = max(c(w1w2w3)-D,0)/c(w1w2.)
-                   + D*N1+(w1w2.)/c(w1w2.) * Pc(w3|w2)
-      Pc(w3|w2)  = max(N1+(.w2w3)-D,0)/N1+(.w2.)
-                   + D*N1+(w2.)/N1+(.w2.) * Pc(w3)
-      Pc(w3)     = N1+(.w3) / N1+(..)
-
-    where N1+ counts DISTINCT extensions (the continuation counts
-    that make KN rank "Francisco" low outside "San _"). Documents are
-    padded with two \\x02 start sentinels and one \\x03 end sentinel,
-    so every token plus the end event is predicted by exactly one
-    trigram and all lower-order counts derive consistently from the
-    trigram table. (A corpus whose whitespace tokens literally
-    contain \\x02/\\x03 would pollute the sentinel rows — binary junk
-    should be gated upstream, e.g. gopher_gate.) Self-scored, so
-    every event has count >= 1 in its own context and no probability
-    is ever 0; scoring a foreign corpus needs an OOV contract this
-    operator deliberately does not invent.
-
-    Empty/whitespace-only docs keep a row: their one event is the
-    (\\x02,\\x02,\\x03) trigram.
-
-    Plan (the bigram_logprob discipline, one order up): ONE corpus
-    explode to trigram events, immediately pre-aggregated per
-    (doc, w1, w2, w3) — every later join is bounded by
-    distinct-trigrams-per-doc, not occurrences, so stopword-skewed
-    keys carry one row per doc. ALL five model tables (trigram
-    counts, trigram-context totals, bigram continuation counts,
-    bigram-context totals, unigram continuation counts) derive from
-    that single aggregate — the corpus is scanned once, and each
-    derivation is a map-side-combinable shrink of the previous
-    table. The continuation total N1+(..) is a 1-row broadcast. The
-    per-doc mean is the exact weighted mean sum(c*neglp)/sum(c).
-    Counts stay exact integers until the final float; round-4 output
-    for oracle comparison (ORACLES.md #5)."""
-    D = float(discount)
-    if not 0.0 < D < 1.0:
-        raise ValueError("discount must be in (0, 1)")
-    tk = F.filter(tokens(F.col(text_col)), lambda t: t != "")
-    padded = F.concat(
-        F.array(F.lit("\x02"), F.lit("\x02")), tk, F.array(F.lit("\x03"))
-    )
-    z = F.arrays_zip(
-        F.slice(padded, 1, F.size(padded) - 2),
-        F.slice(padded, 2, F.size(padded) - 2),
-        F.slice(padded, 3, F.size(padded) - 2),
-    )
-    tgc = (
-        docs.select(F.col(id_col), F.explode(z).alias("z"))
-        .select(
-            id_col,
-            F.col("z.0").alias("w1"),
-            F.col("z.1").alias("w2"),
-            F.col("z.2").alias("w3"),
-        )
-        .groupBy(id_col, "w1", "w2", "w3")
-        .agg(F.count("*").alias("__c"))
-    )
-    c3 = tgc.groupBy("w1", "w2", "w3").agg(F.sum("__c").alias("c3"))
-    ctx3 = c3.groupBy("w1", "w2").agg(
-        F.sum("c3").alias("c2ctx"), F.count("*").alias("f3")
-    )
-    m2 = c3.groupBy("w2", "w3").agg(F.count("*").alias("m2"))
-    ctx2 = m2.groupBy("w2").agg(
-        F.sum("m2").alias("m2ctx"), F.count("*").alias("f2")
-    )
-    m1 = m2.groupBy("w3").agg(F.count("*").alias("m1"))
-    total = F.broadcast(m1.agg(F.sum("m1").cast("double").alias("__M")))
-
-    p1 = F.col("m1") / F.col("__M")
-    p2 = (
-        F.greatest(F.col("m2") - D, F.lit(0.0)) / F.col("m2ctx")
-        + D * F.col("f2") / F.col("m2ctx") * p1
-    )
-    p3 = (
-        F.greatest(F.col("c3") - D, F.lit(0.0)) / F.col("c2ctx")
-        + D * F.col("f3") / F.col("c2ctx") * p2
-    )
-    neg_lp = -F.log(p3)
-    # NB (r6): a model-table-first reorder (join the five model tables
-    # among themselves, then probe once) and a localCheckpoint of c3
-    # were both tried and MEASURED SLOWER (5.1s vs 6.5/7.1s at sf1.0,
-    # interleaved best-of-3): the model tables all broadcast, so the
-    # probe already makes one pass over tgc, and runtime exchange
-    # reuse dedupes the repeated c3/m2 subtrees — the extra
-    # materialization/joins only added orchestration. Keeping the
-    # direct chain.
-    return (
-        tgc.join(c3, ["w1", "w2", "w3"])
-        .join(ctx3, ["w1", "w2"])
-        .join(m2, ["w2", "w3"])
-        .join(ctx2, "w2")
-        .join(m1, "w3")
-        .crossJoin(total)
-        .groupBy(id_col)
-        .agg(
-            F.sum("__c").cast("long").alias("n_trigrams"),
-            F.round(
-                F.sum(F.col("__c") * neg_lp) / F.sum("__c"), 4
-            ).alias("mean_neg_logprob_kn"),
-        )
-    )

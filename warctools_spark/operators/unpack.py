@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 
-def sanitize_path(url: str, mime_type: str | None, default_name: str = "index") -> str:
+def sanitize_path(url: str, mime_type: str | None) -> str:
     """output_file() path logic without the filesystem probing."""
     clean_url = "".join(
         (c if c.isalpha() or c.isdigit() or c in "_-/." else "_")
@@ -41,7 +41,7 @@ def sanitize_path(url: str, mime_type: str | None, default_name: str = "index") 
     if filename:
         name, ext = posixpath.splitext(filename)
     else:
-        name, ext = default_name, ""
+        name, ext = "index", ""
 
     if mime_type:
         guess_type = mimetypes.guess_type(url)
@@ -125,11 +125,11 @@ def extract_payload(records: DataFrame, source_file: str, offset: int) -> DataFr
     ).select("url", "record_type", "content_type", "content_length", "content")
 
 
-def record_summary(records: DataFrame, max_content: int = 1024) -> DataFrame:
+def record_summary(records: DataFrame) -> DataFrame:
     """warcdump-style human-readable summary (record.py:143-165):
     headers + escaped content prefix — debug projection."""
     esc = F.regexp_replace(
-        F.substring(F.col("content").cast("string"), 1, max_content),
+        F.substring(F.col("content").cast("string"), 1, 1024),
         r"[^\w\t \|\\/]",
         "_",
     )

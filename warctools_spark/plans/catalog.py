@@ -6,10 +6,11 @@ atomic snapshot per table (directory + manifest), resume reads the
 latest consistent manifest set. The physical layout is the same story
 Iceberg would give us:
 
-* every state table is written partitioned by `bucket` =
-  pmod(xxhash64(host), n_buckets) — co-partitioning the seen-set
-  anti-join and the politeness window by host hash so neither needs a
-  full shuffle of the big side at read time;
+* a table with a `host` column (the schedule and the queue) is
+  written partitioned by `bucket` = pmod(xxhash64(host), n_buckets);
+  the seen deltas and bases (`bucket_col=None`) and the Bloom table,
+  which carries its own `bucket`, are written unpartitioned, so the
+  seen-set anti-join still shuffles `seen` when it reads it back;
 * manifests carry row counts + per-partition lineage metrics, so a
   resumed run can verify it sees exactly the state the failed run
   committed (north_rule: exact resume with per-partition lineage).
@@ -127,32 +128,6 @@ class Catalog:
         m = self.read_manifest(epoch)
         return [self._abs(p) for p in m["metrics"].get("seen_parts", [])]
 
-    # ---- bucketed tables (storage-partitioned joins) ----
-    def write_bucketed_table(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        table: str,
-        epoch: int,
-        key: str = "url_sha1",
-    ) -> str:
-        """Write as a bucketBy/sortBy table (external, under the
-        catalog root). Two tables bucketed by the same key and count
-        join with ZERO exchange (SortMergeJoin over co-located buckets)
-        — the plan that replaces broadcast once `seen` outgrows a
-        broadcast at 10^10 keys. Verified by
-        tests/test_plan_quality.py::test_bucketed_seen_join_no_exchange."""
-        name = f"{table}_e{epoch:05d}"
-        path = self.table_path(f"{table}_bucketed", epoch)
-        (
-            df.write.mode("overwrite")
-            .option("path", path)
-            .bucketBy(self.n_buckets, key)
-            .sortBy(key)
-            .saveAsTable(name)
-        )
-        return name
-
     # ---- resume ----
     def latest_epoch(self) -> int | None:
         epochs = [
@@ -173,7 +148,7 @@ class Catalog:
         # the bucket partition column is physical layout, not table schema
         return df.drop("bucket") if "bucket" in df.columns else df
 
-    # ---- snapshot maintenance (the Iceberg expire/rollback story) ----
+    # ---- snapshot maintenance (the Iceberg expire story) ----
     def list_epochs(self) -> list[int]:
         return sorted(
             int(name[len("epoch_"): -len(".json")])
@@ -234,9 +209,10 @@ class Catalog:
             # be an explicit delete, not an expiry policy
             raise ValueError("keep_last must be >= 1")
         epochs = self.list_epochs()
-        # the orphan sweep runs even when no manifest expires: rollback
-        # leaves newer epochs' data dirs unreferenced on purpose, and
-        # this is the pass that reclaims them
+        # the orphan sweep runs even when no manifest expires: a crash
+        # between an epoch's table writes and its manifest commit
+        # leaves that epoch's data dirs unreferenced, and this is the
+        # pass that reclaims them
         expired = epochs[:-keep_last] if len(epochs) > keep_last else []
         kept = epochs[len(expired):]
         keep_refs = self.referenced_paths(kept)
@@ -253,10 +229,7 @@ class Catalog:
             self.fs.delete(self.manifest_path(e), recursive=False)
         deleted = []
         for table in self.fs.listdir_dirs(self.root):
-            # *_bucketed dirs belong to the Spark metastore (saveAsTable),
-            # not the snapshot manifests — outside this contract; drop
-            # them with DROP TABLE, not a file sweep
-            if table == "_manifests" or table.endswith("_bucketed"):
+            if table == "_manifests":
                 continue
             for ep_dir in self.fs.listdir_dirs(self._join(table)):
                 rel = f"{table}/{ep_dir}"
@@ -264,17 +237,3 @@ class Catalog:
                     self.fs.delete(self._join(rel), recursive=True)
                     deleted.append(rel)
         return {"expired_epochs": expired, "deleted_dirs": deleted}
-
-    def rollback(self, epoch: int) -> list[int]:
-        """Time travel: drop every snapshot NEWER than `epoch` so
-        `resume_state` resumes from it. Only manifests are removed —
-        newer epochs' data dirs become unreferenced orphans that the
-        next `expire_snapshots` sweeps, mirroring Iceberg's
-        rollback-then-expire contract (rollback stays instant and
-        safely crash-interruptible)."""
-        dropped = [e for e in self.list_epochs() if e > epoch]
-        if epoch not in self.list_epochs():
-            raise ValueError(f"no snapshot for epoch {epoch}")
-        for e in dropped:
-            self.fs.delete(self.manifest_path(e), recursive=False)
-        return dropped

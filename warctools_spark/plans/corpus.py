@@ -32,10 +32,6 @@ def prepare_training_corpus(
     min_quality: float = 50.0,
     languages: tuple = ("en",),
     jaccard_threshold: float = 0.8,
-    num_hashes: int = 8,
-    bands: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """The surviving documents with (id, lang_pred, quality_score).
 
@@ -46,30 +42,28 @@ def prepare_training_corpus(
     stage then only pays for the near-duplicate structure that
     remains.
     """
-    scored = quality_score(docs, text_col).select(id_col, "quality_score")
+    scored = quality_score(docs).select("doc_id", "quality_score")
     gated = (
-        docs.withColumn("lang_pred", lang_id(F.col(text_col)))
-        .join(scored, on=id_col)
+        docs.withColumn("lang_pred", lang_id(F.col("text")))
+        .join(scored, on="doc_id")
         .where(
             (F.col("quality_score") >= min_quality)
             & F.col("lang_pred").isin(list(languages))
         )
     )
-    kept = exact_dedup_keep_first(gated, text_col, id_col)
-    pairs = minhash_lsh_candidates(
-        kept, text_col, id_col, num_hashes=num_hashes, bands=bands
-    )
+    kept = exact_dedup_keep_first(gated)
+    pairs = minhash_lsh_candidates(kept, num_hashes=8)
     verified = (
-        ngram_jaccard(kept, pairs, text_col, id_col)
+        ngram_jaccard(kept, pairs)
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b")
     )
-    clusters = dup_clusters(verified, kept, id_col)
+    clusters = dup_clusters(verified, kept)
     survivors = clusters.where(
-        F.col(id_col) == F.col("cluster_id")
-    ).select(id_col)
-    return kept.join(survivors, on=id_col).select(
-        id_col, "lang_pred", "quality_score"
+        F.col("doc_id") == F.col("cluster_id")
+    ).select("doc_id")
+    return kept.join(survivors, on="doc_id").select(
+        "doc_id", "lang_pred", "quality_score"
     )
 
 
@@ -77,7 +71,6 @@ def write_training_shards(
     docs: DataFrame,
     path: str,
     shards: int,
-    order_col: str = "doc_id",
 ) -> dict:
     """Write the prepared corpus as `shards` balanced, globally-ordered
     parquet shards — the layout a downstream tokenizer fans out over.
@@ -90,8 +83,8 @@ def write_training_shards(
     reproducible byte-for-byte. Returns {'rows': n, 'shards': k}.
     """
     (
-        docs.repartitionByRange(shards, F.col(order_col))
-        .sortWithinPartitions(order_col)
+        docs.repartitionByRange(shards, F.col("doc_id"))
+        .sortWithinPartitions("doc_id")
         .write.mode("overwrite")
         .parquet(path)
     )
@@ -100,12 +93,7 @@ def write_training_shards(
     return {"rows": written.count(), "shards": shards}
 
 
-def prepare_training_corpus_v2(
-    docs: DataFrame,
-    k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def prepare_training_corpus_v2(docs: DataFrame) -> DataFrame:
     """The modern corpus-preparation chain, every stage relational:
 
       gopher_gate (repetition/length drop reasons)
@@ -127,14 +115,14 @@ def prepare_training_corpus_v2(
     )
     from warctools_spark.operators.text_analysis import gopher_gate, scrub_pii
 
-    gate = gopher_gate(docs, text_col=text_col, id_col=id_col).where(
+    gate = gopher_gate(docs).where(
         F.col("keep")
-    ).select(id_col)
-    gated = docs.join(gate, on=id_col)
-    kept = exact_dedup_keep_first(gated, text_col, id_col)
-    seg = segment_dedup(kept, k=k, text_col=text_col, id_col=id_col)
+    ).select("doc_id")
+    gated = docs.join(gate, on="doc_id")
+    kept = exact_dedup_keep_first(gated)
+    seg = segment_dedup(kept)
     return seg.select(
-        id_col,
+        "doc_id",
         F.md5(scrub_pii(F.col("clean_text"))).alias("final_md5"),
         "n_segments",
         "n_kept",
@@ -148,8 +136,6 @@ def rag_corpus(
     window: int = 64,
     stride: int = 32,
     min_chunk_tokens: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ):
     """Composed RAG-indexing pipeline over a crawl corpus: exact
     substring-dedup rewrite (first corpus occurrence survives, spans
@@ -165,11 +151,10 @@ def rag_corpus(
 
     cleaned = remove_duplicate_spans(
         docs, k=k, min_span_tokens=min_span_tokens,
-        text_col=text_col, id_col=id_col,
     )
     chunks = chunk_documents(
         cleaned, window=window, stride=stride,
-        text_col="clean_text", id_col=id_col,
+        text_col="clean_text",
     )
     from pyspark.sql import functions as F
 

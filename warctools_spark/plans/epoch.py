@@ -278,7 +278,6 @@ def run_crawl(
     seeds: DataFrame,
     epochs: int,
     k_per_host: int = 10,
-    robots: DataFrame | None = None,
     catalog: Catalog | None = None,
     use_bloom: bool = False,
     compact_every: int = 8,
@@ -360,8 +359,8 @@ def run_crawl(
     # of the executor heap entirely (a 10^10-row map is ~1 TB spread
     # over the cluster's local disks — reading it back per epoch beats
     # re-running the canonicalize UDF by an order of magnitude). At
-    # true 100 TB scale write it once as a bucketed catalog table
-    # (same seam, catalog.write_bucketed_table) — the plan is identical.
+    # true 100 TB scale write it once as a catalog table instead — the
+    # plan is identical.
     from pyspark.storagelevel import StorageLevel
 
     pages_keyed = key_pages(pages).localCheckpoint(
@@ -375,7 +374,6 @@ def run_crawl(
             seen,
             epoch=e,
             k_per_host=k_per_host,
-            robots=robots,
             n_buckets=bloom_n_buckets,
             bloom=bloom,
             pages_keyed=pages_keyed,

@@ -36,7 +36,6 @@ def simulate_crawl(
     epochs: int,
     k_per_host: int = 10,
     robots: dict[str, RobotsRules] | None = None,
-    epoch_ms: int = 60_000,
 ):
     """Returns (per_epoch_schedules, seen_set) where each schedule is a
     sorted list of canonical urls scheduled that epoch."""
@@ -64,7 +63,7 @@ def simulate_crawl(
                 rules = robots.get(host)
                 if rules is not None and rules.crawl_delay_ms:
                     budget = min(
-                        k_per_host, max(1, epoch_ms // rules.crawl_delay_ms)
+                        k_per_host, max(1, 60_000 // rules.crawl_delay_ms)
                     )
             schedule.extend(items[:budget])
 
