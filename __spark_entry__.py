@@ -253,7 +253,7 @@ def _q_simhash(spark, sf_dir):
     from warctools_spark.operators.dedup import simhash60
 
     docs = _docs(spark, sf_dir)
-    return docs.select("doc_id", simhash60(F.col("text"), 3).alias("simhash"))
+    return docs.select("doc_id", simhash60(F.col("text")).alias("simhash"))
 
 
 def _q_lang_id(spark, sf_dir):
@@ -322,7 +322,7 @@ def _q_segment_dedup(spark, sf_dir):
     occurrence of every 10-token window, reassemble docs in order."""
     from warctools_spark.operators.dedup import segment_dedup
 
-    return segment_dedup(_docs(spark, sf_dir), k=10)
+    return segment_dedup(_docs(spark, sf_dir))
 
 
 MIX_FRACTIONS = {"src0": 1.0, "src1": 0.5, "src2": 0.25, "src3": 0.1}
@@ -460,7 +460,7 @@ def _q_anchor_texts(spark, sf_dir):
     from warctools_spark.operators.text_analysis import anchor_text_pairs
 
     pages = _pages(spark, sf_dir)
-    return anchor_text_pairs(pages, udf_extract_text("html"), url_col="url")
+    return anchor_text_pairs(pages, udf_extract_text("html"))
 
 
 def _q_host_graph(spark, sf_dir):
@@ -673,7 +673,7 @@ def _q_bigram_frequencies(spark, sf_dir):
     """Global top-100 word bigrams (tokenizer merge candidates)."""
     from warctools_spark.operators.text_analysis import ngram_frequencies
 
-    return ngram_frequencies(_docs(spark, sf_dir), n=2, top_k=100)
+    return ngram_frequencies(_docs(spark, sf_dir), top_k=100)
 
 
 def _q_skew_report(spark, sf_dir):
@@ -846,7 +846,7 @@ def _q_host_rank(spark, sf_dir):
         )
     )
     vertices = docs.select(host_expr(F.col("doc_id")).alias("node")).distinct()
-    ranks = link_rank(edges, vertices, iterations=2, id_col="node")
+    ranks = link_rank(edges, vertices, iterations=2)
     return ranks.select(
         F.col("node").alias("host"), F.round("rank", 6).alias("rank")
     )
@@ -1218,9 +1218,7 @@ def _q_remove_duplicate_spans(spark, sf_dir):
     cut out (first occurrence survives)."""
     from warctools_spark.operators.dedup import remove_duplicate_spans
 
-    return remove_duplicate_spans(
-        _docs(spark, sf_dir), k=10, min_span_tokens=15
-    )
+    return remove_duplicate_spans(_docs(spark, sf_dir), min_span_tokens=15)
 
 
 def _q_rag_corpus(spark, sf_dir):
@@ -1230,8 +1228,6 @@ def _q_rag_corpus(spark, sf_dir):
 
     return rag_corpus(
         _docs(spark, sf_dir),
-        k=10,
-        min_span_tokens=15,
         window=64,
         stride=32,
         min_chunk_tokens=8,
@@ -1292,7 +1288,7 @@ def _q_semdedup(spark, sf_dir):
     from warctools_spark.operators.similarity import semdedup_survivors
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return semdedup_survivors(emb, k=8, iterations=2, threshold=0.5)
+    return semdedup_survivors(emb, k=8, threshold=0.5)
 
 
 def _q_inverted_index(spark, sf_dir):
@@ -1369,9 +1365,7 @@ def _q_winnow_match_scores(spark, sf_dir):
     of distinct shared fingerprints."""
     from warctools_spark.operators.text_analysis import winnow_match_scores
 
-    return winnow_match_scores(
-        _docs(spark, sf_dir), k=8, w=4, min_shared=3, max_doc_freq=100
-    )
+    return winnow_match_scores(_docs(spark, sf_dir), max_doc_freq=100)
 
 
 def _q_bigram_logprob(spark, sf_dir):
@@ -1403,10 +1397,7 @@ def _q_ivf_kmeans_topk(spark, sf_dir):
 
     emb = _emb(spark, sf_dir)
     qvec = emb.where(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    return ivf_kmeans_topk(
-        emb, [float(v) for v in qvec], k=10, n_cells=8, iterations=2,
-        n_probe=2,
-    )
+    return ivf_kmeans_topk(emb, [float(v) for v in qvec], k=10, n_probe=2)
 
 
 

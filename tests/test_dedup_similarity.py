@@ -94,7 +94,7 @@ def test_lsh_degenerate_bucket_capped(spark):
         F.lit("the same boilerplate text repeated for every row").alias("text"),
     )
     pairs, stats = D.minhash_lsh_candidates(
-        docs, num_hashes=16, bands=4, max_bucket_size=200, return_stats=True
+        docs, num_hashes=16, bands=4, return_stats=True
     )
     got = pairs.collect()
     # star pairing: every doc links to the hub (min id) once
@@ -398,7 +398,7 @@ def test_segment_dedup_window_mode_reassembly_order(spark):
     # 25 tokens -> 3 windows of k=10,10,5; all unique -> text unchanged
     text = " ".join(f"w{i}" for i in range(25))
     docs = spark.createDataFrame([(7, text)], "doc_id long, text string")
-    row = D.segment_dedup(docs, k=10).collect()[0]
+    row = D.segment_dedup(docs).collect()[0]
     assert row["clean_text"] == text
     assert row["n_segments"] == 3 and row["n_kept"] == 3
 

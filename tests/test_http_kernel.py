@@ -329,64 +329,3 @@ def test_parse_http_response_triple():
     assert code == 200
     assert mime == b"text/html"
     assert res.body == b"hello"
-
-
-# ---- HTTP/0.9 (messaging.py:696-738 HTTP09Response) ----
-
-HTTP09_BODIES = [
-    b"<html>ancient body</html>",
-    b"<TITLE>pre-1.0</TITLE>\nplain text, no headers at all",
-    bytes(range(256)),  # binary entity
-    b"",
-]
-
-
-@needs_reference
-@pytest.mark.parametrize("body", HTTP09_BODIES, ids=range(len(HTTP09_BODIES)))
-def test_http09_differential(body):
-    """decode_http09 == the reference's as_http09 wrap of a failed 1.x
-    parse: implied 200, version HTTP/0.9, body/decoded message = the
-    raw buffer."""
-    from warctools_spark.kernels.http_decode import decode_http09
-
-    ours = decode_http09(body)
-    try:
-        ref, _ = ref_response(body)
-    except Exception:
-        # the reference push parser crashes on first lines without a
-        # space (messaging.py:608 unpack) before as_http09 can run;
-        # the 0.9 contract (body == buffer, implied 200) still holds
-        ref = None
-    if ref is not None:
-        h09 = ref.as_http09()
-        assert ours.code == h09.code == 200
-        assert ours.body == h09.get_body()
-        assert ours.get_decoded_message() == h09.get_decoded_message()
-        assert ours.decoded_body() == h09.get_body()
-    assert ours.code == 200
-    assert ours.version == b"HTTP/0.9"
-    assert ours.body == body and ours.get_decoded_message() == body
-    assert ours.complete and not ours.errors
-
-
-def test_http09_fallback_gating():
-    """The 0.9 fallback fires only when the parser never saw a status
-    line; versioned-but-broken responses keep their real errors."""
-    from warctools_spark.kernels.http_decode import (
-        decode_http_with_09_fallback,
-    )
-
-    old = decode_http_with_09_fallback(b"<html>no headers</html>")
-    assert old.is_http09 and old.code == 200
-    assert old.body == b"<html>no headers</html>"
-
-    ok = decode_http_with_09_fallback(
-        b"HTTP/1.1 200 OK\r\nContent-Length: 2\r\n\r\nhi"
-    )
-    assert not ok.is_http09 and ok.complete and ok.body == b"hi"
-
-    truncated = decode_http_with_09_fallback(
-        b"HTTP/1.1 200 OK\r\nContent-Length: 50\r\n\r\nshort"
-    )
-    assert not truncated.is_http09  # status line parsed: stay 1.x
-    assert not truncated.complete

@@ -279,3 +279,28 @@ def test_lxml_fixtures_match_real_lxml():
             }
         )
         assert got == sorted(set(case["lxml_links"])), case["name"]
+
+
+def test_page_links_equals_simulator_harvest():
+    """page_links, the one gate of the harvest and the extract_links
+    UDF, equals the parity oracle's own copy (simulator.harvest): on
+    the four wire variants of the synthetic pages (plain, gzip,
+    chunked, chunked + gzip), a 404, a non-html 200 and an
+    HTTP/0.9-shaped payload; a null payload gives no links."""
+    from warctools_spark.kernels.links import page_links
+    from warctools_spark.plans.simulator import harvest
+    from warctools_spark.sources.pages import html_doc, http_response, url_for
+
+    doc = html_doc(3, "some words " * 10, 500)
+    cases = [(url_for(i), http_response(i, doc)) for i in range(4)]
+    cases += [
+        (url_for(4), b"HTTP/1.1 404 Not Found\r\nContent-Type: text/html\r\n"
+         b"Content-Length: 25\r\n\r\n<a href=\"gone.html\">x</a>"),
+        (url_for(5), b"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n"
+         b"Content-Length: 25\r\n\r\n<a href=\"text.html\">x</a>"),
+        (url_for(6), b'<html><a href="ancient.html">0.9</a></html>'),
+    ]
+    for url, payload in cases:
+        assert page_links(url, payload) == harvest(url, payload), payload[:40]
+    assert [len(page_links(u, p)) for u, p in cases] == [8, 8, 8, 8, 0, 0, 0]
+    assert page_links(url_for(7), None) == []

@@ -1,6 +1,7 @@
-"""The fast-path start-tag scanner must be byte-identical to the
-HTMLParser path on everything it accepts — differential over the test
-fixtures, the whole synthetic corpus, and randomized documents."""
+"""extract_links, whose strict scan tier takes every document its
+grammar accepts, must be byte-identical to the HTMLParser path —
+differential over the test fixtures, the whole synthetic corpus, and
+randomized documents."""
 
 import random
 
@@ -34,10 +35,10 @@ CASES = [
     b'<a href>no value</a>',
     b'text only no tags at all',
     b'',
-    b'<a href="q.html?x=1&y=2">entity-ish</a>',  # & -> fallback path
+    b'<a href="q.html?x=1&y=2">entity-ish</a>',  # & -> HTMLParser tier
     b'<!-- <a href="comment.html">c</a> --><a href="real.html">r</a>',
     b'<script>var a = \'<a href="inscript.html">\'</script><a href="out.html">o</a>',
-    b'<a href="3.html"><3</a>',  # '<' as text -> fallback
+    b'<a href="3.html"><3</a>',  # '<' as text -> HTMLParser tier
     b'<a href="gt>.html">g</a>',  # '>' inside quoted attr
     b'<div><p><a href = "spaced.html" >s</a></p></div>',
 ]
@@ -88,7 +89,7 @@ def test_fast_path_randomized_messy():
     """Messier generator: unquoted/single-quoted values, stray
     slashes, tabs/newlines inside tags, valueless attrs, mixed case,
     self-closing — anything the tolerant grammar accepts must
-    tokenize identically; anything else must fall back (also
+    tokenize identically; anything else goes through HTMLParser (also
     identical by construction)."""
     rng = random.Random(7)
     tags = ["a", "A", "img", "form", "link", "div", "base", "meta",

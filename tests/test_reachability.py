@@ -19,7 +19,9 @@ code imports it. Code inside a string that runs as a script
 An option is a keyword default of a public package function, method or
 class constructor.
 It is set when some call site in the package, the entry files or
-``tests/`` passes it by keyword or by position, or passes ``**kwargs``.
+``tests/`` passes it by keyword or by position, or passes ``**kwargs``;
+a call site that passes the default's own literal (``html_col="html"``
+for ``html_col="html"``) does not set it.
 A call whose first argument is a string constant naming a package
 function (``call("fn", x, kw=v)``, a dispatch through ``getattr``)
 counts as a call of that function with the remaining arguments. An
@@ -30,7 +32,8 @@ kept. The few defs and options kept on purpose without a program caller
 are in ALLOWLIST, each with its reason.
 
 Run ``python tests/test_reachability.py`` to list unreached defs and
-unset options with their sizes, and to count the options only tests set.
+unset options with their sizes (those whose every setter passes the
+default apart), and to count the options only tests set.
 """
 
 from __future__ import annotations
@@ -348,8 +351,9 @@ class Scan:
     # -- options -------------------------------------------------------
     def options(self) -> dict[str, tuple]:
         """``qual(name=)`` -> (module, def, parameter name, parameter
-        index or None for keyword-only) of every keyword default of a
-        public package function, method or class constructor."""
+        index or None for keyword-only, default expression) of every
+        keyword default of a public package function, method or class
+        constructor."""
         out = {}
         for q, (mod, name) in self.package_defs().items():
             node = self.node((mod, name))
@@ -363,11 +367,11 @@ class Scan:
             a = node.args
             pos = a.posonlyargs + a.args
             first = len(pos) - len(a.defaults)
-            for i, arg in enumerate(pos[first:], first):
-                out[f"{q}({arg.arg}=)"] = (mod, name, arg.arg, i)
+            for i, (arg, d) in enumerate(zip(pos[first:], a.defaults), first):
+                out[f"{q}({arg.arg}=)"] = (mod, name, arg.arg, i, d)
             for arg, d in zip(a.kwonlyargs, a.kw_defaults):
                 if d is not None:
-                    out[f"{q}({arg.arg}=)"] = (mod, name, arg.arg, None)
+                    out[f"{q}({arg.arg}=)"] = (mod, name, arg.arg, None, d)
         return out
 
     def _call_targets(self, m: _Module, func: ast.AST) -> list[tuple]:
@@ -400,9 +404,11 @@ class Scan:
         return out
 
     def calls(self) -> dict[tuple, list[tuple]]:
-        """(module, def) -> [(where, positional count or None for
-        ``*args``, keyword names or None for ``**kwargs``)] over every
-        call site, `where` being "program" or "tests"."""
+        """(module, def) -> [(where, positional arguments with a None
+        for each leading parameter the call does not pass, or None for
+        ``*args``; keyword arguments by name, or None for
+        ``**kwargs``)] over every call site, `where` being "program" or
+        "tests"."""
         out: dict[tuple, list[tuple]] = {}
         for where, mods in (("program", self.modules.values()), ("tests", self.tests)):
             for m in mods:
@@ -431,28 +437,59 @@ class Scan:
                             if mod.split(".")[0] == PKG
                             and isinstance(other.defs.get(first.value), _FUNCS)
                         ]
-                    kws = [kw.arg for kw in call.keywords]
+                    kws = {kw.arg: kw.value for kw in call.keywords}
                     for (mod, name, bound), args in targets:
                         star = any(isinstance(a, ast.Starred) for a in args)
                         out.setdefault((mod, name), []).append(
-                            (where, None if star else len(args) + bound,
-                             None if None in kws else set(kws)))
+                            (where, None if star else [None] * bound + list(args),
+                             None if None in kws else kws))
         return out
 
-    def setters(self) -> dict[str, set]:
+    def setters(self, defaults_set: bool = False) -> dict[str, set]:
         """Option -> where a call site sets it ({"program", "tests"} or
-        a subset; empty when none does), allowlisted options left out."""
+        a subset; empty when none does), allowlisted options left out.
+        A call site that passes the default's own literal sets it only
+        when `defaults_set`."""
         calls = self.calls()
         out = {}
-        for q, (mod, name, param, index) in self.options().items():
+        for q, (mod, name, param, index, default) in self.options().items():
             if q in self.allowlist:
                 continue
-            out[q] = {
-                where for where, npos, kws in calls.get((mod, name), ())
-                if npos is None or kws is None or param in kws
-                or (index is not None and npos > index)
-            }
+            out[q] = set()
+            for where, args, kws in calls.get((mod, name), ()):
+                if args is None or kws is None:
+                    out[q].add(where)
+                    continue
+                if param in kws:
+                    value = kws[param]
+                elif index is not None and index < len(args):
+                    value = args[index]
+                else:
+                    continue
+                if defaults_set or not _same_literal(value, default):
+                    out[q].add(where)
         return out
+
+    def default_only(self) -> list[str]:
+        """Options that call sites pass, but only as their default."""
+        real, passed = self.setters(), self.setters(defaults_set=True)
+        return sorted(q for q, where in real.items() if not where and passed[q])
+
+
+_NOT_LITERAL = object()
+
+
+def _literal(node: ast.AST):
+    try:
+        return ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError):
+        return _NOT_LITERAL
+
+
+def _same_literal(a: ast.AST, b: ast.AST) -> bool:
+    """Both are literals of one type and value (``True`` is not ``1``)."""
+    x, y = _literal(a), _literal(b)
+    return x is not _NOT_LITERAL and type(x) is type(y) and x == y
 
 
 def _lines(node: ast.AST, param: str | None = None) -> int:
@@ -497,7 +534,8 @@ def test_allowlist_is_minimal():
 
 def test_scan_reports_planted_method_and_option(tmp_path):
     """The guard itself, on a tiny package: it names exactly the method
-    no code calls and the option no call site sets."""
+    no code calls and the option no call site sets to anything but its
+    default."""
     pkg = tmp_path / PKG
     pkg.mkdir()
     (pkg / "__init__.py").write_text("")
@@ -528,6 +566,8 @@ def test_scan_reports_planted_method_and_option(tmp_path):
         "mod.run(0, 5)\n"
         "mod.run(0, by_keyword=6)\n"
         'call("run", 0, by_dispatch=7)\n'
+        "mod.run(0, 1, never=4)\n"
+        "mod.run(0, by_keyword=True)\n"
     )
     scan = Scan(tmp_path, entry_files=("main.py",), allowlist={})
     assert sorted(scan.unreached()) == ["warctools_spark.mod.Box.unused"]
@@ -536,6 +576,8 @@ def test_scan_reports_planted_method_and_option(tmp_path):
         "warctools_spark.mod.run(never=)"
     ]
     assert setters["warctools_spark.mod.run(by_position=)"] == {"program"}
+    # never=4 passes the default: the option is passed, but never set
+    assert scan.default_only() == ["warctools_spark.mod.run(never=)"]
 
 
 if __name__ == "__main__":
@@ -545,11 +587,16 @@ if __name__ == "__main__":
         print("%5d  %s" % (lines, q))
     print("%5d  total (%d defs)" % (sum(n for _, n in rows), len(rows)))
     setters, options = scan.setters(), scan.options()
-    rows = sorted((q, _lines(scan.node(options[q][:2]), options[q][2]))
-                  for q, where in setters.items() if not where)
-    for q, lines in rows:
-        print("%5d  %s" % (lines, q))
-    print("%5d  total (%d unset options of %d)"
-          % (sum(n for _, n in rows), len(rows), len(options)))
+    default_only = scan.default_only()
+    for label, names in (
+        ("unset options", [q for q, w in setters.items() if not w and q not in default_only]),
+        ("options set only to their default", default_only),
+    ):
+        rows = sorted((q, _lines(scan.node(options[q][:2]), options[q][2]))
+                      for q in names)
+        for q, lines in rows:
+            print("%5d  %s" % (lines, q))
+        print("%5d  total (%d %s of %d)"
+              % (sum(n for _, n in rows), len(rows), label, len(options)))
     only = sorted(q for q, where in setters.items() if where == {"tests"})
     print("%d options only tests set, e.g. %s" % (len(only), ", ".join(only[:3])))

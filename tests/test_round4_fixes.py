@@ -296,12 +296,10 @@ def test_ivf_kmeans_topk_recall_and_exactness(spark):
     exact = [(r["vec_id"], r["cosine"])
              for r in brute_force_topk(emb, q, k=10).collect()]
     full = [(r["vec_id"], r["cosine"])
-            for r in ivf_kmeans_topk(emb, q, k=10, n_cells=8,
-                                     n_probe=8).collect()]
-    assert full == exact  # n_probe = n_cells degenerates to exact
+            for r in ivf_kmeans_topk(emb, q, k=10, n_probe=8).collect()]
+    assert full == exact  # n_probe = all 8 cells degenerates to exact
     approx = [(r["vec_id"], r["cosine"])
-              for r in ivf_kmeans_topk(emb, q, k=10, n_cells=8,
-                                       n_probe=2).collect()]
+              for r in ivf_kmeans_topk(emb, q, k=10, n_probe=2).collect()]
     recall = len({v for v, _ in exact} & {v for v, _ in approx}) / 10
     assert recall >= 0.8
     # query dim mismatch raises before any job runs
@@ -484,16 +482,12 @@ def test_winnow_match_scores_finds_quotes_and_gates_boilerplate(spark):
         "doc_id long, text string",
     )
     pairs = {(r["id_a"], r["id_b"]): r["n_shared"]
-             for r in winnow_match_scores(
-                 docs, k=8, w=4, min_shared=3, max_doc_freq=100
-             ).collect()}
+             for r in winnow_match_scores(docs, max_doc_freq=100).collect()}
     assert (0, 1) in pairs  # the shared quote produces >=3 prints
     assert (0, 3) not in pairs and (1, 3) not in pairs
     # gate the boilerplate: with max_doc_freq=2 the three-doc footer's
     # fingerprints are dropped, so doc 2 no longer pairs with anyone
     gated = {(r["id_a"], r["id_b"])
-             for r in winnow_match_scores(
-                 docs, k=8, w=4, min_shared=3, max_doc_freq=2
-             ).collect()}
+             for r in winnow_match_scores(docs, max_doc_freq=2).collect()}
     assert (0, 1) in gated
     assert not any(2 in p for p in gated)

@@ -85,7 +85,7 @@ def test_ngram_containment_short_docs_zero(spark):
     )
     rows = {
         (r["id_a"], r["id_b"]): r
-        for r in ngram_containment(docs, pairs, n=3).collect()
+        for r in ngram_containment(docs, pairs).collect()
     }
     short = rows[(1, 2)]
     assert short["jaccard"] == 0.0

@@ -97,7 +97,7 @@ def test_ngram_jaccard_short_docs_zero(spark):
     )
     rows = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard(docs, pairs, n=3).collect()
+        for r in ngram_jaccard(docs, pairs).collect()
     }
     # both docs shorter than n=3 tokens: defined 0.0, not null
     assert rows[(1, 2)] == 0.0

@@ -162,7 +162,7 @@ def test_segment_dedup_left_join_equals_r5(spark):
     from warctools_spark.operators.dedup import segment_dedup
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    got = segment_dedup(docs, k=10)
+    got = segment_dedup(docs)
     # r5 reference: inner join against the UNFILTERED keeper table
     toks = F.split(F.trim(F.col("text")), r"\s+")
     n_seg = F.ceil(F.size(toks) / F.lit(10)).cast("int")
@@ -323,8 +323,10 @@ def test_cuckoo_insert_batch_table_byte_identical():
 
 def test_flat_harvest_equals_r5_struct_formulation(spark, tmp_path):
     """The mapInPandas flat-column harvest must emit exactly the rows
-    of the r5 array<struct> pandas_udf + explode formulation."""
-    from warctools_spark.functions.udfs import udf_harvest_canon
+    of the r5 per-link formulation (link, canon_url, url_sha1, host),
+    written as the SQL composition of extract_links with
+    canonicalize_url, url_sha1 and url_host."""
+    from warctools_spark.functions.sql import register_sql_functions
     from warctools_spark.operators.frontier import harvest_canonicalized
     from warctools_spark.sources.pages import synthesize_pages
 
@@ -332,16 +334,15 @@ def test_flat_harvest_equals_r5_struct_formulation(spark, tmp_path):
     synthesize_pages(spark, SF_DIR).write.mode("overwrite").parquet(d)
     pages = spark.read.parquet(d)
     got = harvest_canonicalized(pages)
-    exploded = pages.select(
-        F.col("url").alias("src_url"),
-        F.explode(udf_harvest_canon(F.col("url"), F.col("html"))).alias("l"),
-    )
-    ref = exploded.select(
-        "src_url",
-        F.col("l.link").alias("link"),
-        F.col("l.canon_url").alias("canon_url"),
-        F.col("l.url_sha1").alias("url_sha1"),
-        F.col("l.host").alias("host"),
+    register_sql_functions(spark)
+    pages.createOrReplaceTempView("harvest_pages")
+    ref = spark.sql(
+        """
+        SELECT src_url, link, canonicalize_url(link) AS canon_url,
+               url_sha1(link) AS url_sha1, url_host(link) AS host
+        FROM (SELECT url AS src_url, explode(extract_links(url, html)) AS link
+              FROM harvest_pages)
+        """
     )
     assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
     assert got.columns == ref.columns
@@ -389,9 +390,10 @@ def test_canon_parts_fast_equals_canon_parts():
 
 
 def test_strict_scan_differential_vs_r5_tiers():
-    """Documents accepted by the strict whole-doc grammar must yield
-    exactly what the round-5 two-tier path produced; rejected ones
-    fall through to that path by construction."""
+    """extract_links must yield exactly what the plain HTMLParser
+    collector produces, which is what the round-5 tiers produced:
+    documents the strict whole-doc grammar accepts take its scan, and
+    rejected ones go through that collector by construction."""
     from warctools_spark.kernels import links as L
 
     rng = random.Random(99)
@@ -416,18 +418,9 @@ def test_strict_scan_differential_vs_r5_tiers():
         )
         base = "http://h.example/d/p.html"
         got = L.extract_links(base, body)
-        # round-5 reference: fast per-tag scan behind the risky gate
         c = L._LinkCollector(base)
-        if L._RISKY.search(body) is None:
-            try:
-                c.links, c.base = L._fast_scan_links(body, base)
-            except L._FallBack:
-                c = L._LinkCollector(base)
-                c.feed(body)
-                c.close()
-        else:
-            c.feed(body)
-            c.close()
+        c.feed(body)
+        c.close()
         ref = [x.translate(L._CTL_STRIP) for x in c.abs_links()]
         assert got == ref, body
 

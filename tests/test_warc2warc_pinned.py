@@ -155,8 +155,8 @@ def test_pinned_settings_differ():
 
 
 def test_row_decodes_only_http_responses_once(monkeypatch):
-    """The fused row function decodes (through udfs._decode, its only
-    way to decode_http) each application/http response once, builds
+    """The fused row function decodes (through the decode_http that
+    udfs imports) each application/http response once, builds
     only its decoded message (no separate decoded_body inflate), and
     never decodes request, metadata, revisit or non-http rows."""
     from warctools_spark.functions import udfs
@@ -166,10 +166,11 @@ def test_row_decodes_only_http_responses_once(monkeypatch):
     def no_decoded_body(self):
         raise AssertionError("decoded_body() called")
 
-    decoded, real = [], udfs._decode
+    decoded, real = [], udfs.decode_http
     monkeypatch.setattr(HttpResult, "decoded_body", no_decoded_body)
     monkeypatch.setattr(
-        udfs, "_decode", lambda payload, *a: decoded.append(payload) or real(payload, *a)
+        udfs, "decode_http",
+        lambda payload, *a, **kw: decoded.append(payload) or real(payload, *a, **kw),
     )
     rows = list(_rows_for_file("pinned.warc", corpus(), "auto"))
     want = [r["content"] for r in rows[:8]]

@@ -1,11 +1,2 @@
-from warctools_spark.functions.udfs import (  # noqa: F401
-    HTTP_STRUCT,
-    udf_canonicalize_url,
-    udf_decode_http,
-    udf_extract_links,
-    udf_extract_text,
-    udf_url_host,
-    udf_url_sha1,
-    udf_warc_uuid,
-    udf_write_warc,
-)
+"""Spark-side wrappers of the kernels: Arrow UDFs (`udfs`), built-in
+column expressions (`exprs`) and the SQL function registry (`sql`)."""

@@ -12,7 +12,6 @@ from warctools_spark.functions.udfs import (
     udf_decode_http,
     udf_extract_links,
     udf_extract_text,
-    udf_harvest_canon,
     udf_url_host,
     udf_url_sha1,
     udf_warc_uuid,
@@ -22,7 +21,6 @@ _REGISTRY = {
     "decode_http": udf_decode_http,
     "extract_text": udf_extract_text,
     "extract_links": udf_extract_links,
-    "harvest_canon": udf_harvest_canon,
     "canonicalize_url": udf_canonicalize_url,
     "url_sha1": udf_url_sha1,
     "url_host": udf_url_host,

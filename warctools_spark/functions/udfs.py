@@ -18,16 +18,13 @@ from pyspark.sql.functions import pandas_udf
 
 from warctools_spark.kernels.canon import canon_parts_fast as canon_parts
 from warctools_spark.kernels.canon import url_host
-from warctools_spark.kernels.http_decode import (
-    decode_http,
-    decode_http_with_09_fallback,
-)
-from warctools_spark.kernels.links import extract_links
+from warctools_spark.kernels.http_decode import decode_http
+from warctools_spark.kernels.links import page_links
 from warctools_spark.kernels.warc_write import warc_uuid, write_warc_record
 
-# Struct produced by the HTTP decoder — mirrors the
-# (code, mime, message) triage triple of warcfilter.py:28-46 plus the
-# decoded body/message needed by warc2warc -D and text extraction.
+# Struct produced by the HTTP decoder: the (code, mime) triage pair of
+# warcfilter.py:28-46, whether the message was complete, and the raw
+# and decoded bodies (sitemap seeds, http_triage).
 HTTP_STRUCT = T.StructType(
     [
         T.StructField("code", T.IntegerType()),
@@ -35,8 +32,6 @@ HTTP_STRUCT = T.StructType(
         T.StructField("complete", T.BooleanType()),
         T.StructField("body", T.BinaryType()),
         T.StructField("decoded_body", T.BinaryType()),
-        T.StructField("decoded_message", T.BinaryType()),
-        T.StructField("errors", T.ArrayType(T.StringType())),
     ]
 )
 
@@ -45,18 +40,6 @@ def _header_names(ignore_headers) -> tuple:
     return tuple(
         h if isinstance(h, bytes) else h.encode("latin-1") for h in ignore_headers
     )
-
-
-def _decode(payload, ignore_headers=(), http09_fallback=False):
-    """The one decode dispatch of the UDF layer: an HTTP response
-    (messaging.py feed-whole+close semantics), or with http09_fallback
-    the 0.9 interpretation of a payload with no HTTP/1.x status line
-    (messaging.py:696-738)."""
-    if http09_fallback:
-        return decode_http_with_09_fallback(
-            bytes(payload), ignore_headers=ignore_headers
-        )
-    return decode_http(bytes(payload), kind="response", ignore_headers=ignore_headers)
 
 
 def _mime(res):
@@ -75,41 +58,23 @@ def _body_text(res) -> str:
         return body.decode("latin-1")
 
 
-def make_udf_decode_http(http09_fallback=False):
-    """HTTP response decode udf.
-
-    http09_fallback=True re-interprets payloads with no parseable
-    HTTP/1.x status line as HTTP/0.9 (whole payload = body, implied
-    200 — messaging.py:696-738) instead of surfacing an error row."""
-    @pandas_udf(HTTP_STRUCT)
-    def _udf(html: pd.Series) -> pd.DataFrame:
-        return _decode_http_batch(html, http09_fallback=http09_fallback)
-
-    return _udf
-
-
-def _decode_http_batch(
-    html: pd.Series, ignore_headers=(), http09_fallback=False
-) -> pd.DataFrame:
-    """HTTP response decode (messaging.py feed-whole+close semantics)."""
+@pandas_udf(HTTP_STRUCT)
+def udf_decode_http(html: pd.Series) -> pd.DataFrame:
+    """HTTP response decode (messaging.py feed-whole+close semantics);
+    a null payload gives a row of nulls."""
     out = {k: [] for k in HTTP_STRUCT.fieldNames()}
     for payload in html:
         if payload is None:
             for col in out.values():
                 col.append(None)
             continue
-        res = _decode(payload, ignore_headers, http09_fallback)
+        res = decode_http(payload)
         out["code"].append(res.code)
         out["mime"].append(_mime(res))
         out["complete"].append(res.complete)
         out["body"].append(res.body)
         out["decoded_body"].append(res.decoded_body())
-        out["decoded_message"].append(res.get_decoded_message())
-        out["errors"].append(res.errors)
     return pd.DataFrame(out)
-
-
-udf_decode_http = make_udf_decode_http()
 
 
 @pandas_udf(T.StringType())
@@ -137,8 +102,7 @@ CDX_STRUCT = T.StructType(
 @pandas_udf(CDX_STRUCT)
 def udf_cdx_fields(html: pd.Series) -> pd.DataFrame:
     """(code, mime, text) of one decode per page: the status and mime
-    of udf_decode_http and the text of udf_extract_text, without the
-    decoded message's second inflate."""
+    of udf_decode_http and the text of udf_extract_text."""
     out = {k: [] for k in CDX_STRUCT.fieldNames()}
     for payload in html:
         if payload is None:
@@ -154,69 +118,11 @@ def udf_cdx_fields(html: pd.Series) -> pd.DataFrame:
 
 @pandas_udf(T.ArrayType(T.StringType()))
 def udf_extract_links(url: pd.Series, html: pd.Series) -> pd.Series:
-    """Outlinks of 2xx text/html responses (warclinks.py:54-66 gates +
-    extract_links_from_html). Non-HTML / non-2xx rows -> empty array."""
-    out = []
-    for u, payload in zip(url, html):
-        if payload is None:
-            out.append([])
-            continue
-        res = decode_http(bytes(payload), kind="response")
-        mime = res.mime or b""
-        if 200 <= res.code < 300 and mime.find(b"html") > -1:
-            out.append(extract_links(u or "", res.decoded_body()))
-        else:
-            out.append([])
-    return pd.Series(out, dtype="object")
-
-
-LINK_STRUCT = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("link", T.StringType()),
-            T.StructField("canon_url", T.StringType()),
-            T.StructField("url_sha1", T.StringType()),
-            T.StructField("host", T.StringType()),
-        ]
+    """Outlinks of 2xx text/html responses (kernels/links.page_links);
+    non-HTML / non-2xx / null rows -> empty array."""
+    return pd.Series(
+        [page_links(u, payload) for u, payload in zip(url, html)], dtype="object"
     )
-)
-
-
-@pandas_udf(LINK_STRUCT)
-def udf_harvest_canon(url: pd.Series, html: pd.Series) -> pd.Series:
-    """Fused harvest: http decode -> link extract -> canonicalize ->
-    sha1 -> host, one Arrow pass (vs 4 separate UDF passes — the
-    canonical scan-side shape for the frontier hot path).
-
-    Link-level results are memoized per Arrow batch: web link graphs
-    repeat targets heavily, so the urlparse/sha1 work runs once per
-    distinct link instead of once per occurrence."""
-    out = []
-    memo: dict = {}
-    for u, payload in zip(url, html):
-        if payload is None:
-            out.append([])
-            continue
-        res = decode_http(bytes(payload), kind="response")
-        mime = res.mime or b""
-        if not (200 <= res.code < 300 and mime.find(b"html") > -1):
-            out.append([])
-            continue
-        rows = []
-        for link in extract_links(u or "", res.decoded_body()):
-            row = memo.get(link)
-            if row is None:
-                canon, sha1, host = canon_parts(link)
-                row = {
-                    "link": link,
-                    "canon_url": canon,
-                    "url_sha1": sha1,
-                    "host": host,
-                }
-                memo[link] = row
-            rows.append(row)
-        out.append(rows)
-    return pd.Series(out, dtype="object")
 
 
 @pandas_udf(T.StringType())
@@ -305,7 +211,7 @@ def warc2warc_row(rid, rtype, url, date, ctype, content, gz, ignore_headers=()):
         and ctype is not None
         and ctype.startswith("application/http")
     ):
-        res = _decode(content, ignore_headers)
+        res = decode_http(content, ignore_headers=ignore_headers)
         if res.complete and not res.errors:
             out = res.get_decoded_message()
     return out, _warc_record_bytes(rid, rtype, url, date, ctype, out, gz)

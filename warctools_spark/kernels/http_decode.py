@@ -89,7 +89,6 @@ class HttpResult:
     body: bytes = b""
     errors: list = field(default_factory=list)
     got_continue: bool = False
-    is_http09: bool = False  # whole payload is the body; nothing to rebuild
 
     @property
     def mime(self) -> bytes | None:
@@ -102,12 +101,7 @@ class HttpResult:
 
     def get_decoded_message(self) -> bytes:
         """messaging.py:218-251: reconstructed message with chunking
-        stripped, body inflated and Content-Length recomputed. For an
-        HTTP/0.9 result the raw buffer IS the message
-        (messaging.py:723-727: HTTP09Response.get_decoded_message
-        returns the input buffer unchanged)."""
-        if self.is_http09:
-            return bytes(self.body)
+        stripped, body inflated and Content-Length recomputed."""
         buf = bytearray()
         has_body = self._has_body()
         # start line (messaging.py:573-574 / 623-624)
@@ -146,11 +140,7 @@ class HttpResult:
 
     def decoded_body(self) -> bytes:
         """The body after the same inflate attempt the decoded message
-        makes — what downstream text extraction consumes. 0.9 bodies
-        carry no headers, hence no Content-Encoding to undo
-        (messaging.py:733-735)."""
-        if self.is_http09:
-            return bytes(self.body)
+        makes — what downstream text extraction consumes."""
         body = self.body
         if self.encoding and body:
             try:
@@ -522,40 +512,6 @@ def decode_http(
         nxt = _parse_one(res.leftover, kind, ignore_headers, request_method)
         nxt.got_continue = True
         return nxt
-    return res
-
-
-def decode_http09(payload: bytes) -> HttpResult:
-    """HTTP/0.9 response: no status line, no headers — the entire
-    payload is the body (messaging.py:696-738, HTTP09Response /
-    HTTP09ResponseHeader: version HTTP/0.9, implied code 200, empty
-    phrase, body == input buffer)."""
-    if not isinstance(payload, (bytes, bytearray)):
-        payload = bytes(payload)
-    return HttpResult(
-        kind="response",
-        complete=True,
-        mode="end",
-        version=b"HTTP/0.9",
-        code=200,
-        phrase=b"",
-        body=bytes(payload),
-        is_http09=True,
-    )
-
-
-def decode_http_with_09_fallback(
-    payload: bytes, ignore_headers=()
-) -> HttpResult:
-    """decode_http, falling back to the 0.9 interpretation when no
-    HTTP/1.x status line was ever parsed (the ancient-ARC replay path:
-    pre-1.0 servers sent the entity body with no header section at
-    all). The fallback triggers only when the parser never left
-    'start' state — a malformed-but-versioned response still surfaces
-    its real parse errors."""
-    res = decode_http(payload, kind="response", ignore_headers=ignore_headers)
-    if not res.complete and res.code == 0 and not res.headers:
-        return decode_http09(payload)
     return res
 
 

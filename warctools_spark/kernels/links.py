@@ -19,6 +19,8 @@ from functools import lru_cache
 from html.parser import HTMLParser
 from urllib.parse import urlparse, urlunparse
 
+from warctools_spark.kernels.http_decode import decode_http
+
 # urlparse is pure and ParseResult immutable; link graphs repeat
 # targets heavily, so caching across documents is a large win
 _urlparse = lru_cache(maxsize=1 << 16)(urlparse)
@@ -129,98 +131,34 @@ class _LinkCollector(HTMLParser):
         return full
 
 
-# ---- fast-path start-tag scanner ----
+# ---- strict whole-document scanner ----
 #
-# HTMLParser's pure-python goahead loop dominates harvest cost
-# (~60% of the frontier epoch). For documents containing none of the
-# constructs that make HTML parsing stateful (entities, comments,
-# declarations, processing instructions, script/style rawtext), start
-# tags can be scanned directly — using html.parser's OWN tolerant
-# regexes (tagfind_tolerant / locatestarttagend_tolerant /
-# attrfind_tolerant), so tag+attribute tokenization is bit-identical.
-# Any risky byte, or any tag the regexes don't fully consume, falls
-# back to the real HTMLParser for the whole document.
-# Equality is pinned by tests/test_links_canon.py::test_fast_path_*.
+# HTMLParser's pure-python goahead loop dominates harvest cost. Link
+# extraction therefore has two tiers: a document that matches the
+# strict grammar below takes two C-level regex passes; every other
+# document goes through the stdlib HTMLParser (_LinkCollector). The
+# strict tier tokenizes with html.parser's OWN tolerant patterns, so
+# both tiers give identical links (tests/test_links_canon.py,
+# tests/test_links_fastpath.py).
 
 import html.parser as _hp
 
-_RISKY = re.compile(r"&|<!|<\?|<\s|<script|<style|\x00", re.IGNORECASE)
-
-
 # tags whose attributes can produce links (plus base/meta specials) —
 # attribute tokenization is skipped for every other tag, which is
-# semantics-preserving because the position advance depends only on
-# locatestarttagend and handle_starttag ignores non-table tags anyway
+# semantics-preserving because handle_starttag ignores non-table tags
 _LINK_TAGS = frozenset(_TAG_ATTRS) | {"base", "meta"}
 
-# locatestarttagend_tolerant with a capture group added around the tag
-# name, derived FROM the stdlib's private patterns at import — one
-# C-regex call yields both the tag end and the name, replacing the
-# separate tagfind match per tag. These are PRIVATE html.parser
-# internals: if a CPython version reshapes them, we must NOT take the
-# whole module down — we just lose the fast path and every document
+# The strict grammar's tag-name class mirrors html.parser's PRIVATE
+# tagfind_tolerant pattern, and _POST_NAME is that pattern's trailing
+# skip, applied after the name to position the attribute loop where
+# tagfind.end() does. If a CPython version reshapes the pattern, the
+# module must not fail: the strict tier turns off and every document
 # goes through the real HTMLParser (identical results, slower).
-try:
-    _NAME_TXT = _hp.tagfind_tolerant.pattern[1:].split(")")[0]
-    if "<" + _NAME_TXT not in _hp.locatestarttagend_tolerant.pattern:
-        raise ValueError("stdlib html.parser pattern shape changed")
-    _TAG_END_NAMED = re.compile(
-        _hp.locatestarttagend_tolerant.pattern.replace(
-            "<" + _NAME_TXT, "<(" + _NAME_TXT + ")", 1
-        ),
-        _hp.locatestarttagend_tolerant.flags,
-    )
-    # tagfind_tolerant's trailing skip, applied after the name to
-    # position the attr loop exactly where tagfind.end() used to
-    _POST_NAME = re.compile(_hp.tagfind_tolerant.pattern.split(")", 1)[1])
-    FAST_SCAN_AVAILABLE = True
-except Exception:  # pragma: no cover - depends on stdlib internals
-    _TAG_END_NAMED = None
+_TAGFIND_NAME = "([a-zA-Z][^\\t\\n\\r\\f />\\x00]*)"
+if _hp.tagfind_tolerant.pattern.startswith(_TAGFIND_NAME):
+    _POST_NAME = re.compile(_hp.tagfind_tolerant.pattern[len(_TAGFIND_NAME):])
+else:  # pragma: no cover - depends on stdlib internals
     _POST_NAME = None
-    FAST_SCAN_AVAILABLE = False
-
-
-def _fast_scan_links(body: str, base: str) -> tuple[list[str], str]:
-    """(links, base) exactly as _LinkCollector.feed would produce, or
-    raise _FallBack if anything is not plainly understood.
-
-    Tokenization uses html.parser's OWN tolerant regexes, so accepted
-    documents tokenize bit-identically; attrs are only parsed for the
-    ~20 link-bearing tags."""
-    pos = 0
-    links: list[str] = []
-    find = body.find
-    tag_end = _TAG_END_NAMED.match
-    post_name = _POST_NAME.match
-    while True:
-        lt = find("<", pos)
-        if lt < 0:
-            return links, base
-        nxt = body[lt + 1 : lt + 2]
-        if nxt == "/":
-            gt = find(">", lt)
-            if gt < 0:
-                return links, base  # eof in tag: HTMLParser drops it
-            pos = gt + 1
-            continue
-        if not nxt.isalpha():
-            raise _FallBack()
-        m = tag_end(body, lt)
-        if not m:
-            raise _FallBack()
-        endpos = m.end()
-        if body[endpos : endpos + 1] != ">" and body[endpos : endpos + 2] != "/>":
-            # ill-formed start tag -> HTMLParser's recovery quirks
-            raise _FallBack()
-        tag = m.group(1).lower()
-        if tag in _LINK_TAGS:
-            k = post_name(body, m.end(1)).end()
-            base = _take(tag, _attrs(body, k, endpos), links, base)
-        pos = endpos + (1 if body[endpos : endpos + 1] == ">" else 2)
-
-
-class _FallBack(Exception):
-    pass
 
 
 def _attrs(s: str, k: int, end: int) -> list[tuple[str, str | None]]:
@@ -243,21 +181,18 @@ def _attrs(s: str, k: int, end: int) -> list[tuple[str, str | None]]:
     return attrs
 
 
-# ---- strict whole-document scanner ----
-#
-# One tier above _fast_scan_links: when the ENTIRE document matches a
-# conservative tiling grammar — text, end tags, and start tags whose
-# quotes appear only as '='-prefixed balanced values with no '<'
-# inside — tokenization is position-free: every '<' begins exactly one
-# tag, every tag ends at its first unquoted '>', and html.parser's
-# tolerant tokenizer provably consumes the same spans. Then link
-# extraction needs just TWO C-level regex passes: the validating
-# fullmatch and one findall over the link-bearing tags, whose match
-# already holds the attribute of the common one-attribute tag. Only a
-# tag with another attribute shape goes through the stdlib's own
-# attrfind_tolerant in Python, so attr semantics are bit-identical.
-# Documents rejected by the strict grammar fall through to
-# _fast_scan_links unchanged (conservative: rejection can never change
+# When the ENTIRE document matches a conservative tiling grammar —
+# text, end tags, and start tags whose quotes appear only as
+# '='-prefixed balanced values with no '<' inside — tokenization is
+# position-free: every '<' begins exactly one tag, every tag ends at
+# its first unquoted '>', and html.parser's tolerant tokenizer provably
+# consumes the same spans. Then link extraction needs just TWO C-level
+# regex passes: the validating fullmatch and one findall over the
+# link-bearing tags, whose match already holds the attribute of the
+# common one-attribute tag. Only a tag with another attribute shape
+# goes through the stdlib's own attrfind_tolerant in Python, so attr
+# semantics are bit-identical. A document the grammar rejects goes
+# through HTMLParser (conservative: rejection can never change
 # results, only speed).
 #
 # Grammar notes (each restriction maps to a tokenizer-divergence risk):
@@ -267,9 +202,9 @@ def _attrs(s: str, k: int, end: int) -> list[tuple[str, str | None]]:
 #   * no '<' inside quoted values / end tags — keeps every '<' a real
 #     tag start so the finditer cannot match inside another tag;
 #   * names/bare values exclude quotes, '<', '=' — boundary ambiguity;
-#   * no '&'/NUL anywhere and no script/style/'<!'/'<?' tags — the
-#     _RISKY constructs — so one fullmatch subsumes the risky gate
-#     (entity unescape stays identity, no rawtext/CDATA modes);
+#   * no '&'/NUL anywhere and no script/style/'<!'/'<?' tags, the
+#     constructs that make HTML parsing stateful (entity unescape stays
+#     identity, no rawtext/CDATA modes);
 #   * every quantifier is POSSESSIVE (Python 3.11+) and alternatives
 #     are first-character-disjoint, so rejection is linear-time — a
 #     backtracking formulation would go quadratic-or-worse exactly on
@@ -350,22 +285,10 @@ def extract_links(base_url: str, body: bytes | str) -> list[str]:
             body = bytes(body).decode("latin-1")
     try:
         collector = _LinkCollector(base_url)
-        # tier order: strict fullmatch implies risky-free, so accepted
-        # documents pay ONE validating scan; rejected ones fall through
-        # to the per-tag scanner behind the original _RISKY gate
-        if FAST_SCAN_AVAILABLE and _STRICT_DOC.fullmatch(body) is not None:
+        if _POST_NAME is not None and _STRICT_DOC.fullmatch(body) is not None:
             collector.links, collector.base = _strict_scan_links(
                 body, base_url
             )
-        elif FAST_SCAN_AVAILABLE and _RISKY.search(body) is None:
-            try:
-                collector.links, collector.base = _fast_scan_links(
-                    body, base_url
-                )
-            except _FallBack:
-                collector = _LinkCollector(base_url)
-                collector.feed(body)
-                collector.close()
         else:
             collector.feed(body)
             collector.close()
@@ -384,3 +307,17 @@ def extract_links(base_url: str, body: bytes | str) -> list[str]:
 
 
 _CTL_STRIP = {ord("\n"): None, ord("\r"): None, ord("\t"): None}
+
+
+def page_links(url: str | None, payload: bytes | None) -> list[str]:
+    """Outlinks of one HTTP response payload behind warclinks' gates
+    (warclinks.py:54-66): a 2xx response whose mime contains 'html'
+    gives the links of its decoded body; any other response, or a
+    null payload, gives []."""
+    if payload is None:
+        return []
+    res = decode_http(payload)
+    mime = res.mime or b""
+    if 200 <= res.code < 300 and mime.find(b"html") > -1:
+        return extract_links(url or "", res.decoded_body())
+    return []

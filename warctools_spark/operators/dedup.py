@@ -110,12 +110,14 @@ def minhash_signature(col: Column, num_hashes: int = 16) -> Column:
     )
 
 
-def _capped_bucket_pairs(
-    banded: DataFrame, id_col: str, max_bucket_size: int
-) -> tuple[DataFrame, DataFrame]:
-    """(pairs, bucket_sizes) from banded(id, band, band_key) rows.
+# LSH buckets above this size pair as a star (see _capped_bucket_pairs)
+_MAX_BUCKET_SIZE = 200
 
-    Small buckets (≤ max_bucket_size) explode all in-bucket pairs;
+
+def _capped_bucket_pairs(banded: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(pairs, bucket_sizes) from banded(doc_id, band, band_key) rows.
+
+    Small buckets (≤ _MAX_BUCKET_SIZE) explode all in-bucket pairs;
     oversized ones emit O(n) star pairs to the bucket's min id — pair
     count, per-task work AND collect_list arrays are all bounded by
     the cap (oversized buckets are filtered out BEFORE the collect)
@@ -135,7 +137,7 @@ def _capped_bucket_pairs(
     """
     buckets = (
         banded.groupBy("band", "band_key")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .where(F.size("ids") >= 2)
     )
     all_pairs = F.flatten(
@@ -152,7 +154,7 @@ def _capped_bucket_pairs(
         lambda y: F.struct(F.col("ids")[0].alias("id_a"), y.alias("id_b")),
     )
     pair_gen = F.when(
-        F.size("ids") <= max_bucket_size, all_pairs
+        F.size("ids") <= _MAX_BUCKET_SIZE, all_pairs
     ).otherwise(star_pairs)
     pairs = (
         buckets.select(F.explode(pair_gen).alias("p"))
@@ -163,17 +165,17 @@ def _capped_bucket_pairs(
     return pairs, sizes
 
 
-def _bucket_stats(sizes: DataFrame, max_bucket_size: int) -> DataFrame:
+def _bucket_stats(sizes: DataFrame) -> DataFrame:
     """One row: total (multi-member) buckets, oversized buckets, ids
     inside them — the 'what got star-capped' disclosure for LSH
     hygiene."""
     return sizes.agg(
         F.count("*").alias("n_buckets"),
         F.sum(
-            F.when(F.col("__n") > max_bucket_size, 1).otherwise(0)
+            F.when(F.col("__n") > _MAX_BUCKET_SIZE, 1).otherwise(0)
         ).alias("n_oversize_buckets"),
         F.sum(
-            F.when(F.col("__n") > max_bucket_size, F.col("__n")).otherwise(0)
+            F.when(F.col("__n") > _MAX_BUCKET_SIZE, F.col("__n")).otherwise(0)
         ).alias("n_ids_in_oversize"),
     )
 
@@ -182,7 +184,6 @@ def minhash_lsh_candidates(
     docs: DataFrame,
     num_hashes: int = 16,
     bands: int = 4,
-    max_bucket_size: int = 200,
     return_stats: bool = False,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH.
@@ -192,7 +193,7 @@ def minhash_lsh_candidates(
 
     Degenerate-bucket hygiene: a band key shared by a huge member set
     (empty docs, boilerplate) would make the in-bucket all-pairs
-    explosion O(n²) in ONE task. Buckets larger than `max_bucket_size`
+    explosion O(n²) in ONE task. Buckets larger than 200 members
     therefore switch to STAR pairing — every member links to the
     bucket's min id — which is O(n) per bucket, bounds both the pair
     count and the collect_list array size, and preserves the duplicate
@@ -243,23 +244,19 @@ def minhash_lsh_candidates(
     # bucket-collect instead of self-join: a self-join would execute the
     # signature pipeline twice; one groupBy + in-bucket pair explosion
     # scans once and shuffles once.
-    pairs, sized = _capped_bucket_pairs(banded, "doc_id", max_bucket_size)
+    pairs, sized = _capped_bucket_pairs(banded)
     if not return_stats:
         return pairs
-    return pairs, _bucket_stats(sized, max_bucket_size)
+    return pairs, _bucket_stats(sized)
 
 
-def ngram_jaccard(
-    docs: DataFrame,
-    pairs: DataFrame,
-    n: int = 3,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity for candidate pairs (the LSH
+def ngram_jaccard(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Exact word-trigram Jaccard similarity for candidate pairs (the LSH
     verify stage): pairs(id_a, id_b) -> + jaccard double. Pairs where
-    BOTH docs are shorter than n tokens (empty shingle sets) score
+    BOTH docs are shorter than 3 tokens (empty shingle sets) score
     0.0, not null — the same guarded-denominator contract as
     ngram_containment."""
-    sh = docs.select(F.col("doc_id"), shingles(F.col("text"), n).alias("sh"))
+    sh = docs.select(F.col("doc_id"), shingles(F.col("text")).alias("sh"))
     out = (
         pairs.join(sh.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
         .join(sh.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
@@ -278,8 +275,8 @@ def ngram_jaccard(
     return out
 
 
-def simhash60(col: Column, n: int = 3) -> Column:
-    """60-bit SimHash over word n-gram shingles — all JVM expressions.
+def simhash60(col: Column) -> Column:
+    """60-bit SimHash over word-trigram shingles — all JVM expressions.
 
     bit_j = 1 iff sum over shingles of (bit_j(h(s)) ? +1 : -1) > 0,
     h(s) = first 15 hex chars of md5 (60 bits; md5 is used so the
@@ -289,7 +286,7 @@ def simhash60(col: Column, n: int = 3) -> Column:
     majority votes then fold over bigints, not over repeated md5 calls.
     """
     hashes = F.transform(
-        shingles(col, n),
+        shingles(col),
         lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint"),
     )
     def _vote(j):
@@ -622,11 +619,7 @@ def decontaminate(
     )
 
 
-def segment_dedup(
-    docs: DataFrame,
-    k: int = 10,
-    mode: str = "window",
-) -> DataFrame:
+def segment_dedup(docs: DataFrame, mode: str = "window") -> DataFrame:
     """C4-style corpus-level segment dedup (Raffel et al. 2020 §2.2
     dedup "any three-sentence span that occurs more than once"): split
     every document into segments, keep only the globally-FIRST
@@ -634,7 +627,7 @@ def segment_dedup(
     reassemble documents from their surviving segments in order.
 
     mode="line" segments on newlines (the C4 form for real web text);
-    mode="window" segments on consecutive k-token windows, which is
+    mode="window" segments on consecutive 10-token windows, which is
     the same relational machinery for corpora without line structure.
 
     Plan shape at 100 TB: the keeper per segment is min(struct(doc_id,
@@ -660,12 +653,12 @@ def segment_dedup(
             (F.length(F.trim(F.col("text"))) > 0).alias("__nonempty"),
         )
         tk = F.col("__toks")
-        n_seg = F.ceil(F.size(tk) / F.lit(k)).cast("int")
+        n_seg = F.ceil(F.size(tk) / F.lit(10)).cast("int")
         segs_arr = F.when(
             F.col("__nonempty"),
             F.transform(
                 F.sequence(F.lit(0), n_seg - 1),
-                lambda i: F.concat_ws(" ", F.slice(tk, i * k + 1, k)),
+                lambda i: F.concat_ws(" ", F.slice(tk, i * 10 + 1, 10)),
             ),
         ).otherwise(F.array().cast("array<string>"))
         segs = toked.select(
@@ -825,20 +818,19 @@ def duplicate_spans(
 
 def remove_duplicate_spans(
     docs: DataFrame,
-    k: int = 10,
     min_span_tokens: int = 20,
 ) -> DataFrame:
     """Rewrite documents with their duplicated spans (duplicate_spans
-    semantics — first corpus occurrence survives) cut out: tokens
-    whose position falls inside any flagged span are dropped and the
-    remainder re-joined with single spaces. Returns
+    semantics over 10-grams — first corpus occurrence survives) cut
+    out: tokens whose position falls inside any flagged span are
+    dropped and the remainder re-joined with single spaces. Returns
     (id, clean_text, n_removed_tokens). One extra join on doc id plus
     a per-doc collect_list of its (few) spans — spans per doc are
     bounded by text length / min_span_tokens, so the list stays tiny.
     """
     from warctools_spark.operators.text_analysis import tokens
 
-    spans = duplicate_spans(docs, k, min_span_tokens)
+    spans = duplicate_spans(docs, min_span_tokens=min_span_tokens)
     per_doc = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("spans")
     )
@@ -864,12 +856,8 @@ def remove_duplicate_spans(
     )
 
 
-def ngram_containment(
-    docs: DataFrame,
-    pairs: DataFrame,
-    n: int = 3,
-) -> DataFrame:
-    """Exact ASYMMETRIC n-gram containment for candidate pairs:
+def ngram_containment(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Exact ASYMMETRIC word-trigram containment for candidate pairs:
     C(a in b) = |S(a) ∩ S(b)| / |S(a)|. The quote/partial-copy
     detector Jaccard misses — a short document wholly embedded in a
     long one has containment ~1.0 while Jaccard stays near
@@ -877,7 +865,7 @@ def ngram_containment(
     pass serves the dedup policy ("drop if contained" vs "drop if
     near-identical"). Same join shape as ngram_jaccard: two hash
     joins of the pairs table against the shingle projection."""
-    sh = docs.select(F.col("doc_id"), shingles(F.col("text"), n).alias("sh"))
+    sh = docs.select(F.col("doc_id"), shingles(F.col("text")).alias("sh"))
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     return (
         pairs.join(

@@ -7,7 +7,7 @@ link extraction. Everything frontier-ward of that (canonical seen-set,
 per-host politeness, BFS priority) is north_rule-mandated new
 capability, expressed with built-in Catalyst operators:
 
-* link harvest: one mapInPandas pass (decode -> extract ->
+* link harvest: one mapInPandas pass (kernels/links.page_links ->
   canonicalize), harvest_canonicalized
 * dedup: left_anti join on url_sha1 (+ optional Bloom or cuckoo
   pre-filter, operators/seen.py, for the 10^10-row regime)
@@ -31,8 +31,8 @@ _HARVEST_SCHEMA = (
 
 
 def _harvest_flat(it):
-    """mapInPandas kernel behind harvest_canonicalized: decode ->
-    extract -> canonicalize per page, emitting FLAT string columns.
+    """mapInPandas kernel behind harvest_canonicalized: page_links ->
+    canonicalize per page, emitting FLAT string columns.
     Constructing five flat arrays and letting Arrow convert them in
     one C pass replaces the r5 list<struct> pandas_udf + JVM explode,
     whose object-Series -> Arrow nested conversion dominated the
@@ -42,8 +42,7 @@ def _harvest_flat(it):
     only hrefs that need canonicalizing fall through to the cached
     canon_parts."""
     from warctools_spark.kernels.canon import canon_parts_fast as canon_parts
-    from warctools_spark.kernels.http_decode import decode_http
-    from warctools_spark.kernels.links import extract_links
+    from warctools_spark.kernels.links import page_links
 
     import pandas as pd
 
@@ -54,13 +53,7 @@ def _harvest_flat(it):
         sha_l: list = []
         host_l: list = []
         for u, payload in zip(pdf.iloc[:, 0], pdf.iloc[:, 1]):
-            if payload is None:
-                continue
-            res = decode_http(bytes(payload), kind="response")
-            mime = res.mime or b""
-            if not (200 <= res.code < 300 and mime.find(b"html") > -1):
-                continue
-            for link in extract_links(u or "", res.decoded_body()):
+            for link in page_links(u, payload):
                 canon, sha1, host = canon_parts(link)
                 src_l.append(u)
                 link_l.append(link)
@@ -78,16 +71,14 @@ def _harvest_flat(it):
         )
 
 
-def harvest_canonicalized(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def harvest_canonicalized(pages: DataFrame, url_col: str = "url") -> DataFrame:
     """Link harvest: one Arrow pass producing one row per outlink of
-    each 2xx text/html page (warclinks.py:54-66 gates), as
+    each 2xx text/html page in `html` (warclinks.py:54-66 gates), as
     (src_url, link, canon_url, url_sha1, host) in page link order.
     The explicit two-column select before mapInPandas is
     load-bearing: opaque functions defeat column pruning, so without
     it the scan would read every page column (guide §4.1)."""
-    return pages.select(F.col(url_col), F.col(html_col)).mapInPandas(
+    return pages.select(F.col(url_col), F.col("html")).mapInPandas(
         _harvest_flat, _HARVEST_SCHEMA
     )
 
@@ -168,9 +159,9 @@ def link_rank(
     edges: DataFrame,
     vertices: DataFrame,
     iterations: int = 3,
-    id_col: str = "node",
 ) -> DataFrame:
-    """PageRank-style crawl priority over the harvested link graph —
+    """PageRank-style crawl priority over the harvested link graph
+    (edges(src, dst), vertices(node)) —
     the data-derived refinement of BFS ordering for the frontier's
     priority queue: rank' = (1-d)/n + d * Σ_in rank/out_deg with
     damping d = 0.85, a fixed number of synchronous iterations
@@ -186,9 +177,7 @@ def link_rank(
     n = vertices.count()
     base = 1.0 / n
     deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-    ranks = vertices.select(F.col(id_col).alias("node")).withColumn(
-        "rank", F.lit(base)
-    )
+    ranks = vertices.select("node").withColumn("rank", F.lit(base))
     for _ in range(iterations):
         contrib = (
             edges.join(ranks.withColumnRenamed("node", "src"), on="src")
@@ -201,7 +190,7 @@ def link_rank(
             .agg(F.sum("c").alias("in_sum"))
         )
         ranks = (
-            vertices.select(F.col(id_col).alias("node"))
+            vertices.select("node")
             .join(contrib, on="node", how="left")
             .select(
                 "node",

@@ -163,21 +163,15 @@ def _hash_mod(col: Column, seed: str, mod: int) -> Column:
     return portable_hash60(col, seed) % F.lit(mod)
 
 
-def _hashed_gram_counts(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n_buckets: int,
-    seed: str,
-) -> DataFrame:
-    """Per-doc hashed-n-gram feature counts: whitespace unigrams +
-    space-joined bigrams, each hashed into `n_buckets` buckets ->
-    (id, bucket, c). The per-doc pre-aggregation is deliberate: every
+def _hashed_gram_counts(df: DataFrame) -> DataFrame:
+    """Per-doc hashed-n-gram feature counts of df(doc_id, text):
+    whitespace unigrams + space-joined bigrams, each hashed into
+    _DSIR_BUCKETS buckets -> (__id, bucket, c). The per-doc pre-aggregation is deliberate: every
     downstream join touches this (sub-vocabulary-sized per doc) table,
     never the exploded occurrence stream — the same join-input-
     reduction that fixed bigram_logprob's skew."""
     w = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != ""
+        F.split(F.trim(F.col("text")), r"\s+"), lambda x: x != ""
     )
     empty = F.array().cast("array<string>")
     bi = F.when(
@@ -189,7 +183,7 @@ def _hashed_gram_counts(
         ),
     ).otherwise(empty)
     grams = df.select(
-        F.col(id_col).alias("__id"),
+        F.col("doc_id").alias("__id"),
         *([F.col("__is_target")] if "__is_target" in df.columns else []),
         F.explode(F.concat(w, bi)).alias("gram"),
     )
@@ -198,28 +192,23 @@ def _hashed_gram_counts(
     )
     return (
         grams.select(
-            *keys, _hash_mod(F.col("gram"), seed, n_buckets).alias("bucket")
+            *keys, _hash_mod(F.col("gram"), "dsir-v1", _DSIR_BUCKETS).alias("bucket")
         )
         .groupBy(*keys, "bucket")
         .agg(F.count("*").cast("long").alias("c"))
     )
 
 
-def _bucket_log_ratio(
-    docs_b: DataFrame,
-    target_b: DataFrame,
-    n_buckets: int,
-    alpha: float,
-) -> DataFrame:
+def _bucket_log_ratio(docs_b: DataFrame, target_b: DataFrame) -> DataFrame:
     """The DSIR importance log-ratio per bucket over the FULL bucket
-    domain: lam_b = ln p_hat(b) - ln q_hat(b), with add-alpha
-    smoothing p_hat(b) = (p_b + a) / (P + a*B). Returns exactly
-    `n_buckets` rows — a constant-size (feature-dim) table that
+    domain: lam_b = ln p_hat(b) - ln q_hat(b), with add-one
+    smoothing p_hat(b) = (p_b + 1) / (P + B). Returns exactly
+    _DSIR_BUCKETS rows — a constant-size (feature-dim) table that
     broadcasts no matter the corpus size."""
     spark = docs_b.sparkSession
     q = docs_b.groupBy("bucket").agg(F.sum("c").cast("long").alias("qn"))
     p = target_b.groupBy("bucket").agg(F.sum("c").cast("long").alias("pn"))
-    dom = spark.range(n_buckets).select(F.col("id").alias("bucket"))
+    dom = spark.range(_DSIR_BUCKETS).select(F.col("id").alias("bucket"))
     lam = (
         dom.join(p, "bucket", "left")
         .join(q, "bucket", "left")
@@ -234,12 +223,12 @@ def _bucket_log_ratio(
             "bucket",
             (
                 F.log(
-                    (F.coalesce(F.col("pn"), F.lit(0)).cast("double") + alpha)
-                    / (F.col("__P") + alpha * n_buckets)
+                    (F.coalesce(F.col("pn"), F.lit(0)).cast("double") + 1.0)
+                    / (F.col("__P") + 1.0 * _DSIR_BUCKETS)
                 )
                 - F.log(
-                    (F.coalesce(F.col("qn"), F.lit(0)).cast("double") + alpha)
-                    / (F.col("__Q") + alpha * n_buckets)
+                    (F.coalesce(F.col("qn"), F.lit(0)).cast("double") + 1.0)
+                    / (F.col("__Q") + 1.0 * _DSIR_BUCKETS)
                 )
             ).alias("lam"),
         )
@@ -266,7 +255,7 @@ def dsir_weights(
 
     Scale: two hash aggs over the gram stream (map-side combined),
     then every join is per-doc-pre-aggregated counts against a
-    constant `n_buckets`-row broadcast table — no corpus-sized
+    constant _DSIR_BUCKETS-row broadcast table — no corpus-sized
     shuffle keyed on skewed grams ("the the" never becomes a hot
     join key because only its bucket's COUNT travels).
 
@@ -288,20 +277,14 @@ def dsir_weights(
             else target_predicate
         )
         both = _hashed_gram_counts(
-            docs.withColumn("__is_target", pred.cast("boolean")),
-            "text",
-            "doc_id",
-            _DSIR_BUCKETS,
-            "dsir-v1",
+            docs.withColumn("__is_target", pred.cast("boolean"))
         )
         docs_b = both.drop("__is_target")
         target_b = both.where(F.col("__is_target")).drop("__is_target")
     else:
-        docs_b = _hashed_gram_counts(docs, "text", "doc_id", _DSIR_BUCKETS, "dsir-v1")
-        target_b = _hashed_gram_counts(
-            target, "text", "doc_id", _DSIR_BUCKETS, "dsir-v1"
-        )
-    lam = _bucket_log_ratio(docs_b, target_b, _DSIR_BUCKETS, 1.0)
+        docs_b = _hashed_gram_counts(docs)
+        target_b = _hashed_gram_counts(target)
+    lam = _bucket_log_ratio(docs_b, target_b)
     wts = (
         docs_b.join(F.broadcast(lam), "bucket")
         .groupBy("__id")

@@ -161,9 +161,7 @@ def kmeans_assign(
     per iteration (the same O(small) driver traffic as Lloyd on any
     cluster). Returns (id, cluster, dist) with dist rounded to 6.
     """
-    assigned, _ = _lloyd(
-        emb, k, iterations, "vec_id", "embedding", 6, assign_mode
-    )
+    assigned, _ = _lloyd(emb, k, iterations, assign_mode)
     return assigned.select(
         "vec_id",
         "cluster",
@@ -227,16 +225,11 @@ def _assign_to_centroids(
 
 
 def _lloyd(
-    emb: DataFrame,
-    k: int,
-    iterations: int,
-    id_col: str,
-    vec_col: str,
-    round_centroids: int,
-    assign_mode: str,
+    emb: DataFrame, k: int, iterations: int, assign_mode: str
 ) -> tuple[DataFrame, dict]:
-    """Shared Lloyd loop behind kmeans_assign and ivf_kmeans_topk:
-    returns (assigned(id, __v, cluster, __d2), final centroids)."""
+    """Shared Lloyd loop behind kmeans_assign and ivf_kmeans_topk over
+    (vec_id, embedding): returns (assigned(vec_id, __v, cluster, __d2),
+    final centroids, rounded to 6 decimals)."""
     from warctools_spark.operators.dedup import _require_dims
 
     # dims derives from the init collect (which Lloyd needs anyway)
@@ -246,9 +239,9 @@ def _lloyd(
     # executor-side _require_dims guard on every later pass.
     init_rows = (
         emb.select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
+            F.col("vec_id"), F.col("embedding").cast("array<double>").alias("__v")
         )
-        .orderBy(id_col)
+        .orderBy("vec_id")
         .limit(k)
         .collect()
     )
@@ -264,11 +257,11 @@ def _lloyd(
     dims = len(init_rows[0]["__v"])
     if any(len(r["__v"]) != dims for r in init_rows):
         raise ValueError(
-            f"ragged embedding column {vec_col!r} among the k lowest-id "
+            "ragged embedding column 'embedding' among the k lowest-id "
             "init vectors; filter to one dimensionality first"
         )
-    keyed = _require_dims(emb, vec_col, dims).select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
+    keyed = _require_dims(emb, "embedding", dims).select(
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("__v")
     )
     centroids = {i: list(r["__v"]) for i, r in enumerate(init_rows)}
     if assign_mode == "auto":
@@ -284,7 +277,7 @@ def _lloyd(
         upd = (
             assigned.select("cluster", F.posexplode("__v").alias("dim", "val"))
             .groupBy("cluster", "dim")
-            .agg(F.round(F.avg("val"), round_centroids).alias("val"))
+            .agg(F.round(F.avg("val"), 6).alias("val"))
             .collect()
         )
         new_c: dict = {}
@@ -302,30 +295,26 @@ def ivf_kmeans_topk(
     emb: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    n_cells: int = 8,
-    iterations: int = 2,
     n_probe: int = 2,
 ) -> DataFrame:
     """ANN top-k over a kmeans-trained IVF index (the classic
     inverted-file ANN: Lloyd centroids as the coarse quantizer).
-    Train `n_cells` deterministic Lloyd centroids, pick the `n_probe`
-    cells whose centroids are nearest the query (driver-side — n_cells
-    distances), and exact-rerank only the vectors assigned to those
-    cells.
+    Train 8 deterministic Lloyd centroids in 2 iterations, pick the
+    `n_probe` cells whose centroids are nearest the query
+    (driver-side — 8 distances), and exact-rerank only the vectors
+    assigned to those cells.
 
     Scale shape: training is the kmeans_assign plan (map-side combined
     centroid update, k*dims rows to the driver per iteration); the
     probe is a literal IN filter on the cluster column — if the corpus
     is stored partitioned by cluster (the IVF layout), that prunes
-    ~(1 - n_probe/n_cells) of the scan before it starts; the rerank is
+    ~(1 - n_probe/8) of the scan before it starts; the rerank is
     TakeOrderedAndProject over the probed fraction. Expected recall
-    rises with n_probe; exact when n_probe = n_cells. In production
+    rises with n_probe; exact when n_probe = 8. In production
     the trained index (cluster column + centroid table) is written
     once and reused across queries — this entry trains per call only
     so the whole path stays one oracle-checkable expression."""
-    assigned, centroids = _lloyd(
-        emb, n_cells, iterations, "vec_id", "embedding", 6, "expr"
-    )
+    assigned, centroids = _lloyd(emb, 8, 2, "expr")
     probe = _select_probe_cells(centroids, query_vec, n_probe)
     cands = assigned.where(F.col("cluster").isin(probe))
     return brute_force_topk(cands, query_vec, k, vec_col="__v")
@@ -360,11 +349,10 @@ def _select_probe_cells(
 def semdedup_survivors(
     emb: DataFrame,
     k: int = 8,
-    iterations: int = 2,
     threshold: float = 0.9,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023 pattern, public): cluster the
-    embeddings, then drop any vector whose cluster contains a
+    embeddings (2 Lloyd iterations), then drop any vector whose cluster contains a
     LOWER-id vector with cosine >= threshold. Returns survivors
     (id, cluster).
 
@@ -374,7 +362,7 @@ def semdedup_survivors(
     (n/k)² work — k is the knob that bounds per-task cost. Keeper
     choice (lowest id) is deterministic; the cosine is rounded to 6
     before thresholding so engine fp noise cannot flip membership."""
-    assigned = kmeans_assign(emb, k, iterations).select(
+    assigned = kmeans_assign(emb, k).select(
         F.col("vec_id"), "cluster"
     )
     keyed = emb.select(

@@ -21,40 +21,32 @@ warctools has no sketching; cited for the formulas only.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from warctools_spark.functions.exprs import portable_hash60 as _hash60
 
 
-def _cms_bucket_array(col: Column, width: int, depth: int, seed: str) -> Column:
-    """The depth bucket hashes for one token, posexplode-ready."""
-    return F.array(
-        *[
-            (_hash60(F.concat(F.lit(f"{j}:"), col), seed) % F.lit(width))
-            for j in range(depth)
-        ]
-    )
-
-
-def _token_freq(docs: DataFrame, text_col: str) -> DataFrame:
+def _token_freq(docs: DataFrame) -> DataFrame:
     toks = docs.select(
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("token")
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token")
     ).where(F.col("token") != "")
     return toks.groupBy("token").agg(
         F.count("*").cast("long").alias("n_exact")
     )
 
 
-def _cms_hashed(
-    freq: DataFrame, width: int, depth: int, seed: str
-) -> DataFrame:
+def _cms_hashed(freq: DataFrame) -> DataFrame:
+    """freq + (j, bucket): the token's counter in each row j of the
+    4 x 1024 count-min grid."""
+    buckets = F.array(
+        *[
+            (_hash60(F.concat(F.lit(f"{j}:"), F.col("token")), "cms-v1") % F.lit(1024))
+            for j in range(4)
+        ]
+    )
     return freq.select(
-        "token",
-        "n_exact",
-        F.posexplode(
-            _cms_bucket_array(F.col("token"), width, depth, seed)
-        ).alias("j", "bucket"),
+        "token", "n_exact", F.posexplode(buckets).alias("j", "bucket")
     )
 
 
@@ -78,8 +70,7 @@ def cms_top_tokens(
     input. The counter grid is depth*width rows REGARDLESS of corpus
     size — it broadcasts, and a per-epoch grid merges into a lifetime
     grid by elementwise sum."""
-    freq = _token_freq(docs, "text")
-    hashed = _cms_hashed(freq, 1024, 4, "cms-v1")
+    hashed = _cms_hashed(_token_freq(docs))
     counters = hashed.groupBy("j", "bucket").agg(
         F.sum("n_exact").cast("long").alias("cnt")
     )

@@ -326,15 +326,14 @@ def strip_boilerplate(col: Column) -> Column:
 
 def ngram_frequencies(
     docs: DataFrame,
-    n: int = 2,
     top_k: int | None = None,
 ) -> DataFrame:
-    """Global word n-gram frequency table (vocabulary induction /
+    """Global word bigram frequency table (vocabulary induction /
     merge-candidate mining for tokenizer training) — same plan shape
     as token_frequencies: explode, one map-side-combined hash agg,
     exact top-k via TakeOrderedAndProject."""
     grams = docs.select(
-        F.explode(word_ngrams(F.col("text"), n)).alias("gram")
+        F.explode(word_ngrams(F.col("text"), 2)).alias("gram")
     ).where(F.col("gram") != "")
     counts = grams.groupBy("gram").agg(F.count("*").alias("n"))
     if top_k:
@@ -342,10 +341,9 @@ def ngram_frequencies(
     return counts
 
 
-def anchor_text_pairs(
-    df: DataFrame, text, url_col: str = "url"
-) -> DataFrame:
-    """(src_url, link, anchor) pairs from simple HTML anchors.
+def anchor_text_pairs(df: DataFrame, text) -> DataFrame:
+    """(src_url, link, anchor) pairs from simple HTML anchors of the
+    pages in df (src_url is df's `url`).
 
     The whole <a ...>...</a> element is extracted in ONE regex pass
     and href/anchor are pulled from the SAME match, so a tag that
@@ -363,7 +361,7 @@ def anchor_text_pairs(
     )
     return (
         df.select(
-            F.col(url_col).alias("src_url"), F.explode(elems).alias("e")
+            F.col("url").alias("src_url"), F.explode(elems).alias("e")
         )
         .select(
             "src_url",
@@ -872,16 +870,10 @@ def bigram_logprob(docs: DataFrame) -> DataFrame:
     )
 
 
-def winnow_match_scores(
-    docs: DataFrame,
-    k: int = 8,
-    w: int = 4,
-    min_shared: int = 3,
-    max_doc_freq: int = 100,
-) -> DataFrame:
-    """Document-pair match scores from winnowing fingerprints — the
-    MOSS pipeline's pairing stage: two docs sharing >= `min_shared`
-    selected fingerprints are copy/quote candidates, scored by the
+def winnow_match_scores(docs: DataFrame, max_doc_freq: int = 100) -> DataFrame:
+    """Document-pair match scores from winnowing fingerprints (the
+    defaults of winnow_fingerprints) — the MOSS pipeline's pairing
+    stage: two docs sharing >= 3 selected fingerprints are copy/quote candidates, scored by the
     count of distinct shared fingerprints.
 
     The quadratic trap and its gate: a fingerprint shared by d docs
@@ -893,9 +885,9 @@ def winnow_match_scores(
     posting). Bounded join fan-out: <= max_doc_freq per fingerprint.
     Plan: distinct (doc, fp) projection -> df-count agg (map-side
     combined) -> df-gated self-join co-partitioned on the fingerprint
-    -> per-pair countDistinct >= min_shared."""
+    -> per-pair countDistinct >= 3."""
     fp = (
-        winnow_fingerprints(docs, k=k, w=w)
+        winnow_fingerprints(docs)
         .select("doc_id", "fingerprint")
         .distinct()
     )
@@ -913,7 +905,7 @@ def winnow_match_scores(
         .where(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
+        .where(F.col("n_shared") >= 3)
     )
 
 

@@ -131,15 +131,13 @@ def prepare_training_corpus_v2(docs: DataFrame) -> DataFrame:
 
 def rag_corpus(
     docs,
-    k: int = 10,
-    min_span_tokens: int = 15,
     window: int = 64,
     stride: int = 32,
     min_chunk_tokens: int = 8,
 ):
     """Composed RAG-indexing pipeline over a crawl corpus: exact
     substring-dedup rewrite (first corpus occurrence survives, spans
-    of duplicated k-grams cut) -> sliding-window chunking of the
+    of at least 15 tokens of duplicated 10-grams cut) -> sliding-window chunking of the
     cleaned text -> drop sub-minimum tail chunks. Returns
     (doc_id, chunk_id, tok_start, n_tokens, chunk).
 
@@ -149,9 +147,7 @@ def rag_corpus(
     from warctools_spark.operators.dedup import remove_duplicate_spans
     from warctools_spark.operators.text_analysis import chunk_documents
 
-    cleaned = remove_duplicate_spans(
-        docs, k=k, min_span_tokens=min_span_tokens,
-    )
+    cleaned = remove_duplicate_spans(docs, min_span_tokens=15)
     chunks = chunk_documents(
         cleaned, window=window, stride=stride,
         text_col="clean_text",

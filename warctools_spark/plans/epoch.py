@@ -148,9 +148,7 @@ def run_epoch(
     )
 
     # 3. harvest + canonicalize (fused single Arrow pass), depth+1
-    links = FR.harvest_canonicalized(
-        fetched, url_col="page_url", html_col="html"
-    ).join(
+    links = FR.harvest_canonicalized(fetched, url_col="page_url").join(
         fetched.select(F.col("page_url").alias("src_url"), "depth"),
         on="src_url",
         how="inner",
