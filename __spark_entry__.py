@@ -566,7 +566,7 @@ def _q_embedding_topk(spark, sf_dir):
 
     emb = _emb(spark, sf_dir)
     qvec = emb.where(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    return brute_force_topk(emb, [float(v) for v in qvec], k=10)
+    return brute_force_topk(emb, [float(v) for v in qvec])
 
 
 def _q_lsh_topk(spark, sf_dir):
@@ -577,7 +577,7 @@ def _q_lsh_topk(spark, sf_dir):
 
     emb = _emb(spark, sf_dir)
     qvec = emb.where(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    return lsh_topk(emb, [float(v) for v in qvec], k=10)
+    return lsh_topk(emb, [float(v) for v in qvec])
 
 
 def _q_embedding_neardup(spark, sf_dir):
@@ -1081,7 +1081,7 @@ def _q_dedup_clusters(spark, sf_dir):
     )
 
     docs = _docs(spark, sf_dir)
-    pairs = minhash_lsh_candidates(docs, num_hashes=8, bands=4)
+    pairs = minhash_lsh_candidates(docs, num_hashes=8)
     return dup_clusters(pairs, docs)
 
 
@@ -1109,7 +1109,7 @@ def _q_dedup_survivors(spark, sf_dir):
     )
 
     docs = _docs(spark, sf_dir)
-    pairs = minhash_lsh_candidates(docs, num_hashes=8, bands=4)
+    pairs = minhash_lsh_candidates(docs, num_hashes=8)
     verified = (
         ngram_jaccard(docs, pairs)
         .where(F.col("jaccard") >= 0.8)
@@ -1201,7 +1201,7 @@ def _q_kmeans(spark, sf_dir):
     from warctools_spark.operators.similarity import kmeans_assign
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return kmeans_assign(emb, k=8, iterations=2)
+    return kmeans_assign(emb)
 
 
 def _q_duplicate_spans(spark, sf_dir):
@@ -1210,7 +1210,7 @@ def _q_duplicate_spans(spark, sf_dir):
     exempt)."""
     from warctools_spark.operators.dedup import duplicate_spans
 
-    return duplicate_spans(_docs(spark, sf_dir), k=10, min_span_tokens=15)
+    return duplicate_spans(_docs(spark, sf_dir), min_span_tokens=15)
 
 
 def _q_remove_duplicate_spans(spark, sf_dir):
@@ -1226,12 +1226,7 @@ def _q_rag_corpus(spark, sf_dir):
     window chunking of the cleaned text -> min-size chunk gate."""
     from warctools_spark.plans.corpus import rag_corpus
 
-    return rag_corpus(
-        _docs(spark, sf_dir),
-        window=64,
-        stride=32,
-        min_chunk_tokens=8,
-    )
+    return rag_corpus(_docs(spark, sf_dir))
 
 
 def _q_length_report(spark, sf_dir):
@@ -1288,7 +1283,7 @@ def _q_semdedup(spark, sf_dir):
     from warctools_spark.operators.similarity import semdedup_survivors
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return semdedup_survivors(emb, k=8, threshold=0.5)
+    return semdedup_survivors(emb, threshold=0.5)
 
 
 def _q_inverted_index(spark, sf_dir):
@@ -1347,7 +1342,7 @@ def _q_bpe_pair_counts(spark, sf_dir):
     counting step of a BPE tokenizer-training merge round."""
     from warctools_spark.operators.text_analysis import bpe_pair_counts
 
-    return bpe_pair_counts(_docs(spark, sf_dir), top_n=200)
+    return bpe_pair_counts(_docs(spark, sf_dir))
 
 
 def _q_winnow_fingerprints(spark, sf_dir):
@@ -1356,7 +1351,7 @@ def _q_winnow_fingerprints(spark, sf_dir):
     >= k+w-1 is guaranteed a shared fingerprint."""
     from warctools_spark.operators.text_analysis import winnow_fingerprints
 
-    return winnow_fingerprints(_docs(spark, sf_dir), k=8, w=4)
+    return winnow_fingerprints(_docs(spark, sf_dir))
 
 
 def _q_winnow_match_scores(spark, sf_dir):
@@ -1365,7 +1360,7 @@ def _q_winnow_match_scores(spark, sf_dir):
     of distinct shared fingerprints."""
     from warctools_spark.operators.text_analysis import winnow_match_scores
 
-    return winnow_match_scores(_docs(spark, sf_dir), max_doc_freq=100)
+    return winnow_match_scores(_docs(spark, sf_dir))
 
 
 def _q_bigram_logprob(spark, sf_dir):
@@ -1397,7 +1392,7 @@ def _q_ivf_kmeans_topk(spark, sf_dir):
 
     emb = _emb(spark, sf_dir)
     qvec = emb.where(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    return ivf_kmeans_topk(emb, [float(v) for v in qvec], k=10, n_probe=2)
+    return ivf_kmeans_topk(emb, [float(v) for v in qvec])
 
 
 
@@ -1411,7 +1406,7 @@ def _q_dsir_weights(spark, sf_dir):
     # target is a subset of docs -> the predicate path tokenizes and
     # hashes each doc ONCE (the two-DataFrame path would hash every
     # en doc twice)
-    return dsir_weights(docs, target_predicate="lang = 'en'")
+    return dsir_weights(docs, "lang = 'en'")
 
 
 def _q_dsir_select(spark, sf_dir):
@@ -1420,7 +1415,7 @@ def _q_dsir_select(spark, sf_dir):
     from warctools_spark.operators.sampling import dsir_select
 
     docs = _docs(spark, sf_dir)
-    return dsir_select(docs, k=100, target_predicate="lang = 'en'")
+    return dsir_select(docs, "lang = 'en'")
 
 
 def _q_ccnet_buckets(spark, sf_dir):
@@ -2871,7 +2866,7 @@ def oracle_sql() -> dict[str, str]:
             ),
             -- df gate: over-common fingerprints are boilerplate, and
             -- a d-doc fingerprint fans the self-join out d^2 — same
-            -- gate as the Spark operator's max_doc_freq
+            -- gate as the Spark operator's (df <= 100)
             keep AS (
               SELECT fingerprint FROM (
                 SELECT fingerprint, count(*) AS df

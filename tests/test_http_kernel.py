@@ -169,12 +169,13 @@ class TestReferenceSuiteEquivalents:
         assert ours.get_decoded_message() == GET_REQUEST
 
     def test_head_response_no_body(self):
-        # reference HeadTest needs the request context; replicate with
-        # request_method=HEAD
-        ours = decode_http(HEAD_RESPONSE, kind="response", request_method=b"HEAD")
-        assert ours.complete
+        # reference HeadTest feeds the response a HEAD request context;
+        # the reference CLI operators never do (ResponseMessage over a
+        # blank RequestMessage), so the Content-Length body the HEAD
+        # response leaves out reads as never arriving
+        ours = decode_http(HEAD_RESPONSE, kind="response")
+        assert not ours.complete
         assert ours.body == b""
-        assert ours.get_decoded_message() == HEAD_RESPONSE
 
     def test_post_chunked(self):
         ours = decode_http(POST_CHUNKED, kind="request")
@@ -189,7 +190,9 @@ class TestReferenceSuiteEquivalents:
         assert ours.complete and ours.code == 204
         assert ours.version == b"HTTP/1.0"
         assert ours.phrase == b"No Content"
-        assert ours.got_continue
+        # the decoded message starts at the final response: the interim
+        # 100 is gone
+        assert ours.get_decoded_message() == b"HTTP/1.0 204 No Content\r\nDate: now!\r\n\r\n"
 
     def test_two_part_status(self):
         ours = decode_http(TWO_PART_STATUS, kind="response")
@@ -211,8 +214,10 @@ class TestReferenceSuiteEquivalents:
     @needs_reference
     @pytest.mark.parametrize(
         "payload",
-        [GET_RESPONSE, CONTINUE_RESPONSE, TWO_PART_STATUS, PSEUDO_GZIPPED, GZIPPED],
-        ids=["get", "100_continue", "two_part_status", "pseudo_gzipped", "gzipped"],
+        [GET_RESPONSE, HEAD_RESPONSE, CONTINUE_RESPONSE, TWO_PART_STATUS,
+         PSEUDO_GZIPPED, GZIPPED],
+        ids=["get", "head_without_request", "100_continue", "two_part_status",
+             "pseudo_gzipped", "gzipped"],
     )
     def test_response_parity(self, payload):
         assert_response_parity(payload)

@@ -135,6 +135,14 @@ _SCAN_FRAGMENTS = [
     # constructs the strict grammar rejects
     "&amp;", "<!-- c{} -->", "<script>var x=1</script>",
     '<a title="<a href=no{}>">', '<a href="g>t{}">', "< notag>", "<3",
+    # values with file extensions, quoted and single-quoted values
+    '<a href="x{}.html">', "<img src=i{}.png/>", "<div class='c{}'>",
+    '<base href="http://b{}.ex/">', '<meta content="0;url=m{}.html">',
+    "<a href='q{}'>", "<AREA HREF=ar{}.htm>", "<object data=o{}.bin>",
+    '<a href="a" class="b">', "<a href=v{} lowsrc=w{}>", "<a\nhref=n{}.h>",
+    # malformed attributes and end tags, and comments without a digit
+    "<p a==b>", "</a&b>", '<a href=x{}.html"extra>', "<!-- c -->",
+    '<a title="<a href=no{}.html>">', '<a href="g>t{}.html">',
 ]
 
 

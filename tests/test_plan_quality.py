@@ -207,7 +207,7 @@ def test_capped_lsh_single_shuffle_no_window(spark):
     from warctools_spark.operators.dedup import minhash_lsh_candidates
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = _plan(minhash_lsh_candidates(docs, num_hashes=16, bands=4))
+    plan = _plan(minhash_lsh_candidates(docs, num_hashes=16))
     assert "Window" not in plan
     assert "(1) Scan parquet" in plan and "(2) Scan parquet" not in plan
     # exchanges: repartition + band groupBy + final distinct only
@@ -335,7 +335,7 @@ def test_round4_ops_stay_jvm_side(spark):
     # pure map-side: no exchange at all
     assert "Exchange" not in p
 
-    p = _plan(bpe_pair_counts(docs, top_n=50))
+    p = _plan(bpe_pair_counts(docs))
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
     assert "partial_count" in p  # map-side combine before the shuffle
     assert "TakeOrderedAndProject" in p  # top-n without a global sort

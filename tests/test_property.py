@@ -79,7 +79,7 @@ def test_parse_archive_never_raises(junk):
 @given(st.binary(max_size=400))
 def test_decode_http_never_raises(junk):
     res = decode_http(junk)
-    assert res.mode in ("start", "headers", "body", "end", "incomplete")
+    assert res.complete in (True, False)
     res.get_decoded_message()
     res.decoded_body()
 
@@ -425,17 +425,20 @@ def test_inverted_index_counts_consistent(spark, corpora):
 
 @settings(max_examples=15, deadline=None)
 @given(
-    st.lists(words_strategy, min_size=1, max_size=4),
-    st.integers(min_value=2, max_value=4),
+    # a two-word vocabulary, so that 10-grams repeat within and
+    # across documents
+    st.lists(st.lists(st.sampled_from(["a", "b"]), max_size=40),
+             min_size=1, max_size=4),
 )
-def test_duplicate_spans_are_disjoint_and_in_bounds(spark, corpora, k):
+def test_duplicate_spans_are_disjoint_and_in_bounds(spark, corpora):
     from warctools_spark.operators.dedup import duplicate_spans
 
+    k = 10  # duplicate_spans flags runs of duplicated 10-grams
     docs = spark.createDataFrame(
         [(i, " ".join(ws)) for i, ws in enumerate(corpora)],
         "doc_id long, text string",
     )
-    rows = duplicate_spans(docs, k=k, min_span_tokens=k).collect()
+    rows = duplicate_spans(docs, min_span_tokens=k).collect()
     by_doc: dict = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], []).append(
@@ -451,8 +454,8 @@ def test_duplicate_spans_are_disjoint_and_in_bounds(spark, corpora, k):
             prev_end = e
         # every flagged span's leading k-gram has a STRICTLY earlier
         # occurrence (smaller (doc, pos) — overlapping same-doc
-        # occurrences count, e.g. 'a a a' at k=2: pos 1 duplicates
-        # pos 0 even though the windows overlap)
+        # occurrences count, e.g. eleven 'a's: pos 1 duplicates pos 0
+        # even though the windows overlap)
         for s, e in spans:
             gram = corpora[i][s:s + k]
             found_earlier = any(
@@ -486,7 +489,7 @@ def test_winnowing_shared_substring_guarantee(spark, shared, pre, post):
     )
     import re
 
-    k, w = 5, 4
+    k, w = 8, 4  # winnow_fingerprints' k-gram and window sizes
     norm_shared = re.sub(r"\s+", " ", shared.lower()).strip()
     if len(norm_shared) < k + w - 1:
         return  # guarantee only applies at k+w-1 chars
@@ -495,7 +498,7 @@ def test_winnowing_shared_substring_guarantee(spark, shared, pre, post):
     docs = spark.createDataFrame(
         [(0, a), (1, b)], "doc_id long, text string"
     )
-    rows = winnow_fingerprints(docs, k=k, w=w).collect()
+    rows = winnow_fingerprints(docs).collect()
     f0 = {r["fingerprint"] for r in rows if r["doc_id"] == 0}
     f1 = {r["fingerprint"] for r in rows if r["doc_id"] == 1}
     assert f0 & f1, (a, b)
@@ -514,8 +517,8 @@ def test_bpe_pair_counts_equal_python_reference(spark, corpora):
         [(i, " ".join(ws)) for i, ws in enumerate(corpora)],
         "doc_id long, text string",
     )
-    got = {r["pair"]: r["n"]
-           for r in bpe_pair_counts(docs, top_n=10_000).collect()}
+    # five letters make at most 25 pairs, inside the top 200
+    got = {r["pair"]: r["n"] for r in bpe_pair_counts(docs).collect()}
     ref = Counter()
     for ws in corpora:
         for w in ws:

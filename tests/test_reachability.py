@@ -27,13 +27,21 @@ function (``call("fn", x, kw=v)``, a dispatch through ``getattr``)
 counts as a call of that function with the remaining arguments. An
 option no call site sets is a constant, and is written as one.
 
+A field of a package dataclass is read when program code loads it as
+an attribute (``res.body``) under its name; a field only tests read is
+state the program carries for nothing.
+
 Tests are not entry points: code that only tests call is deleted, not
 kept. The few defs and options kept on purpose without a program caller
-are in ALLOWLIST, each with its reason.
+are in ALLOWLIST, each with its reason. An option that only tests set
+selects a path no entry point runs; the ones that stay until the
+change that owns them are in DEFERRED, and their number may only fall.
 
-Run ``python tests/test_reachability.py`` to list unreached defs and
+Run ``python tests/test_reachability.py`` to list unreached defs,
 unset options with their sizes (those whose every setter passes the
-default apart), and to count the options only tests set.
+default apart), dataclass fields no program code reads, and each option
+only tests set with the test lines that set it (allowlisted, deferred
+and the rest apart).
 """
 
 from __future__ import annotations
@@ -83,6 +91,29 @@ ALLOWLIST = {
         "deployment setting: the crawler's user-agent token picks the robots.txt group",
     "warctools_spark.operators.unpack.unpack_to_files(wayback_prefix=)":
         "deployment setting: the replay base URL in each unpack log row (warcunpack_ia -W)",
+    "warctools_spark.kernels.http_decode.decode_http(kind=)":
+        "warctools' request decoding (RequestMessage): test_http_kernel's "
+        "assert_request_parity checks kind='request' against the reference",
+}
+
+# Options only tests set that stay until the change that owns them;
+# each names that change. Entries may go, none may be added.
+DEFERRED = {
+    "warctools_spark.operators.seen.build_bloom(fpr=)":
+        "one seen-set layout (ROADMAP): the bucketed Bloom replaces this build",
+    "warctools_spark.operators.seen.probe_bucketed(probe_salts=)":
+        "one seen-set layout (ROADMAP): the bucketed Bloom deletes the salting",
+    "warctools_spark.plans.epoch.run_epoch(robots=)":
+        "robots in the crawl loop (ROADMAP)",
+    "warctools_spark.plans.simulator.simulate_crawl(robots=)":
+        "robots in the crawl loop (ROADMAP): the oracle's side of run_epoch(robots=)",
+    "warctools_spark.plans.simulator.simulate_crawl(k_per_host=)":
+        "robots in the crawl loop (ROADMAP): the parity tests vary the politeness budget",
+    "warctools_spark.operators.robots.apply_robots(match_mode=)":
+        "robots in the crawl loop (ROADMAP)",
+    "warctools_spark.plans.epoch.run_crawl(compact_every=)":
+        "the compaction tests need cadences of 2 and 4; choosing the policy "
+        "(constant, job flag or size-tiered) is a change of its own",
 }
 
 _FORMAT = re.compile(r"%(\([^)]*\))?[rsd]")
@@ -120,7 +151,11 @@ _FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
 def _decorated(node: ast.AST, name: str) -> bool:
-    return any(isinstance(d, ast.Name) and d.id == name for d in node.decorator_list)
+    """``@name`` or ``@name(...)``."""
+    return any(isinstance(d, ast.Name) and d.id == name
+               or isinstance(d, ast.Call) and isinstance(d.func, ast.Name)
+               and d.func.id == name
+               for d in node.decorator_list)
 
 
 class _Module:
@@ -176,7 +211,7 @@ class _Module:
 
 class Scan:
     def __init__(self, repo: Path = REPO, entry_files=ENTRY_FILES, allowlist=ALLOWLIST):
-        self.allowlist = allowlist
+        self.repo, self.allowlist = repo, allowlist
         files = sorted((repo / PKG).rglob("*.py"))
         files += [repo / f for f in entry_files if not f.startswith(PKG + "/")]
         self.modules: dict[str, _Module] = {}
@@ -407,8 +442,8 @@ class Scan:
         """(module, def) -> [(where, positional arguments with a None
         for each leading parameter the call does not pass, or None for
         ``*args``; keyword arguments by name, or None for
-        ``**kwargs``)] over every call site, `where` being "program" or
-        "tests"."""
+        ``**kwargs``; (file, line))] over every call site, `where` being
+        "program" or "tests"."""
         out: dict[tuple, list[tuple]] = {}
         for where, mods in (("program", self.modules.values()), ("tests", self.tests)):
             for m in mods:
@@ -438,27 +473,25 @@ class Scan:
                             and isinstance(other.defs.get(first.value), _FUNCS)
                         ]
                     kws = {kw.arg: kw.value for kw in call.keywords}
+                    loc = (str(m.path.relative_to(self.repo)), call.lineno)
                     for (mod, name, bound), args in targets:
                         star = any(isinstance(a, ast.Starred) for a in args)
                         out.setdefault((mod, name), []).append(
                             (where, None if star else [None] * bound + list(args),
-                             None if None in kws else kws))
+                             None if None in kws else kws, loc))
         return out
 
-    def setters(self, defaults_set: bool = False) -> dict[str, set]:
-        """Option -> where a call site sets it ({"program", "tests"} or
-        a subset; empty when none does), allowlisted options left out.
-        A call site that passes the default's own literal sets it only
-        when `defaults_set`."""
+    def sites(self, defaults_set: bool = False) -> dict[str, list[tuple]]:
+        """Option -> [(where, (file, line))] of the call sites that set
+        it, allowlisted options included. A call site that passes the
+        default's own literal sets it only when `defaults_set`."""
         calls = self.calls()
         out = {}
         for q, (mod, name, param, index, default) in self.options().items():
-            if q in self.allowlist:
-                continue
-            out[q] = set()
-            for where, args, kws in calls.get((mod, name), ()):
+            out[q] = []
+            for where, args, kws, loc in calls.get((mod, name), ()):
                 if args is None or kws is None:
-                    out[q].add(where)
+                    out[q].append((where, loc))
                     continue
                 if param in kws:
                     value = kws[param]
@@ -467,13 +500,49 @@ class Scan:
                 else:
                     continue
                 if defaults_set or not _same_literal(value, default):
-                    out[q].add(where)
+                    out[q].append((where, loc))
         return out
+
+    def setters(self, defaults_set: bool = False) -> dict[str, set]:
+        """Option -> where a call site sets it ({"program", "tests"} or
+        a subset; empty when none does), allowlisted options left out."""
+        return {q: {where for where, _ in s}
+                for q, s in self.sites(defaults_set).items()
+                if q not in self.allowlist}
+
+    def test_only(self) -> list[str]:
+        """Options only tests set, allowlisted options left out."""
+        return sorted(q for q, where in self.setters().items() if where == {"tests"})
 
     def default_only(self) -> list[str]:
         """Options that call sites pass, but only as their default."""
         real, passed = self.setters(), self.setters(defaults_set=True)
         return sorted(q for q, where in real.items() if not where and passed[q])
+
+    # -- dataclass fields ----------------------------------------------
+    def unread_fields(self) -> dict[str, bool]:
+        """``module.Class.field`` -> whether a test reads it, for each
+        field of a package dataclass that no program code reads."""
+        read = {"program": set(), "tests": set()}
+        for where, mods in (("program", self.modules.values()), ("tests", self.tests)):
+            for m in mods:
+                for node in ast.walk(m.tree):
+                    if isinstance(node, ast.AugAssign):
+                        node = node.target  # ``x.n += 1`` reads x.n
+                    elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Store):
+                        continue
+                    if isinstance(node, ast.Attribute):
+                        read[where].add(node.attr)
+        out = {}
+        for q, (mod, name) in self.package_defs().items():
+            node = self.node((mod, name))
+            if not isinstance(node, ast.ClassDef) or not _decorated(node, "dataclass"):
+                continue
+            for f in node.body:
+                if (isinstance(f, ast.AnnAssign) and isinstance(f.target, ast.Name)
+                        and f.target.id not in read["program"]):
+                    out[f"{q}.{f.target.id}"] = f.target.id in read["tests"]
+        return out
 
 
 _NOT_LITERAL = object()
@@ -518,6 +587,14 @@ def test_every_option_is_set():
     )
 
 
+def test_every_dataclass_field_is_read():
+    unread = Scan().unread_fields()
+    assert not unread, (
+        "dataclass fields no program code reads (delete them; a test "
+        "checks what the program does with the rest): %s" % sorted(unread)
+    )
+
+
 def test_allowlist_is_minimal():
     bare = Scan(allowlist={})
     defs, options = bare.package_defs(), bare.options()
@@ -526,20 +603,48 @@ def test_allowlist_is_minimal():
     unreached = bare.unreached()
     live = [q for q in ALLOWLIST if q in defs and q not in unreached]
     assert not live, "allowlisted defs an entry point already reaches: %s" % live
+    # tests may set an allowlisted option: a kernel mode stays allowlisted
+    # because a test checks it against the reference
     setters = bare.setters()
-    live = [q for q in ALLOWLIST if q in options and setters[q]]
-    assert not live, "allowlisted options a call site already sets: %s" % live
+    live = [q for q in ALLOWLIST if q in options and "program" in setters[q]]
+    assert not live, "allowlisted options program code already sets: %s" % live
     assert all(reason.strip() for reason in ALLOWLIST.values())
+
+
+def undeferred(scan: Scan, deferred=DEFERRED) -> list[str]:
+    """Options only tests set that `deferred` does not name."""
+    return [q for q in scan.test_only() if q not in deferred]
+
+
+def test_options_only_tests_set_do_not_grow():
+    scan = Scan()
+    only = scan.test_only()
+    new = undeferred(scan)
+    assert not new, (
+        "options only tests set (make each a constant equal to its default "
+        "and delete the path it selected): %s" % new
+    )
+    stale = sorted(set(DEFERRED) - set(only))
+    assert not stale, "deferred options no longer set only by tests: %s" % stale
 
 
 def test_scan_reports_planted_method_and_option(tmp_path):
     """The guard itself, on a tiny package: it names exactly the method
-    no code calls and the option no call site sets to anything but its
-    default."""
+    no code calls, the option no call site sets to anything but its
+    default and the dataclass field only a test reads."""
     pkg = tmp_path / PKG
     pkg.mkdir()
     (pkg / "__init__.py").write_text("")
     (pkg / "mod.py").write_text(
+        "from dataclasses import dataclass\n"
+        "\n"
+        "\n"
+        "@dataclass\n"
+        "class Result:\n"
+        "    value: int = 0\n"
+        "    tested: bool = False\n"
+        "\n"
+        "\n"
         "class Box:\n"
         "    def __init__(self):\n"
         "        self.n = 0\n"
@@ -552,7 +657,9 @@ def test_scan_reports_planted_method_and_option(tmp_path):
         "\n"
         "\n"
         "def run(x, by_position=1, by_keyword=2, by_dispatch=3, never=4):\n"
-        "    return x + by_position + by_keyword + by_dispatch + never\n"
+        "    r = Result(x + by_position + by_keyword + by_dispatch + never)\n"
+        "    r.tested = True\n"
+        "    return r\n"
     )
     (tmp_path / "main.py").write_text(
         "from warctools_spark import mod\n"
@@ -567,7 +674,15 @@ def test_scan_reports_planted_method_and_option(tmp_path):
         "mod.run(0, by_keyword=6)\n"
         'call("run", 0, by_dispatch=7)\n'
         "mod.run(0, 1, never=4)\n"
-        "mod.run(0, by_keyword=True)\n"
+        "mod.run(0, by_keyword=True).value\n"
+    )
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "test_mod.py").write_text(
+        "from warctools_spark import mod\n"
+        "\n"
+        "\n"
+        "def test_run():\n"
+        "    assert mod.run(0).tested\n"
     )
     scan = Scan(tmp_path, entry_files=("main.py",), allowlist={})
     assert sorted(scan.unreached()) == ["warctools_spark.mod.Box.unused"]
@@ -578,6 +693,35 @@ def test_scan_reports_planted_method_and_option(tmp_path):
     assert setters["warctools_spark.mod.run(by_position=)"] == {"program"}
     # never=4 passes the default: the option is passed, but never set
     assert scan.default_only() == ["warctools_spark.mod.run(never=)"]
+    # the field r.tested is written by the program and read by a test only
+    assert scan.unread_fields() == {"warctools_spark.mod.Result.tested": True}
+
+
+def test_ratchet_fails_on_planted_eighth_option(tmp_path):
+    """Eight options only a test sets, seven of them deferred: the
+    ratchet names the eighth, and an allowlisted one does not count."""
+    pkg = tmp_path / PKG
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    names = [f"o{i}" for i in range(9)]
+    (pkg / "mod.py").write_text(
+        "def run(x, %s):\n    return x\n" % ", ".join(f"{n}=0" for n in names)
+    )
+    (tmp_path / "main.py").write_text("from warctools_spark import mod\n\nmod.run(1)\n")
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "test_mod.py").write_text(
+        "from warctools_spark import mod\n\n\ndef test_run():\n"
+        "    assert mod.run(1, %s) == 1\n" % ", ".join(f"{n}=1" for n in names)
+    )
+    def q(name):
+        return f"warctools_spark.mod.run({name}=)"
+
+    allowlist = {q("o8"): "checked against the reference"}
+    scan = Scan(tmp_path, entry_files=("main.py",), allowlist=allowlist)
+    deferred = {q(n): "owned elsewhere" for n in names[:7]}
+    assert len(scan.test_only()) == 8
+    assert undeferred(scan, deferred) == [q("o7")]
+    assert undeferred(scan, {**deferred, q("o7"): "owned elsewhere"}) == []
 
 
 if __name__ == "__main__":
@@ -598,5 +742,22 @@ if __name__ == "__main__":
             print("%5d  %s" % (lines, q))
         print("%5d  total (%d %s of %d)"
               % (sum(n for _, n in rows), len(rows), label, len(options)))
-    only = sorted(q for q, where in setters.items() if where == {"tests"})
-    print("%d options only tests set, e.g. %s" % (len(only), ", ".join(only[:3])))
+    unread = scan.unread_fields()
+    for q, tested in sorted(unread.items()):
+        print("       %s%s" % (q, " (read by tests)" if tested else ""))
+    print("%5d  dataclass fields no program code reads" % len(unread))
+    sites = scan.sites()
+    only = scan.test_only()
+    allowed = sorted(q for q in scan.allowlist
+                     if q in sites and sites[q]
+                     and all(w == "tests" for w, _ in sites[q]))
+    for label, names in (
+        ("allowlisted", allowed),
+        ("deferred", [q for q in only if q in DEFERRED]),
+        ("remaining", [q for q in only if q not in DEFERRED]),
+    ):
+        print("%d options only tests set, %s:" % (len(names), label))
+        for q in names:
+            print("       %s" % q)
+            for loc in sorted({loc for _, loc in sites[q]}):
+                print("           %s:%d" % loc)

@@ -5,8 +5,6 @@ cuckoo inserts into empty buckets, embedding dims validation,
 dup_clusters convergence contract, anchor-pair alignment, and the
 pack_sequences single-materialization plan."""
 
-import warnings
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -278,13 +276,15 @@ def test_embedding_pairs_dims_mismatch_raises(spark):
         [(i, [float(i), 1.0, 0.0]) for i in range(6)],
         "vec_id long, embedding array<double>",
     )
-    # explicit dims skips the driver-side scan; the executor-side
-    # _require_dims guard fails the job on the first action instead
+    # dims derives from the data and works
+    assert lsh_topk(emb, [1.0, 1.0, 0.0]).count() > 0
+    # the driver-side min/max scan ignores a null vector; the
+    # executor-side _require_dims guard fails the job on it instead
+    nulls = emb.union(spark.createDataFrame(
+        [(6, None)], "vec_id long, embedding array<double>"))
     with pytest.raises(Exception) as ei:
-        lsh_topk(emb, [1.0] * 8, k=3, dims=8).collect()
-    assert "not 8-dimensional" in str(ei.value)
-    # dims=None derives from the data and works
-    assert lsh_topk(emb, [1.0, 1.0, 0.0], k=3).count() > 0
+        lsh_topk(nulls, [1.0, 1.0, 0.0]).collect()
+    assert "not 3-dimensional (got size NULL)" in str(ei.value)
 
 
 def test_lsh_topk_query_dims_mismatch_raises(spark):
@@ -295,8 +295,8 @@ def test_lsh_topk_query_dims_mismatch_raises(spark):
         "vec_id long, embedding array<double>",
     )
     with pytest.raises(ValueError, match="query_vec has 3 dims"):
-        lsh_topk(emb, [1.0, 0.5, 0.1], k=3)
-    res = lsh_topk(emb, [1.0, 1.0, 0.5, 0.1], k=3)
+        lsh_topk(emb, [1.0, 0.5, 0.1])
+    res = lsh_topk(emb, [1.0, 1.0, 0.5, 0.1])
     assert res.count() > 0
 
 
@@ -316,29 +316,19 @@ def _chain(spark, n):
 def test_dup_clusters_nonconverged_raises(spark):
     from warctools_spark.operators.dedup import dup_clusters
 
-    pairs, verts = _chain(spark, 30)
+    # a 52-edge chain needs 52 rounds, two more than the bound of 50
+    pairs, verts = _chain(spark, 53)
     with pytest.raises(RuntimeError, match="did not converge"):
-        dup_clusters(pairs, verts, max_iter=2)
-
-
-def test_dup_clusters_nonconverged_warns(spark):
-    from warctools_spark.operators.dedup import dup_clusters
-
-    pairs, verts = _chain(spark, 30)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        out = dup_clusters(pairs, verts, max_iter=2, on_nonconverged="warn")
-        out.count()
-    assert any("did not converge" in str(x.message) for x in w)
+        dup_clusters(pairs, verts)
 
 
 def test_dup_clusters_chain_converges_with_enough_rounds(spark):
     from warctools_spark.operators.dedup import dup_clusters
 
     pairs, verts = _chain(spark, 17)
-    # 16-edge chain: one hop of propagation per round needs <= 16
-    # rounds; must complete without the non-convergence raise
-    out = dup_clusters(pairs, verts, max_iter=20)
+    # 16-edge chain: one hop of propagation per round needs 16 of
+    # the 50 rounds; must complete without the non-convergence raise
+    out = dup_clusters(pairs, verts)
     rows = out.collect()
     assert all(r["cluster_id"] == 0 for r in rows) and len(rows) == 17
 
@@ -478,17 +468,17 @@ def test_unigram_logprob_semantics(spark):
 def test_kmeans_assign_semantics_and_determinism(spark):
     from warctools_spark.operators.similarity import kmeans_assign
 
-    # two tight blobs far apart; init ids 0,1 are one per blob
-    rows = [(0, [0.0, 0.0]), (2, [0.1, -0.1]), (4, [-0.1, 0.1]),
-            (1, [10.0, 10.0]), (3, [10.1, 9.9]), (5, [9.9, 10.1])]
+    # eight tight blobs far apart; init ids 0..7 are one per blob, the
+    # other members (ids 8..23) sit next to their blob's init vector
+    rows = [(b, [10.0 * b, -10.0 * b]) for b in range(8)]
+    rows += [(8 + 2 * b + j, [10.0 * b + 0.1 - 0.2 * j, -10.0 * b + 0.1])
+             for b in range(8) for j in range(2)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {r["vec_id"]: r["cluster"] for r in
-           kmeans_assign(emb, k=2, iterations=3).collect()}
-    assert got[0] == got[2] == got[4] == 0
-    assert got[1] == got[3] == got[5] == 1
+    got = {r["vec_id"]: r["cluster"] for r in kmeans_assign(emb).collect()}
+    assert got == {i: i if i < 8 else (i - 8) // 2 for i in range(24)}
     # partitioning-invariance: same assignment at any layout
     got16 = {r["vec_id"]: r["cluster"] for r in
-             kmeans_assign(emb.repartition(16), k=2, iterations=3).collect()}
+             kmeans_assign(emb.repartition(16)).collect()}
     assert got == got16
 
 
@@ -496,7 +486,7 @@ def test_kmeans_assignment_is_jvm_only(spark):
     from warctools_spark.operators.similarity import kmeans_assign
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    out = kmeans_assign(emb, k=4, iterations=1)
+    out = kmeans_assign(emb)
     plan = _plan(out)
     # assignment must be pure Catalyst expressions: no Python eval,
     # no join, no shuffle in the final assignment pass
@@ -508,19 +498,24 @@ def test_kmeans_assignment_is_jvm_only(spark):
 def test_semdedup_drops_near_duplicates_within_cluster(spark):
     from warctools_spark.operators.similarity import semdedup_survivors
 
-    rows = [
-        (0, [1.0, 0.0]), (2, [0.999, 0.01]), (4, [0.998, -0.01]),  # blob A
-        (1, [0.0, 1.0]), (3, [0.01, 0.999]),                       # blob B
-        (5, [-1.0, -1.0]),                                         # loner in B's cell? far from both
-    ]
+    import math
+
+    # eight unit vectors 45 degrees apart (ids 0..7, the 8 init
+    # centroids); near-copies of 0 (ids 8, 9) and of 1 (id 10); id 11
+    # at 20 degrees lands in 0's cell with cosine 0.94 to it
+    rows = [(i, [math.cos(i * math.pi / 4), math.sin(i * math.pi / 4)])
+            for i in range(8)]
+    rows += [(8, [0.999, 0.01]), (9, [0.998, -0.01]),
+             (10, [0.71, 0.70]),
+             (11, [math.cos(math.pi / 9), math.sin(math.pi / 9)])]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     surv = {r["vec_id"] for r in
-            semdedup_survivors(emb, k=2, threshold=0.95).collect()}
+            semdedup_survivors(emb, threshold=0.95).collect()}
     # lowest id survives each near-dup group; near-copies are dropped
-    assert 0 in surv and 2 not in surv and 4 not in surv
-    assert 1 in surv and 3 not in surv
-    # the far-away vector survives regardless of its cell
-    assert 5 in surv
+    assert 0 in surv and 8 not in surv and 9 not in surv
+    assert 1 in surv and 10 not in surv
+    # a vector below the threshold survives inside a dropped-from cell
+    assert surv == set(range(8)) | {11}
 
 
 def _span_docs(spark):
@@ -538,9 +533,7 @@ def _span_docs(spark):
 def test_duplicate_spans_first_occurrence_exempt(spark):
     from warctools_spark.operators.dedup import duplicate_spans
 
-    spans = duplicate_spans(
-        _span_docs(spark), k=10, min_span_tokens=15
-    ).collect()
+    spans = duplicate_spans(_span_docs(spark), min_span_tokens=15).collect()
     by_doc = {}
     for r in spans:
         by_doc.setdefault(r["doc_id"], []).append(r)
@@ -572,7 +565,7 @@ def test_duplicate_spans_within_one_doc(spark):
     docs = spark.createDataFrame(
         [(7, passage + " mid " + passage)], "doc_id long, text string"
     )
-    spans = duplicate_spans(docs, k=10, min_span_tokens=15).collect()
+    spans = duplicate_spans(docs, min_span_tokens=15).collect()
     # the second in-doc occurrence (positions 21..41) is flagged
     assert len(spans) == 1
     assert spans[0]["span_start"] == 21 and spans[0]["n_tokens"] == 20
@@ -580,10 +573,9 @@ def test_duplicate_spans_within_one_doc(spark):
 
 def test_ragged_embedding_fails_job_not_silently(spark):
     """A wrong-length vector anywhere in the data must FAIL the job,
-    not silently collapse into a zero bucket. dims=None now derives
-    via an order-independent min/max aggregate (r03 ADVICE), so a
-    ragged column raises the same ValueError at ANY partition order;
-    with explicit dims the executor-side raise_error guard fires."""
+    not silently collapse into a zero bucket. dims derives via an
+    order-independent min/max aggregate (r03 ADVICE), so a ragged
+    column raises the same ValueError at ANY partition order."""
     from warctools_spark.operators.similarity import lsh_topk
 
     emb = spark.createDataFrame(
@@ -591,10 +583,7 @@ def test_ragged_embedding_fails_job_not_silently(spark):
         "vec_id long, embedding array<double>",
     )
     with pytest.raises(ValueError, match="ragged embedding column"):
-        lsh_topk(emb, [1.0, 0.0, 0.0], k=2)
-    with pytest.raises(Exception) as ei:
-        lsh_topk(emb, [1.0, 0.0, 0.0], k=2, dims=3).collect()
-    assert "not 3-dimensional" in str(ei.value)
+        lsh_topk(emb, [1.0, 0.0, 0.0])
 
 
 def test_dup_clusters_converging_exactly_at_max_iter_ok(spark):
@@ -603,24 +592,38 @@ def test_dup_clusters_converging_exactly_at_max_iter_ok(spark):
     final one needed' from truncated propagation."""
     from warctools_spark.operators.dedup import dup_clusters
 
-    # 5-node chain: round r propagates labels one hop; the last
-    # change lands exactly on round 4 == max_iter
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(4)], "id_a long, id_b long"
-    )
-    verts = spark.range(5).withColumnRenamed("id", "doc_id")
-    rows = dup_clusters(pairs, verts, max_iter=4).collect()
-    assert all(r["cluster_id"] == 0 for r in rows) and len(rows) == 5
+    # 51-node chain: round r propagates labels one hop; the last
+    # change lands exactly on round 50, the bound
+    pairs, verts = _chain(spark, 51)
+    rows = dup_clusters(pairs, verts).collect()
+    assert all(r["cluster_id"] == 0 for r in rows) and len(rows) == 51
 
 
 def test_kmeans_pandas_mode_matches_expr_mode(spark):
-    from warctools_spark.operators.similarity import kmeans_assign
+    """kmeans_assign assigns with JVM expressions below 8*dims = 1024
+    and with the Arrow GEMM from there on; at 128 dims the GEMM's
+    clusters and distances equal the expression form's (the one
+    ivf_kmeans_topk always uses)."""
+    import random
 
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    ex = {r["vec_id"]: (r["cluster"], r["dist"]) for r in
-          kmeans_assign(emb, k=8, iterations=2, assign_mode="expr").collect()}
-    pa = {r["vec_id"]: (r["cluster"], r["dist"]) for r in
-          kmeans_assign(emb, k=8, iterations=2, assign_mode="pandas").collect()}
+    from warctools_spark.operators.similarity import _lloyd, kmeans_assign
+
+    rng = random.Random(5)
+
+    def blobs(dims):
+        centers = [[rng.gauss(0, 1) for _ in range(dims)] for _ in range(8)]
+        rows = [(i, [x + rng.gauss(0, 0.3) for x in centers[i % 8]])
+                for i in range(120)]
+        return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    small = kmeans_assign(blobs(127))
+    assert "ArrowEvalPython" not in _plan(small)
+    emb = blobs(128)
+    big = kmeans_assign(emb)
+    assert "ArrowEvalPython" in _plan(big)
+    pa = {r["vec_id"]: (r["cluster"], r["dist"]) for r in big.collect()}
+    assigned, _ = _lloyd(emb, "expr")
+    ex = {r["vec_id"]: (r["cluster"], r["__d2"] ** 0.5) for r in assigned.collect()}
     assert set(ex) == set(pa)
     assert all(ex[i][0] == pa[i][0] for i in ex)          # same clusters
     assert all(abs(ex[i][1] - pa[i][1]) < 1e-5 for i in ex)  # same dists
@@ -657,47 +660,6 @@ def test_chunk_documents_semantics(spark):
     # pure-Catalyst plan: no Python eval, no shuffle
     plan = _plan(chunk_documents(docs, window=4, stride=3))
     assert "BatchEvalPython" not in plan and "Exchange" not in plan
-
-
-def test_dup_clusters_disk_checkpoint_doubling_long_chain(spark, tmp_path):
-    """With checkpoint_dir, pointer doubling is enabled (parquet
-    round-trips reset the inherited plan stats): a 200-node chain
-    converges in O(log n) rounds where plain propagation would need
-    199."""
-    from warctools_spark.operators.dedup import dup_clusters
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(199)], "id_a long, id_b long"
-    )
-    verts = spark.range(200).withColumnRenamed("id", "doc_id")
-    out = dup_clusters(
-        pairs, verts, max_iter=15, checkpoint_dir=str(tmp_path / "ck")
-    )
-    rows = out.collect()
-    assert len(rows) == 200 and all(r["cluster_id"] == 0 for r in rows)
-
-
-def test_dup_clusters_disk_mode_matches_memory_mode(spark, tmp_path):
-    import random
-
-    from warctools_spark.operators.dedup import dup_clusters
-
-    rng = random.Random(11)
-    data = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
-    data = [(a, b) for a, b in data if a != b]
-    pairs = spark.createDataFrame(data, "id_a long, id_b long")
-    verts = spark.range(200).withColumnRenamed("id", "doc_id")
-    mem = sorted(
-        (r["doc_id"], r["cluster_id"])
-        for r in dup_clusters(pairs, verts).collect()
-    )
-    disk = sorted(
-        (r["doc_id"], r["cluster_id"])
-        for r in dup_clusters(
-            pairs, verts, checkpoint_dir=str(tmp_path / "ck2")
-        ).collect()
-    )
-    assert mem == disk
 
 
 def test_corpus_drift_semantics(spark):
@@ -795,25 +757,27 @@ def test_length_report_semantics(spark):
 def test_rag_corpus_composition(spark):
     """The composed pipeline really chains: a doc that is a pure copy
     of an earlier doc is fully cut, so it yields no chunks; survivors
-    chunk their CLEANED text."""
+    chunk their CLEANED text in 64-token windows every 32 tokens, and
+    chunks under 8 tokens are dropped."""
     from warctools_spark.plans.corpus import rag_corpus
 
-    passage = " ".join(f"w{i}" for i in range(40))
+    passage = " ".join(f"w{i}" for i in range(100))
+    ten = " ".join(f"t{i}" for i in range(10))
     docs = spark.createDataFrame(
-        [(0, passage), (1, passage), (2, "short doc only")],
+        [(0, passage), (1, passage), (2, "short doc only"), (3, ten)],
         "doc_id long, text string",
     )
-    rows = rag_corpus(
-        docs, window=16, stride=8, min_chunk_tokens=2,
-    ).collect()
+    rows = rag_corpus(docs).collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], []).append(r)
     assert 0 in by_doc            # first occurrence survives + chunks
     assert 1 not in by_doc        # exact copy fully removed
-    assert by_doc[2][0]["chunk"] == "short doc only"
-    # doc 0's chunks tile the cleaned (== original) 40 tokens
+    assert 2 not in by_doc        # 3 tokens: under the chunk minimum
+    assert [r["chunk"] for r in by_doc[3]] == [ten]
+    # doc 0's chunks tile the cleaned (== original) 100 tokens
+    assert sorted(r["tok_start"] for r in by_doc[0]) == [0, 32, 64]
     covered = set()
     for r in by_doc[0]:
         covered.update(range(r["tok_start"], r["tok_start"] + r["n_tokens"]))
-    assert covered == set(range(40))
+    assert covered == set(range(100))

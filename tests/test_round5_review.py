@@ -8,13 +8,11 @@
    regression window deleted the live file before renaming).
 3. ngram_jaccard short-doc pairs score 0.0 (same guarded-denominator
    contract the round gave ngram_containment).
-5. _assign_to_centroids rejects unknown assign modes loudly.
 """
 
 import json
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -103,15 +101,3 @@ def test_ngram_jaccard_short_docs_zero(spark):
     assert rows[(1, 2)] == 0.0
     # one short, one long: still 0.0 (no shared shingles)
     assert rows[(1, 3)] == 0.0
-
-
-# ---- 5. assign-mode validation ----
-
-def test_assign_to_centroids_rejects_unknown_mode(spark):
-    from warctools_spark.operators.similarity import _assign_to_centroids
-
-    df = spark.createDataFrame(
-        [(1, [0.0, 0.0])], "vec_id bigint, __v array<double>"
-    )
-    with pytest.raises(ValueError, match="assign_mode"):
-        _assign_to_centroids(df, {0: [0.0, 0.0]}, "exprs")

@@ -15,8 +15,9 @@ tests/test_http_kernel.py):
   reference's precedence: first Content-Length wins only while mode is
   'close'; Transfer-Encoding: chunked overrides; Content-Encoding value
   stored lowercased (messaging.py:463-492)
-* has_body(): HEAD requests and 1xx/204/304 responses have no body
-  (messaging.py:615-621, semantics.py:102-104)
+* has_body(): 1xx/204/304 responses have no body (messaging.py:615-621,
+  semantics.py:102-104); responses decode without a request context,
+  as the reference CLI operators feed them
 * chunked decode incl. trailers and the BrokenChunks fallback to an
   identity body when the *first* chunk-size line is garbage
   (messaging.py:266-353, 126-139)
@@ -55,8 +56,6 @@ _STRIP_HEADERS = (
     b"trailer",
 )
 
-_NO_BODY_METHODS = (b"HEAD",)
-
 # messaging.py:507-510
 _URL_RX = re.compile(
     rb"(?P<scheme>https?)://(?P<authority>(?P<host>[^:/]+)(?::(?P<port>\d+))?)"
@@ -75,8 +74,7 @@ class HttpResult:
     """Outcome of decoding one HTTP/1.x message from a byte payload."""
 
     kind: str = "response"  # 'response' | 'request'
-    complete: bool = False
-    mode: str = "start"  # final parser mode: start|headers|body|end|incomplete
+    complete: bool = False  # the parser ended in 'end', not 'incomplete'
     leftover: bytes = b""
     version: bytes = b""
     code: int = 0
@@ -88,7 +86,6 @@ class HttpResult:
     encoding: bytes | None = None  # lowercased Content-Encoding value
     body: bytes = b""
     errors: list = field(default_factory=list)
-    got_continue: bool = False
 
     @property
     def mime(self) -> bytes | None:
@@ -155,20 +152,17 @@ class HttpResult:
     def _has_body(self) -> bool:
         if self.kind == "request":
             return self._req_mode in ("chunked", "length")
-        if self._req_method in _NO_BODY_METHODS:
-            return False
         return not _code_has_no_body(self.code)
 
-    # internals carried for has_body computation
+    # internal carried for has_body computation
     _req_mode: str = "close"
-    _req_method: bytes = b""
 
 
 class _Head:
     """Parsed start line + headers with the reference's semantic header
     state machine (messaging.py:402-501)."""
 
-    def __init__(self, kind: str, ignore_headers=(), request_method: bytes = b""):
+    def __init__(self, kind: str, ignore_headers=()):
         self.kind = kind
         self.headers: list = []
         self.trailers: list = []
@@ -181,7 +175,6 @@ class _Head:
         self.phrase = b""
         self.method = b""
         self.target_uri = b""
-        self.request_method = request_method
         self.errors: list = []
 
     def set_start_line(self, line: bytes) -> None:
@@ -276,8 +269,6 @@ class _Head:
     def has_body(self) -> bool:
         if self.kind == "request":
             return self.mode in ("chunked", "length")
-        if self.request_method in _NO_BODY_METHODS:
-            return False
         return not _code_has_no_body(self.code)
 
 
@@ -310,12 +301,10 @@ class _Cursor:
         return self.pos >= len(self.data)
 
 
-def _parse_one(
-    data: bytes, kind: str, ignore_headers=(), request_method: bytes = b""
-) -> HttpResult:
+def _parse_one(data: bytes, kind: str, ignore_headers=()) -> HttpResult:
     """feed(data) once + close(), one message (no 100-continue logic)."""
     res = HttpResult(kind=kind)
-    head = _Head(kind, ignore_headers, request_method)
+    head = _Head(kind, ignore_headers)
     cur = _Cursor(data)
     body = bytearray()
     mode = "start"
@@ -330,7 +319,6 @@ def _parse_one(
         incomplete_tail = cur.rest()
     elif line in _NEWLINES:
         res.leftover = cur.rest()
-        res.mode = "incomplete"
         res.complete = False
         res.headers = head.headers
         res.errors = head.errors
@@ -432,7 +420,6 @@ def _parse_one(
             # unterminated line bytes never became part of anything
             pass
 
-    res.mode = mode
     res.complete = mode == "end"
     res.leftover = leftover
     res.version = head.version
@@ -446,9 +433,6 @@ def _parse_one(
     res.body = bytes(body)
     res.errors = head.errors
     res._req_mode = head.mode
-    res._req_method = request_method if kind == "response" else head.method
-    if kind == "request":
-        res._req_mode = head.mode
     return res
 
 
@@ -491,12 +475,7 @@ def _read_chunked(cur: _Cursor, head: _Head, body: bytearray, res: HttpResult):
             return "body", b""
 
 
-def decode_http(
-    payload: bytes,
-    kind: str = "response",
-    ignore_headers=(),
-    request_method: bytes = b"",
-) -> HttpResult:
+def decode_http(payload: bytes, kind: str = "response", ignore_headers=()) -> HttpResult:
     """Decode one HTTP/1.x message from `payload`.
 
     For responses, interim `100 Continue` responses are skipped once,
@@ -504,14 +483,12 @@ def decode_http(
     """
     if not isinstance(payload, (bytes, bytearray)):
         payload = bytes(payload)
-    res = _parse_one(bytes(payload), kind, ignore_headers, request_method)
+    res = _parse_one(bytes(payload), kind, ignore_headers)
     if kind == "response" and res.complete and res.code == 100:
         # the reference resets unconditionally on an interim 100
         # (messaging.py:653-659): with no following message the result
         # is an INCOMPLETE parser waiting at 'start', not the 100
-        nxt = _parse_one(res.leftover, kind, ignore_headers, request_method)
-        nxt.got_continue = True
-        return nxt
+        return _parse_one(res.leftover, kind, ignore_headers)
     return res
 
 

@@ -342,7 +342,7 @@ def _parse_arc_record(buf: _Buf, offset: int | None, line: bytes, state: _ArcSta
     return row, (), offset
 
 
-def _iter_plain(data: bytes, fmt: str, offsets_valid: bool = True):
+def _iter_plain(data: bytes, fmt: str):
     """RecordStream._read_record loop (stream.py:88-102): skip
     terminator newlines, parse one record, repeat."""
     buf = _Buf(data)
@@ -350,7 +350,7 @@ def _iter_plain(data: bytes, fmt: str, offsets_valid: bool = True):
     while True:
         # consume any [\r\n]+ terminator lines (stream.py:94-99)
         while True:
-            offset = buf.pos if offsets_valid else None
+            offset = buf.pos
             line = buf.readline()
             if not _TERMINATOR_RX.match(line):
                 break
@@ -430,20 +430,17 @@ def detect_format(first_line: bytes) -> str | None:
     return None
 
 
-def parse_archive(data: bytes, fmt: str = "auto", gzip_mode: str = "auto"):
-    """Parse a whole (W)ARC file (optionally per-record/whole-file
-    gzipped) into a list of RecordRow.
+def parse_archive(data: bytes, fmt: str = "auto"):
+    """Parse a whole (W)ARC file, plain or gzipped, into a list of
+    RecordRow.
 
     fmt: 'auto' | 'warc' | 'arc' | 'mixed'
-    gzip_mode: 'auto' | 'record' | 'file' | None — 'auto' sniffs the
-    magic (archive_detect.py:5-8) and treats gzip input as per-record
-    members like open_record_stream (stream.py:31-41).
+    Gzip input is sniffed by its magic (archive_detect.py:5-8) and read
+    as per-record members like open_record_stream (stream.py:31-41); a
+    whole-file gzip is one member.
     """
     rows: list[RecordRow] = []
-    if gzip_mode == "auto":
-        gzip_mode = "record" if data[:2] == GZIP_MAGIC else None
-
-    if gzip_mode == "record":
+    if data[:2] == GZIP_MAGIC:
         # member offsets are the raw file offsets (stream.py:213-229);
         # records may span members, so parse the concatenated
         # decompressed stream and map record starts back to members
@@ -471,7 +468,7 @@ def parse_archive(data: bytes, fmt: str = "auto", gzip_mode: str = "auto"):
             dpos += len(chunk)
         if fmt == "auto":
             fmt = detect_format(_Buf(joined).readline()) or "warc"
-        for row in _iter_plain(joined, fmt, offsets_valid=True):
+        for row in _iter_plain(joined, fmt):
             dstart = row.offset
             raw = None
             if dstart is not None:
@@ -487,16 +484,6 @@ def parse_archive(data: bytes, fmt: str = "auto", gzip_mode: str = "auto"):
                 RecordRow(None, fmt, None, [], None, None, b"", gz_errors)
             )
         return rows
-
-    if gzip_mode == "file":
-        try:
-            data = zlib.decompress(data, 16 + zlib.MAX_WBITS)
-        except zlib.error:
-            return [RecordRow(0, "warc", None, [], None, None, b"", ["bad gzip data"])]
-        # offsets are meaningless in a whole-file gzip (stream.py:242-243)
-        if fmt == "auto":
-            fmt = detect_format(_Buf(data).readline()) or "warc"
-        return list(_iter_plain(data, fmt, offsets_valid=False))
 
     if fmt == "auto":
         fmt = detect_format(_Buf(data).readline()) or "warc"

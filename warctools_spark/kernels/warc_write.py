@@ -27,7 +27,6 @@ def write_warc_record(
     headers,
     content_type: bytes | None,
     content: bytes | None,
-    version: bytes = WARC_VERSION,
     gzip_record: bool = False,
 ) -> bytes:
     """Serialize one WARC record.
@@ -37,7 +36,7 @@ def write_warc_record(
     name match, warc.py:89) and re-derived from the content tuple.
     """
     out = io.BytesIO()
-    out.write(version)
+    out.write(WARC_VERSION)
     out.write(b"\r\n")
     for k, v in headers:
         if k not in (CONTENT_TYPE, CONTENT_LENGTH):

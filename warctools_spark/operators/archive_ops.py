@@ -212,7 +212,7 @@ def wet_conversion(pages: DataFrame, gzip_output: bool = False) -> DataFrame:
                     text,
                     gzip_record=gzip_output,
                 )
-                (row,) = parse_archive(rec, fmt="warc", gzip_mode="auto")
+                (row,) = parse_archive(rec, fmt="warc")
                 out.append(
                     {
                         "url": decode_sidecar_url(row.url),

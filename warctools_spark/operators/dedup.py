@@ -114,8 +114,9 @@ def minhash_signature(col: Column, num_hashes: int = 16) -> Column:
 _MAX_BUCKET_SIZE = 200
 
 
-def _capped_bucket_pairs(banded: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(pairs, bucket_sizes) from banded(doc_id, band, band_key) rows.
+def _capped_bucket_pairs(banded: DataFrame) -> DataFrame:
+    """Candidate pairs (id_a, id_b) from banded(doc_id, band, band_key)
+    rows.
 
     Small buckets (≤ _MAX_BUCKET_SIZE) explode all in-bucket pairs;
     oversized ones emit O(n) star pairs to the bucket's min id — pair
@@ -156,40 +157,22 @@ def _capped_bucket_pairs(banded: DataFrame) -> tuple[DataFrame, DataFrame]:
     pair_gen = F.when(
         F.size("ids") <= _MAX_BUCKET_SIZE, all_pairs
     ).otherwise(star_pairs)
-    pairs = (
+    return (
         buckets.select(F.explode(pair_gen).alias("p"))
         .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .distinct()
     )
-    sizes = buckets.select("band", "band_key", F.size("ids").alias("__n"))
-    return pairs, sizes
 
 
-def _bucket_stats(sizes: DataFrame) -> DataFrame:
-    """One row: total (multi-member) buckets, oversized buckets, ids
-    inside them — the 'what got star-capped' disclosure for LSH
-    hygiene."""
-    return sizes.agg(
-        F.count("*").alias("n_buckets"),
-        F.sum(
-            F.when(F.col("__n") > _MAX_BUCKET_SIZE, 1).otherwise(0)
-        ).alias("n_oversize_buckets"),
-        F.sum(
-            F.when(F.col("__n") > _MAX_BUCKET_SIZE, F.col("__n")).otherwise(0)
-        ).alias("n_ids_in_oversize"),
-    )
+# MinHash LSH bands: num_hashes // _LSH_BANDS rows per band
+_LSH_BANDS = 4
 
 
-def minhash_lsh_candidates(
-    docs: DataFrame,
-    num_hashes: int = 16,
-    bands: int = 4,
-    return_stats: bool = False,
-) -> DataFrame:
+def minhash_lsh_candidates(docs: DataFrame, num_hashes: int = 16) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH.
 
-    rows = distinct (id_a, id_b) pairs that collide in at least one
-    band. Only the band groupBy shuffles.
+    rows = distinct (id_a, id_b) pairs that collide in at least one of
+    4 bands. Only the band groupBy shuffles.
 
     Degenerate-bucket hygiene: a band key shared by a huge member set
     (empty docs, boilerplate) would make the in-bucket all-pairs
@@ -198,12 +181,9 @@ def minhash_lsh_candidates(
     bucket's min id — which is O(n) per bucket, bounds both the pair
     count and the collect_list array size, and preserves the duplicate
     cluster exactly under connected-components (members of one bucket
-    are transitively connected through the hub). With
-    `return_stats=True` the function returns (pairs, stats) where
-    stats reports total/oversized bucket counts and how many ids fell
-    into oversized buckets — no silent truncation.
+    are transitively connected through the hub).
     """
-    rows_per_band = num_hashes // bands
+    rows_per_band = num_hashes // _LSH_BANDS
     # small-file inputs arrive as one partition; the signature pass is
     # CPU-bound, so spread it before computing (cheap: raw text only)
     docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
@@ -236,7 +216,7 @@ def minhash_lsh_candidates(
                             ],
                         ).alias("band_key"),
                     )
-                    for b in range(bands)
+                    for b in range(_LSH_BANDS)
                 ]
             )
         ).alias("bk"),
@@ -244,10 +224,7 @@ def minhash_lsh_candidates(
     # bucket-collect instead of self-join: a self-join would execute the
     # signature pipeline twice; one groupBy + in-bucket pair explosion
     # scans once and shuffles once.
-    pairs, sized = _capped_bucket_pairs(banded)
-    if not return_stats:
-        return pairs
-    return pairs, _bucket_stats(sized)
+    return _capped_bucket_pairs(banded)
 
 
 def ngram_jaccard(docs: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -355,29 +332,24 @@ def hyperplane_band_keys(
     )
 
 
-def _resolve_dims(emb: DataFrame, vec_col: str, dims: int | None) -> int:
-    """dims MUST equal the real embedding length: zip_with against a
-    shorter/longer literal coefficient array pads with null, every dot
-    goes null, and all vectors silently collapse into one all-zeros
-    bucket per band. None → derive via an order-INDEPENDENT aggregate
-    (min/max of size, null-counted) so the derived dims — and which
-    rows _require_dims later rejects — never depend on partition
-    iteration order; ragged or null-bearing inputs raise
-    deterministically instead of destroying recall. An explicit dims
-    skips the scan entirely: _require_dims enforces it executor-side,
-    so the driver never pays an aggregate over a 100 TB table just to
-    re-check a declared value."""
-    if dims is not None:
-        return dims
+def _resolve_dims(emb: DataFrame) -> int:
+    """The embedding length, which hyperplane keys MUST match:
+    zip_with against a shorter/longer literal coefficient array pads
+    with null, every dot goes null, and all vectors silently collapse
+    into one all-zeros bucket per band. Derived via an
+    order-INDEPENDENT aggregate (min/max of size, null-counted) so the
+    dims — and which rows _require_dims later rejects — never depend
+    on partition iteration order; ragged or null-bearing inputs raise
+    deterministically instead of destroying recall."""
     row = emb.agg(
-        F.min(F.size(F.col(vec_col))).alias("lo"),
-        F.max(F.size(F.col(vec_col))).alias("hi"),
+        F.min(F.size(F.col("embedding"))).alias("lo"),
+        F.max(F.size(F.col("embedding"))).alias("hi"),
     ).first()
     if row["lo"] is None:  # empty input / all-null column: any dims
         return 1
     if row["lo"] != row["hi"]:
         raise ValueError(
-            f"ragged embedding column {vec_col!r}: sizes range "
+            "ragged embedding column 'embedding': sizes range "
             f"{row['lo']}..{row['hi']}; filter to one dimensionality first"
         )
     # null vectors (min/max ignore them) are rejected deterministically
@@ -385,25 +357,20 @@ def _resolve_dims(emb: DataFrame, vec_col: str, dims: int | None) -> int:
     return int(row["lo"])
 
 
-def _require_dims(df: DataFrame, vec_col: str, dims: int) -> DataFrame:
-    """Executor-side guard: any row whose vector is null or not
+def _require_dims(df: DataFrame, dims: int) -> DataFrame:
+    """Executor-side guard: any row whose `embedding` is null or not
     exactly `dims` long fails the JOB with a clear message instead of
-    silently corrupting band keys / distances (the first-row check in
-    _resolve_dims cannot see ragged tails). Pure Catalyst filter —
+    silently corrupting band keys / distances (a driver-side check of
+    sampled rows cannot see ragged tails). Pure Catalyst filter —
     raise_error only evaluates on offending rows, so the good-row path
     costs one size comparison."""
-    ok = F.size(F.col(vec_col)) == dims
+    size = F.size(F.col("embedding"))
     return df.where(
-        F.when(ok, F.lit(True)).otherwise(
+        F.when(size == dims, F.lit(True)).otherwise(
             F.raise_error(
                 F.concat(
-                    F.lit(
-                        f"embedding in {vec_col!r} is null or not "
-                        f"{dims}-dimensional (got size "
-                    ),
-                    F.coalesce(
-                        F.size(F.col(vec_col)).cast("string"), F.lit("NULL")
-                    ),
+                    F.lit(f"embedding is null or not {dims}-dimensional (got size "),
+                    F.coalesce(size.cast("string"), F.lit("NULL")),
                     F.lit(")"),
                 )
             ).cast("boolean")
@@ -411,13 +378,22 @@ def _require_dims(df: DataFrame, vec_col: str, dims: int) -> DataFrame:
     )
 
 
-def dup_clusters(
-    pairs: DataFrame,
-    vertices: DataFrame,
-    max_iter: int = 50,
-    on_nonconverged: str = "raise",
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+# label-propagation rounds before dup_clusters gives up on a chain
+_MAX_ROUNDS = 50
+
+
+def _propagate(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """One min-label round: each node's least label among itself and
+    its neighbours."""
+    nbr = edges.join(
+        labels.withColumnRenamed("node", "src"), on="src"
+    ).select(F.col("dst").alias("node"), "label")
+    return labels.unionByName(nbr).groupBy("node").agg(
+        F.min("label").alias("label")
+    )
+
+
+def dup_clusters(pairs: DataFrame, vertices: DataFrame) -> DataFrame:
     """Resolve near-duplicate pairs into clusters: (id, cluster_id)
     where cluster_id is the minimum id reachable through the pair
     graph — the canonical representative downstream keep-one dedup
@@ -427,33 +403,22 @@ def dup_clusters(
     among itself and its neighbors (one join + one min-agg shuffle,
     both on the node key). Convergence is O(graph diameter) rounds —
     near-dup clusters are stars/short chains from LSH buckets, so 2-4
-    rounds in practice; `max_iter` bounds adversarial chains. Labels
-    are localCheckpoint()ed per round to keep the plan depth flat
-    (same discipline as the crawl epoch loop). The convergence check
-    rides the checkpoint action as an observe() aggregate — no extra
-    job per round. Exiting at max_iter with labels still moving
-    raises (or warns, on_nonconverged="warn"): truncated propagation
-    means silently split clusters.
+    rounds in practice; _MAX_ROUNDS (50) bounds adversarial chains.
+    Labels are localCheckpoint()ed per round to keep the plan depth
+    flat (same discipline as the crawl epoch loop). The convergence
+    check rides the checkpoint action as an observe() aggregate — no
+    extra job per round. Exiting at _MAX_ROUNDS with labels still
+    moving raises: truncated propagation means silently split
+    clusters.
 
-    checkpoint_dir=None (default) deliberately does NOT pointer-
-    double: the label(label) shortcut makes the iterated plan
-    reference the label relation twice per round, Spark's size-only
-    stats estimator multiplies child sizes through joins, and
-    localCheckpoint's LogicalRDD INHERITS the estimated stats — the
-    sizeInBytes bit-length doubles per round and by round ~12 the
+    No pointer doubling: the label(label) shortcut makes the iterated
+    plan reference the label relation twice per round, Spark's
+    size-only stats estimator multiplies child sizes through joins,
+    and localCheckpoint's LogicalRDD INHERITS the estimated stats —
+    the sizeInBytes bit-length doubles per round and by round ~12 the
     driver burns minutes in BigInteger multiplication (measured:
     0.4 s/round flat without the shortcut over 36 rounds; 22 s at
     round 12 with it).
-
-    For adversarial long-chain graphs pass `checkpoint_dir`: labels
-    then round-trip through parquet each round, which resets the
-    inherited stats to real file sizes AND truncates lineage, making
-    the label(label) shortcut safe — convergence drops to
-    O(log diameter) rounds (a 10^6-node chain resolves in ~40 rounds,
-    not 10^6) at the cost of one small parquet write per round (the
-    GraphFrames-style checkpointing discipline). Intermediate round
-    files are deleted; the final labels parquet stays (the returned
-    DataFrame reads from it).
     """
     from pyspark.sql import Observation
 
@@ -467,61 +432,10 @@ def dup_clusters(
         vertices.select(F.col("doc_id").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-    )
-    spark = pairs.sparkSession
-    round_paths: list[str] = []
-    if checkpoint_dir is not None:
-        import uuid
-
-        # unique per-call run directory: two concurrent dup_clusters
-        # calls sharing a checkpoint_dir must not overwrite/delete
-        # each other's round files
-        run_dir = f"{checkpoint_dir}/dup_clusters_{uuid.uuid4().hex[:12]}"
-
-    def disk_ckpt(df: DataFrame, i: int) -> DataFrame:
-        path = f"{run_dir}/round_{i:05d}"
-        df.write.mode("overwrite").parquet(path)
-        round_paths.append(path)
-        return spark.read.parquet(path)
-
-    def fs_delete(path: str) -> None:
-        # scheme-agnostic deletion through the Hadoop FileSystem API —
-        # shutil would silently no-op on hdfs:// or s3a:// paths
-        try:
-            jvm = spark._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path(path)
-            fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            fs.delete(hpath, True)
-        except Exception:
-            pass  # cleanup is best-effort; correctness never depends on it
-
-    if checkpoint_dir is None:
-        labels = labels.localCheckpoint(eager=True)
-    else:
-        labels = disk_ckpt(labels, 0)
+    ).localCheckpoint(eager=True)
     last_changed = 0
-    for it in range(max_iter):
-        nbr = edges.join(
-            labels.withColumnRenamed("node", "src"), on="src"
-        ).select(F.col("dst").alias("node"), "label")
-        merged = (
-            labels.unionByName(nbr)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-        if checkpoint_dir is not None:
-            # pointer doubling — safe here because the parquet
-            # round-trip below resets the inherited plan stats
-            shortcut = labels.select(
-                F.col("node").alias("label"), F.col("label").alias("label2")
-            )
-            merged = merged.join(shortcut, on="label", how="left").select(
-                "node",
-                F.least(
-                    F.col("label"),
-                    F.coalesce(F.col("label2"), F.col("label")),
-                ).alias("label"),
-            )
+    for _ in range(_MAX_ROUNDS):
+        merged = _propagate(edges, labels)
         obs = Observation()
         delta = merged.join(
             labels.select("node", F.col("label").alias("old")), on="node"
@@ -530,36 +444,20 @@ def dup_clusters(
             "label",
             (F.col("label") != F.col("old")).cast("int").alias("chg"),
         )
-        observed = delta.observe(obs, F.sum("chg").alias("changed")).select(
+        labels = delta.observe(obs, F.sum("chg").alias("changed")).select(
             "node", "label"
-        )
-        if checkpoint_dir is None:
-            labels = observed.localCheckpoint(eager=True)
-        else:
-            labels = disk_ckpt(observed, it + 1)
+        ).localCheckpoint(eager=True)
         last_changed = int(obs.get["changed"] or 0)
         if not last_changed:
             break
-    if checkpoint_dir is not None and len(round_paths) > 1:
-        # intermediates are dead weight; the final round backs the
-        # returned DataFrame and stays
-        for p in round_paths[:-1]:
-            fs_delete(p)
     if last_changed:
-        # the loop exited at max_iter with the LAST round still
+        # the loop exited at _MAX_ROUNDS with the LAST round still
         # applying changes — but that round may have been the final
-        # one needed (fixpoint reached exactly at max_iter). One
+        # one needed (fixpoint reached exactly at the bound). One
         # verification pass distinguishes 'converged on the last
         # round' from genuinely truncated propagation; it runs only
         # in this suspicious case.
-        nbr = edges.join(
-            labels.withColumnRenamed("node", "src"), on="src"
-        ).select(F.col("dst").alias("node"), "label")
-        merged = (
-            labels.unionByName(nbr)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
+        merged = _propagate(edges, labels)
         last_changed = (
             merged.join(
                 labels.select("node", F.col("label").alias("old")), on="node"
@@ -571,16 +469,11 @@ def dup_clusters(
         # labels genuinely still moving: a long chain is only
         # partially propagated — clusters are SPLIT and keep-one
         # dedup downstream would silently retain duplicates
-        msg = (
-            f"dup_clusters did not converge in max_iter={max_iter} "
-            f"rounds ({last_changed} labels still changing); raise "
-            "max_iter (rounds needed ~ graph diameter)"
+        raise RuntimeError(
+            f"dup_clusters did not converge in {_MAX_ROUNDS} rounds "
+            f"({last_changed} labels still changing; rounds needed ~ "
+            "graph diameter)"
         )
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
@@ -619,16 +512,16 @@ def decontaminate(
     )
 
 
-def segment_dedup(docs: DataFrame, mode: str = "window") -> DataFrame:
+def segment_dedup(docs: DataFrame) -> DataFrame:
     """C4-style corpus-level segment dedup (Raffel et al. 2020 §2.2
     dedup "any three-sentence span that occurs more than once"): split
     every document into segments, keep only the globally-FIRST
     occurrence of each segment (ordered by (doc_id, position)), and
     reassemble documents from their surviving segments in order.
 
-    mode="line" segments on newlines (the C4 form for real web text);
-    mode="window" segments on consecutive 10-token windows, which is
-    the same relational machinery for corpora without line structure.
+    Segments are consecutive 10-token windows (C4 splits real web text
+    on lines; windows are the same relational machinery for corpora
+    without line structure), reassembled with single spaces.
 
     Plan shape at 100 TB: the keeper per segment is min(struct(doc_id,
     pos)) under a hash agg — map-side partial combine means a
@@ -637,33 +530,27 @@ def segment_dedup(docs: DataFrame, mode: str = "window") -> DataFrame:
     the keeper agg, one hash join back (AQE picks broadcast if the
     keeper side is small), one shuffle on doc_id to reassemble.
     Everything is JVM built-ins; no Python in the path."""
-    if mode == "line":
-        segs = docs.select(
-            F.col("doc_id"),
-            F.posexplode(F.split(F.col("text"), r"\n")).alias("pos", "seg"),
-        )
-    else:
-        # hoist the token array into its own projection: with the
-        # split() inlined in the lambda body Catalyst re-tokenizes the
-        # whole document once PER SEGMENT (see word_ngrams r6 note);
-        # as a projected column it materializes once per row
-        toked = docs.select(
-            F.col("doc_id"),
-            F.split(F.trim(F.col("text")), r"\s+").alias("__toks"),
-            (F.length(F.trim(F.col("text"))) > 0).alias("__nonempty"),
-        )
-        tk = F.col("__toks")
-        n_seg = F.ceil(F.size(tk) / F.lit(10)).cast("int")
-        segs_arr = F.when(
-            F.col("__nonempty"),
-            F.transform(
-                F.sequence(F.lit(0), n_seg - 1),
-                lambda i: F.concat_ws(" ", F.slice(tk, i * 10 + 1, 10)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        segs = toked.select(
-            F.col("doc_id"), F.posexplode(segs_arr).alias("pos", "seg")
-        )
+    # hoist the token array into its own projection: with the
+    # split() inlined in the lambda body Catalyst re-tokenizes the
+    # whole document once PER SEGMENT (see word_ngrams r6 note); as a
+    # projected column it materializes once per row
+    toked = docs.select(
+        F.col("doc_id"),
+        F.split(F.trim(F.col("text")), r"\s+").alias("__toks"),
+        (F.length(F.trim(F.col("text"))) > 0).alias("__nonempty"),
+    )
+    tk = F.col("__toks")
+    n_seg = F.ceil(F.size(tk) / F.lit(10)).cast("int")
+    segs_arr = F.when(
+        F.col("__nonempty"),
+        F.transform(
+            F.sequence(F.lit(0), n_seg - 1),
+            lambda i: F.concat_ws(" ", F.slice(tk, i * 10 + 1, 10)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    segs = toked.select(
+        F.col("doc_id"), F.posexplode(segs_arr).alias("pos", "seg")
+    )
     # keeper resolution only matters for segments occurring >= 2 times:
     # a unique segment is trivially its own keeper. Restricting the
     # join build side to repeated segments (usually a small fraction)
@@ -689,10 +576,9 @@ def segment_dedup(docs: DataFrame, mode: str = "window") -> DataFrame:
         )
         .select("doc_id", "pos", "seg")
     )
-    sep = "\n" if mode == "line" else " "
     rebuilt = kept.groupBy("doc_id").agg(
         F.concat_ws(
-            sep,
+            " ",
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "seg"))),
                 lambda s: s["seg"],
@@ -714,20 +600,16 @@ def segment_dedup(docs: DataFrame, mode: str = "window") -> DataFrame:
     )
 
 
-def duplicate_spans(
-    docs: DataFrame,
-    k: int = 10,
-    min_span_tokens: int = 20,
-) -> DataFrame:
+def duplicate_spans(docs: DataFrame, min_span_tokens: int = 20) -> DataFrame:
     """Exact substring-duplication spans, the Lee et al. 2022
     "Deduplicating Training Data Makes Language Models Better"
     pattern re-expressed relationally (the published approach builds a
-    suffix array; the k-gram first-occurrence formulation below finds
+    suffix array; the 10-gram first-occurrence formulation below finds
     the same >= min_span_tokens repeated spans for span lengths
-    expressible as runs of duplicated k-grams, with linear shuffles
+    expressible as runs of duplicated 10-grams, with linear shuffles
     instead of a distributed suffix sort).
 
-    A token position is DUPLICATED when the k-gram starting there has
+    A token position is DUPLICATED when the 10-gram starting there has
     a strictly earlier occurrence — earlier meaning a smaller
     (doc_id, pos), so the corpus-wide first occurrence of any repeated
     passage is exempt and survives downstream removal. Duplicated
@@ -735,7 +617,7 @@ def duplicate_spans(
     classic gaps-and-islands window (running max of span ends), and
     spans shorter than min_span_tokens are discarded.
 
-    Plan shape: k-gram explode -> one hash agg per gram computing the
+    Plan shape: 10-gram explode -> one hash agg per gram computing the
     global min (doc,pos) occurrence (map-side combined) -> join back
     on gram -> per-doc window over positions (partitioned by doc, so
     no global sort). Returns (doc_id, span_start, span_end, n_tokens).
@@ -746,7 +628,7 @@ def duplicate_spans(
 
     grams = docs.select(
         F.col("doc_id"),
-        F.posexplode(word_ngrams(F.col("text"), k)).alias("pos", "gram"),
+        F.posexplode(word_ngrams(F.col("text"), 10)).alias("pos", "gram"),
     )
     # r6 shape, two changes over r5:
     # (1) ONE gram-stream materialization: the explicit repartition by
@@ -787,10 +669,10 @@ def duplicate_spans(
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    # island starts where this k-gram interval [pos, pos+k) does not
+    # island starts where this 10-gram interval [pos, pos+10) does not
     # touch the running max end of earlier intervals
     marked = dups.withColumn(
-        "prev_end", F.max(F.col("pos") + k).over(w)
+        "prev_end", F.max(F.col("pos") + 10).over(w)
     ).withColumn(
         "new_island",
         F.when(
@@ -808,7 +690,7 @@ def duplicate_spans(
         islands.groupBy("doc_id", "island")
         .agg(
             F.min("pos").alias("span_start"),
-            (F.max("pos") + k).alias("span_end"),
+            (F.max("pos") + 10).alias("span_end"),
         )
         .withColumn("n_tokens", F.col("span_end") - F.col("span_start"))
         .where(F.col("n_tokens") >= min_span_tokens)

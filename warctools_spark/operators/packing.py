@@ -26,21 +26,14 @@ from pyspark.sql import functions as F
 from warctools_spark.operators.text_analysis import token_count
 
 
-def pack_sequences(
-    docs: DataFrame,
-    seq_len: int = 2048,
-    n_parts: int | None = None,
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, seq_len: int = 2048) -> DataFrame:
     """(doc_id, n_tokens, tok_start, seq_first, seq_last): each doc's
     global token offset in the id-ordered concatenated corpus and the
     first/last training sequence of length `seq_len` it lands in."""
     spark = docs.sparkSession
-    if n_parts is None:
-        n_parts = spark.sparkContext.defaultParallelism
-
     sized = docs.select(
         F.col("doc_id"), token_count(F.col("text")).alias("n_tokens")
-    ).repartitionByRange(n_parts, F.col("doc_id"))
+    ).repartitionByRange(spark.sparkContext.defaultParallelism, F.col("doc_id"))
 
     with_pid = sized.withColumn("__pid", F.spark_partition_id())
     w = (

@@ -113,38 +113,22 @@ def skew_report(
     )
 
 
-def split_assign(
-    docs: DataFrame,
-    weights: dict[str, float] | None = None,
-) -> DataFrame:
-    """Deterministic train/val/test assignment: each row lands in the
-    split whose cumulative-weight interval contains hash_unit(seed,
-    id). Pure map-side expression — no shuffle, no sampling variance,
-    identical at any parallelism and on any re-run (the property a
-    100 TB corpus split MUST have: re-computing a lost partition
-    cannot reshuffle examples between train and test). Weights are
-    normalized; interval edges follow sorted split names so the
-    assignment is independent of dict order."""
-    if weights is None:
-        weights = {"train": 0.9, "val": 0.05, "test": 0.05}
-    total = float(sum(weights.values()))
-    expr = None
-    cum = 0.0
+def split_assign(docs: DataFrame) -> DataFrame:
+    """Deterministic train/val/test assignment (90/5/5): each row
+    lands in the split whose cumulative-weight interval contains
+    hash_unit(seed, id). Pure map-side expression — no shuffle, no
+    sampling variance, identical at any parallelism and on any re-run
+    (the property a 100 TB corpus split MUST have: re-computing a lost
+    partition cannot reshuffle examples between train and test).
+    Intervals in sorted split-name order: test [0, 0.05), train
+    [0.05, 0.95), val [0.95, 1) — the oracle's literal boundaries."""
     u = hash_unit(F.col("doc_id"), "split-v1")
-    items = sorted(weights.items())
-    for name, w in items[:-1]:
-        # round the cumulative threshold to 12 decimals: float
-        # accumulation makes 0.05 + 0.9 = 0.9500000000000001, which
-        # would classify a row hashing to exactly u = 0.95 differently
-        # from the documented (and oracle's) literal 0.95 boundary
-        cum = round(cum + w / total, 12)
-        cond = u < F.lit(cum)
-        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(
-            cond, F.lit(name)
-        )
-    last = items[-1][0]
-    expr = F.lit(last) if expr is None else expr.otherwise(F.lit(last))
-    return docs.withColumn("split", expr)
+    return docs.withColumn(
+        "split",
+        F.when(u < F.lit(0.05), F.lit("test"))
+        .when(u < F.lit(0.95), F.lit("train"))
+        .otherwise(F.lit("val")),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -164,9 +148,10 @@ def _hash_mod(col: Column, seed: str, mod: int) -> Column:
 
 
 def _hashed_gram_counts(df: DataFrame) -> DataFrame:
-    """Per-doc hashed-n-gram feature counts of df(doc_id, text):
-    whitespace unigrams + space-joined bigrams, each hashed into
-    _DSIR_BUCKETS buckets -> (__id, bucket, c). The per-doc pre-aggregation is deliberate: every
+    """Per-doc hashed-n-gram feature counts of df(doc_id, text,
+    __is_target): whitespace unigrams + space-joined bigrams, each
+    hashed into _DSIR_BUCKETS buckets -> (__id, __is_target, bucket,
+    c). The per-doc pre-aggregation is deliberate: every
     downstream join touches this (sub-vocabulary-sized per doc) table,
     never the exploded occurrence stream — the same join-input-
     reduction that fixed bigram_logprob's skew."""
@@ -184,17 +169,16 @@ def _hashed_gram_counts(df: DataFrame) -> DataFrame:
     ).otherwise(empty)
     grams = df.select(
         F.col("doc_id").alias("__id"),
-        *([F.col("__is_target")] if "__is_target" in df.columns else []),
+        F.col("__is_target"),
         F.explode(F.concat(w, bi)).alias("gram"),
-    )
-    keys = ["__id"] + (
-        ["__is_target"] if "__is_target" in df.columns else []
     )
     return (
         grams.select(
-            *keys, _hash_mod(F.col("gram"), "dsir-v1", _DSIR_BUCKETS).alias("bucket")
+            "__id",
+            "__is_target",
+            _hash_mod(F.col("gram"), "dsir-v1", _DSIR_BUCKETS).alias("bucket"),
         )
-        .groupBy(*keys, "bucket")
+        .groupBy("__id", "__is_target", "bucket")
         .agg(F.count("*").cast("long").alias("c"))
     )
 
@@ -236,14 +220,11 @@ def _bucket_log_ratio(docs_b: DataFrame, target_b: DataFrame) -> DataFrame:
     return lam
 
 
-def dsir_weights(
-    docs: DataFrame,
-    target: DataFrame | None = None,
-    target_predicate: Column | str | None = None,
-) -> DataFrame:
+def dsir_weights(docs: DataFrame, target_predicate: str) -> DataFrame:
     """DSIR importance log-weights: score every raw document by how
     much more likely its hashed-n-gram bag is under the TARGET
-    distribution (e.g. a trusted high-quality subset) than under the
+    distribution (the subset of `docs` the SQL `target_predicate`
+    selects, e.g. a trusted high-quality slice) than under the
     raw corpus itself — log w(x) = sum over grams of
     [ln p_target(bucket) - ln q_raw(bucket)], add-alpha smoothed.
     This is the data-selection scoring stage of Xie et al. 2023.
@@ -257,33 +238,14 @@ def dsir_weights(
     then every join is per-doc-pre-aggregated counts against a
     constant _DSIR_BUCKETS-row broadcast table — no corpus-sized
     shuffle keyed on skewed grams ("the the" never becomes a hot
-    join key because only its bucket's COUNT travels).
-
-    When the target is a SUBSET of `docs` selected by a row predicate
-    (the common call), pass `target_predicate` (SQL string or Column)
-    instead of a second DataFrame: the gram stream is then tokenized
-    and hashed ONCE, with the per-doc target flag carried through the
-    pre-agg — identical output, half the hashing on a target-heavy
-    corpus."""
-    if (target is None) == (target_predicate is None):
-        raise ValueError(
-            "pass exactly one of `target` (a DataFrame) or "
-            "`target_predicate` (a row predicate over docs)"
-        )
-    if target_predicate is not None:
-        pred = (
-            F.expr(target_predicate)
-            if isinstance(target_predicate, str)
-            else target_predicate
-        )
-        both = _hashed_gram_counts(
-            docs.withColumn("__is_target", pred.cast("boolean"))
-        )
-        docs_b = both.drop("__is_target")
-        target_b = both.where(F.col("__is_target")).drop("__is_target")
-    else:
-        docs_b = _hashed_gram_counts(docs)
-        target_b = _hashed_gram_counts(target)
+    join key because only its bucket's COUNT travels). The gram
+    stream is tokenized and hashed ONCE, with the per-doc target flag
+    carried through the pre-agg."""
+    both = _hashed_gram_counts(
+        docs.withColumn("__is_target", F.expr(target_predicate).cast("boolean"))
+    )
+    docs_b = both.drop("__is_target")
+    target_b = both.where(F.col("__is_target")).drop("__is_target")
     lam = _bucket_log_ratio(docs_b, target_b)
     wts = (
         docs_b.join(F.broadcast(lam), "bucket")
@@ -304,13 +266,8 @@ def dsir_weights(
     )
 
 
-def dsir_select(
-    docs: DataFrame,
-    target: DataFrame | None = None,
-    k: int = 100,
-    target_predicate: Column | str | None = None,
-) -> DataFrame:
-    """DSIR selection stage: Gumbel-top-k resampling over the
+def dsir_select(docs: DataFrame, target_predicate: str) -> DataFrame:
+    """DSIR selection stage: Gumbel-top-k resampling (k = 100) over the
     importance weights — equivalent to sampling k docs without
     replacement with probability proportional to w(x) (Xie et al.
     2023 §2.2; Gumbel trick: argtop-k of log w + Gumbel noise). The
@@ -325,7 +282,7 @@ def dsir_select(
     Scale: top-k by ORDER BY+LIMIT compiles to TakeOrderedAndProject
     — per-partition heaps then a driver merge of k rows, never a
     global sort."""
-    wts = dsir_weights(docs, target, target_predicate=target_predicate)
+    wts = dsir_weights(docs, target_predicate)
     # u in (0,1): (h + 0.5) / MOD can't hit the ln(0) endpoints
     h = _hash_mod(F.col("doc_id"), "dsir-v1-gumbel", _MOD)
     u = (h.cast("double") + 0.5) / F.lit(float(_MOD))
@@ -333,6 +290,6 @@ def dsir_select(
     return (
         wts.withColumn("dsir_score", F.round(F.col("log_weight") + g, 4))
         .orderBy(F.col("dsir_score").desc(), F.col("doc_id").asc())
-        .limit(k)
+        .limit(100)
         .select("doc_id", "n_grams", "log_weight", "dsir_score")
     )

@@ -6,7 +6,7 @@
 * banded hyperplane-LSH ANN: candidates share the query's band key
   in any band, reranked by exact cosine.
 * k-means IVF ANN: deterministic Lloyd centroids as the coarse
-  quantizer; queries probe their n_probe nearest cells only.
+  quantizer; queries probe their 2 nearest cells only.
 * k-means clustering and SemDeDup-style survivors on top of it.
 """
 
@@ -40,27 +40,19 @@ def cosine_to_query(
 
 
 def brute_force_topk(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
+    emb: DataFrame, query_vec: list[float], vec_col: str = "embedding"
 ) -> DataFrame:
-    """Exact cosine top-k with a deterministic id tiebreak."""
+    """Exact cosine top-10 with a deterministic id tiebreak."""
     return (
         cosine_to_query(emb, query_vec, vec_col)
         .select(F.col("vec_id"), F.round(F.col("cosine"), 6).alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-        .limit(k)
+        .limit(10)
     )
 
 
-def lsh_topk(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    dims: int | None = None,
-) -> DataFrame:
-    """ANN top-k via banded hyperplane LSH probe + exact rerank — the
+def lsh_topk(emb: DataFrame, query_vec: list[float]) -> DataFrame:
+    """ANN top-10 via banded hyperplane LSH probe + exact rerank — the
     scale path beyond brute force: candidates are rows sharing
     the query's band key in ANY of 4 bands of 8 bits (expected corpus
     fraction ~4/2^8), reranked by exact cosine.
@@ -81,8 +73,8 @@ def lsh_topk(
     # dims must match BOTH sides: a mismatch makes the corpus-side
     # zip_with null out (all-zeros keys) while the driver-side query
     # keys stay real — candidates go near-empty with no error
-    dims = _resolve_dims(emb, "embedding", dims)
-    emb = _require_dims(emb, "embedding", dims)
+    dims = _resolve_dims(emb)
+    emb = _require_dims(emb, dims)
     if len(query_vec) != dims:
         raise ValueError(
             f"query_vec has {len(query_vec)} dims but corpus embeddings "
@@ -115,7 +107,7 @@ def lsh_topk(
             "__bk", F.array(*[F.lit(p) for p in probe_keys])
         )
     ).drop("__bk", "__v")
-    return brute_force_topk(cands, query_vec, k)
+    return brute_force_topk(cands, query_vec)
 
 
 def _sq_dist(vec: Column, centroid: list[float]) -> Column:
@@ -130,38 +122,34 @@ def _sq_dist(vec: Column, centroid: list[float]) -> Column:
     )
 
 
-def kmeans_assign(
-    emb: DataFrame,
-    k: int = 8,
-    iterations: int = 2,
-    assign_mode: str = "auto",
-) -> DataFrame:
-    """Deterministic Lloyd k-means over an embedding column — the
-    clustering stage of SemDeDup-style semantic dedup (cluster first,
-    then run exact near-dup only within clusters) and of IVF index
-    training.
+def kmeans_assign(emb: DataFrame) -> DataFrame:
+    """Deterministic two-iteration Lloyd 8-means over an embedding
+    column — the clustering stage of SemDeDup-style semantic dedup
+    (cluster first, then run exact near-dup only within clusters) and
+    of IVF index training.
 
-    Determinism: centroids initialize to the vectors of the k lowest
+    Determinism: centroids initialize to the vectors of the 8 lowest
     ids (no RNG); assignment argmin breaks ties on cluster id; updated
     centroids round to 6 decimals so the ~1e-13
     summation-order noise of a distributed avg cannot flip later
     assignments between runs or engines.
 
-    Scale shape: assignment has two interchangeable physical modes —
+    Scale shape: assignment has two interchangeable physical modes,
+    picked by size. Below 8*dims = 1024 (the oracle-parity regime),
     "expr": a JVM-only expression over a literal centroid array (no
     join, no shuffle, and the exact left-fold arithmetic the DuckDB
-    oracle replays bit-for-bit); "pandas": one Arrow-batched numpy
-    GEMM per batch (||x-c||² = ||x||² - 2x·Cᵀ + ||c||²), which beats
-    the k×dims-literal codegen once centroids get large but sums in
+    oracle replays bit-for-bit). From 1024 on (real 384-dim
+    embeddings), "pandas": one Arrow-batched numpy GEMM per batch
+    (||x-c||² = ||x||² - 2x·Cᵀ + ||c||²), which beats the
+    8×dims-literal codegen once centroids get large but sums in
     pairwise (not left-fold) order, so argmin can differ from "expr"
-    only on sub-ulp distance ties. "auto" (default) picks expr below
-    k*dims=1024 (the oracle-parity regime) and pandas above. The
-    update is one posexplode + (cluster, dim) hash agg with map-side
-    combine, and only k x dims averaged values return to the driver
-    per iteration (the same O(small) driver traffic as Lloyd on any
-    cluster). Returns (id, cluster, dist) with dist rounded to 6.
+    only on sub-ulp distance ties. The update is one posexplode +
+    (cluster, dim) hash agg with map-side combine, and only 8 x dims
+    averaged values return to the driver (the same O(small) driver
+    traffic as Lloyd on any cluster). Returns (id, cluster, dist)
+    with dist rounded to 6.
     """
-    assigned, _ = _lloyd(emb, k, iterations, assign_mode)
+    assigned, _ = _lloyd(emb, "auto")
     return assigned.select(
         "vec_id",
         "cluster",
@@ -179,8 +167,6 @@ def _assign_to_centroids(
     Returns df + (cluster, __d2)."""
     from pyspark.sql.functions import pandas_udf
 
-    if assign_mode not in ("expr", "pandas"):
-        raise ValueError(f"unknown assign_mode: {assign_mode!r}")
     if assign_mode == "expr":
         cells = F.array(
             *[
@@ -224,12 +210,13 @@ def _assign_to_centroids(
     )
 
 
-def _lloyd(
-    emb: DataFrame, k: int, iterations: int, assign_mode: str
-) -> tuple[DataFrame, dict]:
-    """Shared Lloyd loop behind kmeans_assign and ivf_kmeans_topk over
-    (vec_id, embedding): returns (assigned(vec_id, __v, cluster, __d2),
-    final centroids, rounded to 6 decimals)."""
+def _lloyd(emb: DataFrame, assign_mode: str) -> tuple[DataFrame, dict]:
+    """Shared two-iteration Lloyd 8-means behind kmeans_assign and
+    ivf_kmeans_topk over (vec_id, embedding): assign to the 8 lowest-id
+    vectors, move each centroid to its cluster's mean, assign again.
+    `assign_mode` is "expr", or "auto" to pick by 8*dims. Returns
+    (assigned(vec_id, __v, cluster, __d2), final centroids, rounded
+    to 6 decimals)."""
     from warctools_spark.operators.dedup import _require_dims
 
     # dims derives from the init collect (which Lloyd needs anyway)
@@ -242,7 +229,7 @@ def _lloyd(
             F.col("vec_id"), F.col("embedding").cast("array<double>").alias("__v")
         )
         .orderBy("vec_id")
-        .limit(k)
+        .limit(8)
         .collect()
     )
     if not init_rows:
@@ -251,83 +238,66 @@ def _lloyd(
         )
     if any(r["__v"] is None for r in init_rows):
         raise ValueError(
-            "null embedding among the k lowest-id init vectors; drop "
+            "null embedding among the 8 lowest-id init vectors; drop "
             "null vectors before clustering"
         )
     dims = len(init_rows[0]["__v"])
     if any(len(r["__v"]) != dims for r in init_rows):
         raise ValueError(
-            "ragged embedding column 'embedding' among the k lowest-id "
+            "ragged embedding column 'embedding' among the 8 lowest-id "
             "init vectors; filter to one dimensionality first"
         )
-    keyed = _require_dims(emb, "embedding", dims).select(
+    keyed = _require_dims(emb, dims).select(
         F.col("vec_id"), F.col("embedding").cast("array<double>").alias("__v")
     )
     centroids = {i: list(r["__v"]) for i, r in enumerate(init_rows)}
     if assign_mode == "auto":
-        assign_mode = "pandas" if k * dims >= 1024 else "expr"
-    if assign_mode not in ("expr", "pandas"):
-        raise ValueError(f"unknown assign_mode: {assign_mode!r}")
-
-    def assign(df):
-        return _assign_to_centroids(df, centroids, assign_mode)
-
-    assigned = assign(keyed)
-    for _ in range(max(iterations - 1, 0)):
-        upd = (
-            assigned.select("cluster", F.posexplode("__v").alias("dim", "val"))
-            .groupBy("cluster", "dim")
-            .agg(F.round(F.avg("val"), 6).alias("val"))
-            .collect()
+        assign_mode = "pandas" if 8 * dims >= 1024 else "expr"
+    assigned = _assign_to_centroids(keyed, centroids, assign_mode)
+    upd = (
+        assigned.select("cluster", F.posexplode("__v").alias("dim", "val"))
+        .groupBy("cluster", "dim")
+        .agg(F.round(F.avg("val"), 6).alias("val"))
+        .collect()
+    )
+    new_c: dict = {}
+    for r in upd:
+        new_c.setdefault(int(r["cluster"]), [0.0] * dims)[int(r["dim"])] = (
+            float(r["val"])
         )
-        new_c: dict = {}
-        for r in upd:
-            new_c.setdefault(int(r["cluster"]), [0.0] * dims)[int(r["dim"])] = (
-                float(r["val"])
-            )
-        # empty clusters keep their previous centroid
-        centroids = {cid: new_c.get(cid, c) for cid, c in centroids.items()}
-        assigned = assign(keyed)
-    return assigned, centroids
+    # empty clusters keep their previous centroid
+    centroids = {cid: new_c.get(cid, c) for cid, c in centroids.items()}
+    return _assign_to_centroids(keyed, centroids, assign_mode), centroids
 
 
-def ivf_kmeans_topk(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 2,
-) -> DataFrame:
-    """ANN top-k over a kmeans-trained IVF index (the classic
+def ivf_kmeans_topk(emb: DataFrame, query_vec: list[float]) -> DataFrame:
+    """ANN top-10 over a kmeans-trained IVF index (the classic
     inverted-file ANN: Lloyd centroids as the coarse quantizer).
     Train 8 deterministic Lloyd centroids in 2 iterations, pick the
-    `n_probe` cells whose centroids are nearest the query
+    2 cells whose centroids are nearest the query
     (driver-side — 8 distances), and exact-rerank only the vectors
     assigned to those cells.
 
     Scale shape: training is the kmeans_assign plan (map-side combined
-    centroid update, k*dims rows to the driver per iteration); the
+    centroid update, 8*dims rows to the driver); the
     probe is a literal IN filter on the cluster column — if the corpus
     is stored partitioned by cluster (the IVF layout), that prunes
-    ~(1 - n_probe/8) of the scan before it starts; the rerank is
+    ~3/4 of the scan before it starts; the rerank is
     TakeOrderedAndProject over the probed fraction. Expected recall
-    rises with n_probe; exact when n_probe = 8. In production
+    rises with the cells probed; exact when all 8 are. In production
     the trained index (cluster column + centroid table) is written
     once and reused across queries — this entry trains per call only
     so the whole path stays one oracle-checkable expression."""
-    assigned, centroids = _lloyd(emb, 8, 2, "expr")
-    probe = _select_probe_cells(centroids, query_vec, n_probe)
+    assigned, centroids = _lloyd(emb, "expr")
+    probe = _select_probe_cells(centroids, query_vec)
     cands = assigned.where(F.col("cluster").isin(probe))
-    return brute_force_topk(cands, query_vec, k, vec_col="__v")
+    return brute_force_topk(cands, query_vec, vec_col="__v")
 
 
-def _select_probe_cells(
-    centroids: dict, query_vec: list[float], n_probe: int
-) -> list[int]:
-    """The n_probe cluster ids nearest the query — driver-side
-    left-fold float64 arithmetic (the same order as the SQL oracle's
-    list_sum fold), ties broken on cluster id. Shared by the
-    train-per-call and persisted-index query paths so their probe
-    selection cannot drift apart."""
+def _select_probe_cells(centroids: dict, query_vec: list[float]) -> list[int]:
+    """The 2 cluster ids nearest the query — driver-side left-fold
+    float64 arithmetic (the same order as the SQL oracle's list_sum
+    fold), ties broken on cluster id."""
     if not centroids:
         raise ValueError("empty centroid set: no vectors to index")
     dims = len(next(iter(centroids.values())))
@@ -343,26 +313,22 @@ def _select_probe_cells(
         )
         for cid, c in centroids.items()
     )
-    return [cid for _, cid in ranked[:n_probe]]
+    return [cid for _, cid in ranked[:2]]
 
 
-def semdedup_survivors(
-    emb: DataFrame,
-    k: int = 8,
-    threshold: float = 0.9,
-) -> DataFrame:
+def semdedup_survivors(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
     """SemDeDup (Abbas et al. 2023 pattern, public): cluster the
-    embeddings (2 Lloyd iterations), then drop any vector whose cluster contains a
+    embeddings (8-means, 2 Lloyd iterations), then drop any vector whose cluster contains a
     LOWER-id vector with cosine >= threshold. Returns survivors
     (id, cluster).
 
     This is the scale story for semantic dedup: the O(n²) cosine
     comparison is confined within k-means cells, so the self-join
     shuffles on the cluster key and each task does at most
-    (n/k)² work — k is the knob that bounds per-task cost. Keeper
+    (n/8)² work on an even split. Keeper
     choice (lowest id) is deterministic; the cosine is rounded to 6
     before thresholding so engine fp noise cannot flip membership."""
-    assigned = kmeans_assign(emb, k).select(
+    assigned = kmeans_assign(emb).select(
         F.col("vec_id"), "cluster"
     )
     keyed = emb.select(

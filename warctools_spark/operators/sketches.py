@@ -50,13 +50,10 @@ def _cms_hashed(freq: DataFrame) -> DataFrame:
     )
 
 
-def cms_top_tokens(
-    docs: DataFrame,
-    k: int = 20,
-) -> DataFrame:
+def cms_top_tokens(docs: DataFrame) -> DataFrame:
     """Count-min-sketch heavy hitters: estimate every token's corpus
     count from a depth x width (4 x 1024) counter grid — est(t) = min over rows
-    j of counter[j][h_j(t)] — and return the top-k by estimate, with
+    j of counter[j][h_j(t)] — and return the top 20 by estimate, with
     the exact count alongside as the overestimate audit (CMS error is
     one-sided: n_cms >= n_exact always, overshoot <= corpus_tokens *
     e/width with prob 1 - e^-depth).
@@ -82,21 +79,22 @@ def cms_top_tokens(
             F.min("cnt").cast("long").alias("n_cms"),
         )
     )
-    return est.orderBy(F.col("n_cms").desc(), F.col("token").asc()).limit(k)
+    return est.orderBy(F.col("n_cms").desc(), F.col("token").asc()).limit(20)
 
 
-def hll_distinct(
-    df: DataFrame,
-    value_col: str,
-    m: int = 256,
-) -> DataFrame:
+# HyperLogLog registers: a power of two; the low _HLL_P hash bits index one
+_HLL_M = 256
+_HLL_P = 8
+
+
+def hll_distinct(df: DataFrame, value_col: str) -> DataFrame:
     """Deterministic HyperLogLog distinct-count estimate, with the
     exact count alongside as the error audit. Standard HLL over a
-    60-bit hash: low log2(m) bits pick the register, the remaining
-    52 bits' leading-zero rank rho updates it (M_j = max rho), and
-    the estimate is alpha_m * m^2 / sum_j 2^-M_j with the
-    small-range linear-counting correction (E <= 2.5m and empty
-    registers present -> m * ln(m / V)).
+    60-bit hash with m = 256 registers: the low 8 bits pick the
+    register, the remaining 52 bits' leading-zero rank rho updates it
+    (M_j = max rho), and the estimate is alpha_m * m^2 / sum_j 2^-M_j
+    with the small-range linear-counting correction (E <= 2.5m and
+    empty registers present -> m * ln(m / V)).
 
     Output: one row (n_exact, n_hll, rel_err).
 
@@ -104,16 +102,16 @@ def hll_distinct(
     — is the whole corpus-sized stage (max-rho over a register equals
     53 - bitlen(min rest), bitlen being monotone, so min() suffices
     and partial aggs combine). Everything after runs on m rows: the
-    bitlen join against a 53-row powers table, the 2^-M fold, the
+    bitlen join against a 52-row powers table, the 2^-M fold, the
     correction. The m-row register table is the mergeable state —
     elementwise max folds epochs together. n_exact is computed for
     the audit only; a production tick reads just the register table.
 
     m=256 -> ~1.04/sqrt(256) = 6.5% standard error in ~256 bytes."""
-    reg = hll_registers(df, value_col, m)
+    reg = hll_registers(df, value_col)
     exact = df.agg(F.countDistinct(value_col).cast("long").alias("n_exact"))
     return (
-        _hll_stats(reg, m)
+        _hll_stats(reg)
         .crossJoin(F.broadcast(exact))
         .select(
             "n_exact",
@@ -125,48 +123,30 @@ def hll_distinct(
     )
 
 
-def hll_registers(
-    df: DataFrame,
-    value_col: str,
-    m: int = 256,
-) -> DataFrame:
-    """The HLL register table for a value set: (idx, minv), at most m
-    rows. minv is the MIN of the post-index hash bits per register,
+def hll_registers(df: DataFrame, value_col: str) -> DataFrame:
+    """The HLL register table for a value set: (idx, minv), at most
+    256 rows. minv is the MIN of the post-index hash bits per register,
     which carries the max leading-zero rank (bitlen is monotone). One
     map-side-combinable min() agg is the only corpus-sized stage."""
-    _check_m(m)
-    p = m.bit_length() - 1
     h = _hash60(F.col(value_col), "hll-v1")
-    # idx from the low p bits, v from the high bits — bit ops, never
+    # idx from the low bits, v from the high bits — bit ops, never
     # float division (a 60-bit value does not fit a double mantissa)
     return (
         df.select(
-            h.bitwiseAND(F.lit(m - 1)).alias("idx"),
-            F.shiftright(h, p).alias("v"),
+            h.bitwiseAND(F.lit(_HLL_M - 1)).alias("idx"),
+            F.shiftright(h, _HLL_P).alias("v"),
         )
         .groupBy("idx")
         .agg(F.min("v").alias("minv"))
     )
 
 
-def _check_m(m: int) -> None:
-    if m < 16 or (m & (m - 1)):
-        raise ValueError("m must be a power of two >= 16")
-
-
-# Flajolet et al. 2007 fig. 3: alpha_16/32/64 are tabulated exactly;
-# the closed form 0.7213/(1+1.079/m) is the m >= 128 approximation
-# (using it at m=16 would systematically overestimate by ~14%).
-_HLL_ALPHA = {16: 0.673, 32: 0.697, 64: 0.709}
-
-
-def _hll_stats(reg: DataFrame, m: int) -> DataFrame:
+def _hll_stats(reg: DataFrame) -> DataFrame:
     """(idx, minv) registers -> one row with the corrected HLL
     estimate in __est (plus Z and V for inspection)."""
-    _check_m(m)
     spark = reg.sparkSession
-    p = m.bit_length() - 1
-    bits = 60 - p  # hash bits left after the register index
+    m = _HLL_M
+    bits = 60 - _HLL_P  # hash bits left after the register index
     powers = spark.range(bits).select(
         F.col("id").alias("k"), F.pow(F.lit(2.0), F.col("id")).cast("long").alias("p2")
     )
@@ -187,7 +167,8 @@ def _hll_stats(reg: DataFrame, m: int) -> DataFrame:
     regs = dom.join(bitlen, "idx", "left").select(
         "idx", F.coalesce(F.col("M"), F.lit(0)).alias("M")
     )
-    alpha = _HLL_ALPHA.get(m, 0.7213 / (1.0 + 1.079 / m))
+    # Flajolet et al. 2007 fig. 3: the m >= 128 closed form
+    alpha = 0.7213 / (1.0 + 1.079 / m)
     stats = regs.agg(
         F.sum(F.pow(F.lit(2.0), -F.col("M"))).alias("Z"),
         F.sum(F.when(F.col("M") == 0, 1).otherwise(0)).cast("long").alias("V"),

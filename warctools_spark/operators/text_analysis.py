@@ -720,10 +720,7 @@ def length_report(docs: DataFrame) -> DataFrame:
     )
 
 
-def bpe_pair_counts(
-    docs: DataFrame,
-    top_n: int = 200,
-) -> DataFrame:
+def bpe_pair_counts(docs: DataFrame) -> DataFrame:
     """Corpus-wide adjacent-character-pair frequencies inside
     whitespace words — the counting step of one BPE tokenizer-training
     merge round (the pair with the top count is the next merge).
@@ -731,7 +728,7 @@ def bpe_pair_counts(
     Plan: tokens -> explode words -> overlapping 2-char substrings via
     a map-side transform(sequence) (no join, no UDF) -> one global
     hash agg with map-side partial combine -> TakeOrderedAndProject
-    top_n. The shuffle carries (pair, partial_count) rows — vocab-
+    top 200. The shuffle carries (pair, partial_count) rows — vocab-
     sized, not corpus-sized — so the plan is a linear scan at 100 TB.
     Deterministic order: count desc, pair asc."""
     words = docs.select(
@@ -749,18 +746,15 @@ def bpe_pair_counts(
         pairs.groupBy("pair")
         .agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), F.asc("pair"))
-        .limit(top_n)
+        .limit(200)
     )
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    k: int = 8,
-    w: int = 4,
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken,
-    SIGMOD 2003 — the MOSS algorithm): hash every character k-gram of
-    the normalized text, slide a w-hash window, keep each window's
+    SIGMOD 2003 — the MOSS algorithm): hash every character k-gram
+    (k = 8) of
+    the normalized text, slide a w-hash window (w = 4), keep each window's
     minimum hash (ties -> rightmost occurrence, per the paper), and
     emit the distinct selected (pos, hash) pairs. Guarantees every
     shared substring of length >= k+w-1 yields at least one shared
@@ -780,6 +774,7 @@ def winnow_fingerprints(
     keep it engine-portable for the oracle."""
     from pyspark.sql import Window
 
+    k, w = 8, 4
     s = normalize(F.col("text"))
     base = docs.select(F.col("doc_id"), s.alias("__s")).where(
         F.length("__s") >= k
@@ -870,19 +865,19 @@ def bigram_logprob(docs: DataFrame) -> DataFrame:
     )
 
 
-def winnow_match_scores(docs: DataFrame, max_doc_freq: int = 100) -> DataFrame:
-    """Document-pair match scores from winnowing fingerprints (the
-    defaults of winnow_fingerprints) — the MOSS pipeline's pairing
+def winnow_match_scores(docs: DataFrame) -> DataFrame:
+    """Document-pair match scores from winnowing fingerprints
+    (winnow_fingerprints) — the MOSS pipeline's pairing
     stage: two docs sharing >= 3 selected fingerprints are copy/quote candidates, scored by the
     count of distinct shared fingerprints.
 
     The quadratic trap and its gate: a fingerprint shared by d docs
     contributes O(d^2) join rows, and boilerplate fingerprints at web
-    scale have d ~ 10^6 (10^12 pairs from ONE hash). `max_doc_freq`
-    drops fingerprints above the threshold BEFORE the self-join —
+    scale have d ~ 10^6 (10^12 pairs from ONE hash). Fingerprints in
+    more than 100 docs are dropped BEFORE the self-join —
     standard fingerprint-index hygiene (an over-common fingerprint is
     boilerplate and carries no match signal, exactly like a stopword
-    posting). Bounded join fan-out: <= max_doc_freq per fingerprint.
+    posting). Bounded join fan-out: <= 100 per fingerprint.
     Plan: distinct (doc, fp) projection -> df-count agg (map-side
     combined) -> df-gated self-join co-partitioned on the fingerprint
     -> per-pair countDistinct >= 3."""
@@ -894,7 +889,7 @@ def winnow_match_scores(docs: DataFrame, max_doc_freq: int = 100) -> DataFrame:
     keep = (
         fp.groupBy("fingerprint")
         .agg(F.count("*").alias("__df"))
-        .where((F.col("__df") >= 2) & (F.col("__df") <= max_doc_freq))
+        .where((F.col("__df") >= 2) & (F.col("__df") <= 100))
         .select("fingerprint")
     )
     fpk = fp.join(keep, "fingerprint")

@@ -129,16 +129,12 @@ def prepare_training_corpus_v2(docs: DataFrame) -> DataFrame:
     )
 
 
-def rag_corpus(
-    docs,
-    window: int = 64,
-    stride: int = 32,
-    min_chunk_tokens: int = 8,
-):
+def rag_corpus(docs):
     """Composed RAG-indexing pipeline over a crawl corpus: exact
     substring-dedup rewrite (first corpus occurrence survives, spans
-    of at least 15 tokens of duplicated 10-grams cut) -> sliding-window chunking of the
-    cleaned text -> drop sub-minimum tail chunks. Returns
+    of at least 15 tokens of duplicated 10-grams cut) -> sliding-window
+    chunking of the cleaned text (64-token windows every 32 tokens) ->
+    drop tail chunks under 8 tokens. Returns
     (doc_id, chunk_id, tok_start, n_tokens, chunk).
 
     Every stage is linear-shuffle (see duplicate_spans /
@@ -149,9 +145,6 @@ def rag_corpus(
 
     cleaned = remove_duplicate_spans(docs, min_span_tokens=15)
     chunks = chunk_documents(
-        cleaned, window=window, stride=stride,
-        text_col="clean_text",
+        cleaned, window=64, stride=32, text_col="clean_text"
     )
-    from pyspark.sql import functions as F
-
-    return chunks.where(F.col("n_tokens") >= min_chunk_tokens)
+    return chunks.where(F.col("n_tokens") >= 8)

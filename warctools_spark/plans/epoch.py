@@ -67,7 +67,6 @@ def init_state(seeds: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 @dataclass
 class EpochResult:
-    epoch: int
     schedule: DataFrame
     queue: DataFrame
     seen: DataFrame
@@ -193,8 +192,7 @@ def run_epoch(
         "wall_s": time.time() - t0,
     }
     return EpochResult(
-        epoch, schedule, queue_next, seen.unionByName(fresh_seen), metrics,
-        fresh_seen,
+        schedule, queue_next, seen.unionByName(fresh_seen), metrics, fresh_seen
     )
 
 
