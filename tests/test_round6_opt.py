@@ -3,6 +3,8 @@ INTERNALS changed for speed must produce byte/row-identical results to
 the round-5 formulation (the optimization round's correctness bar —
 plans may change, answers may not)."""
 
+import random
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -385,6 +387,42 @@ def test_canon_parts_fast_equals_canon_parts():
 
 
 # ------------------------------------------------------------ links fastpath
+
+
+def test_strict_scan_differential_vs_r5_tiers():
+    """extract_links must yield exactly what the plain HTMLParser
+    collector produces, which is what the round-5 tiers produced:
+    documents the strict whole-doc grammar accepts take its scan, and
+    rejected ones go through that collector by construction."""
+    from warctools_spark.kernels import links as L
+
+    rng = random.Random(99)
+    frags = [
+        '<a href="x{}.html">', "<img src=i{}.png/>", "text{} ",
+        "<div class='c{}'>", "</div>", '<base href="http://b{}.ex/">',
+        '<meta content="0;url=m{}.html">', "&amp;",
+        "<script>var x=1</script>", "<p a==b>", '<a href = "s{}.html" >',
+        '<a href="g>t{}.html">', "<!-- c -->",
+        '<a title="<a href=no{}.html>">', "<td background=bg{}.gif>",
+        "</a&b>", '<a href=x{}.html"extra>', "<a href='q{}'>",
+        "<A HREF=U{}.HTM>", '<form action="/f{}">', "< notag>", "<3",
+        '<a\nhref=n{}.h>', "<a href>", '<a href="">',
+        '<a href="a" class="b">', "<AREA HREF=ar{}.htm>",
+        "<input src=btn{}.png>", "<object data=o{}.bin>",
+        "<a  href\t=\tmix{}.html >", "<a href=v{} lowsrc=w{}>",
+    ]
+    for _ in range(1500):
+        body = "".join(
+            rng.choice(frags).format(rng.randint(0, 99), rng.randint(0, 99))
+            for _ in range(rng.randint(1, 10))
+        )
+        base = "http://h.example/d/p.html"
+        got = L.extract_links(base, body)
+        c = L._LinkCollector(base)
+        c.feed(body)
+        c.close()
+        ref = [x.translate(L._CTL_STRIP) for x in c.abs_links()]
+        assert got == ref, body
 
 
 def test_strict_doc_rejection_is_linear_time():
